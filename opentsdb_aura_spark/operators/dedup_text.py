@@ -45,13 +45,14 @@ def _perm_min_aggs(num_perm: int, h: Column) -> list[Column]:
 
 def _spread(df: DataFrame) -> DataFrame:
     """Widen a narrow input before a CPU-heavy per-row stage (shingle
-    explode + hashing).
+    explode + hashing); also the corpus loaders' spread
+    (queries.base.docs/embs).
 
     A small corpus read from one parquet file arrives as one partition
     and the explode would run on a single core; the fix is a cheap
     round-robin repartition of the doc rows.  Target is
-    defaultParallelism/4 — aligned with queries.base.docs(), whose
-    frames arrive here already at that width (a larger target would
+    defaultParallelism/4 — the same helper spreads queries.base.docs(),
+    whose frames arrive here already at that width (a larger target would
     re-shuffle them right back to full width, undoing the measured
     task-launch win; see base.docs for the numbers).  On a real
     cluster the input already spans ≥ target partitions and this is a

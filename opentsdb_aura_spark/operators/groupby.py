@@ -28,10 +28,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from opentsdb_aura_spark.model import NAN
+from opentsdb_aura_spark.operators.downsample import AGG_ALIASES
 
 
 GROUP_AGGS = {"sum", "avg", "min", "max", "count"}
-_ALIASES = {"zimsum": "sum", "mimmin": "min", "mimmax": "max"}
+
+
+def normalize_group_agg(agg: str) -> str:
+    """Canonical group-by aggregator name (OpenTSDB aliases resolved)."""
+    agg = agg.lower().strip()
+    agg = AGG_ALIASES.get(agg, agg)
+    if agg not in GROUP_AGGS:
+        raise ValueError(f"unsupported group-by aggregator: {agg}")
+    return agg
 
 
 def group_merge(
@@ -48,9 +57,7 @@ def group_merge(
     ``group_cols`` are the resolved group-key columns (e.g. tag-value
     columns); empty = group-all (G2, MetaTimeSeriesQueryResult.java:97-111).
     """
-    agg = _ALIASES.get(agg.lower(), agg.lower())
-    if agg not in GROUP_AGGS:
-        raise ValueError(f"unsupported group-by aggregator: {agg}")
+    agg = normalize_group_agg(agg)
     group_cols = list(group_cols)
     v = F.col(value_col)
     masked = F.when(F.isnan(v), F.lit(None).cast("double")).otherwise(v)

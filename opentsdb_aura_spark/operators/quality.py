@@ -1975,14 +1975,17 @@ def _kn_gram_matrix(rows, N: int, ids: dict, grow: bool):
     mats = []
     for did, tk in rows:
         doc_ids.append(did)
-        if len(tk) < N:
-            doc_lens.append(0)
-            continue
         if grow:
+            # register EVERY token, short docs included: the vocabulary
+            # size must match the distributed count_distinct over all
+            # training tokens
             tids = np.fromiter(
                 (ids.setdefault(w, len(ids)) for w in tk), np.int64, count=len(tk)
             )
-        else:
+        if len(tk) < N:
+            doc_lens.append(0)
+            continue
+        if not grow:
             tids = np.fromiter(
                 (ids.get(w, sentinel) for w in tk), np.int64, count=len(tk)
             )

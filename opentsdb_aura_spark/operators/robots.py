@@ -1088,6 +1088,10 @@ def _resolve_robots_local(
     fmap: dict = {}
     for u, st, loc, nxt in zip(fp["_u"], fp["_st"], fp["_loc"], fp["_next"]):
         u = cell(u)
+        if u is None:
+            # the hop join's equality never matches a NULL url: a NULL
+            # start/next URL must find no fetch row here either
+            continue
         st = cell(st)
         fmap.setdefault(u, []).append(
             (None if st is None else int(st), cell(loc), cell(nxt))

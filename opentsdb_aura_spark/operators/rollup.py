@@ -16,18 +16,19 @@ avg = Σsum/Σcount.  The planner picks the rollup iff:
 
   - the downsample aggregator is derivable from the stored chain,
   - ds_interval % rollup_interval == 0,
-  - the query start is aligned to the rollup grid (buckets are
-    query-start-aligned; rollup windows are epoch-aligned).
+  - both ends of the query range are aligned to the rollup grid
+    (buckets are query-start-aligned; rollup windows are epoch-aligned).
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from opentsdb_aura_spark.model import NAN
+from opentsdb_aura_spark.operators.downsample import bucket_expr
 
 
 
@@ -65,22 +66,6 @@ def build_rollup(
     )
 
 
-def rollup_supports(ds_agg: str, ds_interval: int, rollup_interval: int, start: int, end: int) -> bool:
-    """Mirror of the substitution predicate
-    (AerospikeBatchQueryNode.java:200-224) plus grid alignment on BOTH
-    ends: a rollup window starting before ``end`` extends past it when
-    ``end`` is off the rollup grid, so its pre-aggregate would include
-    points in [end, window_start + rollup_interval) that a raw-point
-    downsample excludes — the final bucket would silently over-count."""
-    return (
-        ds_agg in ROLLUP_SERVABLE
-        and ds_interval is not None
-        and ds_interval % rollup_interval == 0
-        and start % rollup_interval == 0
-        and (end - start) % rollup_interval == 0
-    )
-
-
 def downsample_from_rollup(
     rollup: DataFrame,
     start: int,
@@ -99,10 +84,7 @@ def downsample_from_rollup(
         raise ValueError(f"aggregator {agg} not servable from rollups")
     group_cols = list(group_cols)
     df = rollup.where((F.col("window_start") >= F.lit(int(start))) & (F.col("window_start") < F.lit(int(end))))
-    bucket = (
-        F.lit(int(start))
-        + F.floor((F.col("window_start") - F.lit(int(start))) / F.lit(int(interval))) * F.lit(int(interval))
-    ).cast("long")
+    bucket = bucket_expr(F.col("window_start"), start, interval)
     grouped = df.withColumn("bucket_ts", bucket).groupBy(*group_cols, "bucket_ts").agg(
         F.sum("sum").alias("_sum"),
         F.sum("count").alias("_cnt"),
@@ -131,79 +113,21 @@ def downsample_from_rollup(
     return grouped.select(*group_cols, "bucket_ts", value.alias("value"))
 
 
-def downsample_spliced(
-    hot_points: DataFrame,
-    rollup: DataFrame,
-    rollup_interval: int,
-    start: int,
-    end: int,
-    boundary: int,
-    interval: int,
-    agg: str,
-    *,
-    group_cols: Sequence[str] = ("series_id",),
-    value_col: str = "value",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """U3 × A10 — mixed-resolution hot/cold splice: the cold range
-    ``[start, boundary)`` is served from the pre-aggregated rollup
-    table, the hot range ``[boundary, end)`` from raw points, and the
-    two bucket streams are unioned.  This is the reference's routing of
-    recent time to the in-memory tier and older time to the long-term
-    store's rollup streams, combined
-    (opentsdb/.../execution/AuraMetricsClusterConfig.java routing +
-    AerospikeBatchQueryNode.java:200-224 rollup selection).
-
-    ``boundary`` must lie on the query's bucket grid so no bucket
-    straddles tiers — each bucket is computed entirely from one side,
-    making the union exact (no partial-aggregate merge needed) for
-    every servable aggregator including non-decomposable AVG.
-
-    Output schema matches ``downsample(..., fill='none')``:
-    (group_cols…, bucket_ts, value).  Scale note: both sides keep
-    their own partition pruning (``window_start`` / ``segment_time``)
-    and the union is a no-shuffle concatenation of two independently
-    aggregated streams.
-    """
-    start, end, boundary = int(start), int(end), int(boundary)
-    interval = int(interval)
-    if not start <= boundary <= end:
-        raise ValueError(f"boundary {boundary} outside query range [{start}, {end})")
-    if (boundary - start) % interval != 0:
-        raise ValueError(
-            f"boundary {boundary} not on the bucket grid (start={start}, interval={interval}): "
-            "a bucket would straddle the hot/cold tiers"
-        )
-    if boundary > start and not rollup_supports(agg, interval, rollup_interval, start, boundary):
-        raise ValueError(
-            f"cold range not servable from rollup_{rollup_interval} for agg={agg!r}, interval={interval}"
-        )
-    from opentsdb_aura_spark.operators.downsample import downsample
-
-    group_cols = list(group_cols)
-    parts: list[DataFrame] = []
-    if boundary > start:
-        parts.append(
-            downsample_from_rollup(rollup, start, boundary, interval, agg, group_cols=group_cols)
-        )
-    if end > boundary:
-        parts.append(
-            downsample(
-                hot_points,
-                boundary,
-                end,
-                interval,
-                agg,
-                group_cols=group_cols,
-                fill="none",
-                value_col=value_col,
-                ts_col=ts_col,
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def choose_rollup_interval(
+    intervals: Iterable[int], ds_interval: int | None, start: int, end: int
+) -> int | None:
+    """Planner rule shared by every pre-aggregate kind: the coarsest
+    table interval (fewest rows scanned) that divides the downsample
+    interval and sits on the grid at BOTH ends of [start, end) — a
+    table window starting before ``end`` extends past it when ``end``
+    is off the grid, so its pre-aggregate would include points in
+    [end, window_start + rollup_interval) that a raw-point downsample
+    excludes.  None → the caller serves from raw points."""
+    if ds_interval:
+        for riv in sorted(intervals, reverse=True):
+            if ds_interval % riv == 0 and start % riv == 0 and (end - start) % riv == 0:
+                return riv
+    return None
 
 
 def choose_downsample_source(
@@ -213,18 +137,11 @@ def choose_downsample_source(
     start: int,
     end: int,
 ) -> tuple[DataFrame | None, int | None]:
-    """Planner rule: the coarsest compatible rollup wins (fewest rows
-    scanned); (None, None) → the caller falls back to its raw table
-    (this function never returns the raw frame itself)."""
-    best = None
-    if ds_interval:
-        for riv in sorted(rollups, reverse=True):
-            if rollup_supports(ds_agg, ds_interval, riv, start, end):
-                best = riv
-                break
-    if best is None:
-        return None, None
-    return rollups[best], best
+    """The rollup table serving ``ds_agg`` per ``choose_rollup_interval``
+    (the substitution predicate of AerospikeBatchQueryNode.java:200-224);
+    (None, None) → the caller falls back to its raw table."""
+    riv = choose_rollup_interval(rollups, ds_interval, start, end) if ds_agg in ROLLUP_SERVABLE else None
+    return (None, None) if riv is None else (rollups[riv], riv)
 
 
 # ------------------------------------------------- histogram rollups (sketch)
@@ -310,10 +227,7 @@ def percentile_from_rollup_histogram(
     from pyspark.sql.window import Window
 
     gamma = _hist_gamma(float(eps))
-    bucket = (
-        F.lit(int(start))
-        + F.floor((F.col("window_start") - F.lit(int(start))) / F.lit(int(interval))) * F.lit(int(interval))
-    ).cast("long")
+    bucket = bucket_expr(F.col("window_start"), start, interval)
     in_range = (F.col("window_start") >= F.lit(int(start))) & (F.col("window_start") < F.lit(int(end)))
     merged = (
         hist.where(in_range)

@@ -19,7 +19,7 @@ runs BEFORE downsample, exactly as the reference kernel does.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -28,9 +28,15 @@ from pyspark.sql import functions as F
 from opentsdb_aura_spark.filters import Filter, compile_filter, time_range
 from opentsdb_aura_spark.model import SEGMENT_WIDTH_SECONDS
 from opentsdb_aura_spark.operators.dedupe import dedupe_last_write_wins
-from opentsdb_aura_spark.operators.downsample import downsample
-from opentsdb_aura_spark.operators.groupby import group_merge, with_group_keys
+from opentsdb_aura_spark.operators.downsample import downsample, fill_spine, normalize_agg
+from opentsdb_aura_spark.operators.groupby import group_merge, normalize_group_agg, with_group_keys
 from opentsdb_aura_spark.operators.rate import RateOptions, rate, time_shift
+from opentsdb_aura_spark.operators.rollup import (
+    ROLLUP_SERVABLE,
+    choose_rollup_interval,
+    downsample_from_rollup,
+    percentile_from_rollup_histogram,
+)
 
 
 @dataclass
@@ -102,9 +108,10 @@ def _substitution_blocked(q: MetricQuery) -> bool:
 def _matched_series(
     points: DataFrame, q: MetricQuery, series_dim: DataFrame | None
 ) -> tuple[DataFrame, list[str], list[str]]:
-    """Meta-side series selection shared by the substitutions: the
-    filtered series dimension (or a distinct projection of points)
-    with the query's group-key columns attached.  Returns
+    """Meta-side series selection shared by the pre-aggregate
+    substitution and the meta-driven spine: the filtered series
+    dimension (or a distinct projection of points) with the query's
+    group-key columns attached.  Returns
     (matched, group_keys, out_groups).  `matched` is O(total series)
     under a match-all filter — never force-broadcast it; AQE
     size-picks the join strategy at runtime."""
@@ -120,108 +127,8 @@ def _matched_series(
     return dim.select("series_id", *group_keys), group_keys, out_groups
 
 
-def _shift_and_fill(
-    res: DataFrame,
-    q: MetricQuery,
-    matched: DataFrame,
-    out_groups: list[str],
-    spine_from_dim: bool,
-) -> DataFrame:
-    """Shared substitution tail: relabel shifted buckets back to query
-    time, then the fill spine (meta-driven universe when asked)."""
-    from opentsdb_aura_spark.operators.downsample import fill_spine
-
-    if q.shift_seconds:
-        res = res.withColumn(
-            "bucket_ts", (F.col("bucket_ts") + F.lit(int(q.shift_seconds))).cast("long")
-        )
-    if q.fill != "none":
-        spine_groups = matched.select(*out_groups) if spine_from_dim else None
-        res = fill_spine(
-            res, q.start, q.end, q.interval, out_groups,
-            fill=q.fill, spine_groups=spine_groups,
-        )
-    return res
-
-
-def _rollup_substitution(
-    points: DataFrame,
-    q: MetricQuery,
-    rollups: dict[int, DataFrame],
-    series_dim: DataFrame | None,
-    spine_from_dim: bool = False,
-) -> DataFrame | None:
-    """A10 — automatic rollup substitution inside the query node,
-    mirroring the reference's selection of a stored aggregate stream
-    over a raw scan (AerospikeBatchQueryNode.java:200-224: the node,
-    not the caller, decides).  Returns None when raw points must serve.
-
-    Substitution requires: no rate stage (per-point, can't run on
-    pre-aggregates), no infectious-NaN (NaN points are invisible in the
-    rollup), no reporting-average, no run-all tail bucket, a servable
-    aggregator, and full grid alignment (``rollup_supports``).  Grouped
-    queries additionally need the downsample+group pair to compose into
-    one flat aggregate (``_FUSABLE_DS_GB``) — re-aggregating rollup
-    partials by group keys IS the flat aggregate; avg-of-series-avgs
-    shapes are not derivable and fall back to raw.
-
-    Series selection runs on the meta side — ``series_dim`` (or a
-    distinct-series projection of the points table, which Parquet
-    serves from 3 pruned columns) filtered by the query's filter
-    algebra, then broadcast-semi-joined into the rollup — the
-    reference's meta-index → series-keys → fetch-streams flow.
-
-    Grouped queries whose (ds, gb) pair does NOT flat-fuse (e.g.
-    avg→avg: group avg-of-series-avgs ≠ flat avg) are still served
-    two-stage from the rollup: per-series buckets re-aggregated from
-    the pre-aggregate chain, then the normal group merge — the exact
-    shape of the reference's rollup read (per-series
-    AerospikeDSTimeSeriesEncoder stream → NumericArrayAggregator group
-    accumulate), scanning interval/rollup_interval× fewer rows.
-    """
-    from opentsdb_aura_spark.operators.downsample import normalize_agg
-    from opentsdb_aura_spark.operators.groupby import _ALIASES, GROUP_AGGS, group_merge
-    from opentsdb_aura_spark.operators.rollup import (
-        ROLLUP_SERVABLE,
-        choose_downsample_source,
-        downsample_from_rollup,
-    )
-
-    if _substitution_blocked(q):
-        return None
-    ds = normalize_agg(q.ds_agg)
-    two_stage = False
-    if q.group_tag_keys is not None:
-        gb = _ALIASES.get(q.gb_agg.lower(), q.gb_agg.lower())
-        agg = _FUSABLE_DS_GB.get((ds, gb))
-        if agg is None:
-            if ds in ROLLUP_SERVABLE and gb in GROUP_AGGS:
-                two_stage = True
-                agg = ds
-            else:
-                return None
-    else:
-        agg = ds
-    shift = int(q.shift_seconds)
-    scan_start, scan_end = q.start - shift, q.end - shift
-    src, _riv = choose_downsample_source(rollups, agg, q.interval, scan_start, scan_end)
-    if src is None:
-        return None
-
-    matched, group_keys, out_groups = _matched_series(points, q, series_dim)
-    rolled = src.select("series_id", "window_start", "sum", "count", "min", "max", "sumsq").join(
-        matched, on="series_id", how="inner"
-    )
-    if two_stage:
-        per_series = downsample_from_rollup(
-            rolled, scan_start, scan_end, q.interval, ds, group_cols=["series_id", *group_keys]
-        )
-        res = group_merge(per_series, q.gb_agg, group_cols=group_keys)
-    else:
-        res = downsample_from_rollup(rolled, scan_start, scan_end, q.interval, agg, group_cols=out_groups)
-    return _shift_and_fill(res, q, matched, out_groups, spine_from_dim)
-
-
+_ROLLUP_COLS = ("series_id", "window_start", "sum", "count", "min", "max", "sumsq")
+_HIST_COLS = ("series_id", "window_start", "sign", "bin", "cnt")
 _PERCENTILE_RE = re.compile(r"^p(\d{1,3})$")
 
 
@@ -234,96 +141,112 @@ def _percentile_fraction(agg: str) -> float | None:
     return float("0." + m.group(1)) if m else None
 
 
-def _hist_substitution(
-    points: DataFrame,
-    q: MetricQuery,
-    hist_rollups: dict[int, DataFrame],
-    series_dim: DataFrame | None,
-    spine_from_dim: bool = False,
-    hist_eps: float | None = None,
-) -> DataFrame | None:
-    """A6 scale path, planner edition: serve percentile/median
-    downsamples from the DDSketch histogram rollup
-    (``build_rollup_histogram``) instead of scanning raw points.
-    Passing ``hist_rollups`` to ``run_metric_query`` is the opt-in to
-    the approximation (the reference's planner likewise only reads
-    stored aggregates where configuration enables them,
-    AuraMetricsClusterConfig routing); tables built with a non-default
-    ``eps`` MUST pass it as ``hist_eps`` — bins are decoded with the
+def _rollup_reader(ds: str, gb: str | None):
+    """A10 eligibility for the sum/count/min/max/sumsq chain: returns
+    (reader, two_stage) or None.  Grouped pairs that flat-fuse
+    (``_FUSABLE_DS_GB``) re-aggregate the rollup straight into group
+    buckets; other grouped shapes (e.g. avg→avg: group
+    avg-of-series-avgs ≠ flat avg) read per-series buckets, then the
+    normal group merge — the reference's rollup read (per-series
+    AerospikeDSTimeSeriesEncoder stream → NumericArrayAggregator group
+    accumulate)."""
+    fused = _FUSABLE_DS_GB.get((ds, gb))
+    agg = fused or ds
+    if agg not in ROLLUP_SERVABLE:
+        return None
+
+    def read(table, start, end, interval, group_cols):
+        return downsample_from_rollup(table, start, end, interval, agg, group_cols=group_cols)
+
+    return read, gb is not None and fused is None
+
+
+def _hist_reader(ds: str, gb: str | None, hist_eps: float | None):
+    """A6 eligibility for the DDSketch histogram rollup
+    (``build_rollup_histogram``): percentile/median downsamples only,
+    always served per series (bins are per series, so each series'
+    distribution is intact, only value resolution is eps-coarse), then
+    the normal group merge.  Tables built with a non-default ``eps``
+    MUST pass it as ``hist_eps`` — bins are decoded with the
     build-time gamma, and a mismatched eps decodes garbage.
 
-    Accuracy caveat (two distinct effects): the eps bound holds vs the
-    NEAREST-RANK quantile (value at rank ⌈q·n⌉), while the raw path's
-    ``percentile()`` INTERPOLATES between ranks — with many points per
-    bucket the two converge, but a 2-point bucket can differ by the
-    gap between its values, far beyond eps.  Sketch percentiles answer
-    "which observed magnitude is at this rank", not "the interpolated
-    midpoint" — the bound tests compare against the rank quantile.
-
-    Semantics are preserved exactly where they can be: the sketch
-    serves the PER-SERIES percentile (bins are per series, so each
-    series' distribution is intact, only value resolution is eps-
-    coarse); grouped queries then run the normal group merge over the
-    per-series values — the same two-stage shape as the non-fusable
-    rollup path.  Rate / infectious-NaN / reporting-average /
-    run-all / off-grid windows fall back to raw (None)."""
-    from opentsdb_aura_spark.operators.downsample import normalize_agg
-    from opentsdb_aura_spark.operators.groupby import GROUP_AGGS, _ALIASES, group_merge
-    from opentsdb_aura_spark.operators.rollup import percentile_from_rollup_histogram
-
-    if _substitution_blocked(q):
-        return None
-    frac = _percentile_fraction(normalize_agg(q.ds_agg))
+    Accuracy caveat: the eps bound holds vs the NEAREST-RANK quantile
+    (value at rank ⌈q·n⌉), while the raw path's ``percentile()``
+    INTERPOLATES between ranks — with many points per bucket the two
+    converge, but a 2-point bucket can differ by the gap between its
+    values, far beyond eps."""
+    frac = _percentile_fraction(ds)
     if frac is None:
         return None
-    if q.group_tag_keys is not None:
-        gb = _ALIASES.get(q.gb_agg.lower(), q.gb_agg.lower())
-        if gb not in GROUP_AGGS:
-            return None
-    shift = int(q.shift_seconds)
-    scan_start, scan_end = q.start - shift, q.end - shift
-    hist_iv = None
-    for riv in sorted(hist_rollups, reverse=True):
-        if q.interval % riv == 0 and scan_start % riv == 0 and (scan_end - scan_start) % riv == 0:
-            hist_iv = riv
-            break
-    if hist_iv is None:
-        return None
-
-    matched, group_keys, out_groups = _matched_series(points, q, series_dim)
-    hist = hist_rollups[hist_iv].select("series_id", "window_start", "sign", "bin", "cnt").join(
-        matched, on="series_id", how="inner"
-    )
     eps_kw = {"eps": float(hist_eps)} if hist_eps is not None else {}
-    per_series = percentile_from_rollup_histogram(
-        hist, frac, scan_start, scan_end, q.interval,
-        group_cols=["series_id", *group_keys], **eps_kw,
-    )
-    if q.group_tag_keys is not None:
-        res = group_merge(per_series, q.gb_agg, group_cols=group_keys)
-    else:
-        res = per_series.select("series_id", "bucket_ts", "value")
-    return _shift_and_fill(res, q, matched, out_groups, spine_from_dim)
+
+    def read(table, start, end, interval, group_cols):
+        return percentile_from_rollup_histogram(
+            table, frac, start, end, interval, group_cols=group_cols, **eps_kw
+        )
+
+    return read, gb is not None
 
 
-def _dim_spine_groups(
+def _preagg_substitution(
     points: DataFrame,
     q: MetricQuery,
-    series_dim: DataFrame | None,
-    group_cols: Sequence[str],
-) -> DataFrame:
-    """Meta-driven spine universe: the series (or tag groups) the
-    filter matches, independent of the scanned time range — the
-    reference's meta-index selection (TimeSeriesShard.java:677-758),
-    where a matched series with no in-range points still yields an
-    all-NaN output vector."""
-    dim = series_dim
-    if dim is None:
-        dim = points.select("series_id", "metric", "tags").dropDuplicates(["series_id"])
-    dim = dim.where(compile_filter(q.filter))
-    if q.group_tag_keys:
-        dim = with_group_keys(dim, q.group_tag_keys)
-    return dim.select(*group_cols)
+    *,
+    rollups: dict[int, DataFrame] | None = None,
+    hist_rollups: dict[int, DataFrame] | None = None,
+    hist_eps: float | None = None,
+    series_dim: DataFrame | None = None,
+    spine_from_dim: bool = False,
+) -> DataFrame | None:
+    """A10 — automatic pre-aggregate substitution inside the query node,
+    mirroring the reference's selection of a stored aggregate stream
+    over a raw scan (AerospikeBatchQueryNode.java:200-224: the node,
+    not the caller, decides).  Returns None when raw points must serve.
+
+    Each table kind (``rollups`` first, then the eps-approximate
+    ``hist_rollups`` — passing those is the opt-in to the
+    approximation) supplies only its eligibility test and its reader;
+    the rest is shared.  The coarsest table whose interval divides the
+    downsample interval and the un-shifted range wins
+    (``choose_rollup_interval``).  Series selection runs on the meta
+    side — ``series_dim`` (or a distinct-series projection of the
+    points table) filtered by the query's filter algebra, then joined
+    into the table — the reference's meta-index → series-keys →
+    fetch-streams flow.  Rate / infectious-NaN / reporting-average /
+    run-all / no-interval queries always fall back to raw.
+    """
+    if not (rollups or hist_rollups) or _substitution_blocked(q):
+        return None
+    ds = normalize_agg(q.ds_agg)
+    gb = normalize_group_agg(q.gb_agg) if q.group_tag_keys is not None else None
+    shift = int(q.shift_seconds)
+    scan_start, scan_end = q.start - shift, q.end - shift
+    for tables, cols, plan in (
+        (rollups, _ROLLUP_COLS, _rollup_reader(ds, gb)),
+        (hist_rollups, _HIST_COLS, _hist_reader(ds, gb, hist_eps)),
+    ):
+        if not tables or plan is None:
+            continue
+        riv = choose_rollup_interval(tables, q.interval, scan_start, scan_end)
+        if riv is None:
+            continue
+        read, two_stage = plan
+        matched, group_keys, out_groups = _matched_series(points, q, series_dim)
+        table = tables[riv].select(*cols).join(matched, on="series_id", how="inner")
+        if two_stage:
+            per_series = read(table, scan_start, scan_end, q.interval, ["series_id", *group_keys])
+            res = group_merge(per_series, gb, group_cols=group_keys)
+        else:
+            res = read(table, scan_start, scan_end, q.interval, out_groups)
+        if shift:
+            res = res.withColumn("bucket_ts", (F.col("bucket_ts") + F.lit(shift)).cast("long"))
+        if q.fill != "none":
+            res = fill_spine(
+                res, q.start, q.end, q.interval, out_groups, fill=q.fill,
+                spine_groups=matched.select(*out_groups) if spine_from_dim else None,
+            )
+        return res
+    return None
 
 
 def run_metric_query(
@@ -331,7 +254,6 @@ def run_metric_query(
     q: MetricQuery,
     *,
     dedupe: bool = True,
-    fuse_group_agg: bool = True,
     rollups: dict[int, DataFrame] | None = None,
     hist_rollups: dict[int, DataFrame] | None = None,
     hist_eps: float | None = None,
@@ -348,8 +270,10 @@ def run_metric_query(
     ``rollups`` — optional {interval: rollup DataFrame} handles (built
     by ``build_rollup`` at flush time, post-dedupe).  When given, the
     planner substitutes the coarsest servable pre-aggregate for the raw
-    scan automatically (see ``_rollup_substitution``); the query itself
-    never mentions rollups, exactly as in the reference.  ``series_dim``
+    scan automatically (see ``_preagg_substitution``); the query itself
+    never mentions rollups, exactly as in the reference.
+    ``hist_rollups`` (DDSketch tables, ``build_rollup_histogram``) opt
+    in to eps-approximate percentile serving the same way.  ``series_dim``
     optionally serves the filter→series resolution (the meta index);
     without it a distinct-series projection of ``points`` is used.
 
@@ -367,16 +291,12 @@ def run_metric_query(
     record skipping (MetaTimeSeriesQueryResult.java:89-94).  Pure
     pruning: series without in-range points contribute no rows anyway.
     """
-    if rollups:
-        substituted = _rollup_substitution(points, q, rollups, series_dim, spine_from_dim)
-        if substituted is not None:
-            return substituted
-    if hist_rollups:
-        # ``hist_rollups`` is the opt-in to eps-approximate percentile
-        # serving from the DDSketch bins (see _hist_substitution)
-        substituted = _hist_substitution(points, q, hist_rollups, series_dim, spine_from_dim, hist_eps)
-        if substituted is not None:
-            return substituted
+    served = _preagg_substitution(
+        points, q, rollups=rollups, hist_rollups=hist_rollups, hist_eps=hist_eps,
+        series_dim=series_dim, spine_from_dim=spine_from_dim,
+    )
+    if served is not None:
+        return served
     shift = int(q.shift_seconds)
     scan_start, scan_end = q.start - shift, q.end - shift
 
@@ -411,86 +331,78 @@ def run_metric_query(
         seg = "segment_time" if "segment_time" in df.columns else None
         df = rate(df, q.rate_options, segment_col=seg)
 
-    group_keys: list[str] | None = None
-    if q.group_tag_keys is not None:
-        group_keys = [f"tag_{k}" for k in q.group_tag_keys]
-        df = with_group_keys(df, q.group_tag_keys)
+    spine_groups = None
+    if spine_from_dim and q.fill != "none":
+        # meta-driven spine universe: the series (or tag groups) the
+        # filter matches, independent of the scanned time range — the
+        # reference's meta-index selection (TimeSeriesShard.java:677-758)
+        matched, _, out_groups = _matched_series(points, q, series_dim)
+        spine_groups = matched.select(*out_groups)
 
-    if q.group_tag_keys is not None:
-        from opentsdb_aura_spark.operators.downsample import normalize_agg
-        from opentsdb_aura_spark.operators.groupby import _ALIASES
-
-        fused = _FUSABLE_DS_GB.get(
-            (normalize_agg(q.ds_agg), _ALIASES.get(q.gb_agg.lower(), q.gb_agg.lower()))
-        )
-        spine_groups = None
-        if spine_from_dim and q.fill != "none":
-            spine_groups = _dim_spine_groups(points, q, series_dim, group_keys)
-        if fuse_group_agg and fused is not None:
-            # single-shot: one hash aggregation by (group keys, bucket)
-            # replaces per-series downsample + group merge (SURVEY §2.3b
-            # G1 "one shot" note) — same values, one fewer shuffle
-            return downsample(
-                df,
-                q.start,
-                q.end,
-                q.interval,
-                fused,
-                group_cols=group_keys,
-                infectious_nan=q.infectious_nan,
-                reporting_dps=q.reporting_dps,
-                run_all=q.run_all,
-                fill=q.fill,
-                spine_groups=spine_groups,
-            )
-        # two-stage: per-series downsample (sparse), then group merge,
-        # then the NaN spine once at group granularity — cheaper than
-        # densifying every series first.
-        per_series = downsample(
+    if q.group_tag_keys is None:
+        # raw per-series result (G4)
+        return downsample(
             df,
             q.start,
             q.end,
             q.interval,
             q.ds_agg,
-            group_cols=["series_id", *group_keys],
+            group_cols=["series_id"],
             infectious_nan=q.infectious_nan,
             reporting_dps=q.reporting_dps,
             run_all=q.run_all,
-            fill="none",
+            fill=q.fill,
+            spine_groups=spine_groups,
         )
-        merged = group_merge(
-            per_series,
-            q.gb_agg,
+
+    group_keys = [f"tag_{k}" for k in q.group_tag_keys]
+    df = with_group_keys(df, q.group_tag_keys)
+    fused = _FUSABLE_DS_GB.get((normalize_agg(q.ds_agg), normalize_group_agg(q.gb_agg)))
+    if fused is not None:
+        # single-shot: one hash aggregation by (group keys, bucket)
+        # replaces per-series downsample + group merge (SURVEY §2.3b
+        # G1 "one shot" note) — same values, one fewer shuffle
+        return downsample(
+            df,
+            q.start,
+            q.end,
+            q.interval,
+            fused,
             group_cols=group_keys,
             infectious_nan=q.infectious_nan,
+            reporting_dps=q.reporting_dps,
+            run_all=q.run_all,
+            fill=q.fill,
+            spine_groups=spine_groups,
         )
-        if q.fill != "none":
-            from opentsdb_aura_spark.operators.downsample import fill_spine
-
-            interval = (q.end - q.start) if (q.run_all or q.interval is None) else q.interval
-            merged = fill_spine(
-                merged, q.start, q.end, interval, group_keys,
-                fill=q.fill, spine_groups=spine_groups,
-            )
-        return merged
-
-    # raw per-series result (G4)
-    spine_groups = None
-    if spine_from_dim and q.fill != "none":
-        spine_groups = _dim_spine_groups(points, q, series_dim, ["series_id"])
-    return downsample(
+    # two-stage: per-series downsample (sparse), then group merge,
+    # then the NaN spine once at group granularity — cheaper than
+    # densifying every series first.
+    per_series = downsample(
         df,
         q.start,
         q.end,
         q.interval,
         q.ds_agg,
-        group_cols=["series_id"],
+        group_cols=["series_id", *group_keys],
         infectious_nan=q.infectious_nan,
         reporting_dps=q.reporting_dps,
         run_all=q.run_all,
-        fill=q.fill,
-        spine_groups=spine_groups,
+        fill="none",
     )
+    merged = group_merge(
+        per_series,
+        q.gb_agg,
+        group_cols=group_keys,
+        infectious_nan=q.infectious_nan,
+    )
+    if q.fill != "none":
+        interval = (q.end - q.start) if (q.run_all or q.interval is None) else q.interval
+        merged = fill_spine(
+            merged, q.start, q.end, interval, group_keys,
+            fill=q.fill, spine_groups=spine_groups,
+        )
+    return merged
 
 
 def splice_hot_cold(hot: DataFrame, cold: DataFrame, boundary_ts: int) -> DataFrame:
@@ -500,56 +412,6 @@ def splice_hot_cold(hot: DataFrame, cold: DataFrame, boundary_ts: int) -> DataFr
     return cold.where(F.col("ts") < F.lit(int(boundary_ts))).unionByName(
         hot.where(F.col("ts") >= F.lit(int(boundary_ts)))
     )
-
-
-def splice_bucketed_downsample(
-    hot: DataFrame,
-    cold_bucketed: DataFrame,
-    boundary_ts: int,
-    start: int,
-    end: int,
-    interval: int,
-    agg: str,
-    group_cols: Sequence[str] = ("series_id",),
-) -> DataFrame:
-    """U3 over a series-bucketed cold tier: aggregate each tier
-    SEPARATELY, then union the per-bucket results.
-
-    Splicing raw rows first (``splice_hot_cold``) would destroy the
-    cold table's bucket partitioning at the union and force a shuffle
-    of the (large) cold range.  Aggregating per tier keeps the
-    cold-side per-series aggregation Exchange-free end-to-end — the
-    bucket spec already hash-partitions series_id — which is the whole
-    point of the bucketed layout and mirrors the reference's
-    series-keyed long-term-store reads merged with the hot shard scan
-    (aerospike/.../LTSAerospike.java:187-260; the LTS fetches a
-    series' whole history co-located by key).  The hot side shuffles
-    only its own (recent, small) range.
-
-    ``boundary_ts`` must sit on the downsample grid
-    ((boundary−start) % interval == 0): tiers are then time-disjoint
-    AND bucket-disjoint, so the merged result is a plain unionByName —
-    no second aggregation pass at all.
-    """
-    if (int(boundary_ts) - int(start)) % int(interval) != 0:
-        raise ValueError(
-            f"boundary_ts {boundary_ts} must be aligned to the interval grid "
-            f"anchored at start={start} (interval={interval})"
-        )
-    from opentsdb_aura_spark.operators.downsample import downsample
-
-    b = int(boundary_ts)
-    cold_res = downsample(
-        cold_bucketed.where(F.col("ts") < F.lit(b)),
-        int(start), min(b, int(end)), int(interval), agg,
-        group_cols=list(group_cols), fill="none",
-    )
-    hot_res = downsample(
-        hot.where(F.col("ts") >= F.lit(b)),
-        max(int(start), b), int(end), int(interval), agg,
-        group_cols=list(group_cols), fill="none",
-    )
-    return cold_res.unionByName(hot_res)
 
 
 @dataclass(frozen=True)
@@ -608,8 +470,10 @@ def run_tiered_metric_query(store: TieredStore, q: MetricQuery, **kw) -> DataFra
     - straddling, downsample-only, boundary on the output bucket grid →
       per-tier sub-queries spliced by unionByName: buckets are
       tier-disjoint, so ANY ds/gb agg is exact per tier and the cold
-      side stays Exchange-free (the `splice_bucketed_downsample`
-      shape, now chosen by the planner);
+      side stays Exchange-free — splicing raw rows first would destroy
+      the cold table's bucket partitioning at the union and shuffle the
+      (large) cold range (the reference merges series-keyed LTS reads
+      with the hot shard scan, aerospike/.../LTSAerospike.java:187-260);
     - otherwise (rate crossing the boundary needs the previous point
       from the other tier; run-all spans both; misaligned boundary
       splits a bucket) → row-level splice with per-tier time
@@ -643,8 +507,6 @@ def run_tiered_metric_query(store: TieredStore, q: MetricQuery, **kw) -> DataFra
     hot_res = run_metric_query(store.hot, replace(q, start=out_b, fill="none"), **hot_kw)
     res = cold_res.unionByName(hot_res)
     if q.fill != "none":
-        from opentsdb_aura_spark.operators.downsample import fill_spine
-
         group_cols = [c for c in res.columns if c not in ("bucket_ts", "value")]
         res = fill_spine(res, q.start, q.end, q.interval, group_cols, fill=q.fill)
     return res

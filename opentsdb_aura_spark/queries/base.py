@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from opentsdb_aura_spark.filters import Chain, MetricLiteral, Not, TagLiteralOr
 from opentsdb_aura_spark.operators.dedup_text import (
+    _spread,
     exact_duplicates,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
@@ -115,7 +116,8 @@ def series_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the test table is a single parquet file → 1 input partition;
     # spread it so doc operators use multiple cores (a production
-    # corpus arrives as many files and gets parallelism from splits).
+    # corpus arrives as many files and gets parallelism from splits,
+    # and the guarded spread then inserts no shuffle).
     # defaultParallelism/4, not the full core count: several consumers
     # chain Python stages (k workers live per task — the containers
     # _CHAIN_DEPTH rationale), and for the pure-Catalyst consumers the
@@ -124,10 +126,7 @@ def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text_bpe_subword_count 2.54→1.83 s, text_unigram_count
     # 2.14→1.51 s, pipeline_quality_classifier 1.58→0.97 s,
     # dedup_cluster_resolve 2.99→2.73 s; none slower)
-    sc = spark.sparkContext
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        max(1, sc.defaultParallelism // 4)
-    )
+    return _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 def docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,14 +138,11 @@ def docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same divided spread as docs() — measured on the ANN family
+    # same guarded spread as docs() — measured on the ANN family
     # (same-session min-of-3 at sf0.1, 8 vs 32): ann_pq_topk
     # 1.47→0.90 s, ann_ivfpq_recall 2.26→1.49 s, ann_lsh_exact_topk
     # 0.97→0.75 s; none slower
-    sc = spark.sparkContext
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        max(1, sc.defaultParallelism // 4)
-    )
+    return _spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
 # ---------------------------------------------------------------- helpers

@@ -241,7 +241,7 @@ def rollup_hist_p90_planner(spark, sf_dir):
     """A6 scale path, planner edition: the MetricQuery asks for a plain
     per-series p90 + group max; ``run_metric_query(...,
     hist_rollups=...)`` routes it to the DDSketch histogram rollup
-    automatically (plans/query._hist_substitution) — per-series
+    automatically (plans/query._preagg_substitution) — per-series
     percentile from pre-aggregated bins (exact series distribution,
     eps-coarse values), then the ordinary two-stage group merge.  No
     raw point is scanned.  FULL oracle since r8 (same closed-form

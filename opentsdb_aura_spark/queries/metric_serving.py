@@ -285,20 +285,26 @@ FROM dpts WHERE metric = 'purchase' AND ts >= {START} AND ts < {END}
 GROUP BY 1, 2, 3""",
 )
 def splice_bucketed_cold_sum(spark, sf_dir):
-    """U3 with the series-bucketed COLD tier: the cold range is served
-    by the bucketed layout (per-series aggregation Exchange-free — the
-    bucket spec hash-partitions series_id), the hot range by the
-    segment-partitioned store (its small recent shuffle), and the
-    per-tier results are unioned on the shared day grid.  Equals the
-    full-range scan; the reference analogue is the shard scan merged
-    with series-keyed LTS reads (aerospike/.../LTSAerospike.java)."""
-    from opentsdb_aura_spark.plans.query import splice_bucketed_downsample
+    """U3 with the series-bucketed COLD tier: one per-series
+    ``run_tiered_metric_query`` over ``TieredStore(hot, cold=bucketed)``
+    — the cold range is served by the bucketed layout (per-series
+    aggregation Exchange-free — the bucket spec hash-partitions
+    series_id), the hot range by the segment-partitioned store (its
+    small recent shuffle), and the per-tier results are unioned on the
+    shared day grid, then joined to the series dimension for the tag
+    columns.  Equals the full-range scan; the reference analogue is the
+    shard scan merged with series-keyed LTS reads
+    (aerospike/.../LTSAerospike.java)."""
+    from opentsdb_aura_spark.plans.query import TieredStore, run_tiered_metric_query
     from opentsdb_aura_spark.sources.batch import bucketed_metrics
 
-    boundary = START + 15 * DAY
-    cold = bucketed_metrics(spark, sf_dir).where(F.col("metric") == "purchase")
-    hot = points(spark, sf_dir).where(F.col("metric") == "purchase")
-    res = splice_bucketed_downsample(hot, cold, boundary, START, END, DAY, "sum", group_cols=["series_id"])
+    store = TieredStore(
+        hot=points(spark, sf_dir),
+        cold=bucketed_metrics(spark, sf_dir),
+        boundary_ts=START + 15 * DAY,
+    )
+    q = _mq(start=START, end=END, interval=DAY, ds_agg="sum", filter=MetricLiteral("purchase"), fill="none")
+    res = run_tiered_metric_query(store, q, dedupe=False)
     dim = series_dim(spark, sf_dir).select(
         "series_id",
         F.col("tags")["user"].alias("tag_user"),
@@ -428,23 +434,24 @@ def rollup_planner_max(spark, sf_dir):
 
 @register("splice_mixed_resolution_sum", _ds_by_metric_sql(DAY, "sum(value)", "spliced_sum", 4))
 def splice_mixed_resolution_sum(spark, sf_dir):
-    """U3 × A10 — mixed-resolution splice: the cold half of the range
-    is served from the hourly rollup table, the hot half from raw
-    points, unioned at the daily-bucket grid.  Oracle is the flat
-    raw-point computation, proving tier routing is value-invisible."""
-    from opentsdb_aura_spark.operators.rollup import downsample_spliced
+    """U3 × A10 — mixed-resolution splice: the cold tier carries the
+    hourly rollup table (``TieredStore.cold_rollups``), so one per-series
+    ``run_tiered_metric_query`` serves the cold half of the range from
+    the rollup and the hot half from raw points, unioned at the
+    daily-bucket grid; the per-series buckets are then summed by
+    metric.  Oracle is the flat raw-point computation, proving tier
+    routing is value-invisible."""
+    from opentsdb_aura_spark.operators.groupby import group_merge
+    from opentsdb_aura_spark.plans.query import TieredStore, run_tiered_metric_query
 
-    res = downsample_spliced(
-        points(spark, sf_dir),
-        _rollup(spark, sf_dir),
-        3600,
-        START,
-        END,
-        START + 15 * DAY,
-        DAY,
-        "sum",
-        group_cols=["metric"],
+    pts = points(spark, sf_dir)
+    store = TieredStore(
+        hot=pts, cold=pts, boundary_ts=START + 15 * DAY, cold_rollups={3600: _rollup(spark, sf_dir)}
     )
+    q = _mq(start=START, end=END, interval=DAY, ds_agg="sum", fill="none")
+    dim = series_dim(spark, sf_dir)
+    per_series = run_tiered_metric_query(store, q, dedupe=False, series_dim=dim)
+    res = group_merge(per_series.join(dim.select("series_id", "metric"), "series_id"), "sum", group_cols=["metric"])
     return res.select("metric", "bucket_ts", _r(denan(F.col("value")), 4).alias("spliced_sum"))
 
 

@@ -73,3 +73,30 @@ def assert_close(got, want, tol=1e-9):
         assert got is not None and math.isnan(got), f"expected NaN, got {got}"
     else:
         assert got is not None and abs(got - want) <= tol, f"expected {want}, got {got}"
+
+
+def two_stage_reference(points, q):
+    """A grouped MetricQuery composed from the public operators the
+    unfused way — per-series ``downsample(fill="none")`` →
+    ``group_merge`` → ``fill_spine`` — the reference the planner's
+    single-shot group aggregation must match."""
+    from opentsdb_aura_spark.filters import compile_filter, time_range
+    from opentsdb_aura_spark.operators.dedupe import dedupe_last_write_wins
+    from opentsdb_aura_spark.operators.downsample import downsample, fill_spine
+    from opentsdb_aura_spark.operators.groupby import group_merge, with_group_keys
+    from opentsdb_aura_spark.operators.rate import rate, time_shift
+
+    shift = q.shift_seconds
+    df = points.where(compile_filter(q.filter) & time_range(q.start - shift, q.end - shift))
+    df = time_shift(dedupe_last_write_wins(df), shift)
+    if q.rate_options is not None:
+        df = rate(df, q.rate_options)
+    keys = [f"tag_{k}" for k in q.group_tag_keys]
+    per_series = downsample(
+        with_group_keys(df, q.group_tag_keys), q.start, q.end, q.interval, q.ds_agg,
+        group_cols=["series_id", *keys], infectious_nan=q.infectious_nan, fill="none",
+    )
+    merged = group_merge(per_series, q.gb_agg, group_cols=keys, infectious_nan=q.infectious_nan)
+    if q.fill == "none":
+        return merged
+    return fill_spine(merged, q.start, q.end, q.interval, keys, fill=q.fill)

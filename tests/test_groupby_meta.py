@@ -3,7 +3,7 @@ NewDocStore meta scenarios."""
 
 import math
 
-from conftest import BASE, assert_close
+from conftest import BASE, assert_close, two_stage_reference
 
 from opentsdb_aura_spark.filters import MetricLiteral
 from opentsdb_aura_spark.operators.dedupe import dedupe_last_write_wins
@@ -140,7 +140,8 @@ def _vals(df):
 def test_fused_group_agg_matches_two_stage(make_points):
     """(sum,sum) / (count,sum) / (min,min) / (max,max), with and
     without infectious NaN, must be value-identical between the
-    single-shot and the per-series-then-merge plans."""
+    planner's single-shot plan and the per-series-then-merge
+    composition of the public operators."""
     pts = _gnarly_fleet(make_points)
     for ds_agg, gb_agg in [("sum", "sum"), ("count", "sum"), ("min", "min"), ("max", "max"),
                            ("zimsum", "zimsum"), ("mimmax", "mimmax")]:
@@ -150,7 +151,7 @@ def test_fused_group_agg_matches_two_stage(make_points):
                 group_tag_keys=["dc"], gb_agg=gb_agg, infectious_nan=infectious,
             )
             fused = _vals(run_metric_query(pts, q))
-            twostage = _vals(run_metric_query(pts, q, fuse_group_agg=False))
+            twostage = _vals(two_stage_reference(pts, q))
             assert set(fused) == set(twostage), (ds_agg, gb_agg, infectious)
             for k, v in twostage.items():
                 got = fused[k]
@@ -170,7 +171,7 @@ def test_fused_group_agg_with_rate_and_shift(make_points):
         rate_options=RateOptions(interval_seconds=60),
     )
     fused = _vals(run_metric_query(pts, q))
-    twostage = _vals(run_metric_query(pts, q, fuse_group_agg=False))
+    twostage = _vals(two_stage_reference(pts, q))
     assert set(fused) == set(twostage)
     for k, v in twostage.items():
         got = fused[k]
@@ -187,18 +188,18 @@ def test_fused_group_agg_saves_a_shuffle(make_points):
     def exchanges(df):
         return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
     fused = exchanges(run_metric_query(pts, q))
-    twostage = exchanges(run_metric_query(pts, q, fuse_group_agg=False))
+    twostage = exchanges(two_stage_reference(pts, q))
     assert fused < twostage, (fused, twostage)
 
 
 def test_unfusable_combo_goes_two_stage(make_points):
     """avg must NOT fuse (group avg-of-avgs != flat avg): verify the
-    default plan equals the explicit two-stage result."""
+    planner's result equals the two-stage operator composition."""
     pts = _gnarly_fleet(make_points)
     q = MetricQuery(start=BASE, end=BASE + 360, interval=120, ds_agg="avg",
                     group_tag_keys=["dc"], gb_agg="avg")
     a = _vals(run_metric_query(pts, q))
-    b = _vals(run_metric_query(pts, q, fuse_group_agg=False))
+    b = _vals(two_stage_reference(pts, q))
     assert set(a) == set(b)
     for k, v in b.items():
         got = a[k]

@@ -10,7 +10,7 @@ import math
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from conftest import BASE
+from conftest import BASE, two_stage_reference
 
 from opentsdb_aura_spark.operators.downsample import downsample
 
@@ -153,9 +153,10 @@ def test_segmented_rate_matches_python_model(spark, make_points, rows):
     infectious=st.booleans(),
 )
 def test_fused_group_agg_property(spark, make_points, rows, combo, infectious):
-    """The single-shot ds+gb plan and the two-stage plan must be
-    value-identical for every fusable combo on arbitrary inputs
-    (NaNs, duplicates, gaps, 2 series grouped into one tag group)."""
+    """The planner's single-shot ds+gb plan and the two-stage operator
+    composition (conftest.two_stage_reference) must be value-identical
+    for every fusable combo on arbitrary inputs (NaNs, duplicates,
+    gaps, 2 series grouped into one tag group)."""
     from opentsdb_aura_spark.plans.query import MetricQuery, run_metric_query
 
     ds_agg, gb_agg = combo
@@ -169,7 +170,7 @@ def test_fused_group_agg_property(spark, make_points, rows, combo, infectious):
     fused = {(r["tag_g"], r["bucket_ts"]): r["value"] for r in run_metric_query(pts, q).collect()}
     twostage = {
         (r["tag_g"], r["bucket_ts"]): r["value"]
-        for r in run_metric_query(pts, q, fuse_group_agg=False).collect()
+        for r in two_stage_reference(pts, q).collect()
     }
     assert set(fused) == set(twostage)
     for k, v in twostage.items():

@@ -640,6 +640,36 @@ def test_lm_kn_save_load_roundtrip(spark, tmp_path):
             assert abs(a - b) < 1e-12, (i, a, b)
 
 
+def test_lm_kn_local_vocab_counts_short_docs(spark):
+    """Local ≡ distributed when a vocabulary word appears ONLY in a doc
+    shorter than the model order: the bounded local fit must register
+    that doc's tokens, so its vocabulary v (the 1/(v+1) unknown floor)
+    equals the distributed count_distinct over every train token."""
+    from opentsdb_aura_spark.operators.quality import lm_kn_fit, lm_kn_score
+
+    train = spark.createDataFrame(
+        [(1, "a b c a b d a b"), (2, "c d e c d a"), (3, "zz yy")],
+        "doc_id long, text string",
+    )
+    held = spark.createDataFrame(
+        [(10, "a b c d qq"), (11, "b zz a yy c")], "doc_id long, text string"
+    )
+    local_model = lm_kn_fit(train, order=3)
+    assert "local" in local_model  # the bounded local path served the fit
+    assert local_model["local"]["v"] == 7.0  # a b c d e zz yy
+    loc = {r["doc_id"]: r for r in lm_kn_score(local_model, held).collect()}
+    dist = {
+        r["doc_id"]: r
+        for r in lm_kn_score(lm_kn_fit(train, order=3, local_cap=0), held, local_cap=0).collect()
+    }
+    assert set(loc) == set(dist) == {10, 11}
+    for i in dist:
+        assert loc[i]["n_ngrams"] == dist[i]["n_ngrams"]
+        a, b = loc[i]["avg_logprob"], dist[i]["avg_logprob"]
+        assert a is not None and b is not None
+        assert abs(a - b) < 1e-12, (i, a, b)
+
+
 def test_artifact_roundtrips(spark, tmp_path):
     """operators/artifacts.py: OvR models, merge tables, and unigram
     vocabularies survive the Parquet roundtrip EXACTLY — the loaded

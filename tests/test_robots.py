@@ -540,6 +540,32 @@ def test_resolve_robots_fetches_edges(spark):
     assert sum(1 for t in loc_d if t[0] == "b.example") == 2
 
 
+def test_resolve_robots_null_url_local_matches_distributed(spark):
+    """A NULL host (so a NULL start URL) must not match a fetch row
+    whose url is NULL: the distributed hop join never matches NULL, and
+    the bounded local chase must report the same unreachable chain."""
+    from opentsdb_aura_spark.operators.robots import resolve_robots_fetches
+
+    hosts = spark.createDataFrame([("a.example",), (None,)], "host string")
+    fetches = spark.createDataFrame(
+        [
+            ("http://a.example/robots.txt", 200, None),
+            (None, 200, None),
+            (None, 301, "http://a.example/robots.txt"),
+        ],
+        "url string, status_code int, location string",
+    )
+
+    def run(**kw):
+        rows = resolve_robots_fetches(hosts, fetches, max_hops=2, **kw).collect()
+        return sorted((tuple(r) for r in rows), key=repr)
+
+    loc, dist = run(), run(local_cap=0)
+    assert loc == dist
+    null_rows = [t for t in loc if t[0] is None]
+    assert len(null_rows) == 1 and null_rows[0][1] is None, null_rows  # unreachable
+
+
 def test_parse_robots_txt_size_cap():
     """RFC 9309 §2.5: rules beyond the 500 KiB processing bound are
     ignored; rules before it survive, including when the cap splits a

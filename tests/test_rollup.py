@@ -1,4 +1,4 @@
-"""A10 rollup substitution + U3×A10 mixed-resolution splice.
+"""A10 rollup substitution + U3×A10 mixed-resolution tiered splice.
 
 Golden invariant throughout: serving a query from pre-aggregates must
 be value-identical to running the same downsample over raw points
@@ -60,48 +60,42 @@ def test_rollup_serves_same_values_as_raw(spark, make_points, agg):
     _assert_same(_collect(direct), _collect(served))
 
 
+def _tiered_vs_direct(pts, boundary, agg):
+    """(direct per-series downsample, per-series run over a TieredStore
+    whose cold tier carries the hourly rollup) over [BASE, BASE+4d)."""
+    from opentsdb_aura_spark.operators.downsample import downsample
+    from opentsdb_aura_spark.operators.rollup import build_rollup
+    from opentsdb_aura_spark.plans.query import MetricQuery, TieredStore, run_tiered_metric_query
+
+    start, end = BASE, BASE + 4 * DAY
+    store = TieredStore(hot=pts, cold=pts, boundary_ts=boundary, cold_rollups={HOUR: build_rollup(pts, HOUR)})
+    q = MetricQuery(start=start, end=end, interval=DAY, ds_agg=agg, fill="none")
+    direct = downsample(pts, start, end, DAY, agg, group_cols=["series_id"], fill="none")
+    return _collect(direct), _collect(run_tiered_metric_query(store, q, dedupe=False))
+
+
 @pytest.mark.parametrize("agg", ["sum", "avg", "max"])
 def test_spliced_equals_direct_full_range(spark, make_points, agg):
-    from opentsdb_aura_spark.operators.downsample import downsample
-    from opentsdb_aura_spark.operators.rollup import build_rollup, downsample_spliced
+    """Mixed-resolution splice: the cold half served from the rollup,
+    the hot half from raw points, equals the raw full-range run."""
+    from opentsdb_aura_spark.operators.rollup import build_rollup
+    from opentsdb_aura_spark.plans.query import MetricQuery, _preagg_substitution
 
     pts = _mixed_fleet(make_points)
-    rollup = build_rollup(pts, HOUR, group_cols=("metric",))
-    start, end = BASE, BASE + 4 * DAY
     boundary = BASE + 2 * DAY  # on the daily bucket grid
-    direct = downsample(pts, start, end, DAY, agg, group_cols=["metric"], fill="none")
-    spliced = downsample_spliced(
-        pts, rollup, HOUR, start, end, boundary, DAY, agg, group_cols=["metric"]
-    )
-    _assert_same(_collect(direct), _collect(spliced))
+    cold_q = MetricQuery(start=BASE, end=boundary, interval=DAY, ds_agg=agg, fill="none")
+    assert _preagg_substitution(pts, cold_q, rollups={HOUR: build_rollup(pts, HOUR)}) is not None
+    _assert_same(*_tiered_vs_direct(pts, boundary, agg))
 
 
 def test_spliced_degenerate_boundaries(spark, make_points):
-    from opentsdb_aura_spark.operators.downsample import downsample
-    from opentsdb_aura_spark.operators.rollup import build_rollup, downsample_spliced
-
+    """Boundary at the range start (all hot), mid-range, and the range
+    end (all cold, rollup-served) all equal the raw run."""
     pts = _mixed_fleet(make_points)
-    rollup = build_rollup(pts, HOUR, group_cols=("metric",))
-    start, end = BASE, BASE + 2 * DAY
-    direct = _collect(downsample(pts, start, end, DAY, "sum", group_cols=["metric"], fill="none"))
-    all_hot = downsample_spliced(pts, rollup, HOUR, start, end, start, DAY, "sum", group_cols=["metric"])
-    all_cold = downsample_spliced(pts, rollup, HOUR, start, end, end, DAY, "sum", group_cols=["metric"])
-    _assert_same(direct, _collect(all_hot))
-    _assert_same(direct, _collect(all_cold))
-
-
-def test_spliced_rejects_straddling_boundary(spark, make_points):
-    from opentsdb_aura_spark.operators.rollup import build_rollup, downsample_spliced
-
-    pts = _mixed_fleet(make_points)
-    rollup = build_rollup(pts, HOUR, group_cols=("metric",))
-    with pytest.raises(ValueError, match="bucket grid"):
-        downsample_spliced(pts, rollup, HOUR, BASE, BASE + 2 * DAY, BASE + DAY + 1, DAY, "sum")
-    with pytest.raises(ValueError, match="not servable"):
-        # 90-minute buckets don't divide by the hourly rollup grid
-        downsample_spliced(pts, rollup, HOUR, BASE, BASE + DAY, BASE + 5400, 5400, "sum")
-    with pytest.raises(ValueError, match="outside query range"):
-        downsample_spliced(pts, rollup, HOUR, BASE, BASE + DAY, BASE - DAY, DAY, "sum")
+    for boundary in (BASE, BASE + DAY, BASE + 4 * DAY):
+        direct, tiered = _tiered_vs_direct(pts, boundary, "sum")
+        assert direct, boundary
+        _assert_same(direct, tiered)
 
 
 def test_two_stage_gb_avg_equals_raw(make_points):
@@ -182,7 +176,7 @@ def test_hist_substitution_per_series_percentile(spark, make_points):
     from opentsdb_aura_spark.operators.rollup import HIST_EPS, build_rollup_histogram
     from opentsdb_aura_spark.plans.query import (
         MetricQuery,
-        _hist_substitution,
+        _preagg_substitution,
         run_metric_query,
     )
 
@@ -196,7 +190,7 @@ def test_hist_substitution_per_series_percentile(spark, make_points):
 
     # G4 per-series result
     q = MetricQuery(start=BASE, end=BASE + 10 * 3600, interval=3600 * 5, ds_agg="p90", fill="none")
-    assert _hist_substitution(pts, q, hist, None) is not None
+    assert _preagg_substitution(pts, q, hist_rollups=hist) is not None
     exact = {
         (r["series_id"], r["bucket_ts"]): r["value"]
         for r in run_metric_query(pts, q).collect()
@@ -232,12 +226,12 @@ def test_hist_substitution_falls_back(spark, make_points):
     substitute (None -> raw scan serves)."""
     from opentsdb_aura_spark.operators.rate import RateOptions
     from opentsdb_aura_spark.operators.rollup import build_rollup_histogram
-    from opentsdb_aura_spark.plans.query import MetricQuery, _hist_substitution
+    from opentsdb_aura_spark.plans.query import MetricQuery, _preagg_substitution
 
     pts = make_points([("m", {"h": "a"}, BASE + i * 60, float(i)) for i in range(120)])
     hist = {3600: build_rollup_histogram(pts, 3600)}
     ok = MetricQuery(start=BASE, end=BASE + 7200, interval=3600, ds_agg="p90", fill="none")
-    assert _hist_substitution(pts, ok, hist, None) is not None
+    assert _preagg_substitution(pts, ok, hist_rollups=hist) is not None
     for bad in (
         MetricQuery(start=BASE, end=BASE + 7200, interval=3600, ds_agg="sum", fill="none"),
         MetricQuery(start=BASE, end=BASE + 7200, interval=3600, ds_agg="p90",
@@ -245,7 +239,7 @@ def test_hist_substitution_falls_back(spark, make_points):
         MetricQuery(start=BASE + 60, end=BASE + 7260, interval=3600, ds_agg="p90", fill="none"),
         MetricQuery(start=BASE, end=BASE + 7200, interval=1800, ds_agg="p90", fill="none"),
     ):
-        assert _hist_substitution(pts, bad, hist, None) is None
+        assert _preagg_substitution(pts, bad, hist_rollups=hist) is None
 
 
 def test_tiered_percentile_composes_with_hist_substitution(spark, make_points):
@@ -304,8 +298,8 @@ def test_hist_substitution_p999_and_custom_eps(spark, make_points):
     from opentsdb_aura_spark.operators.rollup import build_rollup_histogram
     from opentsdb_aura_spark.plans.query import (
         MetricQuery,
-        _hist_substitution,
         _percentile_fraction,
+        _preagg_substitution,
         run_metric_query,
     )
 
@@ -318,7 +312,7 @@ def test_hist_substitution_p999_and_custom_eps(spark, make_points):
     q = MetricQuery(start=BASE, end=BASE + 5 * 3600, interval=5 * 3600, ds_agg="p999", fill="none")
 
     hist_01 = {3600: build_rollup_histogram(pts, 3600)}
-    assert _hist_substitution(pts, q, hist_01, None) is not None
+    assert _preagg_substitution(pts, q, hist_rollups=hist_01) is not None
 
     hist_05 = {3600: build_rollup_histogram(pts, 3600, eps=0.05)}
     vals = sorted(r[3] for r in rows)
@@ -331,3 +325,46 @@ def test_hist_substitution_p999_and_custom_eps(spark, make_points):
     # the hist_eps parameter exists because this failure is silent
     bad = run_metric_query(pts, q, hist_rollups=hist_05).first()["value"]
     assert abs(bad - exact) > 0.5 * abs(exact), (bad, exact)
+
+
+def test_hist_substitution_picks_coarsest_aligned_interval(spark, make_points, tmp_path):
+    """One interval chooser for every pre-aggregate kind: with sketch
+    tables at 3600 and 86400, a day-aligned daily p90 reads the daily
+    table and a 5-hour p90 the hourly one (86400 does not divide 5 h);
+    both stay within eps of the raw nearest-rank answer."""
+    import random
+
+    from opentsdb_aura_spark.operators.rollup import HIST_EPS, build_rollup_histogram
+    from opentsdb_aura_spark.plans.query import MetricQuery, run_metric_query
+
+    rng = random.Random(7)
+    rows = [
+        ("cpu", {"host": h}, BASE + i * 600, rng.uniform(1.0, 100.0))
+        for h in ("a", "b")
+        for i in range(2 * DAY // 600)
+    ]
+    pts = make_points(rows)
+    hist = {}
+    for riv in (HOUR, DAY):
+        path = str(tmp_path / f"hist_{riv}")
+        build_rollup_histogram(pts, riv).write.parquet(path)
+        hist[riv] = spark.read.parquet(path)
+    ids = {r["host"]: r["series_id"] for r in pts.select("series_id", pts.tags["host"].alias("host")).distinct().collect()}
+
+    for end, interval, want, other in (
+        (BASE + 2 * DAY, DAY, f"hist_{DAY}", f"hist_{HOUR}"),
+        (BASE + 5 * HOUR, 5 * HOUR, f"hist_{HOUR}", f"hist_{DAY}"),
+    ):
+        q = MetricQuery(start=BASE, end=end, interval=interval, ds_agg="p90", fill="none")
+        res = run_metric_query(pts, q, hist_rollups=hist)
+        files = " ".join(res.inputFiles())
+        assert f"/{want}/" in files and f"/{other}/" not in files, (interval, files)
+        got = {(r["series_id"], r["bucket_ts"]): r["value"] for r in res.collect()}
+        exact = {}
+        for host, sid in ids.items():
+            for b in range(BASE, end, interval):
+                vals = sorted(v for _, t, ts, v in rows if t["host"] == host and b <= ts < b + interval)
+                exact[(sid, b)] = vals[math.ceil(0.9 * len(vals)) - 1]
+        assert set(got) == set(exact), interval
+        for k, e in exact.items():
+            assert abs(got[k] - e) <= HIST_EPS * abs(e) + 1e-12, (interval, k, got[k], e)

@@ -3,16 +3,27 @@
 Usage: python tools/explain_dump.py <tag> [query ...]
 Writes plans/<tag>/<query>_<suffix>.txt (suffix from $PLAN_SUFFIX,
 default "before").  With no query list, dumps every bench query.
+Expression ids (``#123``) and the per-session counters (``plan_id=``,
+RDD ids) are replaced by ``N`` so dumps of two checkouts diff cleanly.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+_SESSION_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+
+
+def normalized_plan(df) -> str:
+    """Formatted physical plan with expression ids and per-session
+    counters normalised."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    return _SESSION_IDS.sub(r"\1N", plan)
 
 
 def main() -> None:
@@ -33,10 +44,7 @@ def main() -> None:
     spark = get_spark("explain_dump")
     for name in names:
         try:
-            df = SPARK_QUERIES[name](spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = normalized_plan(SPARK_QUERIES[name](spark, SF_DIR))
         except Exception as ex:  # noqa: BLE001 - record the failure in place
             plan = f"EXPLAIN FAILED: {ex}"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
