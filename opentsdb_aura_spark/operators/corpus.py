@@ -994,6 +994,7 @@ def _hll_estimate(regs: Column, m: int) -> Column:
 #: bound — 46 stages of 0.1-0.7 s each, every one a single task).
 #: Above the cap the distributed loop is unchanged
 #: (tools/pagerank_scale_bench.py's 2M-edge tier keeps exercising it).
+#: Read at call time; 0 always runs the distributed loop.
 _HB_LOCAL_EDGE_CAP = 200_000
 
 
@@ -1009,7 +1010,7 @@ def _hyperball_local(
     mirrors the Column expression tree term for term — the per-node
     2^-M fold is an index-ordered left fold, divisions and the
     linear-counting log are the same IEEE ops.  Parity is pinned in
-    tests/test_corpus_ops.py against local_cap=0."""
+    tests/test_corpus_ops.py against _HB_LOCAL_EDGE_CAP = 0."""
     import numpy as np
 
     h_u = F.xxhash64(F.col("u").cast("string"), F.lit(salt))
@@ -1124,7 +1125,6 @@ def hyperball_harmonic(
     src_col: str = "src",
     dst_col: str = "dst",
     salt: str = "hyperball",
-    local_cap: int = _HB_LOCAL_EDGE_CAP,
 ) -> DataFrame:
     """HyperBall (Boldi & Vigna 2011 / the "Four degrees of
     separation" machinery): approximate radius-bounded harmonic
@@ -1161,10 +1161,10 @@ def hyperball_harmonic(
         raise ValueError(f"max_dist must be >= 1, got {max_dist}")
     bits = mm.bit_length() - 1
     rest = 64 - bits
-    if local_cap:
+    if _HB_LOCAL_EDGE_CAP:
         got = _hyperball_local(
             edges, max_dist=int(max_dist), mm=mm, bits=bits, rest=rest,
-            src_col=src_col, dst_col=dst_col, salt=salt, cap=int(local_cap),
+            src_col=src_col, dst_col=dst_col, salt=salt, cap=_HB_LOCAL_EDGE_CAP,
         )
         if got is not None:
             return got

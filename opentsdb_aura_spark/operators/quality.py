@@ -34,10 +34,10 @@ from pyspark.sql.window import Window
 from opentsdb_aura_spark.operators.dedup_text import tokens
 from opentsdb_aura_spark.operators.text import STOPWORDS
 
-# Token cap for the bounded local LM paths (bigram, interpolated-KN
-# bigram, kn3, and the generic KN towers) — defined up top so every
-# scorer signature can default to it; rationale at the helper block
-# above lm_kn_fit.
+# Token cap for the bounded local LM paths (Laplace and interpolated-KN
+# bigram, and the generic KN towers), read at call time by
+# _kn_collect_tokens (0 keeps every LM on its distributed chain);
+# rationale at the helper block above lm_kn_fit.
 _KN_LOCAL_TOK_CAP = 500_000
 
 #: line-start markers counted as bullets and line-end ellipsis shapes
@@ -382,7 +382,6 @@ def lm_bigram_scores(
     alpha: float = 0.1,
     text_col: str = "text",
     id_col: str = "doc_id",
-    local_cap: int = _KN_LOCAL_TOK_CAP,
 ) -> DataFrame:
     """Perplexity-proxy quality score from a corpus-trained bigram LM
     → (doc_id, n_bigrams, avg_logprob).
@@ -399,52 +398,24 @@ def lm_bigram_scores(
     then the doc bigram stream equi-joins them (shuffle on the bigram /
     unigram keys, both high-cardinality); V joins in as a broadcast
     1-row literal.  Training IS the aggregation — no driver fit, no
-    Python.  Under ``local_cap`` tokens the whole fit+score runs
-    driver-side off one bounded collect (the _KN_LOCAL_TOK_CAP
-    discipline; same floats, libm-log/avg-order drift absorbed by the
-    consumers' 4-decimal round).
+    Python.  Under ``_KN_LOCAL_TOK_CAP`` tokens the whole fit+score
+    runs driver-side off one bounded collect (same floats,
+    libm-log/avg-order drift absorbed by the consumers' 4-decimal
+    round).
     """
-    if local_cap:
-        rows = _kn_collect_tokens(docs, text_col=text_col, id_col=id_col, cap=local_cap)
-        if rows is not None:
-            import numpy as np
+    a = float(alpha)
 
-            # packed-int bigrams + np.unique counts — the same
-            # vectorized tower discipline as the KN scorers; the
-            # per-bigram Laplace expression is elementwise-identical
-            # to the scalar log((c+α)/(U(w1)+α·V))
-            ids: dict = {}
-            for _, tk in rows:
-                for w in tk:
-                    if w not in ids:
-                        ids[w] = len(ids)
-            bits = max(1, len(ids).bit_length())
-            occ = _kn_pack_docs(rows, 2, ids, bits, grow=False)
-            doc_lens = [len(lst) for lst in occ.values()]
-            total = sum(doc_lens)
-            n_toks = sum(len(tk) for _, tk in rows)
-            tok_ids = np.fromiter(
-                (ids[w] for _, tk in rows for w in tk), dtype=np.int64, count=n_toks
-            )
-            T_all = np.fromiter(
-                (t for lst in occ.values() for t in lst), dtype=np.int64, count=total
-            )
-            if not total:
-                return docs.sparkSession.createDataFrame(
-                    [(did, 0, None) for did in occ],
-                    _kn_scores_schema(docs, id_col, "n_bigrams"),
-                )
-            ukeys, ucnt = np.unique(tok_ids, return_counts=True)
-            U, cN = np.unique(T_all, return_counts=True)
-            v = float(len(ukeys))
-            a = float(alpha)
-            u1 = ucnt[np.searchsorted(ukeys, U >> bits)].astype(np.float64)
-            lp = np.log((cN.astype(np.float64) + a) / (u1 + a * v))
-            vals = lp[np.searchsorted(U, T_all)]
-            return docs.sparkSession.createDataFrame(
-                _kn_np_per_doc(occ, doc_lens, vals),
-                _kn_scores_schema(docs, id_col, "n_bigrams"),
-            )
+    def laplace(rows, ids, U, c):
+        import numpy as np
+
+        # elementwise-identical to the scalar log((c+α)/(U(w1)+α·V))
+        tok_ids = np.fromiter((ids[w] for _, tk in rows for w in tk), np.int64)
+        u1 = np.bincount(tok_ids, minlength=len(ids))[U[:, 0]].astype(np.float64)
+        return np.log((c.astype(np.float64) + a) / (u1 + a * float(len(ids))))
+
+    local = _kn_local_bigram_scores(docs, text_col, id_col, laplace)
+    if local is not None:
+        return local
     toks = tokens(F.col(text_col))
     bigrams = F.transform(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -468,25 +439,14 @@ def lm_bigram_scores(
         .withColumn(
             "_lp",
             F.log(
-                (F.col("_bcnt") + F.lit(float(alpha)))
-                / (F.col("_ucnt") + F.lit(float(alpha)) * F.col("_v"))
+                (F.col("_bcnt") + F.lit(a))
+                / (F.col("_ucnt") + F.lit(a) * F.col("_v"))
             ),
         )
     )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_bigrams"),
-        F.avg("_lp").alias("avg_logprob"),
-    )
-    # docs with <2 tokens produce no bigram rows and would vanish from
-    # the score table entirely — surface them as unscorable
-    # (n_bigrams=0, NULL avg_logprob) so a join/rank over the scores
-    # never silently loses documents (review r9)
-    all_ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return all_ids.join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_bigrams", F.lit(0)).cast("bigint").alias("n_bigrams"),
-        "avg_logprob",
-    )
+    # docs with <2 tokens produce no bigram rows — the spine surfaces
+    # them as unscorable (review r9)
+    return _per_doc_scores(docs, id_col, scored, "n_bigrams")
 
 
 def perplexity_buckets(
@@ -759,14 +719,9 @@ def train_logreg_weights(
     uncentered pass already computes — all the μ arithmetic happens
     driver-side on the collected O(n_features) rows.
 
-    Spark-native training: each step is ONE distributed pass — the
-    per-doc margin aggregation (weights ride along as a literal array,
-    no join) feeds the residual, and the gradient groupBy covers the
-    bias as a pseudo-bucket −1 carried by a unit-count row per doc, so
-    weight and bias gradients come back in a single bounded collect of
-    ≤ n_features + 1 rows (the bpe_train 1-row-per-merge discipline,
-    widened to the feature dim).  The feature/label frames are lazily
-    checkpointed: materialized once, re-read per step.
+    Training runs on :func:`_gd_fit` with one label column: a bounded
+    local NumPy fit under the fit caps, else ONE distributed pass per
+    step over the lazily checkpointed packed frame.
 
     ``packed`` short-circuits the packing: a caller that also SCORES
     the same corpus builds the (doc_id, label…, fx) frame once with
@@ -774,63 +729,75 @@ def train_logreg_weights(
     between this fit and :func:`logreg_scores_packed` — the corpus is
     then featurized and packed exactly once per query instead of once
     per consumer.  ``features``/``labels`` are ignored when given."""
-    labs = None if packed is not None else labels.select(
-        "doc_id", F.col(label_col).cast("double").alias("y")
-    )
-    # pack each doc's sparse feature vector into ONE row up front:
-    # every GD step then computes margin + residual as a scalar
-    # expression over the array (no shuffle at all) and the gradient
-    # as one explode → groupBy(bucket) whose partial aggregation
-    # reduces to <= n_features + 1 rows per partition BEFORE the
-    # exchange — per-iteration cost is a narrow pass plus a tiny
-    # shuffle, independent of how many iterations run
-    # sort_array pins the fold's summation order to ascending bucket
-    # (bucket is unique per doc, so the struct sort is total): the
-    # margin dot-product sums the same way on every run/partitioning,
-    # and the oracle mirrors it with ORDER BY bucket inside its sum —
-    # without this, collect_list order (and thus float association)
-    # is nondeterministic, and drift feeds back through every GD step
-    #
-    # packed AFTER the label join (guide §2.3: shuffle only labeled
-    # docs' triples, and the pack's groupBy is the LAST shuffle before
-    # the checkpoint, so AQE sizes the materialized partitions by
-    # bytes instead of inheriting the label frame's partitioning —
-    # every per-step pass then schedules proportionally to data, not
-    # to an upstream frame's task count)
     if packed is not None:
         base = packed.select(F.col(label_col).cast("double").alias("y"), "fx")
     else:
+        labs = labels.select("doc_id", F.col(label_col).cast("double").alias("y"))
         base = _pack_label_features(labs, features, ["y"]).select("y", "fx")
         base = base.localCheckpoint(eager=False)
-    # bounded-fit probe: under the cap the whole loop runs driver-side
-    # in NumPy off ONE collect (which also materializes the shared
-    # checkpoint for the scoring pass); above it, the shared-pass
-    # distributed loop below runs unchanged
-    probe = _probe_packed(base, ["y"])
-    if (
-        len(probe) <= _FIT_LOCAL_ROW_CAP
-        and len(probe) * int(n_features) <= _FIT_LOCAL_CELL_CAP
-    ):
+    ((w, b),) = _gd_fit(
+        base, ["y"], "train_logreg_weights",
+        n_features=n_features, lr=lr, n_iter=n_iter, center=center, l2=l2,
+    )
+    return w, b
+
+
+def _fits_local(n_rows: int, n_features: int) -> bool:
+    """The bounded-fit gate shared by the GD trainers and OvR scorers:
+    a _probe_packed frame is handled driver-side iff its rows and its
+    dense rows x n_features matrix fit the caps."""
+    return (
+        n_rows <= _FIT_LOCAL_ROW_CAP
+        and n_rows * int(n_features) <= _FIT_LOCAL_CELL_CAP
+    )
+
+
+def _gd_fit(
+    base: DataFrame,
+    ycols: list[str],
+    name: str,
+    *,
+    n_features: int,
+    lr: float,
+    n_iter: int,
+    center: bool,
+    l2: float,
+) -> list[tuple[list[float], float]]:
+    """The one GD core behind both trainers: K = len(ycols) logistic
+    fits over a packed (y…, fx) frame, one (weights, intercept) per
+    label column.  The K fits share every pass; each column's
+    arithmetic is exactly that of an independent single-label fit.
+
+    Under the fit caps the whole loop runs driver-side in NumPy off ONE
+    bounded probe (which also materializes a shared checkpoint for the
+    scoring pass).  Above them, each step is ONE distributed pass: the
+    per-doc margins (weights ride along as literal arrays, no join)
+    feed K residual columns, and the gradient groupBy covers the bias
+    as a pseudo-bucket −1 carried by a unit-count row per doc, so
+    weight and bias gradients for all K fits come back in a single
+    bounded collect of ≤ n_features + 1 rows (the bpe_train
+    1-row-per-merge discipline, widened to the feature dim)."""
+    K = len(ycols)
+    probe = _probe_packed(base, ycols)
+    if _fits_local(len(probe), n_features):
         if not len(probe):
-            raise ValueError("train_logreg_weights: empty label frame")
-        ((lw, lb),) = _local_gd_fit(
+            raise ValueError(f"{name}: empty label frame")
+        return _local_gd_fit(
             probe,
-            ["y"],
+            ycols,
             n_features=int(n_features),
             lr=float(lr),
             n_iter=int(n_iter),
             center=bool(center),
             l2=float(l2),
         )
-        return lw, lb
     bias_entry = F.array(
         F.struct(F.lit(-1).cast("int").alias("bucket"), F.lit(1.0).alias("cnt"))
     )
     # ONE materializing pass returns n AND the per-bucket sums: the
-    # bias pseudo-bucket's Σ1.0 is the row count, so the old
-    # count-then-center pair of jobs collapses into this single
-    # bounded collect (μ division happens driver-side on the same
-    # doubles, bit-identical to the engine-side sum/n)
+    # bias pseudo-bucket's Σ1.0 is the row count (μ division happens
+    # driver-side on the same doubles, bit-identical to the engine-side
+    # sum/n)
     sums = (
         base.select(F.explode(F.concat("fx", bias_entry)).alias("f"))
         .groupBy(F.col("f.bucket").alias("bucket"))
@@ -839,43 +806,67 @@ def train_logreg_weights(
     )
     n = next((float(r["s"]) for r in sums if r["bucket"] < 0), 0.0)
     if n == 0:
-        raise ValueError("train_logreg_weights: empty label frame")
+        raise ValueError(f"{name}: empty label frame")
     mu = [0.0] * int(n_features)
     if center:
         for r in sums:
             if r["bucket"] >= 0:
                 mu[r["bucket"]] = float(r["s"]) / n
-    w = [0.0] * int(n_features)
-    b = 0.0
-    for _ in range(int(n_iter)):
-        # margin on raw features, centering folded into the constant
-        const = float(b) - sum(wi * mi for wi, mi in zip(w, mu))
-        w_arr = F.lit([float(x) for x in w])
-        dot = F.aggregate(
+    w = [[0.0] * int(n_features) for _ in range(K)]
+    b = [0.0] * K
+
+    def _dot(w_arr):
+        # factory closure: a default-arg binding would change the
+        # lambda's visible arity and break F.aggregate's 2-arg contract
+        return F.aggregate(
             F.col("fx"),
             F.lit(0.0),
             lambda acc, s: acc + s["cnt"] * F.element_at(w_arr, s["bucket"] + 1),
         )
-        resid = (
-            F.lit(1.0) / (F.lit(1.0) + F.exp(-(dot + F.lit(const)))) - F.col("y")
-        )
+
+    for _ in range(int(n_iter)):
+        resid_cols = []
+        for i in range(K):
+            # margin on raw features, centering folded into the constant
+            const = float(b[i]) - sum(wi * mi for wi, mi in zip(w[i], mu))
+            dot = _dot(F.lit([float(x) for x in w[i]]))
+            resid_cols.append(
+                (
+                    F.lit(1.0) / (F.lit(1.0) + F.exp(-(dot + F.lit(const))))
+                    - F.col(ycols[i])
+                ).alias(f"r_{i}")
+            )
         grads = (
-            base.select(resid.alias("resid"), F.concat("fx", bias_entry).alias("fx"))
-            .select("resid", F.explode("fx").alias("f"))
+            base.select(*resid_cols, F.concat("fx", bias_entry).alias("fx"))
+            .select(*[f"r_{i}" for i in range(K)], F.explode("fx").alias("f"))
             .groupBy(F.col("f.bucket").alias("bucket"))
-            .agg((F.sum(F.col("f.cnt") * F.col("resid")) / F.lit(float(n))).alias("g"))
-            .collect()  # bounded: <= n_features + 1 rows
+            .agg(
+                *[
+                    (F.sum(F.col("f.cnt") * F.col(f"r_{i}")) / F.lit(float(n))).alias(
+                        f"g_{i}"
+                    )
+                    for i in range(K)
+                ]
+            )
+            .collect()  # bounded: <= n_features + 1 rows, K columns
         )
-        rbar = next((float(r["g"]) for r in grads if r["bucket"] < 0), 0.0)
-        for r in grads:
-            if r["bucket"] < 0:
-                b -= float(lr) * rbar
-            else:
-                j = r["bucket"]
-                # l2 touches only populated buckets — unpopulated ones
-                # never leave 0, so their decay term is identically 0
-                w[j] -= float(lr) * (float(r["g"]) - mu[j] * rbar + float(l2) * w[j])
-    return w, float(b) - sum(wi * mi for wi, mi in zip(w, mu))
+        for i in range(K):
+            rbar = next((float(r[f"g_{i}"]) for r in grads if r["bucket"] < 0), 0.0)
+            for r in grads:
+                if r["bucket"] < 0:
+                    b[i] -= float(lr) * rbar
+                else:
+                    j = r["bucket"]
+                    # l2 touches only populated buckets — unpopulated
+                    # ones never leave 0, so their decay term is
+                    # identically 0; the intercept stays unpenalized
+                    w[i][j] -= float(lr) * (
+                        float(r[f"g_{i}"]) - mu[j] * rbar + float(l2) * w[i][j]
+                    )
+    return [
+        (w[i], float(b[i]) - sum(wi * mi for wi, mi in zip(w[i], mu)))
+        for i in range(K)
+    ]
 
 
 def logreg_scores(
@@ -980,7 +971,6 @@ def lm_kn_scores(
     discount: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    local_cap: int = _KN_LOCAL_TOK_CAP,
 ) -> DataFrame:
     """Interpolated Kneser–Ney bigram scores → (doc_id, n_bigrams,
     avg_logprob) — the smoothing family CCNet's KenLM actually uses
@@ -1004,56 +994,25 @@ def lm_kn_scores(
     d = float(discount)
     if not 0.0 < d < 1.0:
         raise ValueError(f"lm_kn_scores: discount must be in (0, 1), got {discount}")
-    if local_cap:
-        rows = _kn_collect_tokens(docs, text_col=text_col, id_col=id_col, cap=local_cap)
-        if rows is not None:
-            import numpy as np
 
-            # packed-int bigrams + np.unique counts (the vectorized
-            # tower discipline); the per-type absolute-discount
-            # expression is elementwise-identical to the scalar
-            # max(c−d,0)/ptot + d·nfollow/ptot·nprec/ntypes
-            ids: dict = {}
-            for _, tk in rows:
-                for w in tk:
-                    if w not in ids:
-                        ids[w] = len(ids)
-            bits = max(1, len(ids).bit_length())
-            occ = _kn_pack_docs(rows, 2, ids, bits, grow=False)
-            doc_lens = [len(lst) for lst in occ.values()]
-            total = sum(doc_lens)
-            if not total:
-                return docs.sparkSession.createDataFrame(
-                    [(did, 0, None) for did in occ],
-                    _kn_scores_schema(docs, id_col, "n_bigrams"),
-                )
-            T_all = np.fromiter(
-                (t for lst in occ.values() for t in lst), dtype=np.int64, count=total
-            )
-            U, c = np.unique(T_all, return_counts=True)
-            w1 = U >> bits
-            w2 = U & ((1 << bits) - 1)
-            # U ascends, so w1 is non-decreasing: prefix groups are
-            # contiguous runs (integer sums — exact)
-            w1k, starts = np.unique(w1, return_index=True)
-            ptot_g = np.add.reduceat(c, starts)
-            nfollow_g = np.diff(np.append(starts, len(U)))
-            w2k, nprec_g = np.unique(w2, return_counts=True)
-            ntypes = float(len(U))
-            pi = np.searchsorted(w1k, w1)
-            ptot = ptot_g[pi].astype(np.float64)
-            nfollow = nfollow_g[pi].astype(np.float64)
-            nprec = nprec_g[np.searchsorted(w2k, w2)].astype(np.float64)
-            cf = c.astype(np.float64)
-            lp = np.log(
-                np.maximum(cf - d, 0.0) / ptot
-                + d * nfollow / ptot * nprec / ntypes
-            )
-            vals = lp[np.searchsorted(U, T_all)]
-            return docs.sparkSession.createDataFrame(
-                _kn_np_per_doc(occ, doc_lens, vals),
-                _kn_scores_schema(docs, id_col, "n_bigrams"),
-            )
+    def interpolated(rows, ids, U, c):
+        import numpy as np
+
+        # per-type integer sums via bincount (exact in doubles); the
+        # absolute-discount expression is elementwise-identical to the
+        # scalar max(c−d,0)/ptot + d·nfollow/ptot·nprec/ntypes
+        w1, w2 = U[:, 0], U[:, 1]
+        ptot = np.bincount(w1, weights=c.astype(np.float64), minlength=len(ids))[w1]
+        nfollow = np.bincount(w1, minlength=len(ids))[w1].astype(np.float64)
+        nprec = np.bincount(w2, minlength=len(ids))[w2].astype(np.float64)
+        cf = c.astype(np.float64)
+        return np.log(
+            np.maximum(cf - d, 0.0) / ptot + d * nfollow / ptot * nprec / float(len(U))
+        )
+
+    local = _kn_local_bigram_scores(docs, text_col, id_col, interpolated)
+    if local is not None:
+        return local
     toks = tokens(F.col(text_col))
     bigrams = F.transform(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -1083,18 +1042,7 @@ def lm_kn_scores(
         .crossJoin(F.broadcast(types))
         .withColumn("_lp", F.log(p))
     )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_bigrams"),
-        F.avg("_lp").alias("avg_logprob"),
-    )
-    # <2-token docs surface as unscorable, never vanish (the
-    # lm_bigram_scores contract)
-    all_ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return all_ids.join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_bigrams", F.lit(0)).cast("bigint").alias("n_bigrams"),
-        "avg_logprob",
-    )
+    return _per_doc_scores(docs, id_col, scored, "n_bigrams")
 
 
 def hashed_char_ngram_features(
@@ -1191,28 +1139,125 @@ def _dense_fx(pdf, D: int):
     return X
 
 
-def _local_ovr_margins(probe_pdf, models, classes, n_features: int):
-    """Dense margins for collected packed rows: X@W + b, the same
-    matrix the bounded GD fit builds.  The BLAS reduction order
-    differs from the sort_array fold by ~1e-13 — the drift class the
-    bounded fit already committed to for the weights themselves,
-    absorbed by every consumer's nudged 4-decimal round."""
+def _ovr_margin_stage(
+    name: str,
+    features: DataFrame,
+    models: dict[str, tuple[list[float], float]],
+    id_spine: DataFrame,
+    *,
+    n_features: int,
+    packed: DataFrame | None,
+    keep_cols: tuple[str, ...],
+):
+    """The stage every one-vs-rest scorer shares → (classes, local, base,
+    raw).  Validates the models; then EITHER ``local`` = (probe, M): a
+    ``packed`` frame under the fit caps is re-read from its
+    materialized checkpoint and scored driver-side (dense X@W + b — the
+    bounded-fit discipline; interpreted literal-array folds over
+    thousands of rows were the dominant scoring cost), with ``base`` /
+    ``raw`` None; OR ``local`` is None, ``base`` is the (doc_id, …, fx)
+    frame and ``raw`` maps each class to its margin Column: a fold over
+    the doc's sort_array-packed vector (same summation order as
+    training) plus the intercept, every model riding as a literal
+    array over ONE pass — no join per class, no K-fold re-scan.
+
+    ``packed`` shares the trainer's materialized frame (feature-less
+    docs are already empty-array rows there); otherwise the feature
+    triples are packed here and docs absent from them score bias-only
+    via the id spine.  The dense margins' BLAS reduction order differs
+    from the fold by ~1e-13 — the drift class the bounded fit already
+    committed to for the weights themselves, absorbed by every
+    consumer's nudged 4-decimal round."""
+    classes = sorted(models)
+    if not classes:
+        raise ValueError(f"{name}: no models")
+    for cls, (w, _) in models.items():
+        if len(w) != int(n_features):
+            raise ValueError(
+                f"{name}[{cls}]: {len(w)} weights != n_features={n_features}"
+            )
+    if packed is not None:
+        probe = _probe_packed(packed, ("doc_id",) + tuple(keep_cols))
+        if _fits_local(len(probe), n_features):
+            import numpy as np
+
+            X = _dense_fx(probe, int(n_features))
+            W = np.column_stack(
+                [np.asarray(models[c][0], dtype=np.float64) for c in classes]
+            )
+            b = np.asarray([models[c][1] for c in classes], dtype=np.float64)
+            return classes, (probe, X @ W + b), None, None
+        base = packed
+    else:
+        docvec = features.groupBy("doc_id").agg(
+            F.sort_array(F.collect_list(F.struct("bucket", "cnt"))).alias("fx")
+        )
+        base = id_spine.select(F.col(id_spine.columns[0]).alias("doc_id")).join(
+            docvec, "doc_id", "left"
+        )
+    raw = {}
+    for cls in classes:
+        w, b = models[cls]
+        w_arr = F.lit([float(x) for x in w])
+        dot = F.aggregate(
+            F.coalesce(
+                F.col("fx"), F.array().cast("array<struct<bucket:int,cnt:double>>")
+            ),
+            F.lit(0.0),
+            lambda acc, s: acc + s["cnt"] * F.element_at(w_arr, s["bucket"] + 1),
+        )
+        raw[cls] = dot + F.lit(float(b))
+    return classes, None, base, raw
+
+
+def _ovr_local_frame(
+    packed: DataFrame, probe, keep_cols, classes, values, prefix: str,
+    floor: float | None = None, reject_label: str | None = None,
+) -> DataFrame:
+    """The driver-side output layer: one row per probed doc with its
+    per-class ``values`` and the alphabetically-first argmax class —
+    or ``reject_label`` when ``floor`` is set and the max falls below
+    it.  Spark's NaN semantics are mirrored: NaN compares greater than
+    everything and equal to itself in Spark SQL, so greatest + the
+    when-chain route such a doc to its FIRST NaN class, never the
+    reject bucket (a plain == scan would raise StopIteration)."""
     import numpy as np
 
-    X = _dense_fx(probe_pdf, int(n_features))
-    W = np.column_stack([np.asarray(models[c][0], dtype=np.float64) for c in classes])
-    b = np.asarray([models[c][1] for c in classes], dtype=np.float64)
-    return X @ W + b
-
-
-def _ovr_local_schema(packed: DataFrame, keep_cols, value_cols) -> StructType:
+    ids = probe["doc_id"].tolist()
+    keeps = [probe[c].tolist() for c in keep_cols]
+    out = []
+    for i in range(len(ids)):
+        vs = values[i]
+        nan_mask = np.isnan(vs)
+        if nan_mask.any():
+            pred = classes[int(np.argmax(nan_mask))]
+        else:
+            best = vs.max()
+            if floor is not None and not best >= floor:
+                pred = str(reject_label)
+            else:
+                pred = next(classes[j] for j in range(len(classes)) if vs[j] == best)
+        out.append(
+            (ids[i],)
+            + tuple(k[i] for k in keeps)
+            + tuple(float(v) for v in vs)
+            + (pred,)
+        )
     fields = [StructField("doc_id", packed.schema["doc_id"].dataType)]
-    fields += [
-        StructField(c, packed.schema[c].dataType) for c in keep_cols
-    ]
-    fields += [StructField(c, DoubleType()) for c in value_cols]
+    fields += [StructField(c, packed.schema[c].dataType) for c in keep_cols]
+    fields += [StructField(f"{prefix}_{c}", DoubleType()) for c in classes]
     fields.append(StructField("pred_lang", StringType()))
-    return StructType(fields)
+    return packed.sparkSession.createDataFrame(out, StructType(fields))
+
+
+def _ovr_argmax(vals: dict, classes: list[str]) -> tuple[Column, Column]:
+    """(best, pred) Columns: the greatest per-class value and the
+    alphabetically-first class attaining it (a when-chain)."""
+    best = F.greatest(*[vals[c] for c in classes]) if len(classes) > 1 else vals[classes[0]]
+    pred = F.when(vals[classes[0]] == best, F.lit(classes[0]))
+    for cls in classes[1:]:
+        pred = pred.when(vals[cls] == best, F.lit(cls))
+    return best, pred
 
 
 def ovr_logreg_scores(
@@ -1228,273 +1273,32 @@ def ovr_logreg_scores(
     pred_<label>) with the alphabetically-first argmax on ties — the
     multi-class decision fastText's lang-id makes, over ANY feature
     triples (doc_id, bucket, cnt).  All K models ride as literal
-    arrays over ONE packed pass: the doc's sparse vector is packed
-    once (sort_array pins summation order, same as training), each
-    class margin is a fold over it, and the argmax is a when-chain —
-    no join per class, no K-fold re-scan of the corpus.  Docs absent
-    from the feature triples score bias-only via the id spine."""
-    classes = sorted(models)
-    if not classes:
-        raise ValueError("ovr_logreg_scores: no models")
-    for cls, (w, _) in models.items():
-        if len(w) != int(n_features):
-            raise ValueError(
-                f"ovr_logreg_scores[{cls}]: {len(w)} weights != n_features={n_features}"
-            )
-    # ``packed`` shares the trainer's materialized (doc_id, …, fx)
-    # frame — the scoring pass then skips its own pack + spine join
-    # (feature-less docs are already empty-array rows there).  Under
-    # the fit caps the rows are re-read from the materialized
-    # checkpoint and scored driver-side (dense X@W — the bounded-fit
-    # discipline; interpreted literal-array folds over thousands of
-    # rows were the dominant scoring cost).
-    if packed is not None:
-        probe = _probe_packed(packed, ("doc_id",) + tuple(keep_cols))
-        if (
-            len(probe) <= _FIT_LOCAL_ROW_CAP
-            and len(probe) * int(n_features) <= _FIT_LOCAL_CELL_CAP
-        ):
-            import numpy as np
-
-            M = _local_ovr_margins(probe, models, classes, n_features)
-            ids = probe["doc_id"].tolist()
-            keeps = [probe[c].tolist() for c in keep_cols]
-            out = []
-            for i in range(len(ids)):
-                ms = M[i]
-                # Spark's NaN semantics mirrored (the softmax local
-                # path's rule): NaN margins compare greater-than-
-                # everything and equal to themselves in Spark SQL, so
-                # greatest + the when-chain route such a doc to the
-                # FIRST NaN class; a plain == scan would StopIteration
-                nan_mask = np.isnan(ms)
-                if nan_mask.any():
-                    pred = classes[int(np.argmax(nan_mask))]
-                else:
-                    best = ms.max()
-                    pred = next(
-                        classes[j] for j in range(len(classes)) if ms[j] == best
-                    )
-                out.append(
-                    (ids[i],)
-                    + tuple(k[i] for k in keeps)
-                    + tuple(float(m) for m in ms)
-                    + (pred,)
-                )
-            return packed.sparkSession.createDataFrame(
-                out,
-                _ovr_local_schema(
-                    packed, keep_cols, [f"margin_{c}" for c in classes]
-                ),
-            )
-        base = packed
-    else:
-        docvec = features.groupBy("doc_id").agg(
-            F.sort_array(F.collect_list(F.struct("bucket", "cnt"))).alias("fx")
-        )
-        base = id_spine.select(F.col(id_spine.columns[0]).alias("doc_id")).join(
-            docvec, "doc_id", "left"
-        )
-    # Stage 1: each class's margin fold evaluated ONCE into a real
-    # column; the argmax layer (greatest + when-chain) then reads
-    # column refs instead of re-running the literal-array fold per
-    # reference (~3x per class inlined).  Same doubles, same argmax.
-    raw = {}
-    for cls in classes:
-        w, b = models[cls]
-        w_arr = F.lit([float(x) for x in w])
-        dot = F.aggregate(
-            F.coalesce(
-                F.col("fx"), F.array().cast("array<struct<bucket:int,cnt:double>>")
-            ),
-            F.lit(0.0),
-            lambda acc, s: acc + s["cnt"] * F.element_at(w_arr, s["bucket"] + 1),
-        )
-        raw[cls] = dot + F.lit(float(b))
+    arrays over ONE packed pass (:func:`_ovr_margin_stage`); the
+    argmax is a when-chain.  Docs absent from the feature triples
+    score bias-only via the id spine."""
+    classes, local, base, raw = _ovr_margin_stage(
+        "ovr_logreg_scores", features, models, id_spine,
+        n_features=n_features, packed=packed, keep_cols=keep_cols,
+    )
+    if local is not None:
+        probe, M = local
+        return _ovr_local_frame(packed, probe, keep_cols, classes, M, "margin")
+    # each class's margin fold evaluated ONCE into a real column; the
+    # argmax layer (greatest + when-chain) then reads column refs
+    # instead of re-running the literal-array fold per reference (~3x
+    # per class inlined).  Same doubles, same argmax.
     mid = base.select(
         "doc_id",
         *keep_cols,
         *[raw[c].alias(f"_m_{c}") for c in classes],
     )
     margins = {cls: F.col(f"_m_{cls}") for cls in classes}
-    best = F.greatest(*[margins[c] for c in classes]) if len(classes) > 1 else margins[classes[0]]
-    pred = F.when(margins[classes[0]] == best, F.lit(classes[0]))
-    for cls in classes[1:]:
-        pred = pred.when(margins[cls] == best, F.lit(cls))
+    _best, pred = _ovr_argmax(margins, classes)
     return mid.select(
         "doc_id",
         *keep_cols,
         *[margins[c].alias(f"margin_{c}") for c in classes],
         pred.alias("pred_lang"),
-    )
-
-
-def lm_kn3_scores(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    local_cap: int = _KN_LOCAL_TOK_CAP,
-) -> DataFrame:
-    """Trigram MODIFIED Kneser–Ney scores → (doc_id, n_trigrams,
-    avg_logprob) — the full Chen & Goodman 1999 estimator (the
-    smoothing KenLM defaults to, at the engine-native order 3),
-    generalizing :func:`lm_kn_scores`' fixed-discount bigram form:
-
-        p(w|u,v)  = max(c(uvw) − D(c), 0)/c(uv·) + γ(uv)·p₂(w|v)
-        p₂(w|v)   = max(c'(vw) − D'(c'), 0)/c'(v·) + γ₂(v)·p₁(w)
-        p₁(w)     = N₁₊(·vw types)/N₁₊(··)
-
-    with COUNT-DEPENDENT discounts D₁/D₂/D₃₊ estimated from the
-    count-of-counts (Y = n₁/(n₁+2n₂); D₁ = 1−2Y·n₂/n₁;
-    D₂ = 2−3Y·n₃/n₂; D₃₊ = 3−4Y·n₄/n₃ — clamped at 0, falling back
-    to 0.5 when a count-of-count is empty so tiny corpora stay
-    defined), γ the mass those discounts free per context, and the
-    MIDDLE order built from continuation counts c'(vw) = |{u :
-    c(uvw) > 0}| — the KN move that scores words by context
-    diversity, applied at both backoff levels.
-
-    Everything derives from ONE trigram count table: c' and the
-    unigram continuation distribution are GROUP BYs over c3, the
-    count-of-counts are two 1-row aggregates (broadcast), each
-    DISTINCT trigram is scored once on the type table, and the
-    occurrence frame pays exactly one equi-join against the finished
-    scores — training IS the aggregation, no driver fit, no Python.
-    <3-token docs surface with n_trigrams 0 and NULL score, never
-    vanish."""
-    if local_cap:
-        # the generic tower at order 3 IS this recursion with the same
-        # float association (count tables, ctx dims, discount triples,
-        # gamma and interpolation all term-identical — pinned by
-        # test_kn_order3_generic_matches_dedicated_kn3), so the
-        # bounded local path delegates to it and renames the count
-        rows = _kn_collect_tokens(docs, text_col=text_col, id_col=id_col, cap=local_cap)
-        if rows is not None:
-            return docs.sparkSession.createDataFrame(
-                _kn_local_scores_order(rows, 3),
-                _kn_scores_schema(docs, id_col, "n_trigrams"),
-            )
-    toks = tokens(F.col(text_col))
-    tg = F.transform(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 2, F.lit(0))),
-        lambda t, i: F.struct(
-            t.alias("w1"),
-            F.element_at(toks, i + 2).alias("w2"),
-            F.element_at(toks, i + 3).alias("w3"),
-        ),
-    )
-    doc_tg = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(tg).alias("g")
-    ).select("doc_id", "g.w1", "g.w2", "g.w3")
-    # materialize once: five count dims + the final per-doc join all
-    # read the trigram pass — without this the tokenize+explode lineage
-    # re-executes per consumer
-    doc_tg = doc_tg.localCheckpoint(eager=False)
-
-    c3 = doc_tg.groupBy("w1", "w2", "w3").agg(
-        F.count("*").cast("double").alias("c")
-    )
-    # the distinct-trigram table is the hub every dim derives from (and
-    # the continuation table cc2 below likewise feeds three aggregates)
-    c3 = c3.localCheckpoint(eager=False)
-    hi = c3.groupBy("w1", "w2").agg(
-        F.sum("c").alias("ctot"),
-        F.sum((F.col("c") == 1).cast("double")).alias("n1f"),
-        F.sum((F.col("c") == 2).cast("double")).alias("n2f"),
-        F.sum((F.col("c") >= 3).cast("double")).alias("n3f"),
-    )
-    cc2 = c3.groupBy("w2", "w3").agg(F.count("*").cast("double").alias("cc"))
-    cc2 = cc2.localCheckpoint(eager=False)
-    mid = cc2.groupBy("w2").agg(
-        F.sum("cc").alias("cctot"),
-        F.sum((F.col("cc") == 1).cast("double")).alias("m1f"),
-        F.sum((F.col("cc") == 2).cast("double")).alias("m2f"),
-        F.sum((F.col("cc") >= 3).cast("double")).alias("m3f"),
-    )
-    u1 = cc2.groupBy("w3").agg(F.count("*").cast("double").alias("uc"))
-    ut = cc2.agg(F.count("*").cast("double").alias("u"))
-
-    def discounts(counted, cname, d1n, d2n, d3n):
-        coc = counted.agg(
-            F.sum((F.col(cname) == 1).cast("double")).alias("n1"),
-            F.sum((F.col(cname) == 2).cast("double")).alias("n2"),
-            F.sum((F.col(cname) == 3).cast("double")).alias("n3"),
-            F.sum((F.col(cname) == 4).cast("double")).alias("n4"),
-        )
-        y = F.when(
-            F.col("n1") + 2 * F.col("n2") > 0,
-            F.col("n1") / (F.col("n1") + 2 * F.col("n2")),
-        ).otherwise(F.lit(0.5))
-        withy = coc.select(y.alias("y"), "n1", "n2", "n3", "n4")
-        return withy.select(
-            F.when(
-                F.col("n1") > 0,
-                F.greatest(1 - 2 * F.col("y") * F.col("n2") / F.col("n1"), F.lit(0.0)),
-            )
-            .otherwise(F.lit(0.5))
-            .alias(d1n),
-            F.when(
-                F.col("n2") > 0,
-                F.greatest(2 - 3 * F.col("y") * F.col("n3") / F.col("n2"), F.lit(0.0)),
-            )
-            .otherwise(F.lit(0.5))
-            .alias(d2n),
-            F.when(
-                F.col("n3") > 0,
-                F.greatest(3 - 4 * F.col("y") * F.col("n4") / F.col("n3"), F.lit(0.0)),
-            )
-            .otherwise(F.lit(0.5))
-            .alias(d3n),
-        )
-
-    dhi = discounts(c3, "c", "d1", "d2", "d3")
-    dmid = discounts(cc2, "cc", "e1", "e2", "e3")
-
-    d_of_c = (
-        F.when(F.col("c") == 1, F.col("d1"))
-        .when(F.col("c") == 2, F.col("d2"))
-        .otherwise(F.col("d3"))
-    )
-    e_of_cc = (
-        F.when(F.col("cc") == 1, F.col("e1"))
-        .when(F.col("cc") == 2, F.col("e2"))
-        .otherwise(F.col("e3"))
-    )
-    gamma_hi = (
-        F.col("d1") * F.col("n1f") + F.col("d2") * F.col("n2f") + F.col("d3") * F.col("n3f")
-    ) / F.col("ctot")
-    gamma_mid = (
-        F.col("e1") * F.col("m1f") + F.col("e2") * F.col("m2f") + F.col("e3") * F.col("m3f")
-    ) / F.col("cctot")
-    p1 = F.col("uc") / F.col("u")
-    p2 = F.greatest(F.col("cc") - e_of_cc, F.lit(0.0)) / F.col("cctot") + gamma_mid * p1
-    p = F.greatest(F.col("c") - d_of_c, F.lit(0.0)) / F.col("ctot") + gamma_hi * p2
-
-    # score each DISTINCT trigram once — the dim joins run on the
-    # (much smaller) type table, and the occurrence-level frame pays
-    # exactly ONE equi-join against the finished scores; at corpus
-    # scale this is the difference between shuffling five dims against
-    # every token position and shuffling them against the vocabulary
-    tri_scores = (
-        c3.join(hi, ["w1", "w2"])
-        .join(cc2, ["w2", "w3"])
-        .join(mid, ["w2"])
-        .join(u1, ["w3"])
-        .crossJoin(F.broadcast(ut))
-        .crossJoin(F.broadcast(dhi))
-        .crossJoin(F.broadcast(dmid))
-        .select("w1", "w2", "w3", F.log(p).alias("_lp"))
-    )
-    scored = doc_tg.join(tri_scores, ["w1", "w2", "w3"])
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_trigrams"),
-        F.avg("_lp").alias("avg_logprob"),
-    )
-    all_ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return all_ids.join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_trigrams", F.lit(0)).cast("bigint").alias("n_trigrams"),
-        "avg_logprob",
     )
 
 
@@ -1504,23 +1308,25 @@ def lm_kn_scores_order(
     order: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    local_cap: int = _KN_LOCAL_TOK_CAP,
 ) -> DataFrame:
     """Modified Kneser–Ney at ARBITRARY order N → (doc_id, n_ngrams,
     avg_logprob) — the full Chen & Goodman 1999 recursion at the order
     production filters actually run (Wenzek et al. 2020 filter CCNet
-    on a 5-gram modified-KN KenLM; ``order=5`` IS that estimator):
+    on a 5-gram modified-KN KenLM; ``order=5`` IS that estimator, and
+    ``order=3`` the trigram form KenLM defaults to):
 
         p_k(w|ctx_k) = max(c_k − D_k(c_k), 0)/c_k(ctx_k·)
                        + γ_k(ctx_k)·p_{k−1}(w|ctx_{k−1})
         p_1(w)       = N₁₊(·w)/N₁₊(··)
 
-    with count-dependent discounts D₁/D₂/D₃₊ per level estimated from
-    that level's count-of-counts (:func:`lm_kn3_scores`'s rule at
-    every backoff step), raw counts at the top level, and CONTINUATION
-    counts — |{distinct left word}| — at every level below (each
-    level-k table is one GROUP BY over level k+1's, so the whole
-    tower derives from the single N-gram count table).
+    with COUNT-DEPENDENT discounts D₁/D₂/D₃₊ per level estimated from
+    that level's count-of-counts (Y = n₁/(n₁+2n₂); D₁ = 1−2Y·n₂/n₁;
+    D₂ = 2−3Y·n₃/n₂; D₃₊ = 3−4Y·n₄/n₃ — clamped at 0, falling back to
+    0.5 when a count-of-count is empty so tiny corpora stay defined),
+    γ the mass those discounts free per context, raw counts at the top
+    level, and CONTINUATION counts — |{distinct left word}| — at every
+    level below (each level-k table is one GROUP BY over level k+1's,
+    so the whole tower derives from the single N-gram count table).
 
     Scale shape: the occurrence pass materializes once; each distinct
     N-gram is scored ONCE on the type table (k−1 context dims + k−1
@@ -1531,67 +1337,20 @@ def lm_kn_scores_order(
     N = int(order)
     if N < 2:
         raise ValueError(f"lm_kn_scores_order: order must be >= 2, got {order}")
-    if local_cap:
-        rows = _kn_collect_tokens(docs, text_col=text_col, id_col=id_col, cap=local_cap)
-        if rows is not None:
-            return docs.sparkSession.createDataFrame(
-                _kn_local_scores_order(rows, N), _kn_scores_schema(docs, id_col)
-            )
-    cols = [f"w{j}" for j in range(1, N + 1)]
-    toks = tokens(F.col(text_col))
-    ng = F.transform(
-        F.slice(toks, 1, F.greatest(F.size(toks) - (N - 1), F.lit(0))),
-        lambda t, i: F.struct(
-            t.alias("w1"),
-            *[F.element_at(toks, i + j).alias(f"w{j}") for j in range(2, N + 1)],
-        ),
-    )
-    occ = docs.select(F.col(id_col).alias("doc_id"), F.explode(ng).alias("g")).select(
-        "doc_id", *[F.col(f"g.{c}").alias(c) for c in cols]
-    )
-    occ = occ.localCheckpoint(eager=False)
-
-    # count tower: raw counts at level N, continuation counts below —
-    # each level one GROUP BY over the level above (checkpointed: every
-    # table feeds its context dim, its discount aggregate, the next
-    # level down, and the scoring join)
-    g = {
-        N: occ.groupBy(*cols)
-        .agg(F.count("*").cast("double").alias(f"c{N}"))
-        .localCheckpoint(eager=False)
-    }
-    for k in range(N - 1, 0, -1):
-        g[k] = (
-            g[k + 1]
-            .groupBy(*cols[N - k :])
-            .agg(F.count("*").cast("double").alias(f"c{k}"))
-            .localCheckpoint(eager=False)
+    rows = _kn_collect_tokens(docs, text_col=text_col, id_col=id_col)
+    if rows is not None:
+        return docs.sparkSession.createDataFrame(
+            _kn_local_scores_order(rows, N), _kn_scores_schema(docs, id_col)
         )
-
+    cols = [f"w{j}" for j in range(1, N + 1)]
+    occ = _kn_occurrences(docs, N, text_col, id_col).localCheckpoint(eager=False)
+    g, x, ctx = _kn_tower(occ, N)
     joined = g[N]
     for k in range(N - 1, 0, -1):
         joined = joined.join(g[k], cols[N - k :])
     for k in range(N, 1, -1):
-        ckeys = cols[N - k : N - 1]
-        # one groupBy serves BOTH the per-context dim and the global
-        # count-of-count discount triple: the ==3/==4 cells ride along
-        # and dd[k] becomes a tiny agg over the (much smaller) context
-        # table instead of a second full scan of g[k] (guide §1.2 —
-        # don't recompute what a pass already saw).  All cells are
-        # integer counts in doubles, so sum-of-per-context-sums is
-        # bit-identical to the direct sum.
-        ctx_full = g[k].groupBy(*ckeys).agg(
-            F.sum(f"c{k}").alias(f"tot{k}"),
-            F.sum((F.col(f"c{k}") == 1).cast("double")).alias(f"n1f{k}"),
-            F.sum((F.col(f"c{k}") == 2).cast("double")).alias(f"n2f{k}"),
-            F.sum((F.col(f"c{k}") >= 3).cast("double")).alias(f"n3f{k}"),
-            F.sum((F.col(f"c{k}") == 3).cast("double")).alias(f"_n3e{k}"),
-            F.sum((F.col(f"c{k}") == 4).cast("double")).alias(f"_n4e{k}"),
-        ).localCheckpoint(eager=False)
-        joined = joined.join(
-            ctx_full.select(*ckeys, f"tot{k}", f"n1f{k}", f"n2f{k}", f"n3f{k}"), ckeys
-        )
-        dk = _discounts_from_ctx(ctx_full, k)  # 1-row discount triple
+        joined = joined.join(x[k], cols[N - k : N - 1])
+        dk = _discounts_from_ctx(ctx[k], k)  # 1-row discount triple
         joined = joined.crossJoin(F.broadcast(dk))
     u_total = g[2].agg(F.count("*").cast("double").alias("u"))
     joined = joined.crossJoin(F.broadcast(u_total))
@@ -1599,30 +1358,10 @@ def lm_kn_scores_order(
     p = F.col("c1") / F.col("u")
     for k in range(2, N + 1):
         ck = F.col(f"c{k}")
-        d_of = (
-            F.when(ck == 1, F.col(f"d{k}_1"))
-            .when(ck == 2, F.col(f"d{k}_2"))
-            .otherwise(F.col(f"d{k}_3"))
-        )
-        gamma = (
-            F.col(f"d{k}_1") * F.col(f"n1f{k}")
-            + F.col(f"d{k}_2") * F.col(f"n2f{k}")
-            + F.col(f"d{k}_3") * F.col(f"n3f{k}")
-        ) / F.col(f"tot{k}")
-        p = F.greatest(ck - d_of, F.lit(0.0)) / F.col(f"tot{k}") + gamma * p
+        p = F.greatest(ck - _kn_d_of(ck, k), F.lit(0.0)) / F.col(f"tot{k}") + _kn_gamma(k) * p
 
     tri = joined.select(*cols, F.log(p).alias("_lp"))
-    scored = occ.join(tri, cols)
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_ngrams"),
-        F.avg("_lp").alias("avg_logprob"),
-    )
-    all_ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return all_ids.join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_ngrams", F.lit(0)).cast("bigint").alias("n_ngrams"),
-        "avg_logprob",
-    )
+    return _per_doc_scores(docs, id_col, occ.join(tri, cols), "n_ngrams")
 
 
 def train_ovr_logreg_weights(
@@ -1652,119 +1391,33 @@ def train_ovr_logreg_weights(
     K = len(classes)
     if K == 0:
         raise ValueError("train_ovr_logreg_weights: no classes")
+    ycols = [f"y_{i}" for i in range(K)]
     y_exprs = [
-        (F.col(class_col) == c).cast("double").alias(f"y_{i}")
-        for i, c in enumerate(classes)
+        (F.col(class_col) == c).cast("double").alias(y) for c, y in zip(classes, ycols)
     ]
-    # packed after the label join + single n/μ pass — the same two
-    # job-count cuts train_logreg_weights documents (AQE-sized
-    # partitions; count+center collapse into one bounded collect).
     # A caller-supplied ``packed`` (doc_id, class_col, fx) is shared
     # with the scoring pass — the y_i indicators are derived inline.
     if packed is not None:
         base = packed.select(*y_exprs, "fx")
     else:
         labs = labels.select("doc_id", *y_exprs)
-        base = _pack_label_features(
-            labs, features, [f"y_{i}" for i in range(K)]
-        ).select(*[f"y_{i}" for i in range(K)], "fx")
+        base = _pack_label_features(labs, features, ycols).select(*ycols, "fx")
         base = base.localCheckpoint(eager=False)
-    # bounded-fit probe — see train_logreg_weights; arithmetic stays
-    # identical to K independent fits (the _local_gd_fit columns ARE
-    # the K one-vs-rest problems)
-    probe = _probe_packed(base, [f"y_{i}" for i in range(K)])
-    if (
-        len(probe) <= _FIT_LOCAL_ROW_CAP
-        and len(probe) * int(n_features) <= _FIT_LOCAL_CELL_CAP
-    ):
-        if not len(probe):
-            raise ValueError("train_ovr_logreg_weights: empty label frame")
-        fitted = _local_gd_fit(
-            probe,
-            [f"y_{i}" for i in range(K)],
-            n_features=int(n_features),
-            lr=float(lr),
-            n_iter=int(n_iter),
-            center=bool(center),
-            l2=float(l2),
-        )
-        return {c: fitted[i] for i, c in enumerate(classes)}
-    bias_entry = F.array(
-        F.struct(F.lit(-1).cast("int").alias("bucket"), F.lit(1.0).alias("cnt"))
+    fitted = _gd_fit(
+        base, ycols, "train_ovr_logreg_weights",
+        n_features=n_features, lr=lr, n_iter=n_iter, center=center, l2=l2,
     )
-    sums = (
-        base.select(F.explode(F.concat("fx", bias_entry)).alias("f"))
-        .groupBy(F.col("f.bucket").alias("bucket"))
-        .agg(F.sum("f.cnt").alias("s"))
-        .collect()  # bounded: <= n_features + 1 rows
-    )
-    n = next((float(r["s"]) for r in sums if r["bucket"] < 0), 0.0)
-    if n == 0:
-        raise ValueError("train_ovr_logreg_weights: empty label frame")
-    mu = [0.0] * int(n_features)
-    if center:
-        for r in sums:
-            if r["bucket"] >= 0:
-                mu[r["bucket"]] = float(r["s"]) / n
-    w = {c: [0.0] * int(n_features) for c in classes}
-    b = {c: 0.0 for c in classes}
-    def _dot(w_arr):
-        # factory closure: a default-arg binding would change the
-        # lambda's visible arity and break F.aggregate's 2-arg contract
-        return F.aggregate(
-            F.col("fx"),
-            F.lit(0.0),
-            lambda acc, s: acc + s["cnt"] * F.element_at(w_arr, s["bucket"] + 1),
-        )
-
-    for _ in range(int(n_iter)):
-        resid_cols = []
-        for i, c in enumerate(classes):
-            const = float(b[c]) - sum(wi * mi for wi, mi in zip(w[c], mu))
-            dot = _dot(F.lit([float(x) for x in w[c]]))
-            resid_cols.append(
-                (
-                    F.lit(1.0) / (F.lit(1.0) + F.exp(-(dot + F.lit(const))))
-                    - F.col(f"y_{i}")
-                ).alias(f"r_{i}")
-            )
-        grads = (
-            base.select(*resid_cols, F.concat("fx", bias_entry).alias("fx"))
-            .select(*[f"r_{i}" for i in range(K)], F.explode("fx").alias("f"))
-            .groupBy(F.col("f.bucket").alias("bucket"))
-            .agg(
-                *[
-                    (F.sum(F.col("f.cnt") * F.col(f"r_{i}")) / F.lit(float(n))).alias(
-                        f"g_{i}"
-                    )
-                    for i in range(K)
-                ]
-            )
-            .collect()  # bounded: <= n_features + 1 rows, K columns
-        )
-        for i, c in enumerate(classes):
-            rbar = next((float(r[f"g_{i}"]) for r in grads if r["bucket"] < 0), 0.0)
-            for r in grads:
-                if r["bucket"] < 0:
-                    b[c] -= float(lr) * rbar
-                else:
-                    j = r["bucket"]
-                    # l2 mirrors train_logreg_weights: ridge on the
-                    # weights only, intercept unpenalized
-                    w[c][j] -= float(lr) * (
-                        float(r[f"g_{i}"]) - mu[j] * rbar + float(l2) * w[c][j]
-                    )
-    return {
-        c: (w[c], float(b[c]) - sum(wi * mi for wi, mi in zip(w[c], mu)))
-        for c in classes
-    }
+    return dict(zip(classes, fitted))
 
 
 # ------------------------------------------------------- KN train/apply
 
 def _kn_discount_row(coc: DataFrame, k: int) -> DataFrame:
-    """(n1..n4) 1-row frame → (d{k}_1, d{k}_2, d{k}_3) — the shared
-    Chen & Goodman eq. 26 tail of :func:`_kn_coc_discounts`."""
+    """Count-of-count (n1..n4) 1-row frame → modified-KN discount
+    triple (d{k}_1, d{k}_2, d{k}_3) for level k — the Chen & Goodman
+    1999 eq. 26 rule: Y = n1/(n1+2n2) (fallback 0.5),
+    D_i = max(i − (i+1)·Y·n_{i+1}/n_i, 0), each falling back to 0.5
+    when its count-of-count denominator is empty."""
     y = F.when(
         F.col("n1") + 2 * F.col("n2") > 0,
         F.col("n1") / (F.col("n1") + 2 * F.col("n2")),
@@ -1807,24 +1460,6 @@ def _discounts_from_ctx(ctx_full: DataFrame, k: int) -> DataFrame:
     return _kn_discount_row(coc, k)
 
 
-def _kn_coc_discounts(gk: DataFrame, cname: str, k: int) -> DataFrame:
-    """Count-of-count → modified-KN discount triple (D1, D2, D3+) for
-    one level, as a 1-row frame (d{k}_1, d{k}_2, d{k}_3) — the Chen &
-    Goodman 1999 eq. 26 rule: Y = n1/(n1+2n2) (fallback 0.5),
-    D_i = max(i − (i+1)·Y·n_{i+1}/n_i, 0), each falling back to 0.5
-    when its count-of-count denominator is empty.  Direct form over a
-    level table; the tower paths use :func:`_discounts_from_ctx`,
-    which derives the identical n1..n4 from the context dims."""
-    coc = gk.agg(
-        *[
-            F.sum((F.col(cname) == i).cast("double")).alias(f"n{i}")
-            for i in (1, 2, 3, 4)
-        ]
-    )
-    return _kn_discount_row(coc, k)
-
-
-
 # Bounded local fast path for the KN towers (the _FIT_LOCAL_ROW_CAP /
 # suffix-array discipline): when the corpus holds at most this many
 # TOKENS, the whole count tower + discount triples + scoring recursion
@@ -1851,9 +1486,10 @@ def _kn_coc_discounts(gk: DataFrame, cname: str, k: int) -> DataFrame:
 _KN_PROBE_CHAR_FACTOR = 8
 
 
-def _kn_collect_tokens(docs, *, text_col: str, id_col: str, cap: int):
-    """[(doc_id, [token, ...]), ...] iff the corpus holds <= ``cap``
-    tokens, else None.  Tokenization stays in the ENGINE (the same
+def _kn_collect_tokens(docs, *, text_col: str, id_col: str):
+    """[(doc_id, [token, ...]), ...] iff the corpus holds <=
+    ``_KN_LOCAL_TOK_CAP`` tokens, else None (a cap of 0 skips the probe
+    and keeps the distributed chain).  Tokenization stays in the ENGINE (the same
     ``tokens()`` column the distributed tower explodes), so the local
     path never re-implements split semantics.  NULL text coalesces to
     [] (the distributed chains surface such docs via the all_ids spine
@@ -1865,6 +1501,9 @@ def _kn_collect_tokens(docs, *, text_col: str, id_col: str, cap: int):
     and ``chars > factor*cap`` a cheap over-cap verdict, so the exact
     tokenize probe only ever runs on gray-zone corpora whose size the
     factor bounds."""
+    cap = _KN_LOCAL_TOK_CAP
+    if not cap:
+        return None
     chars = docs.agg(F.sum(F.length(text_col))).first()[0]
     if chars is not None and chars > cap * _KN_PROBE_CHAR_FACTOR:
         return None
@@ -1902,50 +1541,6 @@ def _kn_local_discount(n1, n2, n3, n4):
     return (d1, d2, d3)
 
 
-def _kn_pack_docs(rows, N: int, ids: dict, bits: int, grow: bool):
-    """Per-doc n-gram occurrence lists as PACKED ints — each n-gram is
-    one integer of N ``bits``-wide token-id fields (last word in the
-    low field), so level-k suffixes are a mask and contexts a shift.
-    ``grow=False`` (held-out scoring) maps every train-OOV token to the
-    single sentinel id len(ids): any gram containing an OOV word is
-    unseen at every level that covers it, so merging OOV types cannot
-    change a score — only deduplicate identical ones."""
-    occ: dict = {}
-    sentinel = len(ids)
-    mask = (1 << (bits * N)) - 1
-    for did, tk in rows:
-        lst = occ.setdefault(did, [])
-        if len(tk) < N:
-            continue
-        if grow:
-            tids = [ids.setdefault(w, len(ids)) for w in tk]
-        else:
-            tids = [ids.get(w, sentinel) for w in tk]
-        key = 0
-        for j in range(N - 1):
-            key = (key << bits) | tids[j]
-        for j in range(N - 1, len(tids)):
-            key = ((key << bits) | tids[j]) & mask
-            lst.append(key)
-    return occ
-
-
-def _kn_local_per_doc(occ, lp):
-    """(doc_id, n_ngrams, avg_logprob) rows — count/avg per collected
-    doc, NULL score for <N-token docs (they never vanish)."""
-    out = []
-    for did, ngs in occ.items():
-        n = len(ngs)
-        if n == 0:
-            out.append((did, 0, None))
-        else:
-            s = 0.0
-            for t in ngs:
-                s += lp[t]
-            out.append((did, n, s / float(n)))
-    return out
-
-
 def _kn_scores_schema(
     docs: DataFrame, id_col: str, count_name: str = "n_ngrams"
 ) -> StructType:
@@ -1961,12 +1556,13 @@ def _kn_scores_schema(
 def _kn_gram_matrix(rows, N: int, ids: dict, grow: bool):
     """Per-occurrence n-gram ROW MATRIX: (doc_ids, doc_lens, M) where
     M is an int64 (total, N) matrix of token ids in position order
-    (last word in the last column) — the overflow-free successor of
-    the packed-int encoding (bits x N outgrew int64 the moment a
-    > 4096-token vocabulary met order 5).  ``grow=False`` (held-out
-    scoring) maps train-OOV tokens to the sentinel len(ids), same
-    rationale as before: an OOV-bearing gram is unseen at every level
-    that covers it."""
+    (last word in the last column) — the one local n-gram encoding of
+    every LM scorer, with no vocabulary-width limit (a packed int of N
+    bit fields overflows int64 once a > 4096-token vocabulary meets
+    order 5).  ``grow=True`` registers every token, short docs
+    included; ``grow=False`` (held-out scoring) maps train-OOV tokens
+    to the sentinel len(ids): an OOV-bearing gram is unseen at every
+    level that covers it."""
     import numpy as np
 
     sentinel = len(ids)
@@ -2094,21 +1690,145 @@ def _kn_row_lookup(table, q):
 def _kn_np_per_doc(doc_ids, doc_lens, vals):
     """(doc_id, n_ngrams, avg_logprob) off the per-occurrence logprob
     vector — the running sum iterates each doc's occurrences left to
-    right, the exact order _kn_local_per_doc adds dict hits in.
-    ``doc_ids`` is any iterable of ids (a dict iterates its keys)."""
-    out = []
+    right; rows sharing a doc_id merge into one (the distributed
+    chain's groupBy + distinct id spine), and a doc with no n-gram
+    scores NULL."""
+    acc: dict = {}
     pos = 0
     vl = vals.tolist()
     for did, n in zip(doc_ids, doc_lens):
-        if n == 0:
-            out.append((did, 0, None))
-        else:
-            s = 0.0
-            for v in vl[pos : pos + n]:
-                s += v
-            out.append((did, n, s / float(n)))
+        ent = acc.setdefault(did, [0, 0.0])
+        for v in vl[pos : pos + n]:
+            ent[1] += v
+        ent[0] += n
         pos += n
-    return out
+    return [(did, n, s / float(n) if n else None) for did, (n, s) in acc.items()]
+
+
+def _kn_local_bigram_scores(docs, text_col: str, id_col: str, lp_of):
+    """The bounded local path of the two bigram scorers → the finished
+    (doc_id, n_bigrams, avg_logprob) frame, or None over the token cap.
+    Bigram types come off the same row matrix as the KN towers; each
+    scorer supplies ``lp_of(rows, ids, U, c)``: the log-probability of
+    every distinct bigram row of ``U`` (token ids into ``ids``, the
+    vocabulary of every collected token) with corpus count ``c``."""
+    import numpy as np
+
+    rows = _kn_collect_tokens(docs, text_col=text_col, id_col=id_col)
+    if rows is None:
+        return None
+    ids: dict = {}
+    doc_ids, doc_lens, M = _kn_gram_matrix(rows, 2, ids, grow=True)
+    vals = np.zeros(0)
+    if len(M):
+        U, inv, c = _kn_rows_unique(M)
+        vals = lp_of(rows, ids, U, c)[inv]
+    return docs.sparkSession.createDataFrame(
+        _kn_np_per_doc(doc_ids, doc_lens, vals),
+        _kn_scores_schema(docs, id_col, "n_bigrams"),
+    )
+
+
+def _per_doc_scores(docs: DataFrame, id_col: str, scored: DataFrame, count_name: str):
+    """The per-doc tail every distributed LM scorer ends with: count
+    and mean ``_lp`` per doc over the scored occurrence frame, then a
+    left join onto the distinct id spine so docs without an n-gram
+    surface as unscorable (count 0, NULL score) instead of vanishing
+    (review r9)."""
+    per_doc = scored.groupBy("doc_id").agg(
+        F.count("*").cast("bigint").alias(count_name),
+        F.avg("_lp").alias("avg_logprob"),
+    )
+    all_ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
+    return all_ids.join(per_doc, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce(count_name, F.lit(0)).cast("bigint").alias(count_name),
+        "avg_logprob",
+    )
+
+
+def _kn_occurrences(docs: DataFrame, N: int, text_col: str, id_col: str) -> DataFrame:
+    """(doc_id, w1..wN): one row per n-gram occurrence of the engine's
+    ``tokens()`` split; docs shorter than N tokens yield no row."""
+    toks = tokens(F.col(text_col))
+    ng = F.transform(
+        F.slice(toks, 1, F.greatest(F.size(toks) - (N - 1), F.lit(0))),
+        lambda t, i: F.struct(
+            t.alias("w1"),
+            *[F.element_at(toks, i + j).alias(f"w{j}") for j in range(2, N + 1)],
+        ),
+    )
+    return docs.select(F.col(id_col).alias("doc_id"), F.explode(ng).alias("g")).select(
+        "doc_id", *[F.col(f"g.w{j}").alias(f"w{j}") for j in range(1, N + 1)]
+    )
+
+
+def _kn_tower(occ: DataFrame, N: int):
+    """The distributed count tower over an occurrence frame → (g, x,
+    ctx), every frame lazily checkpointed (each feeds several
+    consumers: its context dim, the next level down, and the scoring
+    joins):
+
+    - g[k] (k=1..N): level-k count table — raw counts at N,
+      continuation counts (distinct left-extension types) below, each
+      level one GROUP BY over the level above.
+    - ctx[k] (k=2..N): per-context totals and count-of-count masses
+      (tot, n1f, n2f, n3f) plus ride-along ==3/==4 cells, so one
+      groupBy serves both the context dim and the global discount
+      triple (:func:`_discounts_from_ctx` — a tiny agg over the context
+      table instead of a second full scan of g[k]).
+    - x[k]: ctx[k] projected to the context dim's columns."""
+    cols = [f"w{j}" for j in range(1, N + 1)]
+    g = {
+        N: occ.groupBy(*cols)
+        .agg(F.count("*").cast("double").alias(f"c{N}"))
+        .localCheckpoint(eager=False)
+    }
+    for k in range(N - 1, 0, -1):
+        g[k] = (
+            g[k + 1]
+            .groupBy(*cols[N - k :])
+            .agg(F.count("*").cast("double").alias(f"c{k}"))
+            .localCheckpoint(eager=False)
+        )
+    x, ctx = {}, {}
+    for k in range(N, 1, -1):
+        ckeys = cols[N - k : N - 1]
+        c = F.col(f"c{k}")
+        ctx[k] = (
+            g[k]
+            .groupBy(*ckeys)
+            .agg(
+                F.sum(c).alias(f"tot{k}"),
+                F.sum((c == 1).cast("double")).alias(f"n1f{k}"),
+                F.sum((c == 2).cast("double")).alias(f"n2f{k}"),
+                F.sum((c >= 3).cast("double")).alias(f"n3f{k}"),
+                F.sum((c == 3).cast("double")).alias(f"_n3e{k}"),
+                F.sum((c == 4).cast("double")).alias(f"_n4e{k}"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        x[k] = ctx[k].select(*ckeys, f"tot{k}", f"n1f{k}", f"n2f{k}", f"n3f{k}")
+    return g, x, ctx
+
+
+def _kn_d_of(c: Column, k: int) -> Column:
+    """D_k(c): the level-k modified discount for count ``c``."""
+    return (
+        F.when(c == 1, F.col(f"d{k}_1"))
+        .when(c == 2, F.col(f"d{k}_2"))
+        .otherwise(F.col(f"d{k}_3"))
+    )
+
+
+def _kn_gamma(k: int, total: str | None = None) -> Column:
+    """γ_k: the mass the level-k discounts free per context, over the
+    context total (``tot{k}``, or ``total`` for the unigram level)."""
+    return (
+        F.col(f"d{k}_1") * F.col(f"n1f{k}")
+        + F.col(f"d{k}_2") * F.col(f"n2f{k}")
+        + F.col(f"d{k}_3") * F.col(f"n3f{k}")
+    ) / F.col(total or f"tot{k}")
 
 
 def _kn_local_scores_order(rows, N: int):
@@ -2226,7 +1946,8 @@ def _kn_local_score(local: dict, held_rows, N: int):
         p = np.where(
             present, np.maximum(ckv - d_of, 0.0) / totv + gamma * p, p
         )
-    lp = np.log(p)
+    with np.errstate(divide="ignore"):  # p = 0 scores -inf
+        lp = np.log(p)
     return _kn_np_per_doc(doc_ids, doc_lens, lp[invH])
 
 
@@ -2306,7 +2027,6 @@ def lm_kn_fit(
     order: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    local_cap: int = _KN_LOCAL_TOK_CAP,
 ) -> dict:
     """Fit the order-N modified Kneser–Ney tower on a TRAIN corpus and
     return it as a MODEL — the train half of CCNet's actual deployment
@@ -2339,63 +2059,18 @@ def lm_kn_fit(
     N = int(order)
     if N < 2:
         raise ValueError(f"lm_kn_fit: order must be >= 2, got {order}")
-    if local_cap:
-        rows = _kn_collect_tokens(docs, text_col=text_col, id_col=id_col, cap=local_cap)
-        if rows is not None:
-            return {
-                "order": N,
-                "local": _kn_local_fit(rows, N),
-                "spark": docs.sparkSession,
-            }
-    cols = [f"w{j}" for j in range(1, N + 1)]
-    toks = tokens(F.col(text_col))
-    ng = F.transform(
-        F.slice(toks, 1, F.greatest(F.size(toks) - (N - 1), F.lit(0))),
-        lambda t, i: F.struct(
-            t.alias("w1"),
-            *[F.element_at(toks, i + j).alias(f"w{j}") for j in range(2, N + 1)],
-        ),
-    )
-    occ = docs.select(F.col(id_col).alias("doc_id"), F.explode(ng).alias("g")).select(
-        "doc_id", *[F.col(f"g.{c}").alias(c) for c in cols]
-    )
-    g = {
-        N: occ.groupBy(*cols)
-        .agg(F.count("*").cast("double").alias(f"c{N}"))
-        .localCheckpoint(eager=False)
+    rows = _kn_collect_tokens(docs, text_col=text_col, id_col=id_col)
+    if rows is not None:
+        return {
+            "order": N,
+            "local": _kn_local_fit(rows, N),
+            "spark": docs.sparkSession,
+        }
+    g, x, ctx = _kn_tower(_kn_occurrences(docs, N, text_col, id_col), N)
+    dd = {
+        k: _discounts_from_ctx(ctx[k], k).localCheckpoint(eager=False)
+        for k in range(N, 1, -1)
     }
-    for k in range(N - 1, 0, -1):
-        g[k] = (
-            g[k + 1]
-            .groupBy(*cols[N - k :])
-            .agg(F.count("*").cast("double").alias(f"c{k}"))
-            .localCheckpoint(eager=False)
-        )
-    x = {}
-    dd = {}
-    for k in range(N, 1, -1):
-        ckeys = cols[N - k : N - 1]
-        # one groupBy serves the context dim AND (via the ride-along
-        # ==3/==4 cells) the discount triple — dd[k] is a tiny agg
-        # over the context dim instead of a second full scan of g[k];
-        # the persisted x[k] keeps its original schema via projection.
-        # Integer counts in doubles: per-context sums re-summed are
-        # bit-identical to the direct count-of-counts.
-        x_full = (
-            g[k]
-            .groupBy(*ckeys)
-            .agg(
-                F.sum(f"c{k}").alias(f"tot{k}"),
-                F.sum((F.col(f"c{k}") == 1).cast("double")).alias(f"n1f{k}"),
-                F.sum((F.col(f"c{k}") == 2).cast("double")).alias(f"n2f{k}"),
-                F.sum((F.col(f"c{k}") >= 3).cast("double")).alias(f"n3f{k}"),
-                F.sum((F.col(f"c{k}") == 3).cast("double")).alias(f"_n3e{k}"),
-                F.sum((F.col(f"c{k}") == 4).cast("double")).alias(f"_n4e{k}"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        x[k] = x_full.select(*ckeys, f"tot{k}", f"n1f{k}", f"n2f{k}", f"n3f{k}")
-        dd[k] = _discounts_from_ctx(x_full, k).localCheckpoint(eager=False)
     # one agg over g[1] serves BOTH the level-1 discount triple and the
     # level-1 gamma masses (the old pair of separate scans)
     g1coc = g[1].agg(
@@ -2410,7 +2085,7 @@ def lm_kn_fit(
     )
     u_total = g[2].agg(F.count("*").cast("double").alias("u"))
     v_total = (
-        docs.select(F.explode(toks).alias("_t"))
+        docs.select(F.explode(tokens(F.col(text_col))).alias("_t"))
         .agg(F.count_distinct("_t").cast("double").alias("v"))
     )
     x1 = g1coc.select(
@@ -2430,7 +2105,6 @@ def lm_kn_score(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    local_cap: int = _KN_LOCAL_TOK_CAP,
 ) -> DataFrame:
     """Score a HELD-OUT corpus against a fitted KN tower → (doc_id,
     n_ngrams, avg_logprob) — the apply half of the CCNet deployment,
@@ -2457,11 +2131,7 @@ def lm_kn_score(
     tokens surface with n_ngrams 0 and NULL score, never vanish."""
     N = int(model["order"])
     if "local" in model:
-        rows = (
-            _kn_collect_tokens(docs, text_col=text_col, id_col=id_col, cap=local_cap)
-            if local_cap
-            else None
-        )
+        rows = _kn_collect_tokens(docs, text_col=text_col, id_col=id_col)
         if rows is not None:
             return docs.sparkSession.createDataFrame(
                 _kn_local_score(model["local"], rows, N),
@@ -2472,18 +2142,7 @@ def lm_kn_score(
         model = _kn_local_to_frames(model)
     g, x, dd, tot = model["g"], model["x"], model["dd"], model["tot"]
     cols = [f"w{j}" for j in range(1, N + 1)]
-    toks = tokens(F.col(text_col))
-    ng = F.transform(
-        F.slice(toks, 1, F.greatest(F.size(toks) - (N - 1), F.lit(0))),
-        lambda t, i: F.struct(
-            t.alias("w1"),
-            *[F.element_at(toks, i + j).alias(f"w{j}") for j in range(2, N + 1)],
-        ),
-    )
-    occ = docs.select(F.col(id_col).alias("doc_id"), F.explode(ng).alias("g")).select(
-        "doc_id", *[F.col(f"g.{c}").alias(c) for c in cols]
-    )
-    occ = occ.localCheckpoint(eager=False)
+    occ = _kn_occurrences(docs, N, text_col, id_col).localCheckpoint(eager=False)
     typ = occ.select(*cols).distinct()
     joined = typ
     for k in range(N, 0, -1):
@@ -2495,47 +2154,22 @@ def lm_kn_score(
     joined = joined.crossJoin(F.broadcast(tot))
 
     c1v = F.coalesce(F.col("c1"), F.lit(0.0))
-    d_of1 = (
-        F.when(c1v == 1, F.col("d1_1"))
-        .when(c1v == 2, F.col("d1_2"))
-        .otherwise(F.col("d1_3"))
-    )
-    gamma1 = (
-        F.col("d1_1") * F.col("n1f1")
-        + F.col("d1_2") * F.col("n2f1")
-        + F.col("d1_3") * F.col("n3f1")
-    ) / F.col("u")
-    p = F.greatest(c1v - d_of1, F.lit(0.0)) / F.col("u") + gamma1 * (
-        F.lit(1.0) / (F.col("v") + F.lit(1.0))
-    )
+    unk = F.lit(1.0) / (F.col("v") + F.lit(1.0))
+    p = F.greatest(c1v - _kn_d_of(c1v, 1), F.lit(0.0)) / F.col("u") + _kn_gamma(1, "u") * unk
     for k in range(2, N + 1):
         ckv = F.coalesce(F.col(f"c{k}"), F.lit(0.0))
-        d_of = (
-            F.when(ckv == 1, F.col(f"d{k}_1"))
-            .when(ckv == 2, F.col(f"d{k}_2"))
-            .otherwise(F.col(f"d{k}_3"))
-        )
-        gamma = (
-            F.col(f"d{k}_1") * F.col(f"n1f{k}")
-            + F.col(f"d{k}_2") * F.col(f"n2f{k}")
-            + F.col(f"d{k}_3") * F.col(f"n3f{k}")
-        ) / F.col(f"tot{k}")
         p = F.when(F.col(f"tot{k}").isNull(), p).otherwise(
-            F.greatest(ckv - d_of, F.lit(0.0)) / F.col(f"tot{k}") + gamma * p
+            F.greatest(ckv - _kn_d_of(ckv, k), F.lit(0.0)) / F.col(f"tot{k}")
+            + _kn_gamma(k) * p
         )
 
-    tri = joined.select(*cols, F.log(p).alias("_lp"))
-    scored = occ.join(tri, cols)
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_ngrams"),
-        F.avg("_lp").alias("avg_logprob"),
-    )
-    all_ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return all_ids.join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_ngrams", F.lit(0)).cast("bigint").alias("n_ngrams"),
-        "avg_logprob",
-    )
+    # p = 0 (an n-gram unseen at every level whose discounts free no
+    # backoff mass, γ = 0 — e.g. an OOV word under γ₁ = 0) scores −inf,
+    # as the local path's np.log does: Spark's log(0) is NULL, which avg
+    # would silently drop while n_ngrams still counts the n-gram
+    lp = F.when(p == 0.0, F.lit(float("-inf"))).otherwise(F.log(p))
+    tri = joined.select(*cols, lp.alias("_lp"))
+    return _per_doc_scores(docs, id_col, occ.join(tri, cols), "n_ngrams")
 
 
 def lm_kn_save(model: dict, path: str) -> None:
@@ -2596,15 +2230,12 @@ def ovr_softmax_scores(
         p_c = exp(m_c/T) / Σ_k exp(m_k/T)
         pred = argmax_c p_c  if max_c p_c ≥ threshold  else reject
 
-    Same scale shape as :func:`ovr_logreg_scores`: all K models ride
-    as literal arrays over ONE packed pass (sort_array-pinned fold per
-    class), the softmax is a row-local expression, and the argmax is
-    the alphabetically-first when-chain.  The denominator sums the
-    class exponentials in sorted-class order so the float association
-    is engine-reproducible."""
-    classes = sorted(models)
-    if not classes:
-        raise ValueError("ovr_softmax_scores: no models")
+    Same margin stage as :func:`ovr_logreg_scores`
+    (:func:`_ovr_margin_stage`); the softmax is a row-local
+    expression, and the argmax is the alphabetically-first
+    when-chain.  The denominator sums the class exponentials in
+    sorted-class order so the float association is
+    engine-reproducible."""
     if float(temperature) <= 0.0:
         raise ValueError(
             f"ovr_softmax_scores: temperature must be > 0, got {temperature}"
@@ -2613,116 +2244,47 @@ def ovr_softmax_scores(
         raise ValueError(
             f"ovr_softmax_scores: threshold must be in (0, 1), got {threshold}"
         )
-    for cls, (w, _) in models.items():
-        if len(w) != int(n_features):
-            raise ValueError(
-                f"ovr_softmax_scores[{cls}]: {len(w)} weights != n_features={n_features}"
-            )
-    # ``packed`` shares a pre-packed (doc_id, …, fx) frame and carries
-    # ``keep_cols`` through the scoring projection — the pass then
-    # skips its own pack groupBy + spine join AND the caller's label
-    # re-attach join (the ovr_logreg_scores packed path, same fx shape
-    # so the fold arithmetic is identical).  Under the fit caps the
-    # softmax layer runs driver-side off one bounded collect, with
-    # Spark's NaN semantics mirrored for the exp-overflow corner
-    # (inf/inf probs: NaN compares greater-than-everything and equal
-    # to itself in Spark SQL, so such a doc routes to the first class
-    # rather than the reject bucket).
-    if packed is not None:
-        probe = _probe_packed(packed, ("doc_id",) + tuple(keep_cols))
-        if (
-            len(probe) <= _FIT_LOCAL_ROW_CAP
-            and len(probe) * int(n_features) <= _FIT_LOCAL_CELL_CAP
-        ):
-            import numpy as np
-
-            M = _local_ovr_margins(probe, models, classes, n_features)
-            with np.errstate(over="ignore"):
-                E = np.exp(M / float(temperature))
-            den = E[:, 0].copy()
-            for j in range(1, len(classes)):  # sorted-class association
-                den = den + E[:, j]
-            with np.errstate(invalid="ignore"):
-                P = E / den[:, None]
-            thr = float(threshold)
-            ids = probe["doc_id"].tolist()
-            keeps = [probe[c].tolist() for c in keep_cols]
-            out = []
-            for i in range(len(ids)):
-                ps = P[i]
-                nan_mask = np.isnan(ps)
-                if nan_mask.any():
-                    pred = classes[int(np.argmax(nan_mask))]
-                else:
-                    best = ps.max()
-                    pred = (
-                        next(
-                            classes[j]
-                            for j in range(len(classes))
-                            if ps[j] == best
-                        )
-                        if best >= thr
-                        else str(reject_label)
-                    )
-                out.append(
-                    (ids[i],)
-                    + tuple(k[i] for k in keeps)
-                    + tuple(float(p) for p in ps)
-                    + (pred,)
-                )
-            return packed.sparkSession.createDataFrame(
-                out,
-                _ovr_local_schema(
-                    packed, keep_cols, [f"prob_{c}" for c in classes]
-                ),
-            )
-        base = packed
-    else:
-        docvec = features.groupBy("doc_id").agg(
-            F.sort_array(F.collect_list(F.struct("bucket", "cnt"))).alias("fx")
-        )
-        base = id_spine.select(F.col(id_spine.columns[0]).alias("doc_id")).join(
-            docvec, "doc_id", "left"
-        )
     T = float(temperature)
-    # Stage 1: each class's margin fold evaluated ONCE into a real
-    # column.  The softmax/argmax layer references every class
-    # exponential ~12x (own prob, the shared denominator, greatest,
-    # the when-chain); inlined, each reference re-runs the whole
-    # literal-array fold — CollapseProject keeps the split because the
-    # folds are non-trivial and multiply referenced.  Same doubles:
-    # the fold, exp, and sorted-class denominator association are
-    # unchanged, only evaluated via column refs.
-    dots = {}
-    for cls in classes:
-        w, b = models[cls]
-        w_arr = F.lit([float(x) for x in w])
-        dot = F.aggregate(
-            F.coalesce(
-                F.col("fx"), F.array().cast("array<struct<bucket:int,cnt:double>>")
-            ),
-            F.lit(0.0),
-            lambda acc, s: acc + s["cnt"] * F.element_at(w_arr, s["bucket"] + 1),
+    classes, local, base, raw = _ovr_margin_stage(
+        "ovr_softmax_scores", features, models, id_spine,
+        n_features=n_features, packed=packed, keep_cols=keep_cols,
+    )
+    if local is not None:
+        import numpy as np
+
+        probe, M = local
+        with np.errstate(over="ignore"):
+            E = np.exp(M / T)
+        den = E[:, 0].copy()
+        for j in range(1, len(classes)):  # sorted-class association
+            den = den + E[:, j]
+        with np.errstate(invalid="ignore"):
+            P = E / den[:, None]
+        # exp overflow gives inf/inf = NaN probs: the Spark-NaN argmax
+        # routes such a doc to its first NaN class, not the reject bucket
+        return _ovr_local_frame(
+            packed, probe, keep_cols, classes, P, "prob",
+            floor=float(threshold), reject_label=reject_label,
         )
-        dots[cls] = F.exp((dot + F.lit(float(b))) / F.lit(T))
+    # each class's exponential evaluated ONCE into a real column.  The
+    # softmax/argmax layer references every class exponential ~12x (own
+    # prob, the shared denominator, greatest, the when-chain); inlined,
+    # each reference re-runs the whole literal-array fold —
+    # CollapseProject keeps the split because the folds are non-trivial
+    # and multiply referenced.  Same doubles: the fold, exp, and
+    # sorted-class denominator association are unchanged, only
+    # evaluated via column refs.
     mid = base.select(
         "doc_id",
         *keep_cols,
-        *[dots[c].alias(f"_e_{c}") for c in classes],
+        *[F.exp(raw[c] / F.lit(T)).alias(f"_e_{c}") for c in classes],
     )
     exps = {cls: F.col(f"_e_{cls}") for cls in classes}
     den = exps[classes[0]]
     for cls in classes[1:]:
         den = den + exps[cls]
     probs = {cls: exps[cls] / den for cls in classes}
-    best = (
-        F.greatest(*[probs[c] for c in classes])
-        if len(classes) > 1
-        else probs[classes[0]]
-    )
-    pred = F.when(probs[classes[0]] == best, F.lit(classes[0]))
-    for cls in classes[1:]:
-        pred = pred.when(probs[cls] == best, F.lit(cls))
+    best, pred = _ovr_argmax(probs, classes)
     return mid.select(
         "doc_id",
         *keep_cols,

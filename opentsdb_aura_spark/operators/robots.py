@@ -1044,7 +1044,7 @@ def sitemap_fetch_plan(
 #: Location resolution stays in the ENGINE (resolve_href evaluated per
 #: fetch row inside the probe projection), so the local path never
 #: re-implements RFC 3986 semantics.  Above the cap the distributed
-#: hop joins are unchanged.
+#: hop joins are unchanged.  Read at call time; 0 always runs them.
 _ROBOTS_LOCAL_ROW_CAP = 100_000
 
 
@@ -1142,7 +1142,6 @@ def resolve_robots_fetches(
     url_col: str = "url",
     status_col: str = "status_code",
     location_col: str = "location",
-    local_cap: int = _ROBOTS_LOCAL_ROW_CAP,
 ) -> DataFrame:
     """RFC 9309 §2.3.1.2 redirect following for the robots.txt fetch
     itself: starting from ``http://<host>/robots.txt``, chase each
@@ -1169,11 +1168,11 @@ def resolve_robots_fetches(
 
     if int(max_hops) < 1:
         raise ValueError(f"resolve_robots_fetches: max_hops must be >= 1, got {max_hops}")
-    if local_cap:
+    if _ROBOTS_LOCAL_ROW_CAP:
         got = _resolve_robots_local(
             hosts, fetches, max_hops=int(max_hops), host_col=host_col,
             url_col=url_col, status_col=status_col, location_col=location_col,
-            cap=int(local_cap),
+            cap=_ROBOTS_LOCAL_ROW_CAP,
         )
         if got is not None:
             return got

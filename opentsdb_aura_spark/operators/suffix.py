@@ -73,7 +73,8 @@ from pyspark.sql.window import Window
 # adjacent-LCP runs driver-side off ONE bounded collect of the doc
 # texts instead of ~15 rank/join stages of pure orchestration.  Above
 # the cap the distributed prefix-doubling loop is unchanged (the sf1
-# tier and tools/suffix_scale_bench.py keep exercising it).
+# tier and tools/suffix_scale_bench.py keep exercising it).  Read at
+# call time; 0 keeps every operator on its distributed chain.
 _SA_LOCAL_POS_CAP = 1_000_000
 
 #: quadratic-cost budget for the local path: _local_suffix_entries
@@ -88,22 +89,26 @@ _SA_LOCAL_POS_CAP = 1_000_000
 _SA_LOCAL_SQ_CAP = 1_000_000_000
 
 
-def _local_corpus_probe(base: DataFrame, local_cap: int):
+def _doc_slice(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, text) of the non-empty docs — the suffix positions."""
+    return docs.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    ).where(F.length("text") > 0)
+
+
+def _corpus_probe(base: DataFrame):
     """One 1-row aggregate over the doc slice: (max_len, rows) where
     ``rows`` is the collected [(doc_id, text), ...] iff total_chars <=
-    local_cap AND Σ len² <= _SA_LOCAL_SQ_CAP (the tail-materialization
-    budget), else None.  The max-length aggregate is the same bounded
-    job the distributed loop already pays to fix its round count, so
-    the probe costs nothing extra."""
+    _SA_LOCAL_POS_CAP AND Σ len² <= _SA_LOCAL_SQ_CAP (the
+    tail-materialization budget), else None.  The max-length aggregate
+    is the one bounded job the distributed loop needs to fix its round
+    count: every entry point runs it exactly once and hands max_len to
+    its distributed half, so the probe costs nothing extra."""
+    cap = _SA_LOCAL_POS_CAP
     ln = F.length("text").cast("long")
     mx, tot, sq = base.agg(F.max(ln), F.sum(ln), F.sum(ln * ln)).first()
     rows = None
-    if (
-        mx is not None
-        and local_cap
-        and tot <= local_cap
-        and sq <= _SA_LOCAL_SQ_CAP
-    ):
+    if mx is not None and cap and tot <= cap and sq <= _SA_LOCAL_SQ_CAP:
         rows = [(r[0], r[1]) for r in base.collect()]
     return mx, rows
 
@@ -235,7 +240,6 @@ def suffix_array(
     id_col: str = "doc_id",
     text_col: str = "text",
     init_prefix: int = 64,
-    local_cap: int = _SA_LOCAL_POS_CAP,
 ) -> DataFrame:
     """Suffix array over the per-doc suffixes of ``docs`` by prefix
     doubling.  Returns (doc_id, off, rank): ``rank`` is the 1-based
@@ -256,14 +260,8 @@ def suffix_array(
     stages total, each shuffling one (init_prefix .. 8)-byte key per
     position.  At fixture scale 64 halves the stage count vs 16; at
     cluster scale a smaller head keeps the first exchange narrow."""
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).where(F.length("text") > 0)
-    max_len, local_rows = _local_corpus_probe(base, local_cap)
-    if max_len is None:
-        return base.select(
-            "doc_id", F.lit(0).cast("long").alias("off"), F.lit(0).cast("long").alias("rank")
-        ).limit(0)
+    base = _doc_slice(docs, id_col, text_col)
+    max_len, local_rows = _corpus_probe(base)
     if local_rows is not None:
         import pandas as pd
 
@@ -283,6 +281,17 @@ def suffix_array(
             }
         )
         return docs.sparkSession.createDataFrame(pdf, schema)
+    return _suffix_array_dist(base, max_len, init_prefix)
+
+
+def _suffix_array_dist(base: DataFrame, max_len, init_prefix: int) -> DataFrame:
+    """The distributed prefix-doubling half of :func:`suffix_array`
+    over the doc slice, with the ``max_len`` its caller's probe already
+    aggregated (None: no non-empty doc, an empty result)."""
+    if max_len is None:
+        return base.select(
+            "doc_id", F.lit(0).cast("long").alias("off"), F.lit(0).cast("long").alias("rank")
+        ).limit(0)
     suf = base.select(
         "doc_id",
         F.explode(F.sequence(F.lit(0), F.length("text") - 1)).alias("off"),
@@ -348,7 +357,6 @@ def adjacent_lcp(
     text_col: str = "text",
     cap: int = 64,
     init_prefix: int = 64,
-    local_cap: int = _SA_LOCAL_POS_CAP,
 ) -> DataFrame:
     """(rank, doc_id, off, lcp_prev, lcp_next) per suffix: the length
     (capped at ``cap`` characters) of the common prefix shared with
@@ -357,12 +365,8 @@ def adjacent_lcp(
     greatest(lcp_prev, lcp_next) >= L — the ExactSubstr membership
     test.  One join fetches a ``cap``-char head per suffix; one
     equi-join on rank+1 pairs neighbors."""
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).where(F.length("text") > 0)
-    local_rows = (
-        _local_corpus_probe(base, local_cap)[1] if local_cap else None
-    )
+    base = _doc_slice(docs, id_col, text_col)
+    max_len, local_rows = _corpus_probe(base)
     if local_rows is not None:
         import pandas as pd
 
@@ -387,13 +391,15 @@ def adjacent_lcp(
             }
         )
         return docs.sparkSession.createDataFrame(pdf, schema)
-    sa = suffix_array(
-        docs,
-        id_col=id_col,
-        text_col=text_col,
-        init_prefix=init_prefix,
-        local_cap=0,
-    )
+    return _adjacent_lcp_dist(docs, base, max_len, id_col, text_col, cap, init_prefix)
+
+
+def _adjacent_lcp_dist(
+    docs: DataFrame, base: DataFrame, max_len, id_col, text_col, cap, init_prefix
+) -> DataFrame:
+    """The distributed half of :func:`adjacent_lcp`: suffix array, one
+    head fetch per suffix, one rank+1 neighbor join."""
+    sa = _suffix_array_dist(base, max_len, init_prefix)
     # pinned: consumed twice below (as itself and rank-shifted); the
     # char-compare in lcp_next is the expensive expression, so
     # with_next is pinned too before its second (rank-shifted) read
@@ -439,7 +445,6 @@ def duplicated_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     init_prefix: int = 64,
-    local_cap: int = _SA_LOCAL_POS_CAP,
 ) -> DataFrame:
     """Per-document exact-duplication profile: for each doc, the
     number of positions whose suffix shares a >= ``min_len``-char
@@ -449,40 +454,36 @@ def duplicated_spans(
     (capped at ``cap``).  Docs with zero duplicated positions are
     omitted.  This is the per-doc rollup of Lee et al.'s ExactSubstr
     span set — the decision input for span excision or doc drop."""
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).where(F.length("text") > 0)
-    if local_cap:
-        mx, rows = _local_corpus_probe(base, local_cap)
-        if mx is not None and rows is not None:
-            import numpy as np
-            import pandas as pd
+    base = _doc_slice(docs, id_col, text_col)
+    mx, rows = _corpus_probe(base)
+    if rows is not None:
+        import numpy as np
+        import pandas as pd
 
-            entries = _local_suffix_entries(rows)
-            lcp_prev, lcp_next = _local_adjacent_lcp(entries, int(cap))
-            best = np.maximum(lcp_prev, lcp_next)
-            idx = np.nonzero(best >= int(min_len))[0]
-            pdf = (
-                pd.DataFrame(
-                    {"doc_id": [entries[i][1] for i in idx], "_best": best[idx]}
-                )
-                .groupby("doc_id", sort=False)
-                .agg(
-                    dup_positions=("_best", "size"), max_dup_len=("_best", "max")
-                )
-                .reset_index()
+        entries = _local_suffix_entries(rows)
+        lcp_prev, lcp_next = _local_adjacent_lcp(entries, int(cap))
+        best = np.maximum(lcp_prev, lcp_next)
+        idx = np.nonzero(best >= int(min_len))[0]
+        pdf = (
+            pd.DataFrame(
+                {"doc_id": [entries[i][1] for i in idx], "_best": best[idx]}
             )
-            schema = StructType(
-                [
-                    StructField("doc_id", base.schema["doc_id"].dataType),
-                    StructField("dup_positions", LongType()),
-                    StructField("max_dup_len", LongType()),
-                ]
+            .groupby("doc_id", sort=False)
+            .agg(
+                dup_positions=("_best", "size"), max_dup_len=("_best", "max")
             )
-            return docs.sparkSession.createDataFrame(pdf, schema)
-    lcp = adjacent_lcp(
-        docs, id_col=id_col, text_col=text_col, cap=cap, init_prefix=init_prefix,
-        local_cap=0,
+            .reset_index()
+        )
+        schema = StructType(
+            [
+                StructField("doc_id", base.schema["doc_id"].dataType),
+                StructField("dup_positions", LongType()),
+                StructField("max_dup_len", LongType()),
+            ]
+        )
+        return docs.sparkSession.createDataFrame(pdf, schema)
+    lcp = _adjacent_lcp_dist(
+        docs, base, mx, id_col, text_col, cap, init_prefix
     ).withColumn("_best", F.greatest("lcp_prev", "lcp_next"))
     return (
         lcp.where(F.col("_best") >= min_len)
@@ -502,7 +503,6 @@ def excise_duplicated_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     init_prefix: int = 64,
-    local_cap: int = _SA_LOCAL_POS_CAP,
 ) -> DataFrame:
     """The cleaning step of Lee et al.'s ExactSubstr, with the paper's
     keep-one-occurrence rule: every corpus-duplicated substring of
@@ -536,41 +536,37 @@ def excise_duplicated_spans(
     count/min aggregation is partial-aggregated (skew-tolerant) and
     whose probe never windows by gram."""
     L = int(min_len)
-    probe_base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).where(F.length("text") > 0)
-    if local_cap:
-        mx, rows = _local_corpus_probe(probe_base, local_cap)
-        if mx is not None and rows is not None:
-            import pandas as pd
+    probe_base = _doc_slice(docs, id_col, text_col)
+    mx, rows = _corpus_probe(probe_base)
+    if rows is not None:
+        import pandas as pd
 
-            entries = _local_suffix_entries(rows)
-            _, occ = _local_members(rows, entries, L, int(cap))
-            doc_len = {d: len(t) for d, t in rows}
-            excised: dict = {}
-            for sites in occ.values():
-                for d, o in sites[1:]:  # sites sorted; [0] is canonical
-                    excised.setdefault(d, []).append(o)
-            out = []
-            for d, offs in excised.items():
-                offs.sort()
-                removed = _span_union(offs, L)
-                out.append((d, len(offs), removed, doc_len[d] - removed))
-            schema = StructType(
-                [
-                    StructField("doc_id", probe_base.schema["doc_id"].dataType),
-                    StructField("n_spans_excised", LongType()),
-                    StructField("removed_chars", LongType()),
-                    StructField("kept_chars", LongType()),
-                ]
-            )
-            pdf = pd.DataFrame(
-                out, columns=["doc_id", "n_spans_excised", "removed_chars", "kept_chars"]
-            )
-            return docs.sparkSession.createDataFrame(pdf, schema)
-    lcp = adjacent_lcp(
-        docs, id_col=id_col, text_col=text_col, cap=cap, init_prefix=init_prefix,
-        local_cap=0,
+        entries = _local_suffix_entries(rows)
+        _, occ = _local_members(rows, entries, L, int(cap))
+        doc_len = {d: len(t) for d, t in rows}
+        excised: dict = {}
+        for sites in occ.values():
+            for d, o in sites[1:]:  # sites sorted; [0] is canonical
+                excised.setdefault(d, []).append(o)
+        out = []
+        for d, offs in excised.items():
+            offs.sort()
+            removed = _span_union(offs, L)
+            out.append((d, len(offs), removed, doc_len[d] - removed))
+        schema = StructType(
+            [
+                StructField("doc_id", probe_base.schema["doc_id"].dataType),
+                StructField("n_spans_excised", LongType()),
+                StructField("removed_chars", LongType()),
+                StructField("kept_chars", LongType()),
+            ]
+        )
+        pdf = pd.DataFrame(
+            out, columns=["doc_id", "n_spans_excised", "removed_chars", "kept_chars"]
+        )
+        return docs.sparkSession.createDataFrame(pdf, schema)
+    lcp = _adjacent_lcp_dist(
+        docs, probe_base, mx, id_col, text_col, cap, init_prefix
     ).where(F.greatest("lcp_prev", "lcp_next") >= L)
     base = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -617,7 +613,6 @@ def build_dup_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     init_prefix: int = 64,
-    local_cap: int = _SA_LOCAL_POS_CAP,
 ) -> DataFrame:
     """The reusable output of an ExactSubstr pass: every ``min_len``-
     char substring occurring >= 2 times in the corpus, as
@@ -642,37 +637,29 @@ def build_dup_index(
     here the probe-side semantics only need the (much smaller)
     duplicated set, and the rebuild is the same one-pass SA job."""
     L = int(min_len)
-    probe_base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).where(F.length("text") > 0)
-    if local_cap:
-        mx, rows = _local_corpus_probe(probe_base, local_cap)
-        if mx is not None and rows is not None:
-            import pandas as pd
+    probe_base = _doc_slice(docs, id_col, text_col)
+    mx, rows = _corpus_probe(probe_base)
+    if rows is not None:
+        import pandas as pd
 
-            entries = _local_suffix_entries(rows)
-            _, occ = _local_members(rows, entries, L, int(cap))
-            out = [
-                (gram, len(sites), sites[0][0], sites[0][1])
-                for gram, sites in occ.items()
+        entries = _local_suffix_entries(rows)
+        _, occ = _local_members(rows, entries, L, int(cap))
+        out = [
+            (gram, len(sites), sites[0][0], sites[0][1])
+            for gram, sites in occ.items()
+        ]
+        schema = StructType(
+            [
+                StructField("gram", probe_base.schema["text"].dataType),
+                StructField("n_occ", LongType()),
+                StructField("canon_doc_id", probe_base.schema["doc_id"].dataType),
+                StructField("canon_off", LongType()),
             ]
-            schema = StructType(
-                [
-                    StructField("gram", probe_base.schema["text"].dataType),
-                    StructField("n_occ", LongType()),
-                    StructField(
-                        "canon_doc_id", probe_base.schema["doc_id"].dataType
-                    ),
-                    StructField("canon_off", LongType()),
-                ]
-            )
-            pdf = pd.DataFrame(
-                out, columns=["gram", "n_occ", "canon_doc_id", "canon_off"]
-            )
-            return docs.sparkSession.createDataFrame(pdf, schema)
-    lcp = adjacent_lcp(
-        docs, id_col=id_col, text_col=text_col, cap=cap, init_prefix=init_prefix,
-        local_cap=0,
+        )
+        pdf = pd.DataFrame(out, columns=["gram", "n_occ", "canon_doc_id", "canon_off"])
+        return docs.sparkSession.createDataFrame(pdf, schema)
+    lcp = _adjacent_lcp_dist(
+        docs, probe_base, mx, id_col, text_col, cap, init_prefix
     ).where(F.greatest("lcp_prev", "lcp_next") >= L)
     members = lcp.join(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),

@@ -2051,7 +2051,7 @@ def quality_kn_scores(spark, sf_dir):
 def _kn3_coc_sql(src: str, cname: str, a: str) -> str:
     """Count-of-counts → modified-KN discounts for one order, as a
     1-row CTE body (columns {a}1/{a}2/{a}3) mirroring
-    lm_kn3_scores' `discounts` helper exactly: Y = n1/(n1+2n2)
+    quality._kn_discount_row exactly: Y = n1/(n1+2n2)
     (fallback 0.5), D_k clamped at 0, each falling back to 0.5 when
     its count-of-count denominator is empty."""
     return f"""(
@@ -2117,10 +2117,14 @@ def quality_kn3_scores(spark, sf_dir):
     the modified-discount arithmetic is value-hashed end to end;
     unscorable <3-token docs surface with n_trigrams 0 and NULL
     score, never vanish."""
-    from opentsdb_aura_spark.operators.quality import lm_kn3_scores
+    from opentsdb_aura_spark.operators.quality import lm_kn_scores_order
 
-    res = lm_kn3_scores(docs(spark, sf_dir))
-    return res.select("doc_id", "n_trigrams", _r("avg_logprob", 4).alias("avg_logprob"))
+    res = lm_kn_scores_order(docs(spark, sf_dir), order=3)
+    return res.select(
+        "doc_id",
+        F.col("n_ngrams").alias("n_trigrams"),
+        _r("avg_logprob", 4).alias("avg_logprob"),
+    )
 
 
 def _kn_order_parts(N: int, count_alias: str, toks_cte: str) -> list[str]:

@@ -584,12 +584,13 @@ def test_hyperball_harmonic_star_and_validation(spark):
     assert {r["node"] for r in nl.collect()} == {"a", "b"}
 
 
-def test_hyperball_local_matches_distributed(spark):
+def test_hyperball_local_matches_distributed(spark, monkeypatch):
     """The bounded local register loop is value-equal to the
-    distributed chain (local_cap=0) on a mixed graph — same registers
-    (engine xxhash64), same estimate fold, same per-round deltas; the
-    only tolerated drift is libm-vs-Math.log ulps in the
+    distributed chain (_HB_LOCAL_EDGE_CAP = 0) on a mixed graph — same
+    registers (engine xxhash64), same estimate fold, same per-round
+    deltas; the only tolerated drift is libm-vs-Math.log ulps in the
     linear-counting branch."""
+    from opentsdb_aura_spark.operators import corpus
     from opentsdb_aura_spark.operators.corpus import hyperball_harmonic
 
     rows = [(i, (i * 7 + 1) % 40) for i in range(40)]
@@ -597,10 +598,8 @@ def test_hyperball_local_matches_distributed(spark):
     rows += [(5, 5), (7, 7)]  # self-loops: node exists, edge dropped
     edges = spark.createDataFrame(rows, "src long, dst long")
     loc = {r["node"]: r for r in hyperball_harmonic(edges, max_dist=3).collect()}
-    dist = {
-        r["node"]: r
-        for r in hyperball_harmonic(edges, max_dist=3, local_cap=0).collect()
-    }
+    monkeypatch.setattr(corpus, "_HB_LOCAL_EDGE_CAP", 0)
+    dist = {r["node"]: r for r in hyperball_harmonic(edges, max_dist=3).collect()}
     assert set(loc) == set(dist) and len(loc) == 40
     for n in loc:
         for c in ("harmonic", "ball_est", "sum_dist_est"):

@@ -36,7 +36,7 @@ BNLJ_ALLOWED = {
     "corpus_tfidf_top3",  # 1-row n_docs factor
     "quality_lm_scores",  # 1-row vocabulary-size factor
     "quality_kn_scores",  # 1-row bigram-type-total factor
-    "quality_kn3_scores",  # 1-row type-total + two 1-row discount-triple factors
+    "quality_kn3_scores",  # order-3 lm_kn_scores_order: 1-row total + per-level discount triples
     "quality_kn5_scores",  # same shape at order 5: 1-row total + per-level discount triples
     "quality_kn5_apply_heldout",  # lm_kn_score: 1-row discount triples + 1-row u/v totals
     "quality_kn5_heldout_persisted",  # same shape through the persisted tower
@@ -145,9 +145,6 @@ def test_no_forced_broadcast_of_unbounded_frames():
         "winners",  # summarizer top-k winners: rows <= k
         "cutoffs",  # per-language quantile thresholds: rows = O(languages)
         "dangling",  # 1-row dangling-mass scalar per PageRank round
-        "ut",  # 1-row trigram-type-total factor (quality_kn3_scores)
-        "dhi",  # 1-row top-level discount triple (quality_kn3_scores)
-        "dmid",  # 1-row middle-level discount triple (quality_kn3_scores)
         "u_total",  # 1-row type-total factor (lm_kn_scores_order)
         "dk",  # 1-row per-level discount triple (lm_kn_scores_order)
         "dd",  # 1-row per-level discount triples dict (lm_kn_score)

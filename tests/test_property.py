@@ -7,6 +7,7 @@ the NaN / dedupe / bucket-edge interactions."""
 
 import math
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -763,45 +764,42 @@ def test_lm_kn_heldout_random_corpora_match_reference(spark, train, held):
 
     Corpora whose count-of-count profile zeroes the modified
     discounts (e.g. every unigram continuation count >= 3 and
-    3*n3 == 4*y*n4, making gamma collapse to 0 so an OOV word gets
-    probability exactly 0) are outside the estimator's domain — KenLM
-    refuses such input outright unless --discount_fallback overrides
-    the Chen-Goodman formulas — so they are assume()d away here; the
-    reference signals them with a log(0) math domain error."""
+    3*n3 == 4*y*n4, making gamma collapse to 0) give an OOV word
+    probability exactly 0: every path, the reference included, scores
+    such a doc -inf."""
     import math
 
-    from hypothesis import assume
-
+    from opentsdb_aura_spark.operators import quality
     from opentsdb_aura_spark.operators.quality import lm_kn_fit, lm_kn_score
 
     from tests.test_quality import _kn2_reference
 
-    try:
-        ref = _kn2_reference(
-            [toks for toks in train], {100 + i: toks for i, toks in enumerate(held)}
-        )
-    except ValueError:  # log(0): degenerate discounts, model undefined
-        assume(False)
+    ref = _kn2_reference(
+        [toks for toks in train], {100 + i: toks for i, toks in enumerate(held)}
+    )
 
     train_rows = [(i, " ".join(toks)) for i, toks in enumerate(train)]
     held_rows = [(100 + i, " ".join(toks)) for i, toks in enumerate(held)]
     tdf = spark.createDataFrame(train_rows, "doc_id long, text string")
     hdf = spark.createDataFrame(held_rows, "doc_id long, text string")
     # BOTH engine paths against the reference: the bounded local fit
-    # (default caps) and the distributed tower (local_cap=0 on fit and
-    # score) — random corpora keep covering the distributed chain too
-    for caps in ({}, {"local_cap": 0}):
-        got = {
-            r["doc_id"]: r
-            for r in lm_kn_score(
-                lm_kn_fit(tdf, order=2, **caps), hdf, **caps
-            ).collect()
-        }
+    # (default caps) and the distributed tower (_KN_LOCAL_TOK_CAP = 0
+    # on fit and score) — random corpora keep covering the distributed
+    # chain too
+    for cap in (quality._KN_LOCAL_TOK_CAP, 0):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(quality, "_KN_LOCAL_TOK_CAP", cap)
+            got = {
+                r["doc_id"]: r
+                for r in lm_kn_score(lm_kn_fit(tdf, order=2), hdf).collect()
+            }
         assert set(got) == set(ref)
         for doc_id, (n, lp) in ref.items():
             assert got[doc_id]["n_ngrams"] == n
             if lp is None:
                 assert got[doc_id]["avg_logprob"] is None
+            elif math.isinf(lp):
+                assert got[doc_id]["avg_logprob"] == lp
             else:
                 assert math.isfinite(got[doc_id]["avg_logprob"])
                 assert abs(got[doc_id]["avg_logprob"] - lp) < 1e-9
@@ -817,19 +815,19 @@ def test_lm_kn_heldout_random_corpora_match_reference(spark, train, held):
 )
 def test_lm_kn_scores_order_local_matches_distributed(spark, corpus):
     """The bounded local path of the in-corpus KN scorer
-    (quality._KN_LOCAL_TOK_CAP) against the distributed tower
-    (local_cap=0) on random tiny corpora: identical n-gram counts and
+    (quality._KN_LOCAL_TOK_CAP) against the distributed tower (the cap
+    set to 0) on random tiny corpora: identical n-gram counts and
     NULL-ness, scores within the documented libm/avg-order tolerance
     every consumer's 4-decimal round absorbs."""
+    from opentsdb_aura_spark.operators import quality
     from opentsdb_aura_spark.operators.quality import lm_kn_scores_order
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(corpus)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     loc = {r["doc_id"]: r for r in lm_kn_scores_order(df, order=3).collect()}
-    dist = {
-        r["doc_id"]: r
-        for r in lm_kn_scores_order(df, order=3, local_cap=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(quality, "_KN_LOCAL_TOK_CAP", 0)
+        dist = {r["doc_id"]: r for r in lm_kn_scores_order(df, order=3).collect()}
     assert set(loc) == set(dist)
     for i in loc:
         assert loc[i]["n_ngrams"] == dist[i]["n_ngrams"]
@@ -854,6 +852,7 @@ def test_suffix_array_random_corpora_match_python_sort(spark, corpus):
     substrings, equal tails (exercising the (doc_id, off) tie-break),
     empty docs, and suffixes shorter than init_prefix.  init_prefix=2
     forces several doubling rounds even at these sizes."""
+    from opentsdb_aura_spark.operators import suffix
     from opentsdb_aura_spark.operators.suffix import adjacent_lcp, suffix_array
 
     rows = [(i, t) for i, t in enumerate(corpus)]
@@ -862,13 +861,15 @@ def test_suffix_array_random_corpora_match_python_sort(spark, corpus):
     sufs = sorted((t[o:], d, o) for d, t in rows for o in range(len(t)))
     ref_rank = {(d, o): r + 1 for r, (s, d, o) in enumerate(sufs)}
 
-    got = {
-        (r.doc_id, r.off): r.rank
-        for r in suffix_array(df, init_prefix=2, local_cap=0).collect()
-    }
-    assert got == ref_rank
-
     cap = 5
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(suffix, "_SA_LOCAL_POS_CAP", 0)
+        got = {
+            (r.doc_id, r.off): r.rank
+            for r in suffix_array(df, init_prefix=2).collect()
+        }
+        lcps = adjacent_lcp(df, cap=cap, init_prefix=2).collect()
+    assert got == ref_rank
 
     def plcp(a, b):
         n = 0
@@ -879,7 +880,7 @@ def test_suffix_array_random_corpora_match_python_sort(spark, corpus):
         return n
 
     by_rank = {r + 1: s for r, (s, d, o) in enumerate(sufs)}
-    for row in adjacent_lcp(df, cap=cap, init_prefix=2, local_cap=0).collect():
+    for row in lcps:
         exp_prev = plcp(by_rank[row.rank], by_rank[row.rank - 1]) if row.rank > 1 else 0
         exp_next = plcp(by_rank[row.rank], by_rank[row.rank + 1]) if row.rank < len(sufs) else 0
         assert (row.lcp_prev, row.lcp_next) == (exp_prev, exp_next), (row, exp_prev, exp_next)
@@ -902,6 +903,7 @@ def test_excise_duplicated_spans_matches_python_reference(spark, corpus):
     trivially enumerable."""
     from collections import defaultdict
 
+    from opentsdb_aura_spark.operators import suffix
     from opentsdb_aura_spark.operators.suffix import excise_duplicated_spans
 
     L = 3
@@ -927,12 +929,12 @@ def test_excise_duplicated_spans_matches_python_reference(spark, corpus):
             covered.update(range(o, o + L))
         want[d] = (len(offs), len(covered))
 
-    got = {
-        r.doc_id: (r.n_spans_excised, r.removed_chars)
-        for r in excise_duplicated_spans(
-            df, min_len=L, cap=8, init_prefix=2, local_cap=0
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(suffix, "_SA_LOCAL_POS_CAP", 0)
+        got = {
+            r.doc_id: (r.n_spans_excised, r.removed_chars)
+            for r in excise_duplicated_spans(df, min_len=L, cap=8, init_prefix=2).collect()
+        }
     assert got == want
 
 
@@ -951,16 +953,20 @@ def test_suffix_local_path_matches_distributed(spark, corpus):
     astral-plane code points (the local sort is Python code-point
     order, the distributed one UTF8String byte order; equal for valid
     UTF-8), equal tails, and empty docs."""
+    from opentsdb_aura_spark.operators import suffix
     from opentsdb_aura_spark.operators.suffix import adjacent_lcp
 
     rows = [(i, t) for i, t in enumerate(corpus)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    loc = {
-        (r.doc_id, r.off): (r.rank, r.lcp_prev, r.lcp_next)
-        for r in adjacent_lcp(df, cap=5, init_prefix=2).collect()
-    }
-    dist = {
-        (r.doc_id, r.off): (r.rank, r.lcp_prev, r.lcp_next)
-        for r in adjacent_lcp(df, cap=5, init_prefix=2, local_cap=0).collect()
-    }
+
+    def lcps():
+        return {
+            (r.doc_id, r.off): (r.rank, r.lcp_prev, r.lcp_next)
+            for r in adjacent_lcp(df, cap=5, init_prefix=2).collect()
+        }
+
+    loc = lcps()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(suffix, "_SA_LOCAL_POS_CAP", 0)
+        dist = lcps()
     assert loc == dist

@@ -104,18 +104,19 @@ def test_repetition_no_shuffle_hotkey_shape(spark, docs):
     assert "BatchEvalPython" not in plan
 
 
-@pytest.mark.parametrize("local_cap", [None, 0], ids=["local", "distributed"])
-def test_lm_bigram_scores(spark, local_cap):
+@pytest.mark.parametrize("distributed", [False, True], ids=["local", "distributed"])
+def test_lm_bigram_scores(spark, monkeypatch, distributed):
     """Hand-computed Laplace bigram LM scores on a 2-doc corpus —
-    both paths pinned (local_cap=0 = the distributed chain)."""
+    both paths pinned (_KN_LOCAL_TOK_CAP = 0 = the distributed chain)."""
     import math
 
-    from opentsdb_aura_spark.operators.quality import lm_bigram_scores
+    from opentsdb_aura_spark.operators import quality as q
 
-    kw = {} if local_cap is None else {"local_cap": local_cap}
+    if distributed:
+        monkeypatch.setattr(q, "_KN_LOCAL_TOK_CAP", 0)
     df = spark.createDataFrame([(0, "a b a b"), (1, "z z")], "doc_id long, text string")
     got = {r["doc_id"]: (r["n_bigrams"], r["avg_logprob"])
-           for r in lm_bigram_scores(df, alpha=0.1, **kw).collect()}
+           for r in q.lm_bigram_scores(df, alpha=0.1).collect()}
     # U: a=2 b=2 z=2, V=3; B: "a b"=2, "b a"=1, "z z"=1
     lp_ab = math.log(2.1 / 2.3)
     lp_ba = math.log(1.1 / 2.3)
@@ -400,6 +401,34 @@ def test_lm_kn_scores_order_edges(spark):
         lm_kn_scores_order(d, order=1)
 
 
+def test_lm_local_scores_merge_duplicate_doc_ids(spark, monkeypatch):
+    """Rows sharing a doc_id score as ONE doc on the bounded local
+    paths, as the distributed chains' groupBy + distinct id spine do:
+    one row, the n-gram counts summed, the mean over all of them."""
+    from opentsdb_aura_spark.operators import quality as q
+
+    d = spark.createDataFrame(
+        [(1, "a b c a"), (1, "b c a b"), (2, "c a b c")], "doc_id long, text string"
+    )
+
+    def run():
+        return {
+            "order3": sorted(tuple(r) for r in q.lm_kn_scores_order(d, order=3).collect()),
+            "bigram": sorted(tuple(r) for r in q.lm_bigram_scores(d).collect()),
+        }
+
+    loc = run()
+    monkeypatch.setattr(q, "_KN_LOCAL_TOK_CAP", 0)
+    dist = run()
+    for name in loc:
+        assert [r[:2] for r in loc[name]] == [r[:2] for r in dist[name]] == [
+            (1, 4 if name == "order3" else 6),
+            (2, 2 if name == "order3" else 3),
+        ]
+        for a, b in zip(loc[name], dist[name]):
+            assert abs(a[2] - b[2]) < 1e-12, (name, a, b)
+
+
 def test_train_ovr_matches_per_class_fits(spark):
     """train_ovr_logreg_weights (all classes sharing each distributed
     pass) reproduces K independent train_logreg_weights fits — same
@@ -445,35 +474,6 @@ def test_train_ovr_matches_per_class_fits(spark):
         ws, bs = shared_l2[c]
         assert abs(b - bs) < 1e-9
         assert all(abs(x - y) < 1e-9 for x, y in zip(w, ws))
-
-
-def test_kn_order3_generic_matches_dedicated_kn3(spark):
-    """lm_kn_scores_order(order=3) and the dedicated lm_kn3_scores
-    build the same estimator with the same float association — scores
-    must agree to float tolerance on every doc (the generic tower's
-    order-3 instantiation IS the kn3 recursion).  The dedicated side
-    runs with local_cap=0 so this pins the DISTRIBUTED kn3 chain
-    against the generic tower — with both on the default cap the kn3
-    local path delegates to _kn_local_scores_order and the comparison
-    would be the local generic path against itself (vacuous)."""
-    from opentsdb_aura_spark.operators.quality import lm_kn3_scores, lm_kn_scores_order
-
-    rows = [
-        (1, "a b c d e a b c d"),
-        (2, "a b"),
-        (3, "x y z x y z x y"),
-        (4, "c d e c d e a b"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    g = {r["doc_id"]: r for r in lm_kn_scores_order(d, order=3).collect()}
-    k = {r["doc_id"]: r for r in lm_kn3_scores(d, local_cap=0).collect()}
-    assert set(g) == set(k)
-    for i in g:
-        assert g[i]["n_ngrams"] == k[i]["n_trigrams"]
-        a, b = g[i]["avg_logprob"], k[i]["avg_logprob"]
-        assert (a is None) == (b is None)
-        if a is not None:
-            assert abs(a - b) < 1e-9, (i, a, b)
 
 
 def _kn2_reference(train_tokens, score_tokens_by_doc):
@@ -536,9 +536,13 @@ def _kn2_reference(train_tokens, score_tokens_by_doc):
         gamma2 = (dd2[0] * n1f + dd2[1] * n2f + dd2[2] * n3f) / tot
         return max(c - d_of(dd2, c), 0.0) / tot + gamma2 * p1(b)
 
+    def log(p):
+        # p = 0 (discounts that free no backoff mass) scores -inf
+        return math.log(p) if p > 0 else -math.inf
+
     out = {}
     for doc_id, toks in score_tokens_by_doc.items():
-        lps = [math.log(p2(a, b)) for a, b in zip(toks, toks[1:])]
+        lps = [log(p2(a, b)) for a, b in zip(toks, toks[1:])]
         out[doc_id] = (len(lps), sum(lps) / len(lps) if lps else None)
     return out
 
@@ -592,7 +596,7 @@ def test_lm_kn_heldout_matches_python_reference(spark):
         lm_kn_fit(train, order=1)
 
 
-def test_lm_kn_save_load_roundtrip(spark, tmp_path):
+def test_lm_kn_save_load_roundtrip(spark, tmp_path, monkeypatch):
     """lm_kn_save → lm_kn_load → score is float-IDENTICAL to scoring
     from the in-memory fit (Parquet doubles round-trip bit-exactly),
     and the loaded model carries the same tower shapes."""
@@ -615,10 +619,15 @@ def test_lm_kn_save_load_roundtrip(spark, tmp_path):
     lm_kn_save(model, path)
     loaded = lm_kn_load(spark, path)
     assert loaded["order"] == 3
-    # distributed chain both sides: in-memory tower (local_cap=0
+    # the bounded LOCAL scorer, on the default cap
+    loc = {r["doc_id"]: r for r in lm_kn_score(model, held).collect()}
+    # distributed chain both sides: in-memory tower (a zero cap
     # inflates a bounded-fit model to its DataFrame shape) vs the
     # Parquet roundtrip — THESE must be bit-exact
-    mem = {r["doc_id"]: r for r in lm_kn_score(model, held, local_cap=0).collect()}
+    from opentsdb_aura_spark.operators import quality as q
+
+    monkeypatch.setattr(q, "_KN_LOCAL_TOK_CAP", 0)
+    mem = {r["doc_id"]: r for r in lm_kn_score(model, held).collect()}
     dsk = {r["doc_id"]: r for r in lm_kn_score(loaded, held).collect()}
     assert set(mem) == set(dsk)
     for i in mem:
@@ -630,7 +639,6 @@ def test_lm_kn_save_load_roundtrip(spark, tmp_path):
     # the bounded LOCAL scorer agrees within the documented tolerance
     # (libm log vs Math.log + per-doc avg order — absorbed by every
     # consumer's 1e-9-nudged 4-decimal round)
-    loc = {r["doc_id"]: r for r in lm_kn_score(model, held).collect()}
     assert set(loc) == set(mem)
     for i in mem:
         assert loc[i]["n_ngrams"] == mem[i]["n_ngrams"]
@@ -640,7 +648,7 @@ def test_lm_kn_save_load_roundtrip(spark, tmp_path):
             assert abs(a - b) < 1e-12, (i, a, b)
 
 
-def test_lm_kn_local_vocab_counts_short_docs(spark):
+def test_lm_kn_local_vocab_counts_short_docs(spark, monkeypatch):
     """Local ≡ distributed when a vocabulary word appears ONLY in a doc
     shorter than the model order: the bounded local fit must register
     that doc's tokens, so its vocabulary v (the 1/(v+1) unknown floor)
@@ -658,9 +666,11 @@ def test_lm_kn_local_vocab_counts_short_docs(spark):
     assert "local" in local_model  # the bounded local path served the fit
     assert local_model["local"]["v"] == 7.0  # a b c d e zz yy
     loc = {r["doc_id"]: r for r in lm_kn_score(local_model, held).collect()}
+    from opentsdb_aura_spark.operators import quality as q
+
+    monkeypatch.setattr(q, "_KN_LOCAL_TOK_CAP", 0)
     dist = {
-        r["doc_id"]: r
-        for r in lm_kn_score(lm_kn_fit(train, order=3, local_cap=0), held, local_cap=0).collect()
+        r["doc_id"]: r for r in lm_kn_score(lm_kn_fit(train, order=3), held).collect()
     }
     assert set(loc) == set(dist) == {10, 11}
     for i in dist:
@@ -668,6 +678,69 @@ def test_lm_kn_local_vocab_counts_short_docs(spark):
         a, b = loc[i]["avg_logprob"], dist[i]["avg_logprob"]
         assert a is not None and b is not None
         assert abs(a - b) < 1e-12, (i, a, b)
+
+
+def test_lm_kn_zero_probability_scores_neg_inf_on_both_paths(spark, monkeypatch):
+    """A held-out n-gram of probability exactly 0 scores -inf on the
+    local AND the distributed scorer.  Every training word has 3 or 4
+    distinct left contexts, so the unigram count-of-counts give
+    n1 = n2 = 0, D3+ = 0 and gamma1 = 0: an OOV word keeps no mass.
+    Spark's log(0) is NULL, which avg would silently drop while
+    n_ngrams still counted it."""
+    import math
+
+    from opentsdb_aura_spark.operators import quality as q
+
+    # word -> the words that precede it, one two-token doc per bigram
+    left = {"a": "bcd", "b": "acd", "c": "abde", "d": "abce", "e": "abcd"}
+    pairs = [(u, w) for w, us in left.items() for u in us]
+    train = spark.createDataFrame(
+        [(i, f"{u} {w}") for i, (u, w) in enumerate(pairs)], "doc_id long, text string"
+    )
+    held = spark.createDataFrame(
+        [(100, "a zzz"), (101, "a b c"), (102, "zzz yyy a b")],
+        "doc_id long, text string",
+    )
+    ref = _kn2_reference(
+        [r["text"].split() for r in train.collect()],
+        {r["doc_id"]: r["text"].split() for r in held.collect()},
+    )
+    assert ref[100] == (1, -math.inf) and ref[102][1] == -math.inf
+    local_model = q.lm_kn_fit(train, order=2)
+    assert "local" in local_model
+    loc = {r["doc_id"]: r for r in q.lm_kn_score(local_model, held).collect()}
+    monkeypatch.setattr(q, "_KN_LOCAL_TOK_CAP", 0)
+    dist_model = q.lm_kn_fit(train, order=2)
+    assert "local" not in dist_model  # the zero cap reaches the fit
+    dist = {r["doc_id"]: r for r in q.lm_kn_score(dist_model, held).collect()}
+    for got in (loc, dist):
+        assert set(got) == set(ref)
+        for doc_id, (n, lp) in ref.items():
+            assert got[doc_id]["n_ngrams"] == n
+            if math.isinf(lp):
+                assert got[doc_id]["avg_logprob"] == lp, (doc_id, got[doc_id])
+            else:
+                assert abs(got[doc_id]["avg_logprob"] - lp) < 1e-9
+
+
+def test_no_operator_takes_a_local_cap_parameter():
+    """The driver-local twins are chosen by their module constants
+    alone: no public operator carries a test-only ``local_cap`` knob."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    import opentsdb_aura_spark.operators as ops
+
+    hits = []
+    for info in pkgutil.iter_modules(ops.__path__):
+        mod = importlib.import_module(f"{ops.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if fn.__module__ != mod.__name__ or name.startswith("_"):
+                continue
+            if "local_cap" in inspect.signature(fn).parameters:
+                hits.append(f"{info.name}.{name}")
+    assert not hits, hits
 
 
 def test_artifact_roundtrips(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 
+from opentsdb_aura_spark.operators import robots
 from opentsdb_aura_spark.operators.robots import (
     _pattern_to_regex,
     parse_robots_txt,
@@ -481,7 +482,7 @@ def test_robots_fetch_status_duplicate_hosts_collapse(spark):
     assert rows[0]["policy"] == "disallow_all" and rows[0]["allowed"] is False
 
 
-def test_resolve_robots_fetches_edges(spark):
+def test_resolve_robots_fetches_edges(spark, monkeypatch):
     """Redirect-resolution edges the catalog fixture can't isolate:
     a host with NO fetch result at all (unreachable at hop 0); an
     absolute cross-host Location; a chain that terminates at EXACTLY
@@ -512,35 +513,25 @@ def test_resolve_robots_fetches_edges(spark):
     assert got["b.example"] == (200, "http://cdn.example/r.txt", 1, False)
     assert got["c.example"] == (200, "http://c.example/c2", 2, False)
     assert got["d.example"][0] == 301 and got["d.example"][3] is True
-    # local ≡ distributed (local_cap=0 forces the hop-join chain): the
-    # bounded chase must reproduce every row, duplicates included
-    dist = sorted(
-        tuple(r) for r in resolve_robots_fetches(
-            hosts, fetches, max_hops=2, local_cap=0
-        ).collect()
-    )
-    loc = sorted(
-        tuple(r) for r in resolve_robots_fetches(hosts, fetches, max_hops=2).collect()
-    )
-    assert loc == dist
+    # local ≡ distributed (_ROBOTS_LOCAL_ROW_CAP = 0 forces the
+    # hop-join chain): the bounded chase must reproduce every row, and
     # duplicate fetch URL rows fan a chain out exactly like the join
     dup = spark.createDataFrame(
         rows + [("http://b.example/robots.txt", 302, "http://cdn.example/r.txt")],
         "url string, status_code int, location string",
     )
-    loc_d = sorted(
-        tuple(r) for r in resolve_robots_fetches(hosts, dup, max_hops=2).collect()
-    )
-    dist_d = sorted(
-        tuple(r) for r in resolve_robots_fetches(
-            hosts, dup, max_hops=2, local_cap=0
-        ).collect()
-    )
-    assert loc_d == dist_d
+
+    def run(f):
+        return sorted(tuple(r) for r in resolve_robots_fetches(hosts, f, max_hops=2).collect())
+
+    loc, loc_d = run(fetches), run(dup)
+    monkeypatch.setattr(robots, "_ROBOTS_LOCAL_ROW_CAP", 0)
+    assert loc == run(fetches)
+    assert loc_d == run(dup)
     assert sum(1 for t in loc_d if t[0] == "b.example") == 2
 
 
-def test_resolve_robots_null_url_local_matches_distributed(spark):
+def test_resolve_robots_null_url_local_matches_distributed(spark, monkeypatch):
     """A NULL host (so a NULL start URL) must not match a fetch row
     whose url is NULL: the distributed hop join never matches NULL, and
     the bounded local chase must report the same unreachable chain."""
@@ -556,11 +547,13 @@ def test_resolve_robots_null_url_local_matches_distributed(spark):
         "url string, status_code int, location string",
     )
 
-    def run(**kw):
-        rows = resolve_robots_fetches(hosts, fetches, max_hops=2, **kw).collect()
+    def run():
+        rows = resolve_robots_fetches(hosts, fetches, max_hops=2).collect()
         return sorted((tuple(r) for r in rows), key=repr)
 
-    loc, dist = run(), run(local_cap=0)
+    loc = run()
+    monkeypatch.setattr(robots, "_ROBOTS_LOCAL_ROW_CAP", 0)
+    dist = run()
     assert loc == dist
     null_rows = [t for t in loc if t[0] is None]
     assert len(null_rows) == 1 and null_rows[0][1] is None, null_rows  # unreachable

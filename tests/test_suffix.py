@@ -9,6 +9,7 @@ edge cases the fixture can't force."""
 import pytest
 from pyspark.sql import functions as F
 
+from opentsdb_aura_spark.operators import suffix
 from opentsdb_aura_spark.operators.suffix import (
     adjacent_lcp,
     duplicated_spans,
@@ -72,19 +73,20 @@ def test_adjacent_lcp_edges_are_zero(spark):
     assert rows[1].lcp_prev == 0 and rows[len(rows)].lcp_next == 0
 
 
-@pytest.mark.parametrize("local_cap", [None, 0], ids=["local", "distributed"])
-def test_duplicated_spans_planted_duplicate(spark, local_cap):
+@pytest.mark.parametrize("distributed", [False, True], ids=["local", "distributed"])
+def test_duplicated_spans_planted_duplicate(spark, monkeypatch, distributed):
     # one 30-char sentence shared by docs 1 and 3; doc 2 disjoint —
-    # pinned on BOTH paths (local_cap=0 keeps the distributed chain's
-    # fixture-scale coverage now that small corpora default local)
-    kw = {} if local_cap is None else {"local_cap": local_cap}
+    # pinned on BOTH paths (_SA_LOCAL_POS_CAP = 0 keeps the distributed
+    # chain's fixture-scale coverage now that small corpora default local)
+    if distributed:
+        monkeypatch.setattr(suffix, "_SA_LOCAL_POS_CAP", 0)
     shared = "the quick brown fox jumps over"
     df = spark.createDataFrame(
         [(1, shared + " xqz"), (2, "zzz yyy www vvv uuu"), (3, "kkk " + shared)],
         "doc_id long, text string",
     )
     got = {r.doc_id: (r.dup_positions, r.max_dup_len) for r in duplicated_spans(
-        df, min_len=20, cap=40, init_prefix=4, **kw
+        df, min_len=20, cap=40, init_prefix=4
     ).collect()}
     assert set(got) == {1, 3}
     # positions 0..10 of the shared span in each doc carry >=20-char dups
@@ -98,23 +100,24 @@ def test_duplicated_spans_no_duplicates(spark):
     assert duplicated_spans(df, min_len=3, cap=10, init_prefix=2).count() == 0
 
 
-@pytest.mark.parametrize("local_cap", [None, 0], ids=["local", "distributed"])
-def test_excise_duplicated_spans_keeps_canonical(spark, local_cap):
+@pytest.mark.parametrize("distributed", [False, True], ids=["local", "distributed"])
+def test_excise_duplicated_spans_keeps_canonical(spark, monkeypatch, distributed):
     """Two copies of a 30-char sentence: the (smaller doc_id, off)
     occurrence survives, the other loses its full 30-char span (the
     11 member windows' union reconstructs the whole region, not fixed
     20-char windows); a disjoint doc is untouched (absent).  Both
-    paths pinned (local_cap=0 = the distributed chain)."""
+    paths pinned (_SA_LOCAL_POS_CAP = 0 = the distributed chain)."""
     from opentsdb_aura_spark.operators.suffix import excise_duplicated_spans
 
-    kw = {} if local_cap is None else {"local_cap": local_cap}
+    if distributed:
+        monkeypatch.setattr(suffix, "_SA_LOCAL_POS_CAP", 0)
     shared = "the quick brown fox jumps over"  # 30 chars
     df = spark.createDataFrame(
         [(1, shared + " xqz"), (2, "zzz yyy www vvv uuu"), (3, "kkk " + shared)],
         "doc_id long, text string",
     )
     got = {r.doc_id: r for r in excise_duplicated_spans(
-        df, min_len=20, cap=40, init_prefix=4, **kw
+        df, min_len=20, cap=40, init_prefix=4
     ).collect()}
     # doc 1 holds every canonical (min doc_id) occurrence -> nothing excised
     assert set(got) == {3}
@@ -142,7 +145,7 @@ def test_excise_within_doc_duplicate(spark):
     assert r.kept_chars == 60 - 25
 
 
-def test_dup_index_probe_incremental(spark, tmp_path):
+def test_dup_index_probe_incremental(spark, tmp_path, monkeypatch):
     """Index built on an existing corpus, persisted, reloaded, and a
     disjoint new batch screened: a new doc quoting the indexed
     duplicate flags exactly the quoted span; a clean new doc is
@@ -154,7 +157,8 @@ def test_dup_index_probe_incremental(spark, tmp_path):
         [(1, shared + " xqz"), (2, "kkk " + shared), (3, "unrelated words only here")],
         "doc_id long, text string",
     )
-    idx = build_dup_index(corpus, min_len=20, cap=40, init_prefix=4, local_cap=0)
+    monkeypatch.setattr(suffix, "_SA_LOCAL_POS_CAP", 0)
+    idx = build_dup_index(corpus, min_len=20, cap=40, init_prefix=4)
     rows = {r.gram: (r.n_occ, r.canon_doc_id, r.canon_off) for r in idx.collect()}
     # 11 member windows of the shared 30-char span, each occurring
     # twice, canonical always doc 1 (offsets 0..10)

@@ -3,8 +3,11 @@
 Usage: python tools/explain_dump.py <tag> [query ...]
 Writes plans/<tag>/<query>_<suffix>.txt (suffix from $PLAN_SUFFIX,
 default "before").  With no query list, dumps every bench query.
-Expression ids (``#123``) and the per-session counters (``plan_id=``,
-RDD ids) are replaced by ``N`` so dumps of two checkouts diff cleanly.
+Expression ids (``#123``), lambda-variable counters (``lambda x_12``)
+and the per-session counters (``plan_id=``, RDD ids) are replaced by
+``N``, and RDD creation call sites (which depend on the session's
+history, not the plan) by ``<call site>``, so dumps of two checkouts
+diff cleanly.
 """
 
 from __future__ import annotations
@@ -16,14 +19,15 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-_SESSION_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+_SESSION_IDS = re.compile(r"(#|plan_id=|RDD\[|lambda \w+?_)\d+")
+_CALL_SITES = re.compile(r"(RDD\[N\] at \w+ at )\S+:\d+")
 
 
 def normalized_plan(df) -> str:
-    """Formatted physical plan with expression ids and per-session
-    counters normalised."""
+    """Formatted physical plan with expression ids, lambda-variable
+    counters, per-session counters and RDD call sites normalised."""
     plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    return _SESSION_IDS.sub(r"\1N", plan)
+    return _CALL_SITES.sub(r"\1<call site>", _SESSION_IDS.sub(r"\1N", plan))
 
 
 def main() -> None:
