@@ -58,18 +58,16 @@ def unigram_vocab_save(vocab_rows: DataFrame, path: str) -> None:
 def unigram_vocab_load(spark: SparkSession, path: str) -> dict:
     """Load a persisted unigram vocabulary back into the piece →
     integer micro-nat log-prob dict ``unigram_apply`` consumes —
-    the same Laplace + quantize rule ``unigram_train_vocab`` applies
-    to the in-memory counts (integer-exact, so loaded ≡ in-memory).
+    the same ``text._laplace_log_probs`` rule ``unigram_train_vocab``
+    applies to the in-memory counts (integer-exact, so loaded ≡ in-memory).
     Bounded collect: ≤ alphabet + keep_multi rows by construction."""
-    from opentsdb_aura_spark.operators.text import _ilogp
+    from opentsdb_aura_spark.operators.text import _laplace_log_probs
 
     rows = spark.read.parquet(path).select("piece", "cnt").collect()
     counts = {r["piece"]: int(r["cnt"]) for r in rows}
     if not counts:
         raise ValueError(f"unigram_vocab_load: empty vocabulary at {path}")
-    total = sum(counts.values())
-    v = len(counts)
-    return {p: _ilogp((c + 1.0) / (total + v)) for p, c in counts.items()}
+    return _laplace_log_probs(counts)
 
 
 def ovr_model_save(

@@ -253,16 +253,13 @@ def _union_find_labels(edges: list) -> list:
     return [(x, find(x)) for x in parent]
 
 
-#: hard ceiling on ``driver_threshold``: the driver union-find collect
-#: is bounded by CONSTRUCTION, not caller trust — a threshold above
-#: this is a config error (at ~48 bytes/edge tuple, 20M edges ≈ 1 GB
-#: of driver heap; anything bigger belongs in the distributed loop)
-MAX_DRIVER_UNION_FIND_EDGES = 20_000_000
+#: symmetric-edge cap under which connected_components closes the graph
+#: with the driver union-find instead of the distributed rounds.  Read
+#: at call time; 0 always runs the distributed loop.
+_CC_LOCAL_EDGE_CAP = 200_000
 
 
-def connected_components(
-    pairs: DataFrame, *, max_iters: int = 20, probe_after: int = 2, driver_threshold: int = 200_000
-) -> DataFrame:
+def connected_components(pairs: DataFrame, *, max_iters: int = 20) -> DataFrame:
     """Connected components over an undirected edge list (doc_a,
     doc_b) → (doc_id, label) where label is the component's minimum
     member id.
@@ -279,27 +276,20 @@ def connected_components(
     The per-round convergence check is a `limit(1).count()` probe (the
     standard driver-coordinated pattern, not a data collect) — but
     each probe is a driver job, and the common near-dup graph settles
-    within 2–3 rounds, so the first ``probe_after`` rounds run
-    probe-free (extra propagation rounds past convergence are
-    idempotent; the output is identical either way) and halve the job
-    count for typical graphs.
+    within 2–3 rounds, so the first two rounds run probe-free (extra
+    propagation rounds past convergence are idempotent; the output is
+    identical either way) and halve the job count for typical graphs.
 
     Scale-adaptive: after the edge list materializes, if it holds at
-    most ``driver_threshold`` edges the closure is computed by an
-    exact driver-side union-find instead — a near-dup edge list is
-    normally ORDERS smaller than the corpus (it only contains the
+    most ``_CC_LOCAL_EDGE_CAP`` symmetric edges the closure is computed
+    by an exact driver-side union-find instead — a near-dup edge list
+    is normally ORDERS smaller than the corpus (it only contains the
     duplicates), and the iterative path costs 2 shuffles + a
     checkpoint job PER ROUND, which dwarfs a 200k-row bounded collect.
-    Same result either way; corpora whose duplicate graph is genuinely
-    huge take the distributed loop.  ``driver_threshold`` above
-    ``MAX_DRIVER_UNION_FIND_EDGES`` is REJECTED (ValueError) so no
-    caller value can make the collect unbounded."""
-    if int(driver_threshold) > MAX_DRIVER_UNION_FIND_EDGES:
-        raise ValueError(
-            f"driver_threshold {driver_threshold} exceeds "
-            f"MAX_DRIVER_UNION_FIND_EDGES={MAX_DRIVER_UNION_FIND_EDGES}; "
-            "an edge list that size belongs in the distributed loop"
-        )
+    Same result either way, except that only the union-find closes a
+    chain longer than ``max_iters`` rounds (the distributed loop
+    raises there); corpora whose duplicate graph is genuinely huge
+    take the distributed loop."""
     # materialize the DIRECTED edge list first: the symmetric union
     # reads `edges` twice, so checkpointing only the union re-executes
     # the (possibly expensive) candidate-pair DAG upstream of `pairs`
@@ -310,7 +300,8 @@ def connected_components(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     ).localCheckpoint()
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b"))).localCheckpoint()
-    if sym.count() <= int(driver_threshold):  # cheap: counts the materialized checkpoint
+    # cheap: counts the materialized checkpoint
+    if _CC_LOCAL_EDGE_CAP and sym.count() <= _CC_LOCAL_EDGE_CAP:
         from pyspark.sql.types import StructField, StructType
 
         labels = _union_find_labels([(r["a"], r["b"]) for r in sym.collect()])
@@ -339,7 +330,7 @@ def connected_components(
             .localCheckpoint()  # one materialization serves both the probe and the next round
         )
         labels = proposed.select("doc_id", "label")
-        if it >= probe_after:
+        if it >= 2:
             changed = proposed.where(F.col("label") != F.col("_old")).limit(1).count()
             if changed == 0:
                 converged = True
@@ -1359,7 +1350,7 @@ def bloom_decontaminate(
         _bloom_positions,
         url_bloom_build,
     )
-    from opentsdb_aura_spark.operators.dedup_text import word_shingles
+    from opentsdb_aura_spark.operators.dedup_text import _spread, word_shingles
 
     p_sh = probes.select(
         F.explode(word_shingles(F.col(text_col), n)).alias("url")
@@ -1373,11 +1364,7 @@ def bloom_decontaminate(
     # 1.8 s at 32 partitions vs 5.9 s at 8 on the sf0.1 fixture).  At
     # real scale the corpus already spans >= cores partitions and this
     # inserts nothing.
-    sc = docs.sparkSession.sparkContext
-    wide = docs
-    if wide.rdd.getNumPartitions() < sc.defaultParallelism:
-        wide = wide.repartition(sc.defaultParallelism)
-    c_sh = wide.select(
+    c_sh = _spread(docs, depth=1).select(
         F.col(id_col).alias("doc_id"),
         F.explode(word_shingles(F.col(text_col), n)).alias("_g"),
     )

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opentsdb_aura_spark.operators.containers import _CHAIN_DEPTH
+
 
 def tokens(text: Column) -> Column:
     """Lowercased whitespace tokens.  Empty tokens are filtered: split
@@ -43,21 +45,24 @@ def _perm_min_aggs(num_perm: int, h: Column) -> list[Column]:
     return [F.min(F.xxhash64(h, F.lit(i))).alias(f"h{i}") for i in range(num_perm)]
 
 
-def _spread(df: DataFrame) -> DataFrame:
+def _spread(df: DataFrame, depth: int = _CHAIN_DEPTH) -> DataFrame:
     """Widen a narrow input before a CPU-heavy per-row stage (shingle
     explode + hashing); also the corpus loaders' spread
-    (queries.base.docs/embs).
+    (queries.base.docs/embs) and the contamination-bloom widen.
 
     A small corpus read from one parquet file arrives as one partition
     and the explode would run on a single core; the fix is a cheap
     round-robin repartition of the doc rows.  Target is
-    defaultParallelism/4 — the same helper spreads queries.base.docs(),
-    whose frames arrive here already at that width (a larger target would
-    re-shuffle them right back to full width, undoing the measured
-    task-launch win; see base.docs for the numbers).  On a real
-    cluster the input already spans ≥ target partitions and this is a
-    no-op (no shuffle inserted)."""
-    target = max(1, df.sparkSession.sparkContext.defaultParallelism // 4)
+    defaultParallelism/``depth``.  The default depth,
+    containers._CHAIN_DEPTH, is the width this helper gives
+    queries.base.docs(), whose frames arrive here already that wide (a
+    larger target would re-shuffle them right back to full width,
+    undoing the measured task-launch win; see base.docs for the
+    numbers); depth=1 is the full core count, for per-row work heavy
+    enough to fill every core.
+    On a real cluster the input already spans ≥ target partitions and
+    this is a no-op (no shuffle inserted)."""
+    target = max(1, df.sparkSession.sparkContext.defaultParallelism // depth)
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

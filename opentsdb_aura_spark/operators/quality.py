@@ -552,7 +552,7 @@ def assign_perplexity_buckets(
 # combine), training is deterministic full-batch gradient descent on
 # the logistic loss expressed as Spark aggregations — a fixed
 # iteration count with one bounded O(n_features) collect per step
-# (the bpe_train loop discipline), so the fit is exactly reproducible
+# (the text._train_merges loop discipline), so the fit is exactly reproducible
 # in unrolled SQL and the corpus-wide scoring pass is pure Catalyst.
 
 #: polynomial rolling-hash modulus for the feature hasher — small
@@ -775,7 +775,7 @@ def _gd_fit(
     feed K residual columns, and the gradient groupBy covers the bias
     as a pseudo-bucket −1 carried by a unit-count row per doc, so
     weight and bias gradients for all K fits come back in a single
-    bounded collect of ≤ n_features + 1 rows (the bpe_train
+    bounded collect of ≤ n_features + 1 rows (the text._train_merges
     1-row-per-merge discipline, widened to the feature dim)."""
     K = len(ycols)
     probe = _probe_packed(base, ycols)

@@ -1035,104 +1035,6 @@ def sitemap_fetch_plan(
     )
 
 
-#: bounded local fast path for the redirect chase (the suffix-array /
-#: _FIT_LOCAL_ROW_CAP discipline): when hosts AND fetches each hold at
-#: most this many rows (probed with limit(cap+1) — scale-free), the
-#: max_hops chase runs driver-side off two bounded Arrow probes
-#: instead of ~48 tiny join/union/checkpoint stages of pure
-#: orchestration.  The chase is EXACT string/int logic (no floats):
-#: Location resolution stays in the ENGINE (resolve_href evaluated per
-#: fetch row inside the probe projection), so the local path never
-#: re-implements RFC 3986 semantics.  Above the cap the distributed
-#: hop joins are unchanged.  Read at call time; 0 always runs them.
-_ROBOTS_LOCAL_ROW_CAP = 100_000
-
-
-def _resolve_robots_local(
-    hosts, fetches, *, max_hops, host_col, url_col, status_col, location_col, cap
-):
-    """Driver-side redirect chase iff both frames fit the cap, else
-    None.  Mirrors the hop-join semantics exactly: duplicate fetch
-    URLs fan a chain out (the left join's row multiplication), a
-    missing fetch result finishes with NULL status (unreachable), a
-    still-redirecting chain at max_hops reports its last 3xx with
-    redirect_exhausted."""
-    from pyspark.sql.types import (
-        BooleanType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from opentsdb_aura_spark.operators.containers import resolve_href
-
-    hsel = hosts.select(F.col(host_col).alias("host"))
-    hp = hsel.limit(cap + 1).toPandas()
-    if len(hp) > cap:
-        return None
-    fp = fetches.select(
-        F.col(url_col).alias("_u"),
-        F.col(status_col).cast("int").alias("_st"),
-        F.col(location_col).alias("_loc"),
-        resolve_href(F.col(url_col), F.col(location_col)).alias("_next"),
-    ).limit(cap + 1).toPandas()
-    if len(fp) > cap:
-        return None
-
-    def cell(x):
-        # pd.isna catches None, float NaN, and pandas' nullable NA in
-        # one test (Arrow probes of nullable int columns yield NA)
-        return None if pd.isna(x) else x
-
-    fmap: dict = {}
-    for u, st, loc, nxt in zip(fp["_u"], fp["_st"], fp["_loc"], fp["_next"]):
-        u = cell(u)
-        if u is None:
-            # the hop join's equality never matches a NULL url: a NULL
-            # start/next URL must find no fetch row here either
-            continue
-        st = cell(st)
-        fmap.setdefault(u, []).append(
-            (None if st is None else int(st), cell(loc), cell(nxt))
-        )
-    # state rows: (host, cur_url, n_hops); duplicate host rows chase
-    # independently, exactly like the distributed join fan-out
-    state = [
-        (cell(h), None if cell(h) is None else f"http://{cell(h)}/robots.txt", 0)
-        for h in hp["host"]
-    ]
-    out = []
-    for _ in range(max_hops):
-        nxt_state = []
-        for host, cur, n in state:
-            matches = fmap.get(cur) or [(None, None, None)]
-            for st, loc, nx in matches:
-                redirecting = (
-                    st is not None and 300 <= st <= 399 and loc is not None
-                )
-                if redirecting:
-                    nxt_state.append((host, nx, n + 1))
-                else:
-                    out.append((host, st, cur, n, False))
-        state = nxt_state
-    for host, cur, n in state:
-        matches = fmap.get(cur) or [(None, None, None)]
-        for st, loc, _nx in matches:
-            still = st is not None and 300 <= st <= 399 and loc is not None
-            out.append((host, st, cur, n, still))
-    schema = StructType(
-        [
-            StructField("host", hsel.schema["host"].dataType),
-            StructField("final_status", IntegerType()),
-            StructField("final_url", StringType()),
-            StructField("n_hops", IntegerType()),
-            StructField("redirect_exhausted", BooleanType()),
-        ]
-    )
-    return hosts.sparkSession.createDataFrame(out, schema)
-
-
 def resolve_robots_fetches(
     hosts: DataFrame,
     fetches: DataFrame,
@@ -1168,14 +1070,6 @@ def resolve_robots_fetches(
 
     if int(max_hops) < 1:
         raise ValueError(f"resolve_robots_fetches: max_hops must be >= 1, got {max_hops}")
-    if _ROBOTS_LOCAL_ROW_CAP:
-        got = _resolve_robots_local(
-            hosts, fetches, max_hops=int(max_hops), host_col=host_col,
-            url_col=url_col, status_col=status_col, location_col=location_col,
-            cap=_ROBOTS_LOCAL_ROW_CAP,
-        )
-        if got is not None:
-            return got
     # pinned once: the dim is read by max_hops+1 joins, and each hop's
     # join feeds TWO branches (finished ∪ next state) — without the
     # lazy checkpoints Catalyst re-derives the whole chain per union

@@ -257,7 +257,51 @@ def bm25_search(
     return scored.orderBy(F.col("score").desc(), F.col("doc_id")).limit(int(k))
 
 
-# ------------------------------------------------------------- BPE training
+# ------------------------------------------------- subword tokenizers
+
+
+def _word_table(docs: DataFrame, text_col: str) -> DataFrame:
+    """The corpus as a (w, cnt) word-frequency table — one explode +
+    hash agg, the table every tokenizer trainer runs on (|vocab| ≪
+    |corpus|)."""
+    return (
+        docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
+        .groupBy("w")
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
+
+
+def _symbols(eow: str) -> Column:
+    """The symbol array of the word column ``w``: its characters plus
+    one trailing ``eow`` element.  Built by the ENGINE, so character
+    segmentation semantics never re-derive in Python."""
+    return F.concat(F.filter(F.split(F.col("w"), ""), lambda t: t != ""), F.array(F.lit(eow)))
+
+
+def _per_doc_counts(
+    docs: DataFrame, seg: list, sums: dict, *, text_col: str, id_col: str
+) -> DataFrame:
+    """The appliers' per-doc tail: each DISTINCT word segments once
+    (``seg``: per-word columns over ``w``), its per-(doc, word)
+    multiplicity ``n`` joins back, and ``sums`` (output name →
+    aggregate over ``n`` and the seg columns) totals it per doc.  The
+    result is left-joined onto the DISTINCT doc-id spine, so a
+    token-less doc reports 0 instead of vanishing and a repeated doc
+    id comes back once (the lm_bigram_scores contract)."""
+    words = docs.select(
+        F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("w")
+    )
+    wc = words.groupBy("doc_id", "w").agg(F.count("*").alias("n"))
+    per_word = words.select("w").distinct().select("w", *seg)
+    per_doc = (
+        wc.join(per_word, "w")
+        .groupBy("doc_id")
+        .agg(*[agg.cast("long").alias(name) for name, agg in sums.items()])
+    )
+    all_ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
+    return all_ids.join(per_doc, "doc_id", "left").select(
+        "doc_id", *[F.coalesce(name, F.lit(0).cast("long")).alias(name) for name in sums]
+    )
 
 
 def _merge_pair_expr(syms: Column, a: str, b: str) -> Column:
@@ -293,15 +337,11 @@ def _merge_pair_expr(syms: Column, a: str, b: str) -> Column:
 _TRAIN_LOCAL_CAP = 200_000
 
 
-def _local_syms_probe(vocab: DataFrame, cap: int) -> list | None:
-    """Collect the (syms, cnt) word table iff it has <= cap rows —
-    the limit(cap+1) probe pattern.  The syms arrays are built by the
-    ENGINE (split/filter/concat), so character segmentation semantics
-    never re-derive in Python.  Returns None when over the cap."""
-    rows = vocab.limit(int(cap) + 1).collect()
-    if len(rows) > int(cap):
-        return None
-    return [(list(r[0]), int(r[1])) for r in rows]
+def _local_probe(table: DataFrame) -> list | None:
+    """Collect a trainer's word table iff it has at most
+    ``_TRAIN_LOCAL_CAP`` rows — the limit(cap+1) probe; None above."""
+    rows = table.limit(_TRAIN_LOCAL_CAP + 1).collect()
+    return rows if len(rows) <= _TRAIN_LOCAL_CAP else None
 
 
 def _local_merge_fold(syms: list, a: str, b: str) -> list:
@@ -321,6 +361,105 @@ def _u8(s: str) -> bytes:
     return s.encode("utf-8")
 
 
+_MERGES_SCHEMA = "rank int, lhs string, rhs string, merged string, pair_count long"
+
+
+def _train_merges(
+    docs: DataFrame, *, n_merges: int, text_col: str, eow: str, likelihood: bool
+) -> list[tuple]:
+    """The merge-learning loop BPE and WordPiece share; the pair score
+    is the only difference.  ``likelihood=False`` ranks pairs on the
+    raw pair count (BPE), ``True`` on count(ab) / (count(a)·count(b))
+    over the round's symbol counts (WordPiece).
+
+    Distributed shape: training runs on the WORD-FREQUENCY table, not
+    the corpus (the classic optimization — |vocab| ≪ |corpus|, and the
+    corpus pass is ONE explode + hash agg).  Each round is a narrow
+    pair-explode + one hash agg (WordPiece adds one symbol hash agg
+    and two joins) + a 1-row argmax collect, then a pure-Catalyst fold
+    applies the merge to every word; the vocab is localCheckpointed
+    lazily per round, so the round's single argmax collect
+    materializes it (one job per round, lineage one fold step deep).
+    Under ``_TRAIN_LOCAL_CAP`` distinct words the same loop runs
+    driver-side off ONE collect of the table.
+
+    Deterministic: argmax keys are (score DESC, lhs, rhs), in binary
+    string order on the engine and UTF-8 byte order locally —
+    identical, so the catalog oracles re-derive every round.  Stops
+    early when no adjacent pair remains.
+
+    Returns (rank, lhs, rhs, merged, pair_count, score) tuples, rank 0
+    first; BPE's score is its pair count."""
+    vocab = _word_table(docs, text_col).select(_symbols(eow).alias("syms"), "cnt")
+    merges: list[tuple] = []
+    rows = _local_probe(vocab)
+    if rows is not None:
+        local = [(list(s), int(c)) for s, c in rows]
+        for rank in range(int(n_merges)):
+            pc: dict = {}
+            uc: dict = {}
+            for syms, cnt in local:
+                for k in zip(syms, syms[1:]):
+                    pc[k] = pc.get(k, 0) + cnt
+                if likelihood:
+                    for s in syms:
+                        uc[s] = uc.get(s, 0) + cnt
+            if not pc:
+                break
+            scores = pc
+            if likelihood:
+                scores = {
+                    k: float(v) / (float(uc[k[0]]) * float(uc[k[1]])) for k, v in pc.items()
+                }
+            (a, b), score = min(
+                scores.items(), key=lambda kv: (-kv[1], _u8(kv[0][0]), _u8(kv[0][1]))
+            )
+            merges.append((rank, a, b, a + b, pc[(a, b)], score))
+            local = [(_local_merge_fold(s, a, b), c) for s, c in local]
+        return merges
+
+    vocab = vocab.localCheckpoint(eager=False)
+    for rank in range(int(n_merges)):
+        left = F.slice(F.col("syms"), F.lit(1), F.size(F.col("syms")) - 1)
+        right = F.slice(F.col("syms"), F.lit(2), F.size(F.col("syms")) - 1)
+        pairs = vocab.select(
+            F.explode(
+                F.zip_with(left, right, lambda a, b: F.struct(a.alias("a"), b.alias("b")))
+            ).alias("p"),
+            "cnt",
+        )
+        ranked = pairs.groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b")).agg(
+            F.sum("cnt").alias("pair_count")
+        )
+        key = "pair_count"
+        if likelihood:
+            uni = (
+                vocab.select(F.explode("syms").alias("s"), "cnt")
+                .groupBy("s")
+                .agg(F.sum("cnt").alias("ucnt"))
+            )
+            ua = uni.select(F.col("s").alias("a"), F.col("ucnt").alias("ca"))
+            ub = uni.select(F.col("s").alias("b"), F.col("ucnt").alias("cb"))
+            score = F.col("pair_count").cast("double") / (
+                F.col("ca").cast("double") * F.col("cb").cast("double")
+            )
+            ranked = (
+                ranked.join(ua, "a")
+                .join(ub, "b")
+                .select("a", "b", "pair_count", score.alias("score"))
+            )
+            key = "score"
+        best = ranked.orderBy(F.col(key).desc(), F.col("a"), F.col("b")).limit(1).collect()
+        if not best:
+            break
+        a, b = best[0]["a"], best[0]["b"]
+        merges.append((rank, a, b, a + b, int(best[0]["pair_count"]), best[0][key]))
+        vocab = vocab.select(
+            _merge_pair_expr(F.col("syms"), a, b).alias("syms"), "cnt"
+        ).localCheckpoint(eager=False)
+    return merges
+
+
 def bpe_train(
     docs: DataFrame,
     *,
@@ -332,94 +471,17 @@ def bpe_train(
     Translation of Rare Words with Subword Units" — the subword-vocab
     training stage every LLM-data pipeline runs before tokenizing):
     iteratively merge the most frequent adjacent symbol pair, starting
-    from characters + an end-of-word marker.
-
-    Distributed shape: training runs on the WORD-FREQUENCY table, not
-    the corpus (the classic optimization — |vocab| ≪ |corpus|, and the
-    corpus pass is ONE explode + hash agg).  Each round is a narrow
-    pair-explode + one hash agg + a 1-row argmax collect, then a
-    pure-Catalyst fold applies the merge to every word; the vocab is
-    localCheckpointed per round so the loop's lineage stays flat
-    (same discipline as resolve_duplicate_clusters).  The driver holds
-    one row per round — n_merges is small and bounded by definition.
-
-    Deterministic: tie-break is (pair_count DESC, left, right) with
-    binary string order, identical in Spark and DuckDB — the catalog
-    query's unrolled SQL oracle re-derives every round exactly.
-    Stops early when no adjacent pair remains (fewer than n_merges
-    rows out).
+    from characters + an end-of-word marker.  Runs the shared merge
+    loop (:func:`_train_merges`) ranking on the raw pair count,
+    tie-broken (pair_count DESC, left, right).
 
     Returns (rank, lhs, rhs, merged, pair_count) — one row per learned
     merge, rank 0 first.
     """
-    spark = docs.sparkSession
-    words = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").cast("long").alias("cnt"))
+    merges = _train_merges(
+        docs, n_merges=n_merges, text_col=text_col, eow=eow, likelihood=False
     )
-    chars = F.filter(F.split(F.col("w"), ""), lambda t: t != "")
-    # lazy checkpoints throughout the loop: each round's argmax
-    # collect materializes that round's vocab as a side effect (one
-    # fold step past the previous checkpoint), instead of paying a
-    # separate materialization job per merge — halves the loop's job
-    # count while lineage stays exactly one round deep
-    vocab = words.select(F.concat(chars, F.array(F.lit(eow))).alias("syms"), "cnt")
-
-    merges: list[tuple] = []
-    local = _local_syms_probe(vocab, _TRAIN_LOCAL_CAP)
-    if local is not None:
-        # the whole loop is per-word arithmetic over the collected
-        # table — ONE job total instead of 8 rounds x (explode + agg +
-        # takeOrdered); argmax = (pair_count DESC, lhs, rhs) in UTF-8
-        # byte order, the exact engine sort key
-        for rank in range(int(n_merges)):
-            pc: dict = {}
-            for syms, cnt in local:
-                for i in range(len(syms) - 1):
-                    k = (syms[i], syms[i + 1])
-                    pc[k] = pc.get(k, 0) + cnt
-            if not pc:
-                break
-            (a, b), cnt = min(
-                pc.items(), key=lambda kv: (-kv[1], _u8(kv[0][0]), _u8(kv[0][1]))
-            )
-            merges.append((rank, a, b, a + b, int(cnt)))
-            local = [(_local_merge_fold(s, a, b), c) for s, c in local]
-        return spark.createDataFrame(
-            merges, "rank int, lhs string, rhs string, merged string, pair_count long"
-        )
-
-    # lazy checkpoints throughout the distributed loop: each round's
-    # argmax collect materializes that round's vocab as a side effect
-    vocab = vocab.localCheckpoint(eager=False)
-    for rank in range(int(n_merges)):
-        left = F.slice(F.col("syms"), F.lit(1), F.size(F.col("syms")) - 1)
-        right = F.slice(F.col("syms"), F.lit(2), F.size(F.col("syms")) - 1)
-        pairs = vocab.select(
-            F.explode(
-                F.zip_with(left, right, lambda a, b: F.struct(a.alias("a"), b.alias("b")))
-            ).alias("p"),
-            "cnt",
-        )
-        best = (
-            pairs.groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").alias("pair_count"))
-            .orderBy(F.col("pair_count").desc(), F.col("a"), F.col("b"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["pair_count"])
-        merges.append((rank, a, b, a + b, cnt))
-        vocab = vocab.select(
-            _merge_pair_expr(F.col("syms"), a, b).alias("syms"), "cnt"
-        ).localCheckpoint(eager=False)
-
-    return spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, merged string, pair_count long"
-    )
+    return docs.sparkSession.createDataFrame([m[:5] for m in merges], _MERGES_SCHEMA)
 
 
 def wordpiece_train(
@@ -431,115 +493,45 @@ def wordpiece_train(
 ) -> DataFrame:
     """Learn WordPiece merges (Schuster & Nakajima 2012; the BERT
     tokenizer's training rule) — the THIRD trained-subword family next
-    to BPE and the unigram LM: identical merge mechanics to
-    :func:`bpe_train`, but each round merges the pair maximizing the
-    LIKELIHOOD score count(ab) / (count(a)·count(b)) instead of the
+    to BPE and the unigram LM: the merge loop of :func:`bpe_train`
+    (:func:`_train_merges`), but each round merges the pair maximizing
+    the LIKELIHOOD score count(ab) / (count(a)·count(b)) instead of the
     raw pair count — rare symbols that almost always co-occur merge
-    before frequent-but-independent ones.
-
-    Same distributed shape as bpe_train (train on the word-frequency
-    table; each round one pair hash-agg + one symbol hash-agg + a
-    1-row argmax collect + a pure-Catalyst fold), with one extra
-    narrow aggregate per round for the unigram symbol counts.  The
-    score is an IEEE double computed from exact integer counts in a
-    pinned expression shape (double(pair)/(double(ca)·double(cb))),
-    so the argmax — tie-broken (score DESC, left, right) — is
-    engine-exact and the catalog oracle re-derives every round.
+    before frequent-but-independent ones.  Tie-break (score DESC,
+    left, right).
 
     Returns (rank, lhs, rhs, merged, pair_count, score) — one row per
     learned merge, rank 0 first."""
-    spark = docs.sparkSession
-    words = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").cast("long").alias("cnt"))
+    merges = _train_merges(
+        docs, n_merges=n_merges, text_col=text_col, eow=eow, likelihood=True
     )
-    chars = F.filter(F.split(F.col("w"), ""), lambda t: t != "")
-    # lazy loop checkpoints — same one-job-per-round discipline as
-    # bpe_train (the round's single argmax collect materializes the
-    # round's vocab; lineage stays one fold step deep)
-    vocab = words.select(F.concat(chars, F.array(F.lit(eow))).alias("syms"), "cnt")
+    return docs.sparkSession.createDataFrame(merges, _MERGES_SCHEMA + ", score double")
 
-    merges: list[tuple] = []
-    local = _local_syms_probe(vocab, _TRAIN_LOCAL_CAP)
-    if local is not None:
-        # one job total (the probe); the likelihood score is computed
-        # on the SAME doubles the engine casts (exact ints < 2^53 →
-        # double conversions are exact, one rounding in the multiply
-        # and one in the divide — identical association), argmax
-        # tie-broken (score DESC, lhs, rhs) in UTF-8 byte order
-        for rank in range(int(n_merges)):
-            pc: dict = {}
-            uc: dict = {}
-            for syms, cnt in local:
-                for i, s in enumerate(syms):
-                    uc[s] = uc.get(s, 0) + cnt
-                    if i + 1 < len(syms):
-                        k = (s, syms[i + 1])
-                        pc[k] = pc.get(k, 0) + cnt
-            if not pc:
-                break
-            scored = {
-                k: float(v) / (float(uc[k[0]]) * float(uc[k[1]]))
-                for k, v in pc.items()
-            }
-            (a, b), score = min(
-                scored.items(), key=lambda kv: (-kv[1], _u8(kv[0][0]), _u8(kv[0][1]))
-            )
-            merges.append((rank, a, b, a + b, int(pc[(a, b)]), score))
-            local = [(_local_merge_fold(s, a, b), c) for s, c in local]
-        return spark.createDataFrame(
-            merges,
-            "rank int, lhs string, rhs string, merged string, pair_count long, score double",
-        )
 
-    # lazy loop checkpoints — same one-job-per-round discipline as
-    # bpe_train's distributed path
-    vocab = vocab.localCheckpoint(eager=False)
-    for rank in range(int(n_merges)):
-        left = F.slice(F.col("syms"), F.lit(1), F.size(F.col("syms")) - 1)
-        right = F.slice(F.col("syms"), F.lit(2), F.size(F.col("syms")) - 1)
-        pairs = vocab.select(
-            F.explode(
-                F.zip_with(left, right, lambda a, b: F.struct(a.alias("a"), b.alias("b")))
-            ).alias("p"),
-            "cnt",
-        )
-        pc = pairs.groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b")).agg(
-            F.sum("cnt").alias("pair_count")
-        )
-        uni = (
-            vocab.select(F.explode("syms").alias("s"), "cnt")
-            .groupBy("s")
-            .agg(F.sum("cnt").alias("ucnt"))
-        )
-        ua = uni.select(F.col("s").alias("a"), F.col("ucnt").alias("ca"))
-        ub = uni.select(F.col("s").alias("b"), F.col("ucnt").alias("cb"))
-        score = F.col("pair_count").cast("double") / (
-            F.col("ca").cast("double") * F.col("cb").cast("double")
-        )
-        best = (
-            pc.join(ua, "a")
-            .join(ub, "b")
-            .select("a", "b", "pair_count", score.alias("score"))
-            .orderBy(F.col("score").desc(), F.col("a"), F.col("b"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        a, b = best[0]["a"], best[0]["b"]
-        merges.append(
-            (rank, a, b, a + b, int(best[0]["pair_count"]), float(best[0]["score"]))
-        )
-        vocab = vocab.select(
-            _merge_pair_expr(F.col("syms"), a, b).alias("syms"), "cnt"
-        ).localCheckpoint(eager=False)
+def _wordpiece_matcher(vocab, max_symbols: int | None, eow: str, who: str):
+    """The setup both greedy WordPiece folds share: the sorted, deduped
+    vocabulary as a literal map, the symbol array of ``w`` and its
+    size.  ``max_symbols`` defaults to a safe upper bound derived from
+    the vocabulary (a piece spans at most len(piece) base symbols,
+    since every base symbol is ≥1 char).
 
-    return spark.createDataFrame(
-        merges,
-        "rank int, lhs string, rhs string, merged string, pair_count long, score double",
-    )
+    Returns (size, match, max_symbols): ``match(pos, k)`` gives the
+    candidate piece of the k symbols starting at ``pos`` and whether
+    it is in the vocabulary."""
+    pieces = sorted(set(vocab))
+    if not pieces:
+        raise ValueError(f"{who}: empty vocabulary")
+    if max_symbols is None:
+        max_symbols = max(len(p) for p in pieces)
+    vmap = F.map_from_arrays(F.lit(list(pieces)), F.lit([1] * len(pieces)))
+    syms = _symbols(eow)
+    size = F.size(syms)
+
+    def match(pos, k):
+        piece = F.array_join(F.slice(syms, pos, k), "")
+        return piece, (pos + k - 1 <= size) & vmap.getItem(piece).isNotNull()
+
+    return size, match, int(max_symbols)
 
 
 def wordpiece_greedy_apply(
@@ -575,23 +567,10 @@ def wordpiece_greedy_apply(
 
     ``max_symbols`` must be ≥ the widest piece's base-symbol span or
     long pieces silently never match; the default derives a safe
-    upper bound from the vocabulary itself (a piece spans at most
-    len(piece) base symbols, since every base symbol is ≥1 char)."""
-    pieces = sorted(set(vocab))
-    if not pieces:
-        raise ValueError("wordpiece_greedy_apply: empty vocabulary")
-    if max_symbols is None:
-        max_symbols = max(len(p) for p in pieces)
-    vmap = F.map_from_arrays(F.lit(list(pieces)), F.lit([1] * len(pieces)))
-    words = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("w")
+    upper bound from the vocabulary itself."""
+    size, match, max_symbols = _wordpiece_matcher(
+        vocab, max_symbols, eow, "wordpiece_greedy_apply"
     )
-    wc = words.groupBy("doc_id", "w").agg(F.count("*").alias("n"))
-    distinct_w = words.select("w").distinct()
-    syms = F.concat(
-        F.filter(F.split(F.col("w"), ""), lambda t: t != ""), F.array(F.lit(eow))
-    )
-    size = F.size(syms)
 
     def step(acc, _):
         pos, n, unk = acc["pos"], acc["n"], acc["unk"]
@@ -601,42 +580,28 @@ def wordpiece_greedy_apply(
         )
         # wrap k=1..max ascending so the OUTERMOST when (checked first)
         # is the LONGEST candidate — greedy longest-match-first
-        for k in range(1, int(max_symbols) + 1):
-            piece = F.array_join(F.slice(syms, pos, k), "")
-            cond = (pos + k - 1 <= size) & vmap.getItem(piece).isNotNull()
+        for k in range(1, max_symbols + 1):
+            _, cond = match(pos, k)
             branch = F.when(
                 cond,
                 F.struct((pos + k).alias("pos"), (n + 1).alias("n"), unk.alias("unk")),
             ).otherwise(branch)
         return F.when(pos > size, acc).otherwise(branch)
 
-    init = F.struct(
-        F.lit(1).alias("pos"), F.lit(0).alias("n"), F.lit(False).alias("unk")
-    )
+    init = F.struct(F.lit(1).alias("pos"), F.lit(0).alias("n"), F.lit(False).alias("unk"))
     fin = F.aggregate(F.sequence(F.lit(1), size), init, step)
-    seg = distinct_w.select(
-        "w",
-        F.when(fin["unk"], F.lit(1)).otherwise(fin["n"]).alias("n_syms"),
-        fin["unk"].alias("is_unk"),
-    )
-    per_doc = (
-        wc.join(seg, "w")
-        .groupBy("doc_id")
-        .agg(
-            F.sum(F.col("n") * F.col("n_syms")).cast("long").alias("n_subwords"),
-            F.sum(F.when(F.col("is_unk"), F.col("n")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("n_unk_words"),
-        )
-    )
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_subwords", F.lit(0).cast("long")).alias("n_subwords"),
-            F.coalesce("n_unk_words", F.lit(0).cast("long")).alias("n_unk_words"),
-        )
+    return _per_doc_counts(
+        docs,
+        [
+            F.when(fin["unk"], F.lit(1)).otherwise(fin["n"]).alias("n_syms"),
+            fin["unk"].alias("is_unk"),
+        ],
+        {
+            "n_subwords": F.sum(F.col("n") * F.col("n_syms")),
+            "n_unk_words": F.sum(F.when(F.col("is_unk"), F.col("n")).otherwise(F.lit(0))),
+        },
+        text_col=text_col,
+        id_col=id_col,
     )
 
 
@@ -659,26 +624,15 @@ def bpe_apply(
 
     Returns (doc_id, n_subwords) — the trained-vocab token count per
     document."""
-    spark = docs.sparkSession
-    words = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("w")
-    )
-    wc = words.groupBy("doc_id", "w").agg(F.count("*").alias("n"))
-    vocab = words.select("w").distinct()
-    syms = F.concat(F.filter(F.split(F.col("w"), ""), lambda t: t != ""), F.array(F.lit(eow)))
+    syms = _symbols(eow)
     for a, b in merges:
         syms = _merge_pair_expr(syms, a, b)
-    seg = vocab.select("w", F.size(syms).alias("n_syms"))
-    per_doc = (
-        wc.join(seg, "w")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("n") * F.col("n_syms")).cast("long").alias("n_subwords"))
-    )
-    # empty/whitespace-only docs have no words: count 0, not a dropped row
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(per_doc, "doc_id", "left")
-        .select("doc_id", F.coalesce("n_subwords", F.lit(0).cast("long")).alias("n_subwords"))
+    return _per_doc_counts(
+        docs,
+        [F.size(syms).alias("n_syms")],
+        {"n_subwords": F.sum(F.col("n") * F.col("n_syms"))},
+        text_col=text_col,
+        id_col=id_col,
     )
 
 
@@ -707,6 +661,16 @@ def _ilogp(p: float) -> int:
 
     x = math.log(p) * _USEG_SCALE + 1e-9
     return int(math.floor(x + 0.5)) if x >= 0 else -int(math.floor(-x + 0.5))
+
+
+def _laplace_log_probs(counts: dict) -> dict:
+    """Piece counts → the piece → integer micro-nat log-prob dict
+    :func:`unigram_apply` consumes: Laplace smoothing (c+1)/(total+|V|)
+    quantized by :func:`_ilogp`.  Integer-exact, so a vocabulary
+    re-derived from persisted counts equals the in-memory one."""
+    total = sum(counts.values())
+    v = len(counts)
+    return {p: _ilogp((c + 1.0) / (total + v)) for p, c in counts.items()}
 
 
 def _useg_better(c, b):
@@ -781,12 +745,10 @@ def _viterbi_expr(word, vocab: dict, max_piece_len: int):
     # below every real piece, instead of poisoning the DP with the
     # sentinel — SentencePiece's unk handling
     unk_lp = min(vocab.values()) - 1_000_000
-    init = F.array(
-        F.struct(
-            F.lit(0).cast("long").alias("score"),
-            F.lit(0).cast("int").alias("n"),
-            F.lit("").alias("seg"),
-        )
+    empty = F.struct(
+        F.lit(0).cast("long").alias("score"),
+        F.lit(0).cast("int").alias("n"),
+        F.lit("").alias("seg"),
     )
     worst = F.struct(
         F.lit(-(2**62)).cast("long").alias("score"),
@@ -816,17 +778,12 @@ def _viterbi_expr(word, vocab: dict, max_piece_len: int):
         )
         return F.concat(acc, F.array(best))
 
-    dp = F.aggregate(F.sequence(F.lit(1), F.length(word)), init, step)
+    dp = F.aggregate(F.sequence(F.lit(1), F.length(word)), F.array(empty), step)
     # empty-string guard: F.sequence(1, 0) yields the DESCENDING [1, 0]
     # in Spark, and the i=0 step would hit element_at(acc, 0) — a
     # runtime error (SQL arrays are 1-indexed).  tokens() never emits
     # empty words, but an unfiltered caller must get the empty
     # segmentation, not a crashed query.
-    empty = F.struct(
-        F.lit(0).cast("long").alias("score"),
-        F.lit(0).cast("int").alias("n"),
-        F.lit("").alias("seg"),
-    )
     return F.when(F.length(word) == 0, empty).otherwise(F.element_at(dp, -1))
 
 
@@ -847,142 +804,105 @@ def unigram_train(
     never pruned, so every word stays coverable.  Laplace-smoothed
     probabilities keep zero-count survivors scorable.
 
-    Distributed shape — the bpe_train loop discipline: everything
-    runs on the DISTINCT-WORD frequency table (|vocab| ≪ |corpus|;
-    the corpus pays one explode + hash agg); seeding is one substring
-    explode + hash agg with a distributed top-K (never a full
-    collect); each round is ONE narrow Viterbi pass over the word
-    table (vocab as a literal map) + a tiny piece-count aggregation
-    collected to the driver (bounded: ≤ alphabet + keep_multi rows).
-    All loop state is integer counts and integer micro-nat log-probs,
-    so the fit is exactly reproducible in unrolled SQL.
+    Distributed shape — the :func:`_train_merges` loop discipline:
+    everything runs on the DISTINCT-WORD frequency table (|vocab| ≪
+    |corpus|; the corpus pays one explode + hash agg); seeding is one
+    substring explode + hash agg with a distributed top-K (never a
+    full collect); each round's E-step is ONE narrow Viterbi pass over
+    the word table (vocab as a literal map) + a tiny piece-count
+    aggregation collected to the driver (bounded: ≤ alphabet +
+    keep_multi rows).  Under ``_TRAIN_LOCAL_CAP`` distinct words the
+    seed top-K and the E-steps run driver-side off ONE collect of the
+    word table — integer micro-nat arithmetic with byte-order ties,
+    so local ≡ distributed exactly (pinned by test).  The prune and
+    the output are the same code on both paths.
 
     Returns (piece, cnt, prob): final Viterbi counts and the relative
     frequency over the final vocabulary, one row per kept piece."""
-    words = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    spark = docs.sparkSession
-    # bounded-fit probe (the bpe_train/_TRAIN_LOCAL_CAP discipline):
-    # under the cap the seed top-K, both hard-EM rounds, and the
-    # Viterbi DP run driver-side off ONE collect of the word table —
-    # the DP is integer micro-nat arithmetic with byte-order ties, so
-    # local ≡ distributed exactly (pinned by test); above the cap the
-    # distributed loop below is unchanged
-    local_rows = words.limit(_TRAIN_LOCAL_CAP + 1).collect()
-    if len(local_rows) <= _TRAIN_LOCAL_CAP:
-        wl = [(r["w"], int(r["cnt"])) for r in local_rows]
+    words = _word_table(docs, text_col)
+    rows = _local_probe(words)
+    if rows is not None:
+        wl = [(r["w"], int(r["cnt"])) for r in rows]
         seed_counts: dict = {}
         for wrd, cnt in wl:
             for i in range(len(wrd)):
-                for length in range(1, int(seed_max_len) + 1):
-                    if i + length <= len(wrd):
-                        p = wrd[i : i + length]
-                        seed_counts[p] = seed_counts.get(p, 0) + cnt
-        chars_l = {p: c for p, c in seed_counts.items() if len(p) == 1}
-        multi_l = sorted(
-            ((p, c) for p, c in seed_counts.items() if len(p) > 1),
-            key=lambda pc: (-pc[1], _u8(pc[0])),
-        )[: int(keep_multi)]
-        vocab_counts = dict(chars_l)
-        vocab_counts.update(dict(multi_l))
-        if not vocab_counts:
-            raise ValueError("unigram_train: corpus has no tokens to train on")
-        char_set = {p for p in vocab_counts if len(p) == 1}
-
-        def probs_l(counts: dict) -> dict:
-            total = sum(counts.values())
-            v = len(counts)
-            return {p: _ilogp((c + 1.0) / (total + v)) for p, c in counts.items()}
-
-        for _ in range(int(n_rounds)):
-            vocab = probs_l(vocab_counts)
-            unk_lp = min(vocab.values()) - 1_000_000
-            new_counts: dict = {}
-            for wrd, cnt in wl:
-                for piece in _local_viterbi_pieces(
-                    wrd, vocab, int(seed_max_len), unk_lp
-                ):
-                    new_counts[piece] = new_counts.get(piece, 0) + cnt
-            kept_multi = sorted(
-                ((p, c) for p, c in new_counts.items() if len(p) > 1),
-                key=lambda pc: (-pc[1], pc[0]),
+                for j in range(i + 1, min(i + int(seed_max_len), len(wrd)) + 1):
+                    seed_counts[wrd[i:j]] = seed_counts.get(wrd[i:j], 0) + cnt
+        vocab_counts = {p: c for p, c in seed_counts.items() if len(p) == 1}
+        vocab_counts.update(
+            sorted(
+                ((p, c) for p, c in seed_counts.items() if len(p) > 1),
+                key=lambda pc: (-pc[1], _u8(pc[0])),
             )[: int(keep_multi)]
-            vocab_counts = {p: new_counts.get(p, 0) for p in char_set}
-            vocab_counts.update(dict(kept_multi))
-
-        out = spark.createDataFrame(
-            sorted(vocab_counts.items()), "piece string, cnt long"
-        )
-        total = sum(vocab_counts.values())
-        return out.select(
-            "piece",
-            "cnt",
-            F.round(F.col("cnt") / F.lit(float(total)) + F.lit(1e-9), 6).alias("prob"),
         )
 
-    words = words.localCheckpoint(eager=False)
-    w = F.col("w")
-    subs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.length(w)),
-            lambda i: F.filter(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(int(seed_max_len))),
-                    lambda length: F.when(
-                        i + length - 1 <= F.length(w), w.substr(i.cast("int"), length.cast("int"))
+        def e_step(vocab: dict) -> dict:
+            unk_lp = min(vocab.values()) - 1_000_000
+            counts: dict = {}
+            for wrd, cnt in wl:
+                for piece in _local_viterbi_pieces(wrd, vocab, int(seed_max_len), unk_lp):
+                    counts[piece] = counts.get(piece, 0) + cnt
+            return counts
+
+    else:
+        words = words.localCheckpoint(eager=False)
+        w = F.col("w")
+        subs = F.flatten(
+            F.transform(
+                F.sequence(F.lit(1), F.length(w)),
+                lambda i: F.filter(
+                    F.transform(
+                        F.sequence(F.lit(1), F.lit(int(seed_max_len))),
+                        lambda length: F.when(
+                            i + length - 1 <= F.length(w), w.substr(i.cast("int"), length.cast("int"))
+                        ),
                     ),
+                    lambda x: x.isNotNull(),
                 ),
-                lambda x: x.isNotNull(),
-            ),
+            )
         )
-    )
-    seed = (
-        words.select(F.explode(subs).alias("piece"), "cnt")
-        .groupBy("piece")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .localCheckpoint(eager=False)
-    )
-    chars = seed.where(F.length("piece") == 1)
-    multi = (
-        seed.where(F.length("piece") > 1)
-        .orderBy(F.col("cnt").desc(), F.col("piece"))
-        .limit(int(keep_multi))
-    )
-    # bounded collect: alphabet + keep_multi rows (the codebook rule)
-    vocab_counts = {
-        r["piece"]: int(r["cnt"]) for r in chars.unionByName(multi).collect()
-    }
+        seed = (
+            words.select(F.explode(subs).alias("piece"), "cnt")
+            .groupBy("piece")
+            .agg(F.sum("cnt").cast("long").alias("cnt"))
+            .localCheckpoint(eager=False)
+        )
+        chars = seed.where(F.length("piece") == 1)
+        multi = (
+            seed.where(F.length("piece") > 1)
+            .orderBy(F.col("cnt").desc(), F.col("piece"))
+            .limit(int(keep_multi))
+        )
+        # bounded collect: alphabet + keep_multi rows (the codebook rule)
+        vocab_counts = {
+            r["piece"]: int(r["cnt"]) for r in chars.unionByName(multi).collect()
+        }
+
+        def e_step(vocab: dict) -> dict:
+            vit = _viterbi_expr(w, vocab, int(seed_max_len))
+            rows = (
+                words.select("cnt", F.explode(F.split(vit["seg"], _USEG_SEP)).alias("piece"))
+                .where(F.col("piece") != "")
+                .groupBy("piece")
+                .agg(F.sum("cnt").cast("long").alias("cnt"))
+                .collect()  # bounded: <= current vocab size rows
+            )
+            return {r["piece"]: int(r["cnt"]) for r in rows}
+
     if not vocab_counts:
         raise ValueError("unigram_train: corpus has no tokens to train on")
     char_set = {p for p in vocab_counts if len(p) == 1}
-
-    def probs(counts: dict) -> dict:
-        total = sum(counts.values())
-        v = len(counts)
-        return {p: _ilogp((c + 1.0) / (total + v)) for p, c in counts.items()}
-
     for _ in range(int(n_rounds)):
-        vit = _viterbi_expr(w, probs(vocab_counts), int(seed_max_len))
-        counts_rows = (
-            words.select("cnt", F.explode(F.split(vit["seg"], _USEG_SEP)).alias("piece"))
-            .where(F.col("piece") != "")
-            .groupBy("piece")
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
-            .collect()  # bounded: <= current vocab size rows
-        )
-        new_counts = {r["piece"]: int(r["cnt"]) for r in counts_rows}
-        kept_multi = sorted(
-            ((p, c) for p, c in new_counts.items() if len(p) > 1),
-            key=lambda pc: (-pc[1], pc[0]),
-        )[: int(keep_multi)]
+        new_counts = e_step(_laplace_log_probs(vocab_counts))
         vocab_counts = {p: new_counts.get(p, 0) for p in char_set}
-        vocab_counts.update(dict(kept_multi))
+        vocab_counts.update(
+            sorted(
+                ((p, c) for p, c in new_counts.items() if len(p) > 1),
+                key=lambda pc: (-pc[1], pc[0]),
+            )[: int(keep_multi)]
+        )
 
-    spark = docs.sparkSession
-    out = spark.createDataFrame(
+    out = docs.sparkSession.createDataFrame(
         sorted(vocab_counts.items()), "piece string, cnt long"
     )
     total = sum(vocab_counts.values())
@@ -1006,25 +926,13 @@ def unigram_apply(
     n_pieces).  Same shape as bpe_apply: each DISTINCT word segments
     once (narrow pass, vocab as a literal map), per-doc counts come
     from one explode + join + sum."""
-    words = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("w")
-    )
-    wc = words.groupBy("doc_id", "w").agg(F.count("*").alias("n"))
-    distinct_w = words.select("w").distinct()
-    seg = distinct_w.select(
-        "w", _viterbi_expr(F.col("w"), vocab, int(max_piece_len))["n"].alias("n_pieces_w")
-    )
-    per_doc = (
-        wc.join(seg, "w")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("n") * F.col("n_pieces_w")).cast("long").alias("n_pieces"))
-    )
-    # token-less docs surface as 0, not as missing rows — the same
-    # contract lm_bigram_scores keeps (a join/budget over the counts
-    # must never silently lose documents)
-    all_ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return all_ids.join(per_doc, "doc_id", "left").select(
-        "doc_id", F.coalesce("n_pieces", F.lit(0)).cast("long").alias("n_pieces")
+    n_w = _viterbi_expr(F.col("w"), vocab, int(max_piece_len))["n"]
+    return _per_doc_counts(
+        docs,
+        [n_w.alias("n_pieces_w")],
+        {"n_pieces": F.sum(F.col("n") * F.col("n_pieces_w"))},
+        text_col=text_col,
+        id_col=id_col,
     )
 
 
@@ -1037,9 +945,9 @@ def unigram_train_vocab(
     text_col: str = "text",
 ) -> dict:
     """The trained vocab as the piece → integer-micro-nat log-prob
-    dict :func:`unigram_apply` consumes: re-runs the same Laplace
-    smoothing over :func:`unigram_train`'s final counts (bounded
-    collect — the vocab is driver-sized by construction)."""
+    dict :func:`unigram_apply` consumes: :func:`_laplace_log_probs`
+    over :func:`unigram_train`'s final counts (bounded collect — the
+    vocab is driver-sized by construction)."""
     rows = unigram_train(
         docs,
         seed_max_len=seed_max_len,
@@ -1047,10 +955,7 @@ def unigram_train_vocab(
         n_rounds=n_rounds,
         text_col=text_col,
     ).collect()
-    counts = {r["piece"]: int(r["cnt"]) for r in rows}
-    total = sum(counts.values())
-    v = len(counts)
-    return {p: _ilogp((c + 1.0) / (total + v)) for p, c in counts.items()}
+    return _laplace_log_probs({r["piece"]: int(r["cnt"]) for r in rows})
 
 
 def wordpiece_pieces(
@@ -1078,19 +983,8 @@ def wordpiece_pieces(
     curation team reads, and the word→pieces dim a corpus-wide
     tokenize joins against (the same distinct-word discipline as the
     counting apply: each word segments ONCE, pure Catalyst)."""
-    pieces = sorted(set(vocab))
-    if not pieces:
-        raise ValueError("wordpiece_pieces: empty vocabulary")
-    if max_symbols is None:
-        max_symbols = max(len(p) for p in pieces)
-    vmap = F.map_from_arrays(F.lit(list(pieces)), F.lit([1] * len(pieces)))
-    distinct_w = docs.select(
-        F.explode(tokens(F.col(text_col))).alias("w")
-    ).distinct()
-    syms = F.concat(
-        F.filter(F.split(F.col("w"), ""), lambda t: t != ""), F.array(F.lit(eow))
-    )
-    size = F.size(syms)
+    size, match, max_symbols = _wordpiece_matcher(vocab, max_symbols, eow, "wordpiece_pieces")
+    distinct_w = docs.select(F.explode(tokens(F.col(text_col))).alias("w")).distinct()
 
     def step(acc, _):
         pos, n, unk, out = acc["pos"], acc["n"], acc["unk"], acc["out"]
@@ -1100,9 +994,8 @@ def wordpiece_pieces(
             F.lit(True).alias("unk"),
             out.alias("out"),
         )
-        for k in range(1, int(max_symbols) + 1):
-            piece = F.array_join(F.slice(syms, pos, k), "")
-            cond = (pos + k - 1 <= size) & vmap.getItem(piece).isNotNull()
+        for k in range(1, max_symbols + 1):
+            piece, cond = match(pos, k)
             emitted = F.when(pos == 1, piece).otherwise(
                 F.concat(out, F.lit(" ##"), piece)
             )
@@ -1118,10 +1011,7 @@ def wordpiece_pieces(
         return F.when(pos > size, acc).otherwise(branch)
 
     init = F.struct(
-        F.lit(1).alias("pos"),
-        F.lit(0).alias("n"),
-        F.lit(False).alias("unk"),
-        F.lit("").alias("out"),
+        F.lit(1).alias("pos"), F.lit(0).alias("n"), F.lit(False).alias("unk"), F.lit("").alias("out")
     )
     fin = F.aggregate(F.sequence(F.lit(1), size), init, step)
     return distinct_w.select(

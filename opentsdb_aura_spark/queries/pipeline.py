@@ -2315,13 +2315,20 @@ def _kn_heldout_oracle(N: int, count_alias: str) -> str:
     dd_joins = "\n           ".join(
         f"CROSS JOIN kn_dd{k}" for k in range(N, 0, -1)
     )
+    # a probability-0 n-gram scores -inf, as lm_kn_score does on both
+    # paths (DuckDB's ln(0) raises); p is evaluated once, in kn_p
     parts.append(
-        f"""kn_sc AS MATERIALIZED (SELECT {', '.join(cols)}, ln({p}) AS _lp
+        f"""kn_p AS MATERIALIZED (SELECT {', '.join(cols)}, {p} AS _p
       FROM kn_typ
            {gram_joins}
            {ctx_joins}
            {dd_joins}
            CROSS JOIN kn_ut CROSS JOIN kn_vt CROSS JOIN kn_x1)"""
+    )
+    parts.append(
+        f"""kn_sc AS MATERIALIZED (SELECT {', '.join(cols)},
+             CASE WHEN _p = 0 THEN CAST('-inf' AS DOUBLE) ELSE ln(_p) END AS _lp
+      FROM kn_p)"""
     )
     parts.append(
         f"""kns AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS {count_alias},

@@ -4,6 +4,7 @@ sampling, connected components, duplicate-cluster retention."""
 import pytest
 from pyspark.sql import functions as F
 
+from opentsdb_aura_spark.operators import corpus
 from opentsdb_aura_spark.operators.corpus import (
     bigram_counts,
     connected_components,
@@ -95,30 +96,19 @@ def test_dedup_keep_best_normalized_clusters(spark):
     assert out == {1: 3, 2: 3}
 
 
-def test_connected_components_chain(spark):
+def test_connected_components_chain(spark, monkeypatch):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long"
     )
     labels = {r["doc_id"]: r["label"] for r in connected_components(pairs).collect()}
     assert labels == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
     # distributed propagation path (driver fast-path disabled) agrees
-    dist = {
-        r["doc_id"]: r["label"]
-        for r in connected_components(pairs, driver_threshold=0).collect()
-    }
+    monkeypatch.setattr(corpus, "_CC_LOCAL_EDGE_CAP", 0)
+    dist = {r["doc_id"]: r["label"] for r in connected_components(pairs).collect()}
     assert dist == labels
 
-    # the driver collect is bounded by construction: a threshold above
-    # the hard ceiling is rejected, not honored
-    import pytest
 
-    from opentsdb_aura_spark.operators.corpus import MAX_DRIVER_UNION_FIND_EDGES
-
-    with pytest.raises(ValueError, match="MAX_DRIVER_UNION_FIND_EDGES"):
-        connected_components(pairs, driver_threshold=MAX_DRIVER_UNION_FIND_EDGES + 1)
-
-
-def test_connected_components_paths_agree_on_long_chain(spark):
+def test_connected_components_paths_agree_on_long_chain(spark, monkeypatch):
     """Driver union-find and distributed min-label propagation produce
     identical labels on a graph mixing a long chain (worst case for
     propagation rounds) with cliques and singleton pairs."""
@@ -131,9 +121,9 @@ def test_connected_components_paths_agree_on_long_chain(spark):
     rng.shuffle(edges)
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     fast = {r["doc_id"]: r["label"] for r in connected_components(pairs).collect()}
+    monkeypatch.setattr(corpus, "_CC_LOCAL_EDGE_CAP", 0)
     dist = {
-        r["doc_id"]: r["label"]
-        for r in connected_components(pairs, driver_threshold=0, max_iters=50).collect()
+        r["doc_id"]: r["label"] for r in connected_components(pairs, max_iters=50).collect()
     }
     assert fast == dist
     assert all(fast[i] == 0 for i in range(41))
@@ -811,6 +801,32 @@ def test_wordpiece_likelihood_beats_raw_count(spark):
     assert (bpe_first["lhs"], bpe_first["rhs"]) == ("a", "</w>")  # raw-count argmax
     assert (wp_first["lhs"], wp_first["rhs"]) == ("q", "z")       # cohesion argmax
     assert wp_first["score"] == pytest.approx(4 / (4 * 4))
+
+
+def test_tokenizer_appliers_merge_duplicate_doc_ids(spark):
+    """The three appliers share one per-doc tail on the DISTINCT doc-id
+    spine: a doc id that occurs on two rows comes back once with the
+    merged count, and a token-less doc reports 0."""
+    from opentsdb_aura_spark.operators.text import (
+        bpe_apply,
+        unigram_apply,
+        wordpiece_greedy_apply,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "ab ab"), (1, "ab"), (2, "")], "doc_id long, text string"
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(bpe_apply(docs, [("a", "b")])) == [(1, 6), (2, 0)]
+    vocab = ["a", "b", "</w>", "ab</w>"]
+    assert rows(wordpiece_greedy_apply(docs, vocab)) == [(1, 3, 0), (2, 0, 0)]
+    assert rows(unigram_apply(docs, {"a": -2, "b": -2, "ab": -1}, max_piece_len=2)) == [
+        (1, 3),
+        (2, 0),
+    ]
 
 
 def test_wordpiece_greedy_apply_longest_match_and_unk(spark):

@@ -723,9 +723,51 @@ def test_lm_kn_zero_probability_scores_neg_inf_on_both_paths(spark, monkeypatch)
                 assert abs(got[doc_id]["avg_logprob"] - lp) < 1e-9
 
 
+def test_kn5_heldout_oracle_scores_zero_probability_neg_inf(spark, tmp_path, monkeypatch):
+    """The seed-12 benchmark corpus (600 docs) holds out a 5-gram of
+    probability exactly 0: doc 400, "query group order merge dup" —
+    level 2 has D3+ = 0, so the seen context frees no backoff mass.
+    lm_kn_score gives it -inf on both paths; the DuckDB held-out oracle
+    must agree (it raised on ln(0)) and tools/check_oracle must compare
+    the infinities (it raised OverflowError on int(-inf))."""
+    import importlib.util
+    import math
+    import os
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from opentsdb_aura_spark.catalog import ORACLES, SPARK_QUERIES
+    from opentsdb_aura_spark.operators import quality as q
+    from perfbench.gen import corpus
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle", os.path.join(root, "tools", "check_oracle.py")
+    )
+    check = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check)
+
+    pq.write_table(corpus(12), str(tmp_path / "documents.parquet"))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    res = con.sql(ORACLES["quality_kn5_apply_heldout"])
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+    assert [r[2] for r in orows if r[0] == 400] == [-math.inf]
+    want = check.norm_rows(ocols, orows)
+    for cap in (q._KN_LOCAL_TOK_CAP, 0):
+        monkeypatch.setattr(q, "_KN_LOCAL_TOK_CAP", cap)
+        df = SPARK_QUERIES["quality_kn5_apply_heldout"](spark, str(tmp_path))
+        rows = df.collect()
+        assert {r["doc_id"]: r["avg_logprob"] for r in rows}[400] == -math.inf, cap
+        assert check.norm_rows(df.columns, rows) == want, cap
+
+
 def test_no_operator_takes_a_local_cap_parameter():
     """The driver-local twins are chosen by their module constants
-    alone: no public operator carries a test-only ``local_cap`` knob."""
+    alone: no public operator carries a test-only ``local_cap`` or
+    ``driver_threshold`` knob."""
     import importlib
     import inspect
     import pkgutil
@@ -738,7 +780,8 @@ def test_no_operator_takes_a_local_cap_parameter():
         for name, fn in inspect.getmembers(mod, inspect.isfunction):
             if fn.__module__ != mod.__name__ or name.startswith("_"):
                 continue
-            if "local_cap" in inspect.signature(fn).parameters:
+            params = inspect.signature(fn).parameters
+            if "local_cap" in params or "driver_threshold" in params:
                 hits.append(f"{info.name}.{name}")
     assert not hits, hits
 

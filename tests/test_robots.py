@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import pytest
 
-from opentsdb_aura_spark.operators import robots
 from opentsdb_aura_spark.operators.robots import (
     _pattern_to_regex,
     parse_robots_txt,
@@ -482,7 +481,7 @@ def test_robots_fetch_status_duplicate_hosts_collapse(spark):
     assert rows[0]["policy"] == "disallow_all" and rows[0]["allowed"] is False
 
 
-def test_resolve_robots_fetches_edges(spark, monkeypatch):
+def test_resolve_robots_fetches_edges(spark):
     """Redirect-resolution edges the catalog fixture can't isolate:
     a host with NO fetch result at all (unreachable at hop 0); an
     absolute cross-host Location; a chain that terminates at EXACTLY
@@ -513,28 +512,20 @@ def test_resolve_robots_fetches_edges(spark, monkeypatch):
     assert got["b.example"] == (200, "http://cdn.example/r.txt", 1, False)
     assert got["c.example"] == (200, "http://c.example/c2", 2, False)
     assert got["d.example"][0] == 301 and got["d.example"][3] is True
-    # local ≡ distributed (_ROBOTS_LOCAL_ROW_CAP = 0 forces the
-    # hop-join chain): the bounded chase must reproduce every row, and
-    # duplicate fetch URL rows fan a chain out exactly like the join
+    # duplicate fetch URL rows fan a chain out (the hop join's row
+    # multiplication)
     dup = spark.createDataFrame(
         rows + [("http://b.example/robots.txt", 302, "http://cdn.example/r.txt")],
         "url string, status_code int, location string",
     )
-
-    def run(f):
-        return sorted(tuple(r) for r in resolve_robots_fetches(hosts, f, max_hops=2).collect())
-
-    loc, loc_d = run(fetches), run(dup)
-    monkeypatch.setattr(robots, "_ROBOTS_LOCAL_ROW_CAP", 0)
-    assert loc == run(fetches)
-    assert loc_d == run(dup)
+    loc_d = [tuple(r) for r in resolve_robots_fetches(hosts, dup, max_hops=2).collect()]
     assert sum(1 for t in loc_d if t[0] == "b.example") == 2
 
 
-def test_resolve_robots_null_url_local_matches_distributed(spark, monkeypatch):
+def test_resolve_robots_null_url_is_unreachable(spark):
     """A NULL host (so a NULL start URL) must not match a fetch row
-    whose url is NULL: the distributed hop join never matches NULL, and
-    the bounded local chase must report the same unreachable chain."""
+    whose url is NULL: the hop join never matches NULL, so the chain
+    reports unreachable (NULL final status)."""
     from opentsdb_aura_spark.operators.robots import resolve_robots_fetches
 
     hosts = spark.createDataFrame([("a.example",), (None,)], "host string")
@@ -547,15 +538,8 @@ def test_resolve_robots_null_url_local_matches_distributed(spark, monkeypatch):
         "url string, status_code int, location string",
     )
 
-    def run():
-        rows = resolve_robots_fetches(hosts, fetches, max_hops=2).collect()
-        return sorted((tuple(r) for r in rows), key=repr)
-
-    loc = run()
-    monkeypatch.setattr(robots, "_ROBOTS_LOCAL_ROW_CAP", 0)
-    dist = run()
-    assert loc == dist
-    null_rows = [t for t in loc if t[0] is None]
+    rows = [tuple(r) for r in resolve_robots_fetches(hosts, fetches, max_hops=2).collect()]
+    null_rows = [t for t in rows if t[0] is None]
     assert len(null_rows) == 1 and null_rows[0][1] is None, null_rows  # unreachable
 
 

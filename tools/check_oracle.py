@@ -32,6 +32,8 @@ def norm_cell(v):
     if isinstance(v, float):
         if math.isnan(v):
             return "NaN"
+        if math.isinf(v):
+            return repr(v)
         if v == int(v) and abs(v) < 1e15:
             return repr(float(v))
         return repr(v)

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import shlex
 import sys
 import tempfile
 import time
@@ -28,31 +29,18 @@ def main() -> None:
         print("usage: profile_stages.py <query> [query ...]")
         return
     log_dir = tempfile.mkdtemp(prefix="spark-events-")
-    # session must be built HERE so the eventLog conf applies (get_spark
-    # would getOrCreate without it); mirror session.py's conf block
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile_stages")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{log_dir}")
-        .getOrCreate()
+    # the event log must be on when the JVM starts: pass it as submit
+    # args before the engine's session is first built
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(
+        [
+            "--conf", "spark.eventLog.enabled=true",
+            "--conf", f"spark.eventLog.dir=file://{log_dir}",
+            "pyspark-shell",
+        ]
     )
-    spark.sparkContext.setLogLevel("WARN")
+    from opentsdb_aura_spark import get_spark
+
+    spark = get_spark("profile_stages")
     from opentsdb_aura_spark.catalog import SPARK_QUERIES
     sc = spark.sparkContext
     # warmup (bench methodology: JVM + store + workers are warm)
