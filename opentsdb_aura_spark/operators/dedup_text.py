@@ -281,27 +281,6 @@ def ngram_jaccard_pairs(
     return out
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    num_perm: int = 32,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signature per doc: sig[i] = min over shingles of
-    xxhash64(shingle, seed=i).  Stays entirely in Catalyst expressions
-    (one pass over exploded shingles, partial-aggregated min)."""
-    shing = _spread(docs).select(
-        F.col(id_col).alias("doc_id"), F.explode(word_shingles(F.col(text_col), n)).alias("s")
-    )
-    # hash the string once; derive the k permutations from the 64-bit
-    # base hash (linear re-hash is ~10× cheaper than k string hashes)
-    hashed = shing.select("doc_id", F.xxhash64("s").alias("h0"))
-    sig = hashed.groupBy("doc_id").agg(*_perm_min_aggs(num_perm, F.col("h0")))
-    return sig.select("doc_id", F.array(*[f"h{i}" for i in range(num_perm)]).alias("signature"))
-
-
 def _band_signatures(sig: DataFrame, *, num_perm: int, bands: int) -> DataFrame:
     """(doc_id, band, bh) rows: each signature hashed per band — the
     LSH bucket table the candidate self-join runs on."""

@@ -22,11 +22,6 @@ def _filtered(series_dim: DataFrame, flt: Filter | None) -> DataFrame:
     return series_dim.where(compile_filter(flt))
 
 
-def distinct_namespaces(series_dim: DataFrame, flt: Filter | None = None) -> DataFrame:
-    """M1 — distinct namespaces matching the filter."""
-    return _filtered(series_dim, flt).select("namespace").distinct()
-
-
 def distinct_metrics(series_dim: DataFrame, flt: Filter | None = None) -> DataFrame:
     """M1 — distinct metrics matching the filter (NewDocStore.java:1038-1054)."""
     return _filtered(series_dim, flt).select("metric").distinct()

@@ -1,11 +1,19 @@
 """Similarity search over embedding columns (array<float>).
 
-LLM-pipeline extension (no counterpart in the reference's surface):
-- brute-force cosine top-k — exact baseline; dot products via
-  ``F.zip_with`` + ``F.aggregate`` so the arithmetic stays JVM-side;
-- random-hyperplane LSH top-k — the scale path: bucket vectors by
-  sign-pattern hashes, search only colliding buckets (recall < 1,
-  tunable with more tables).
+LLM-pipeline extension (no counterpart in the reference's surface).
+Four ANN families sit behind public front ends: exact cosine
+(``brute_force_topk``; dot products are JVM-side ``zip_with`` +
+``aggregate`` folds), random-hyperplane LSH, IVF (spherical k-means
+lists, in memory or as an index at rest) and PQ / OPQ / IVF-PQ codes
+scored by ADC lookup tables.  Below the front ends each piece is
+written once: one driver sample (``_sample_vectors``) and coarse
+trainer (``_spherical_kmeans``); one nearest-list assignment
+(``_nearest``) and one probe (``_prober``); one PQ encoder
+(``_pq_encode``); one IVF-PQ trainer (``_ivfpq_codebooks``) and coded
+frame (``_ivfpq_coded``); one ADC search core (``_adc_search``) for PQ
+and IVF-PQ, so in-memory IVF-PQ is the at-rest search over codes that
+are never written; one IVF scorer (``_ivf_scored_topk``); one top-k
+tail (``_topk_tail``); one writer and one reader per index table.
 
 At cluster scale, the query side is broadcast when it is a distinct
 small DataFrame (queries ≪ corpus) so the corpus scan stays
@@ -41,6 +49,18 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(_dot(a, b) / denom)
 
 
+def _topk_tail(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """The one exact top-k tail: per query, the ``k`` best ``score``
+    rows, ties broken by the lower neighbor_id.  Self-match filters
+    stay with the callers."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("_rk", F.row_number().over(w))
+        .where(F.col("_rk") <= k)
+        .select("query_id", "neighbor_id", score)
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -59,12 +79,7 @@ def brute_force_topk(
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
+    return _topk_tail(scored, "cos_sim", k)
 
 
 def _hyperplane(dim: int, plane_idx: int, table: int) -> list[float]:
@@ -92,14 +107,8 @@ def _lsh_buckets(
         # oracle-able twin the catalog registers as ann_lsh_exact_topk.
         bits = F.lit(0).cast("long") if n_planes == 0 else None
         for p in range(n_planes):
-            plane = _hyperplane(dim, p, t)
-            dot = F.aggregate(
-                F.zip_with(v, F.lit([float(x) for x in plane]), lambda a, b: a.cast("double") * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bit = F.when(dot >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-            term = F.shiftleft(bit, p)
+            dot = _dot(v, F.lit([float(x) for x in _hyperplane(dim, p, t)]))
+            term = F.shiftleft(F.when(dot >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long")), p)
             bits = term if bits is None else bits + term
         buckets.append(F.struct(F.lit(t).alias("table"), bits.alias("bucket")))
     return df.select(
@@ -123,14 +132,9 @@ def lsh_topk(
     Each table hashes a vector to an n_planes-bit sign pattern; a
     query only scores corpus vectors sharing a bucket in ≥1 table.
     Returns (query_id, neighbor_id, cos_sim) — a subset of the exact
-    result with high recall for near neighbors.
-
-    The query side is broadcast only when it is a DIFFERENT (small)
-    DataFrame than the corpus — the stated queries ≪ corpus contract.
-    When ``queries is corpus`` (self-search) the hint would broadcast
-    the entire corpus — instant OOM at scale — so the bucket equi-join
-    shuffles on (table, bucket) instead and Spark's own size estimate
-    decides the join strategy.
+    result with high recall for near neighbors.  Self-search
+    (``queries is corpus``) never broadcasts: the bucket equi-join
+    shuffles on (table, bucket) and Spark's size estimate decides.
     """
     cb = _lsh_buckets(corpus, "n", dim=dim, n_planes=n_planes, n_tables=n_tables, id_col=id_col, vec_col=vec_col)
     qb = _lsh_buckets(queries, "q", dim=dim, n_planes=n_planes, n_tables=n_tables, id_col=id_col, vec_col=vec_col)
@@ -142,39 +146,78 @@ def lsh_topk(
         .select(F.col("q_id").alias("query_id"), F.col("n_id").alias("neighbor_id"), "q_v", "n_v")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.withColumn("cos_sim", cosine(F.col("q_v"), F.col("n_v")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
+    return _topk_tail(cand.withColumn("cos_sim", cosine(F.col("q_v"), F.col("n_v"))), "cos_sim", k)
 
 
-def _nearest_list_udf(cent_rows):
-    """Nearest-centroid (max inner product) assignment UDF — ONE
-    definition for every IVF surface (in-memory, index build, IVF-PQ,
-    at-rest build), so build-time and serve-time assignment can never
-    diverge and break the equivalence tests / full-probe oracles."""
-    from pyspark.sql.functions import pandas_udf
+# ------------------------------------------------------------ numpy kernels
 
-    rows = [[float(x) for x in row] for row in cent_rows]
 
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        import numpy as np
+def _stack(vs: pd.Series):
+    """One Arrow batch of array cells as a float64 (rows × d) matrix."""
+    import numpy as np
 
-        c = np.asarray(rows, dtype=np.float64)
-        x = np.stack(vs.apply(lambda a: np.asarray(a, dtype=np.float64)))
-        return pd.Series(np.argmax(x @ c.T, axis=1).astype("int32"))
+    return np.stack(vs.apply(lambda a: np.asarray(a, dtype=np.float64)))
 
-    return nearest_list
+
+def _nearest(x, cent):
+    """Nearest-centroid (max inner product) list id per row of ``x`` —
+    one definition, so build-time and serve-time assignment agree."""
+    import numpy as np
+
+    return np.argmax(x @ cent.T, axis=1)
+
+
+def _prober(cent_rows, nprobe: int):
+    """The one IVF probe: ``probe(x)`` gives each row's ``nprobe``
+    closest lists (stable order: ties keep the lower list id).  Past
+    the list count it clamps to a full probe; ``nprobe < 1`` raises
+    here, at plan time — the slice would probe nothing or drop lists."""
+    import numpy as np
+
+    if int(nprobe) < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
+    c = np.asarray(cent_rows, dtype=np.float64)
+    n = min(int(nprobe), len(c))
+
+    def probe(x):
+        return np.argsort(-(x @ c.T), axis=1, kind="stable")[:, :n]
+
+    return probe
+
+
+def _pq_encode(x, codebooks):
+    """The one PQ encoder: per contiguous subspace, the nearest
+    codeword by the |c|² − 2·x@cᵀ expansion (argmin-invariant in |x|²)
+    — a true matmul, O(rows × k) memory, never a (rows × k × sub)
+    broadcast temporary.  Returns (rows × m) int32 codes."""
+    import numpy as np
+
+    sub = x.shape[1] // len(codebooks)
+    out = np.empty((len(x), len(codebooks)), dtype=np.int32)
+    for s, cb in enumerate(codebooks):
+        c = np.asarray(cb, dtype=np.float64)
+        d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (x[:, s * sub : (s + 1) * sub] @ c.T)
+        out[:, s] = np.argmin(d2, axis=1)
+    return out
+
+
+def _sample_vectors(corpus: DataFrame, *, id_col: str, vec_col: str, sample: int):
+    """The bounded deterministic driver-side training sample shared by
+    IVF and PQ: hash-ordered limit, ≤ ``sample`` rows by construction."""
+    return [
+        r["v"]
+        for r in corpus.select(F.col(vec_col).alias("v"))
+        .orderBy(F.xxhash64(F.col(id_col)))
+        .limit(int(sample))
+        .collect()
+    ]
 
 
 def _spherical_kmeans(sample_vecs, k: int, iters: int):
-    """Spherical k-means on a driver-side sample (numpy): returns
-    unit-norm centroids (k × d).  Deterministic — init is the first k
-    sample vectors (the sample itself is hash-ordered)."""
+    """The one coarse trainer: spherical k-means on a driver-side
+    sample (numpy).  Returns the unit-norm centroids as float rows
+    (k × d).  Deterministic — init is the first k sample vectors (the
+    sample itself is hash-ordered)."""
     import numpy as np
 
     x = np.asarray(sample_vecs, dtype=np.float64)
@@ -182,10 +225,14 @@ def _spherical_kmeans(sample_vecs, k: int, iters: int):
         raise ValueError("empty corpus: k-means training sample has no vectors")
     norms = np.linalg.norm(x, axis=1)
     x = x[norms > 0] / norms[norms > 0, None]
+    if not len(x):
+        raise ValueError(
+            "all-zero corpus: every k-means training vector has zero norm, so no centroid has a direction"
+        )
     k = min(k, len(x))
     cent = x[:k].copy()
     for _ in range(iters):
-        assign = np.argmax(x @ cent.T, axis=1)
+        assign = _nearest(x, cent)
         for c in range(k):
             members = x[assign == c]
             if len(members):
@@ -193,7 +240,55 @@ def _spherical_kmeans(sample_vecs, k: int, iters: int):
                 n = np.linalg.norm(m)
                 if n > 0:
                     cent[c] = m / n
-    return cent
+    return [[float(v) for v in row] for row in cent]
+
+
+# ---------------------------------------------------------------------- IVF
+
+
+def _nearest_list_udf(cent_rows):
+    """Nearest-centroid assignment UDF — ONE definition for every IVF
+    surface (in-memory, index build, IVF-PQ, at-rest build)."""
+    import numpy as np
+
+    from pyspark.sql.functions import pandas_udf
+
+    c = np.asarray(cent_rows, dtype=np.float64)
+
+    @pandas_udf("int")
+    def nearest_list(vs: pd.Series) -> pd.Series:
+        return pd.Series(_nearest(_stack(vs), c).astype("int32"))
+
+    return nearest_list
+
+
+def _probed_queries(queries: DataFrame, cent_rows, nprobe: int, *, id_col: str, vec_col: str) -> DataFrame:
+    """Each query row once per probed list: (query_id, q_v, list_id)."""
+    from pyspark.sql.functions import pandas_udf
+
+    probe = _prober(cent_rows, nprobe)
+
+    @pandas_udf("array<int>")
+    def probe_lists(vs: pd.Series) -> pd.Series:
+        return pd.Series([row.astype("int32").tolist() for row in probe(_stack(vs))])
+
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_v"),
+        F.explode(probe_lists(F.col(vec_col))).alias("list_id"),
+    )
+
+
+def _ivf_scored_topk(vecs: DataFrame, q_probed: DataFrame, k: int) -> DataFrame:
+    """The one IVF scorer: every (query, vector) pair sharing a list,
+    self-matches dropped, scored by exact cosine, then the top-k tail.
+    The caller decides whether ``q_probed`` is broadcast."""
+    scored = (
+        vecs.join(q_probed, "list_id")
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("cos_sim", cosine(F.col("q_v"), F.col("n_v")))
+    )
+    return _topk_tail(scored, "cos_sim", k)
 
 
 def ivf_topk(
@@ -227,51 +322,13 @@ def ivf_topk(
     equals ``brute_force_topk`` exactly (the property the tests pin).
     Returns (query_id, neighbor_id, cos_sim).
     """
-    from pyspark.sql.functions import pandas_udf
-
-    smp = [
-        r["v"]
-        for r in corpus.select(F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(int(sample))
-        .collect()
-    ]
-    cent = _spherical_kmeans(smp, n_centroids, iters)
-    nprobe = min(int(nprobe), len(cent))
-    cent_rows = [[float(x) for x in row] for row in cent]
-
-    nearest_list = _nearest_list_udf(cent_rows)
-
-    @pandas_udf("array<int>")
-    def probe_lists(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        c = np.asarray(cent_rows, dtype=np.float64)
-        x = np.stack(vs.apply(lambda a: np.asarray(a, dtype=np.float64)))
-        order = np.argsort(-(x @ c.T), axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    c_assigned = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("n_v"), nearest_list(F.col(vec_col)).alias("list_id")
+    cent_rows = _spherical_kmeans(
+        _sample_vectors(corpus, id_col=id_col, vec_col=vec_col, sample=sample), n_centroids, iters
     )
-    q_probed = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_v"),
-        F.explode(probe_lists(F.col(vec_col))).alias("list_id"),
-    )
+    q_probed = _probed_queries(queries, cent_rows, nprobe, id_col=id_col, vec_col=vec_col)
     if queries is not corpus:  # self-search must not broadcast the corpus
         q_probed = F.broadcast(q_probed)
-    scored = (
-        c_assigned.join(q_probed, "list_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", cosine(F.col("q_v"), F.col("n_v")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
+    return _ivf_scored_topk(assign_to_index(corpus, cent_rows, id_col=id_col, vec_col=vec_col), q_probed, k)
 
 
 def embedding_near_dup_pairs(
@@ -294,8 +351,6 @@ def embedding_near_dup_pairs(
     broadcast, nothing is ranked; candidates go straight through the
     cosine threshold filter.
     """
-    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     if use_lsh:
         kw = dict(dim=dim, n_planes=12, n_tables=4, id_col=id_col, vec_col=vec_col)
         ba = _lsh_buckets(corpus, "x", **kw)
@@ -311,12 +366,14 @@ def embedding_near_dup_pairs(
             .where(F.col("cos_sim") >= F.lit(threshold))
             .select("id_a", "id_b", "cos_sim")
         )
-    scored = (
+    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
+    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cos_sim", cosine(F.col("va"), F.col("vb")))
         .where(F.col("cos_sim") >= F.lit(threshold))
+        .select("id_a", "id_b", "cos_sim")
     )
-    return scored.select("id_a", "id_b", "cos_sim")
 
 
 def semantic_dedup(
@@ -351,22 +408,13 @@ def semantic_dedup(
     near-transitive above high thresholds), which is what makes this a
     single join + aggregation instead of a sequential scan.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    smp = [
-        r["v"]
-        for r in corpus.select(F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(int(sample))
-        .collect()
-    ]
-    cent = _spherical_kmeans(smp, n_centroids, iters)
-    cent_rows = [[float(x) for x in row] for row in cent]
-
-    nearest_list = _nearest_list_udf(cent_rows)
-
+    cent_rows = _spherical_kmeans(
+        _sample_vectors(corpus, id_col=id_col, vec_col=vec_col, sample=sample), n_centroids, iters
+    )
     assigned = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"), nearest_list(F.col(vec_col)).alias("cluster_id")
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("_v"),
+        _nearest_list_udf(cent_rows)(F.col(vec_col)).alias("cluster_id"),
     )
     lo = assigned.select(
         F.col("cluster_id"), F.col("vec_id").alias("_lo_id"), F.col("_v").alias("_lo_v")
@@ -425,14 +473,7 @@ def random_projection(
     map)."""
     R = projection_matrix(in_dim, out_dim, salt)
     v = F.col(vec_col)
-    cols = [
-        F.aggregate(
-            F.zip_with(v, F.lit([float(x) for x in R[k]]), lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias(f"p{k}")
-        for k in range(out_dim)
-    ]
+    cols = [_dot(v, F.lit([float(x) for x in R[k]])).alias(f"p{k}") for k in range(out_dim)]
     return embs.select(F.col(id_col), *cols)
 
 
@@ -462,6 +503,51 @@ def int8_quantize(
     )
 
 
+# ------------------------------------------------------------ index tables
+
+
+def _write_table(spark, rows, schema: str, path: str) -> None:
+    """One tiny single-file index table (centroids, codebooks,
+    rotation, meta)."""
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _write_centroids(spark, path: str, cent_rows) -> None:
+    _write_table(spark, list(enumerate(cent_rows)), "list_id int, centroid array<double>", f"{path}/centroids")
+
+
+def _read_centroids(spark, path: str) -> list:
+    rows = spark.read.parquet(f"{path}/centroids").orderBy("list_id").collect()
+    return [[float(x) for x in r["centroid"]] for r in rows]
+
+
+def _write_codebooks(spark, path: str, cbs) -> None:
+    rows = [(s, c, row) for s, cb in enumerate(cbs) for c, row in enumerate(cb)]
+    _write_table(spark, rows, "subspace int, code int, centroid array<double>", f"{path}/codebooks")
+
+
+def _read_codebooks(spark, path: str) -> list:
+    rows = spark.read.parquet(f"{path}/codebooks").orderBy("subspace", "code").collect()
+    cbs = [[] for _ in range(max(r["subspace"] for r in rows) + 1)]
+    for r in rows:
+        cbs[r["subspace"]].append([float(x) for x in r["centroid"]])
+    return cbs
+
+
+def _write_codes(coded: DataFrame, path: str, mode: str) -> None:
+    """Write (vec_id, codes, list_id) rows into the list-partitioned
+    codes table, range-partitioned on (list_id, vec_id): unranged,
+    every task writes a file into every list directory (measured 899
+    files/list after 30 streaming appends, a 21× serve slowdown);
+    ranged, each batch adds ~1 vec_id-sorted run per list.  The
+    vec_id bloom serves the append's anti-join."""
+    from opentsdb_aura_spark.sources.batch import bloom_options
+
+    ranged = coded.repartitionByRange("list_id", "vec_id").sortWithinPartitions("list_id", "vec_id")
+    writer = bloom_options(ranged.write.mode(mode), "vec_id", plain_encoding=("vec_id",))
+    writer.partitionBy("list_id").parquet(f"{path}/codes")
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -485,21 +571,10 @@ def build_ivf_index(
     spherical k-means; assignment is one Arrow-batched matmul pass.
     Rebuild on drift is a full rewrite (like any index); appending a
     new batch is ``assign_to_index`` + append to the vectors table."""
-    from pyspark.sql.functions import pandas_udf
-
-    smp = [
-        r["v"]
-        for r in corpus.select(F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(int(sample))
-        .collect()
-    ]
-    cent = _spherical_kmeans(smp, n_centroids, iters)
-    cent_rows = [[float(x) for x in row] for row in cent]
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(i, row) for i, row in enumerate(cent_rows)], "list_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    cent_rows = _spherical_kmeans(
+        _sample_vectors(corpus, id_col=id_col, vec_col=vec_col, sample=sample), n_centroids, iters
+    )
+    _write_centroids(corpus.sparkSession, path, cent_rows)
     assign_to_index(corpus, cent_rows, id_col=id_col, vec_col=vec_col).write.mode(
         "overwrite"
     ).partitionBy("list_id").parquet(f"{path}/vectors")
@@ -509,16 +584,12 @@ def assign_to_index(
     batch: DataFrame, cent_rows: list, *, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """Nearest-centroid assignment for a (new) vector batch — one
-    Arrow-batched numpy matmul, narrow map.  Used by the index build
-    and by incremental appends."""
-    from pyspark.sql.functions import pandas_udf
-
-    nearest_list = _nearest_list_udf(cent_rows)
-
+    Arrow-batched numpy matmul, narrow map.  Used by the index build,
+    by incremental appends and by :func:`ivf_topk`."""
     return batch.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("n_v"),
-        nearest_list(F.col(vec_col)).alias("list_id"),
+        _nearest_list_udf(cent_rows)(F.col(vec_col)).alias("list_id"),
     )
 
 
@@ -539,41 +610,10 @@ def ivf_search_index(
     ``list_id=`` directories.  Scoring and exact top-k are identical
     to :func:`ivf_topk`; with ``nprobe == n_centroids`` the result is
     exact."""
-    from pyspark.sql.functions import pandas_udf
-
-    cent_rows = [
-        [float(x) for x in r["centroid"]]
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("list_id").collect()
-    ]
-    nprobe = min(int(nprobe), len(cent_rows))
-
-    @pandas_udf("array<int>")
-    def probe_lists(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        c = np.asarray(cent_rows, dtype=np.float64)
-        x = np.stack(vs.apply(lambda a: np.asarray(a, dtype=np.float64)))
-        order = np.argsort(-(x @ c.T), axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    q_probed = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_v"),
-        F.explode(probe_lists(F.col(vec_col))).alias("list_id"),
-    )
+    q_probed = _probed_queries(queries, _read_centroids(spark, path), nprobe, id_col=id_col, vec_col=vec_col)
     probed_ids = sorted({r["list_id"] for r in q_probed.select("list_id").distinct().collect()})
     vecs = spark.read.parquet(f"{path}/vectors").where(F.col("list_id").isin(probed_ids))
-    scored = (
-        vecs.join(F.broadcast(q_probed), "list_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", cosine(F.col("q_v"), F.col("n_v")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
+    return _ivf_scored_topk(vecs, F.broadcast(q_probed), k)
 
 
 # ----------------------------------------------------- product quantization
@@ -588,10 +628,8 @@ def _subspace_kmeans(sample_vecs, m: int, k: int, iters: int):
     entries are simply never the gathered index).  Deterministic —
     init is the first k distinct subvectors IN SAMPLE ORDER (the
     sample is hash-ordered by the caller); clusters that lose all
-    members keep their previous centroid.  Distances use the
-    |c|² − 2·x@cᵀ expansion (argmin-invariant in |x|²) — a true
-    matmul, O(batch × k) memory, never a (batch × k × sub) broadcast
-    temporary."""
+    members keep their previous centroid.  Assignment is the shared
+    ``_pq_encode`` on one subspace."""
     import numpy as np
 
     x = np.asarray(sample_vecs, dtype=np.float64)
@@ -609,32 +647,15 @@ def _subspace_kmeans(sample_vecs, m: int, k: int, iters: int):
         _, first_idx = np.unique(xs, axis=0, return_index=True)
         cent = xs[np.sort(first_idx)][: min(k, len(first_idx))].copy()
         for _ in range(iters):
-            d2 = (cent * cent).sum(axis=1)[None, :] - 2.0 * (xs @ cent.T)
-            assign = np.argmin(d2, axis=1)
+            assign = _pq_encode(xs, [cent])[:, 0]
             for c in range(len(cent)):
                 members = xs[assign == c]
                 if len(members):
                     cent[c] = members.mean(axis=0)
         books.append(cent)
     k_max = max(len(b) for b in books)
-    out = []
-    for b in books:
-        if len(b) < k_max:
-            b = np.concatenate([b, np.repeat(b[:1], k_max - len(b), axis=0)])
-        out.append([[float(v) for v in row] for row in b])
-    return out
-
-
-def _sample_vectors(corpus: DataFrame, *, id_col: str, vec_col: str, sample: int):
-    """The bounded deterministic driver-side training sample shared by
-    IVF and PQ: hash-ordered limit, ≤ ``sample`` rows by construction."""
-    return [
-        r["v"]
-        for r in corpus.select(F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(int(sample))
-        .collect()
-    ]
+    padded = [np.concatenate([b, np.repeat(b[:1], k_max - len(b), axis=0)]) for b in books]
+    return [[[float(v) for v in row] for row in b] for b in padded]
 
 
 def pq_train(
@@ -655,8 +676,7 @@ def pq_train(
     per-subspace lookup tables.  Training is the same bounded
     deterministic driver-side sample as the IVF index; returns the
     codebooks (list of m × (k × sub_dim))."""
-    smp = _sample_vectors(corpus, id_col=id_col, vec_col=vec_col, sample=sample)
-    return _subspace_kmeans(smp, m, k, iters)
+    return _subspace_kmeans(_sample_vectors(corpus, id_col=id_col, vec_col=vec_col, sample=sample), m, k, iters)
 
 
 def opq_train(
@@ -692,20 +712,14 @@ def opq_train(
     x = np.asarray(smp, dtype=np.float64)
     if x.size == 0:
         raise ValueError("empty corpus: OPQ training sample has no vectors")
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m} subspaces")
-    sub = d // m
-    R = np.eye(d)
+    R = np.eye(x.shape[1])  # _subspace_kmeans rejects a dim not divisible by m
     for _ in range(int(opq_iters)):
         y = x @ R
         books = _subspace_kmeans(y, m, k, iters)
-        yhat = np.empty_like(y)
-        for s, cb in enumerate(books):
-            c = np.asarray(cb, dtype=np.float64)
-            ys = y[:, s * sub : (s + 1) * sub]
-            d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (ys @ c.T)
-            yhat[:, s * sub : (s + 1) * sub] = c[np.argmin(d2, axis=1)]
+        codes = _pq_encode(y, books)
+        yhat = np.concatenate(
+            [np.asarray(cb, dtype=np.float64)[codes[:, s]] for s, cb in enumerate(books)], axis=1
+        )
         u, _, vt = np.linalg.svd(x.T @ yhat)
         R = u @ vt
     books = _subspace_kmeans(x @ R, m, k, iters)  # align codebooks to final R
@@ -713,32 +727,25 @@ def opq_train(
 
 
 def _encode_codes_udf(codebooks, rotation=None):
-    """The PQ-encode pandas UDF (argmin code per subspace via the
-    |c|² − 2·x@cᵀ matmul expansion) — ONE definition shared by
-    ``pq_encode`` and ``ivfpq_topk`` so stored codes and IVF-PQ
-    scoring can never diverge.  ``rotation`` (OPQ) pre-multiplies the
-    batch by R — one extra narrow matmul, the codes then live in the
-    rotated space and the codebooks must be the rotated-space ones."""
+    """The PQ-encode pandas UDF — ONE definition shared by
+    ``pq_encode`` and the IVF-PQ coded frame so stored codes and
+    IVF-PQ scoring can never diverge.  ``rotation`` (OPQ)
+    pre-multiplies the batch by R — one extra narrow matmul, the codes
+    then live in the rotated space and the codebooks must be the
+    rotated-space ones."""
+    import numpy as np
+
     from pyspark.sql.functions import pandas_udf
 
-    cbs = [[list(map(float, row)) for row in cb] for cb in codebooks]
-    rot = None if rotation is None else [[float(v) for v in row] for row in rotation]
+    cbs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
+    rot = None if rotation is None else np.asarray(rotation, dtype=np.float64)
 
     @pandas_udf("array<int>")
     def encode(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        x = np.stack(vs.apply(lambda a: np.asarray(a, dtype=np.float64)))
+        x = _stack(vs)
         if rot is not None:
-            x = x @ np.asarray(rot, dtype=np.float64)
-        sub = x.shape[1] // len(cbs)
-        out = np.empty((len(x), len(cbs)), dtype=np.int32)
-        for s, cb in enumerate(cbs):
-            c = np.asarray(cb, dtype=np.float64)
-            xs = x[:, s * sub : (s + 1) * sub]
-            d2 = (c * c).sum(axis=1)[None, :] - 2.0 * (xs @ c.T)
-            out[:, s] = np.argmin(d2, axis=1)
-        return pd.Series([row.tolist() for row in out])
+            x = x @ rot
+        return pd.Series([row.tolist() for row in _pq_encode(x, cbs)])
 
     return encode
 
@@ -759,28 +766,6 @@ def pq_encode(
     (id, codes array<int>)."""
     encode = _encode_codes_udf(codebooks, rotation=rotation)
     return embs.select(F.col(id_col).alias("vec_id"), encode(F.col(vec_col)).alias("codes"))
-
-
-def _collect_query_matrix(queries: DataFrame, *, id_col, vec_col, max_queries, caller):
-    """Bounded query-side collect shared by the ADC paths: raises past
-    ``max_queries``; returns (q_ids, q_mat, q_norm) with q_mat None
-    for an empty query set (callers return an empty result — an empty
-    collect must not reach axis-1 numpy ops)."""
-    import numpy as np
-
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).limit(int(max_queries) + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"{caller} collects the query side; got > max_queries={max_queries} rows — "
-            "raise max_queries explicitly for bulk scoring"
-        )
-    if not q_rows:
-        return [], None, None
-    q_ids = [int(r["qid"]) for r in q_rows]
-    q_mat = np.asarray([list(map(float, r["qv"])) for r in q_rows], dtype=np.float64)
-    return q_ids, q_mat, np.linalg.norm(q_mat, axis=1)
 
 
 def _adc_luts(q_mat, codebooks):
@@ -824,15 +809,12 @@ def _adc_score_batch(pdf, q_ids, q_norm, ip_lut, n2_lut, probe_sets=None, residu
         vnorm = np.sqrt(d_n2)
     out_q, out_n, out_s = [], [], []
     for qi in range(len(q_ids)):
+        cds, nid, vn, lst = codes, nids, vnorm, lists
         if probe_sets is not None:
             mask = np.isin(lists, list(probe_sets[qi]))
             if not mask.any():
                 continue
-            cds, nid, vn = codes[mask], nids[mask], vnorm[mask]
-            lst = lists[mask]
-        else:
-            cds, nid, vn = codes, nids, vnorm
-            lst = lists
+            cds, nid, vn, lst = codes[mask], nids[mask], vnorm[mask], lists[mask]
         num = ip_lut[qi][m_idx, cds].sum(axis=1)
         if residual_luts is not None:
             num = num + qc[qi][lst]
@@ -846,48 +828,65 @@ def _adc_score_batch(pdf, q_ids, q_norm, ip_lut, n2_lut, probe_sets=None, residu
     return np.concatenate(out_q), np.concatenate(out_n), np.concatenate(out_s)
 
 
-def _adc_topk_tail(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.col("pq_score").desc(), F.col("neighbor_id"))
-    return (
-        scored.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .select("query_id", "neighbor_id", "pq_score")
-    )
-
-
 _EMPTY_ADC = "query_id bigint, neighbor_id bigint, pq_score double"
 
 
-def _adc_map(
-    codes_df: DataFrame, k: int, q_ids, q_norm, ip_lut, n2_lut, probe_sets=None, residual_luts=None
+def _adc_search(
+    codes: DataFrame, queries: DataFrame, cbs, *, k, max_queries, caller, id_col, vec_col,
+    rotation=None, cent_rows=None, nprobe=None, residual=False,
 ) -> DataFrame:
-    """Shared ADC serve tail: mapInPandas batch scoring (optionally
-    masked per query's probed lists) + the top-k window — one
-    definition for pq_adc_topk, ivfpq_topk, and ivfpq_search_index so
-    the in-memory and at-rest paths return identically-shaped
-    batches."""
+    """The one ADC search core: collect the queries (hard-capped at
+    ``max_queries``), rotate them for OPQ, build their LUTs, score
+    ``codes`` batch by batch in mapInPandas and keep the top-k.  With
+    ``cent_rows`` it is the IVF-PQ search: each query's lists are
+    probed on the driver, their union pushes into the ``codes`` scan as
+    an ``isin`` filter (a PARTITION filter over the at-rest table) and
+    the gather is masked to each query's own lists; ``residual`` adds
+    the c_list tables for codes of x − c_list."""
+    import numpy as np
+
+    probe = None if cent_rows is None else _prober(cent_rows, nprobe)
+    q_rows = queries.select(
+        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
+    ).limit(int(max_queries) + 1).collect()
+    if len(q_rows) > max_queries:
+        raise ValueError(
+            f"{caller} collects the query side; got > max_queries={max_queries} rows — "
+            "raise max_queries explicitly for bulk scoring"
+        )
+    if not q_rows:  # an empty collect must not reach axis-1 numpy ops
+        return codes.sparkSession.createDataFrame([], _EMPTY_ADC)
+    q_ids = [int(r["qid"]) for r in q_rows]
+    q_mat = np.asarray([list(map(float, r["qv"])) for r in q_rows], dtype=np.float64)
+    if rotation is not None:
+        q_mat = q_mat @ np.asarray(rotation, dtype=np.float64)
+    q_norm = np.linalg.norm(q_mat, axis=1)
+    ip_lut, n2_lut = _adc_luts(q_mat, cbs)
+    probe_sets = residual_luts = None
+    if probe is not None:
+        probe_sets = [set(int(l) for l in row) for row in probe(q_mat)]
+        probed_union = sorted({l for row in probe_sets for l in row})
+        codes = codes.where(F.col("list_id").isin(probed_union) if probed_union else F.lit(False))
+    if residual:  # codes decode to c_list + d̂: add the q·c, c·d̂ and |c|² tables
+        c = np.asarray(cent_rows, dtype=np.float64)
+        sub = c.shape[1] // len(cbs)
+        books = [np.asarray(cb, dtype=np.float64) for cb in cbs]
+        cl_ip = np.stack(
+            [np.stack([c[l, s * sub : (s + 1) * sub] @ b.T for s, b in enumerate(books)]) for l in range(len(c))]
+        )
+        residual_luts = (q_mat @ c.T, cl_ip, (c * c).sum(axis=1))
 
     def op(batches):
         import pandas as pd_
 
         for pdf in batches:
-            res = (
-                _adc_score_batch(
-                    pdf, q_ids, q_norm, ip_lut, n2_lut,
-                    probe_sets=probe_sets, residual_luts=residual_luts,
-                )
-                if len(pdf)
-                else None
-            )
-            if res is None:
-                yield pd_.DataFrame({"query_id": [], "neighbor_id": [], "pq_score": []})
-            else:
-                yield pd_.DataFrame(
-                    {"query_id": res[0], "neighbor_id": res[1], "pq_score": res[2]}
-                )
+            res = _adc_score_batch(
+                pdf, q_ids, q_norm, ip_lut, n2_lut, probe_sets=probe_sets, residual_luts=residual_luts
+            ) if len(pdf) else None
+            yield pd_.DataFrame(dict(zip(("query_id", "neighbor_id", "pq_score"), res or ([], [], []))))
 
-    return _adc_topk_tail(codes_df.mapInPandas(op, schema=_EMPTY_ADC), k)
+    scored = codes.mapInPandas(op, schema=_EMPTY_ADC)
+    return _topk_tail(scored.where(F.col("query_id") != F.col("neighbor_id")), "pq_score", k)
 
 
 def pq_adc_topk(
@@ -916,19 +915,10 @@ def pq_adc_topk(
     query matrix driver-side — cosine is rotation-invariant, so the
     LUT/gather path runs unchanged in the rotated space.  Returns
     (query_id, neighbor_id, pq_score)."""
-    import numpy as np
-
-    spark = corpus_codes.sparkSession
-    q_ids, q_mat, q_norm = _collect_query_matrix(
-        queries, id_col=id_col, vec_col=vec_col, max_queries=max_queries, caller="pq_adc_topk"
+    return _adc_search(
+        corpus_codes, queries, codebooks, k=k, max_queries=max_queries, caller="pq_adc_topk",
+        rotation=rotation, id_col=id_col, vec_col=vec_col,
     )
-    if q_mat is None:
-        return spark.createDataFrame([], _EMPTY_ADC)
-    if rotation is not None:
-        q_mat = q_mat @ np.asarray(rotation, dtype=np.float64)
-        q_norm = np.linalg.norm(q_mat, axis=1)
-    ip_lut, n2_lut = _adc_luts(q_mat, codebooks)
-    return _adc_map(corpus_codes, k, q_ids, q_norm, ip_lut, n2_lut)
 
 
 GRID_LEVELS = 255  # odd: 0.0 sits exactly ON a grid point (index 127)
@@ -946,8 +936,9 @@ def _grid_codebooks(dim: int):
 
 def _grid_codes(v_expr, *, levels: int, lo: float, hi: float):
     """The closed-form grid-code expression (clamp+floor map) shared by
-    grid_quantize_vectors and ivfpq_topk's grid branch — one definition
-    so the two surfaces can never diverge from the oracle SQL."""
+    grid_quantize_vectors and the IVF-PQ coded frame's grid branch —
+    one definition so the two surfaces can never diverge from the
+    oracle SQL."""
     span = float(hi) - float(lo)
     return F.transform(
         v_expr,
@@ -1008,36 +999,59 @@ def grid_decode(
     )
 
 
-def _residual_code_udf(cent_rows, codebooks):
-    """Fused assign-then-encode pandas UDF for residual IVFADC: one
-    Arrow pass computes each vector's nearest list AND its PQ codes of
-    (x − c_list) — the assignment must happen inside the same batch so
-    the residual is taken against exactly the list the row lands in."""
+# ------------------------------------------------------------------ IVF-PQ
+
+
+def _ivfpq_codebooks(corpus: DataFrame, *, n_centroids, m, pq_k, iters, sample, grid, residual, id_col, vec_col):
+    """The one IVF-PQ trainer: coarse centroids from the shared sample,
+    then the PQ codebooks — the closed-form grid, codebooks trained on
+    the residuals x − c_list, or codebooks trained on the raw sample.
+    Returns (centroid rows, codebooks)."""
+    import numpy as np
+
+    if grid and residual:
+        raise ValueError("grid twin is defined on raw vectors; residual=True needs trained codebooks")
+    smp = _sample_vectors(corpus, id_col=id_col, vec_col=vec_col, sample=sample)
+    cent_rows = _spherical_kmeans(smp, n_centroids, iters)
+    if grid:
+        return cent_rows, _grid_codebooks(len(smp[0]))
+    if residual:
+        x = np.asarray(smp, dtype=np.float64)
+        c = np.asarray(cent_rows, dtype=np.float64)
+        smp = (x - c[_nearest(x, c)]).tolist()
+    return cent_rows, _subspace_kmeans(smp, m, pq_k, iters)
+
+
+def _ivfpq_coded(df: DataFrame, cent_rows, cbs, *, grid, residual, id_col, vec_col) -> DataFrame:
+    """Every row of ``df`` as (vec_id, codes, list_id) in ONE Arrow
+    pass — a join of two separately-derived frames would scan twice
+    and shuffle on the id.  Residual codes come from one fused
+    assign-then-encode UDF, so the residual x − c_list is taken
+    against exactly the list the row lands in; otherwise the nearest
+    list rides beside the grid or trained codes."""
+    import numpy as np
+
     from pyspark.sql.functions import pandas_udf
 
-    rows = [[float(x) for x in row] for row in cent_rows]
-    cbs = [[list(map(float, row)) for row in cb] for cb in codebooks]
+    v = F.col(vec_col)
+    if residual:
+        c = np.asarray(cent_rows, dtype=np.float64)
+        books = [np.asarray(cb, dtype=np.float64) for cb in cbs]
 
-    @pandas_udf("list_id int, codes array<int>")
-    def enc(vs: pd.Series) -> pd.DataFrame:
-        import numpy as np
+        @pandas_udf("list_id int, codes array<int>")
+        def enc(vs: pd.Series) -> pd.DataFrame:
+            x = _stack(vs)
+            assign = _nearest(x, c)
+            codes = _pq_encode(x - c[assign], books)
+            return pd.DataFrame({"list_id": assign.astype("int32"), "codes": [row.tolist() for row in codes]})
 
-        c = np.asarray(rows, dtype=np.float64)
-        x = np.stack(vs.apply(lambda a: np.asarray(a, dtype=np.float64)))
-        assign = np.argmax(x @ c.T, axis=1)
-        r = x - c[assign]
-        sub = x.shape[1] // len(cbs)
-        out = np.empty((len(x), len(cbs)), dtype=np.int32)
-        for s, cb in enumerate(cbs):
-            cbn = np.asarray(cb, dtype=np.float64)
-            xs = r[:, s * sub : (s + 1) * sub]
-            d2 = (cbn * cbn).sum(axis=1)[None, :] - 2.0 * (xs @ cbn.T)
-            out[:, s] = np.argmin(d2, axis=1)
-        return pd.DataFrame(
-            {"list_id": assign.astype("int32"), "codes": [row.tolist() for row in out]}
+        return df.select(F.col(id_col).alias("vec_id"), enc(v).alias("_lc")).select(
+            "vec_id", F.col("_lc.codes").alias("codes"), F.col("_lc.list_id").alias("list_id")
         )
-
-    return enc
+    codes = _grid_codes(v, levels=GRID_LEVELS, lo=-1.0, hi=1.0) if grid else _encode_codes_udf(cbs)(v)
+    return df.select(
+        F.col(id_col).alias("vec_id"), codes.alias("codes"), _nearest_list_udf(cent_rows)(v).alias("list_id")
+    )
 
 
 def ivfpq_topk(
@@ -1062,12 +1076,9 @@ def ivfpq_topk(
     100 TB a query touches ``nprobe/n_centroids`` of the corpus
     directories AND only m bytes per vector in them.
 
-    One Arrow pass (a single corpus scan) assigns every vector its
-    list id AND its PQ codes; queries (collected, hard-capped like
-    ``pq_adc_topk``) get driver-computed probe lists, the union of
-    which pushes into the scan as a JVM-side ``isin`` pre-filter;
-    scoring is the shared per-query LUT gather, masked to each
-    query's own probed lists.
+    One Arrow pass (a single corpus scan) gives every vector its list
+    id AND its PQ codes; the search over them is
+    :func:`ivfpq_search_index`'s, on codes that are never written.
 
     ``grid=True`` swaps the trained codebooks for the closed-form
     uniform grid (``_grid_codes``) — with ``nprobe == n_centroids``
@@ -1083,81 +1094,15 @@ def ivfpq_topk(
     c·d̂ lookup terms in ``_adc_score_batch``; per-vector bytes and
     the probe pruning are unchanged.  Returns
     (query_id, neighbor_id, pq_score)."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    if grid and residual:
-        raise ValueError("grid twin is defined on raw vectors; residual=True needs trained codebooks")
-    spark = corpus.sparkSession
-    smp = _sample_vectors(corpus, id_col=id_col, vec_col=vec_col, sample=sample)
-    cent = _spherical_kmeans(smp, n_centroids, iters)
-    cent_rows = [[float(x) for x in row] for row in cent]
-    nprobe = min(int(nprobe), len(cent_rows))
-    dim = len(smp[0]) if smp else 0
-    c_mat = np.asarray(cent_rows, dtype=np.float64)
-    if grid:
-        cbs = _grid_codebooks(dim)
-    elif residual:
-        smp_arr = np.asarray(smp, dtype=np.float64)
-        assign = np.argmax(smp_arr @ c_mat.T, axis=1)
-        cbs = _subspace_kmeans((smp_arr - c_mat[assign]).tolist(), m, pq_k, iters)
-    else:
-        cbs = _subspace_kmeans(smp, m, pq_k, iters)
-
-    q_ids, q_mat, q_norm = _collect_query_matrix(
-        queries, id_col=id_col, vec_col=vec_col, max_queries=max_queries, caller="ivfpq_topk"
+    cent_rows, cbs = _ivfpq_codebooks(
+        corpus, n_centroids=n_centroids, m=m, pq_k=pq_k, iters=iters, sample=sample,
+        grid=grid, residual=residual, id_col=id_col, vec_col=vec_col,
     )
-    if q_mat is None:
-        return spark.createDataFrame([], _EMPTY_ADC)
-    # per-query probed lists, driver-side (queries are already here)
-    probe = np.argsort(-(q_mat @ c_mat.T), axis=1, kind="stable")[:, :nprobe]
-    probe_sets = [set(int(l) for l in row) for row in probe]
-    probed_union = sorted({l for row in probe_sets for l in row})
-    ip_lut, n2_lut = _adc_luts(q_mat, cbs)
-
-    residual_luts = None
-    if residual:
-        sub = dim // len(cbs)
-        cl_ip = np.stack(
-            [
-                np.stack(
-                    [
-                        c_mat[l, s * sub : (s + 1) * sub] @ np.asarray(cbs[s], dtype=np.float64).T
-                        for s in range(len(cbs))
-                    ]
-                )
-                for l in range(len(cent_rows))
-            ]
-        )
-        residual_luts = (q_mat @ c_mat.T, cl_ip, (c_mat * c_mat).sum(axis=1))
-
-    # ONE corpus scan carries both derived columns — a join of two
-    # separately-derived frames would scan twice and shuffle on the id
-    if residual:
-        enc = _residual_code_udf(cent_rows, cbs)
-        coded = (
-            corpus.select(F.col(id_col).alias("vec_id"), enc(F.col(vec_col)).alias("_lc"))
-            .select("vec_id", F.col("_lc.codes").alias("codes"), F.col("_lc.list_id").alias("list_id"))
-        )
-    else:
-        nearest_list = _nearest_list_udf(cent_rows)
-        codes_col = (
-            _grid_codes(F.col(vec_col), levels=GRID_LEVELS, lo=-1.0, hi=1.0)
-            if grid
-            else _encode_codes_udf(cbs)(F.col(vec_col))
-        )
-        coded = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            codes_col.alias("codes"),
-            nearest_list(F.col(vec_col)).alias("list_id"),
-        )
-    coded = coded.where(F.col("list_id").isin(probed_union) if probed_union else F.lit(False))
-
-    return _adc_map(
-        coded, k, q_ids, q_norm, ip_lut, n2_lut, probe_sets=probe_sets, residual_luts=residual_luts
+    coded = _ivfpq_coded(corpus, cent_rows, cbs, grid=grid, residual=residual, id_col=id_col, vec_col=vec_col)
+    return _adc_search(
+        coded, queries, cbs, k=k, max_queries=max_queries, caller="ivfpq_topk", id_col=id_col,
+        vec_col=vec_col, cent_rows=cent_rows, nprobe=nprobe, residual=residual,
     )
-
 
 
 def shortlist_rerank(
@@ -1189,12 +1134,7 @@ def shortlist_rerank(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos_sim", cosine(F.col("qv"), F.col("nv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
+    return _topk_tail(pairs, "cos_sim", k)
 
 
 def ann_recall_vs_exact(
@@ -1227,9 +1167,7 @@ def ann_recall_vs_exact(
     )
 
 
-def _write_index_meta(
-    spark, path: str, grid: bool, residual: bool = False, opq: bool = False
-) -> None:
+def _write_index_meta(spark, path: str, grid: bool, residual: bool = False, opq: bool = False) -> None:
     """Persist the explicit encoding markers (one-row table): shape
     inference (all 1-d subspaces + exactly GRID_LEVELS entries) would
     misdetect a TRAINED index built with m == dim and pq_k ==
@@ -1238,10 +1176,8 @@ def _write_index_meta(
     cannot be inferred from the codebooks at all (an OPQ index scored
     or appended without its rotation returns wrong neighbors with no
     error)."""
-    spark.createDataFrame(
-        [(bool(grid), bool(residual), bool(opq))],
-        "grid boolean, residual boolean, opq boolean",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    rows = [(bool(grid), bool(residual), bool(opq))]
+    _write_table(spark, rows, "grid boolean, residual boolean, opq boolean", f"{path}/meta")
 
 
 def _read_index_meta(spark, path: str, cbs) -> tuple[bool, bool, bool]:
@@ -1325,15 +1261,10 @@ def build_pq_index(
     else:
         cbs = pq_train(corpus, m=m, k=k, iters=iters, sample=sample, id_col=id_col, vec_col=vec_col)
         codes = pq_encode(corpus, cbs, id_col=id_col, vec_col=vec_col)
-    spark.createDataFrame(
-        [(s, c, row) for s, cb in enumerate(cbs) for c, row in enumerate(cb)],
-        "subspace int, code int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    _write_codebooks(spark, path, cbs)
     _write_index_meta(spark, path, grid, opq=rotation is not None)
     if rotation is not None:
-        spark.createDataFrame(
-            [(i, row) for i, row in enumerate(rotation)], "row_idx int, row array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/rotation")
+        _write_table(spark, list(enumerate(rotation)), "row_idx int, row array<double>", f"{path}/rotation")
     from opentsdb_aura_spark.sources.batch import bloom_options
 
     # bloom on vec_id: append's anti-join and shortlist re-rank are
@@ -1367,11 +1298,7 @@ def pq_search_index(
     the float vectors are never touched at serve time.  The persisted
     ``opq`` marker routes query rotation automatically.  Returns
     (query_id, neighbor_id, pq_score)."""
-    rows = spark.read.parquet(f"{path}/codebooks").orderBy("subspace", "code").collect()
-    n_sub = max(r["subspace"] for r in rows) + 1
-    cbs = [[] for _ in range(n_sub)]
-    for r in rows:
-        cbs[r["subspace"]].append([float(x) for x in r["centroid"]])
+    cbs = _read_codebooks(spark, path)
     _, _, is_opq = _read_index_meta(spark, path, cbs)
     rotation = _read_index_rotation(spark, path) if is_opq else None
     codes = spark.read.parquet(f"{path}/codes")
@@ -1412,67 +1339,16 @@ def build_ivfpq_index(
     Rebuild on drift is a rewrite; a new batch appends via the same
     assignment + encode with the SAVED centroids/codebooks (the
     markers route the append's encoder)."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    if grid and residual:
-        raise ValueError("grid twin is defined on raw vectors; residual=True needs trained codebooks")
     spark = corpus.sparkSession
-    smp = _sample_vectors(corpus, id_col=id_col, vec_col=vec_col, sample=sample)
-    cent = _spherical_kmeans(smp, n_centroids, iters)
-    cent_rows = [[float(x) for x in row] for row in cent]
-    dim = len(smp[0]) if smp else 0
-    if grid:
-        cbs = _grid_codebooks(dim)
-    elif residual:
-        smp_arr = np.asarray(smp, dtype=np.float64)
-        c_mat = np.asarray(cent_rows, dtype=np.float64)
-        assign = np.argmax(smp_arr @ c_mat.T, axis=1)
-        cbs = _subspace_kmeans((smp_arr - c_mat[assign]).tolist(), m, pq_k, iters)
-    else:
-        cbs = _subspace_kmeans(smp, m, pq_k, iters)
-
-    if residual:
-        enc = _residual_code_udf(cent_rows, cbs)
-        coded = corpus.select(
-            F.col(id_col).alias("vec_id"), enc(F.col(vec_col)).alias("_lc")
-        ).select("vec_id", F.col("_lc.codes").alias("codes"), F.col("_lc.list_id").alias("list_id"))
-    else:
-        nearest_list = _nearest_list_udf(cent_rows)
-        codes_col = (
-            _grid_codes(F.col(vec_col), levels=GRID_LEVELS, lo=-1.0, hi=1.0)
-            if grid
-            else _encode_codes_udf(cbs)(F.col(vec_col))
-        )
-        coded = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            codes_col.alias("codes"),
-            nearest_list(F.col(vec_col)).alias("list_id"),
-        )
-    spark.createDataFrame(
-        [(i, row) for i, row in enumerate(cent_rows)], "list_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [(s, c, row) for s, cb in enumerate(cbs) for c, row in enumerate(cb)],
-        "subspace int, code int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+    cent_rows, cbs = _ivfpq_codebooks(
+        corpus, n_centroids=n_centroids, m=m, pq_k=pq_k, iters=iters, sample=sample,
+        grid=grid, residual=residual, id_col=id_col, vec_col=vec_col,
+    )
+    _write_centroids(spark, path, cent_rows)
+    _write_codebooks(spark, path, cbs)
     _write_index_meta(spark, path, grid, residual=residual)
-    # range-partition on (list_id, vec_id) before the partitioned write:
-    # without it every task writes a file into every list directory
-    # (tasks × lists files per build/append — measured 899 files/list
-    # after 30 streaming appends, a 21× serve slowdown); ranged, each
-    # batch adds ~1 vec_id-sorted run per list, and a hot list still
-    # splits across tasks at scale
-    from opentsdb_aura_spark.sources.batch import bloom_options
-
-    bloom_options(
-        coded.repartitionByRange("list_id", "vec_id")
-        .sortWithinPartitions("list_id", "vec_id")
-        .write.mode("overwrite"),
-        "vec_id",
-        plain_encoding=("vec_id",),
-    ).partitionBy("list_id").parquet(f"{path}/codes")
+    coded = _ivfpq_coded(corpus, cent_rows, cbs, grid=grid, residual=residual, id_col=id_col, vec_col=vec_col)
+    _write_codes(coded, path, "overwrite")
 
 
 def ivfpq_search_index(
@@ -1491,57 +1367,14 @@ def ivfpq_search_index(
     closest lists are computed there, and the probed list ids push
     into the codes read as an ``isin`` PARTITION filter — the scan
     touches only the probed directories, and only codes inside them.
-    Scoring is the shared ADC gather masked per query.  Returns
+    The persisted residual marker routes the scoring.  Returns
     (query_id, neighbor_id, pq_score)."""
-    import numpy as np
-
-    cent_rows = [
-        [float(x) for x in r["centroid"]]
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("list_id").collect()
-    ]
-    cb_rows = spark.read.parquet(f"{path}/codebooks").orderBy("subspace", "code").collect()
-    n_sub = max(r["subspace"] for r in cb_rows) + 1
-    cbs = [[] for _ in range(n_sub)]
-    for r in cb_rows:
-        cbs[r["subspace"]].append([float(x) for x in r["centroid"]])
-
-    q_ids, q_mat, q_norm = _collect_query_matrix(
-        queries, id_col=id_col, vec_col=vec_col, max_queries=max_queries, caller="ivfpq_search_index"
-    )
-    if q_mat is None:
-        return spark.createDataFrame([], _EMPTY_ADC)
-    c_mat = np.asarray(cent_rows, dtype=np.float64)
-    nprobe = min(int(nprobe), len(cent_rows))
-    probe = np.argsort(-(q_mat @ c_mat.T), axis=1, kind="stable")[:, :nprobe]
-    probe_sets = [set(int(l) for l in row) for row in probe]
-    probed_union = sorted({l for row in probe_sets for l in row})
-    ip_lut, n2_lut = _adc_luts(q_mat, cbs)
-
-    # the persisted residual marker routes the scoring: residual codes
-    # decode to c_list + d̂, raw codes to d̂ alone
+    cbs = _read_codebooks(spark, path)
     _, is_residual, _ = _read_index_meta(spark, path, cbs)
-    residual_luts = None
-    if is_residual:
-        sub = q_mat.shape[1] // len(cbs)
-        cl_ip = np.stack(
-            [
-                np.stack(
-                    [
-                        c_mat[l, s * sub : (s + 1) * sub] @ np.asarray(cbs[s], dtype=np.float64).T
-                        for s in range(len(cbs))
-                    ]
-                )
-                for l in range(len(cent_rows))
-            ]
-        )
-        residual_luts = (q_mat @ c_mat.T, cl_ip, (c_mat * c_mat).sum(axis=1))
-
-    coded = spark.read.parquet(f"{path}/codes").where(
-        F.col("list_id").isin(probed_union) if probed_union else F.lit(False)
-    )
-
-    return _adc_map(
-        coded, k, q_ids, q_norm, ip_lut, n2_lut, probe_sets=probe_sets, residual_luts=residual_luts
+    return _adc_search(
+        spark.read.parquet(f"{path}/codes"), queries, cbs, k=k, max_queries=max_queries,
+        caller="ivfpq_search_index", id_col=id_col, vec_col=vec_col,
+        cent_rows=_read_centroids(spark, path), nprobe=nprobe, residual=is_residual,
     )
 
 
@@ -1563,53 +1396,15 @@ def append_to_ivfpq_index(
     table is encoded under ONE consistent model and at-rest search
     stays equivalent to in-memory search over the union."""
     spark = batch.sparkSession
-    cent_rows = [
-        [float(x) for x in r["centroid"]]
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("list_id").collect()
-    ]
-    cb_rows = spark.read.parquet(f"{path}/codebooks").orderBy("subspace", "code").collect()
-    n_sub = max(r["subspace"] for r in cb_rows) + 1
-    cbs = [[] for _ in range(n_sub)]
-    for r in cb_rows:
-        cbs[r["subspace"]].append([float(x) for x in r["centroid"]])
-
+    cent_rows, cbs = _read_centroids(spark, path), _read_codebooks(spark, path)
     have = spark.read.parquet(f"{path}/codes").select("vec_id")
     fresh = batch.join(have, batch[id_col] == have["vec_id"], "left_anti")
-    # grid indexes re-derive codes with the closed-form map so appended
-    # codes stay engine-exact like the build's; trained codebooks use
-    # the shared argmin UDF; residual indexes the fused assign+encode.
-    # The branch reads the PERSISTED markers — shape inference would
+    # The encoder follows the PERSISTED markers — shape inference would
     # misdetect a trained m==dim/pq_k==255 index, and residual is not
     # inferable from codebooks at all.
     is_grid, is_residual, _ = _read_index_meta(spark, path, cbs)
-    if is_residual:
-        enc = _residual_code_udf(cent_rows, cbs)
-        appended = fresh.select(
-            F.col(id_col).alias("vec_id"), enc(F.col(vec_col)).alias("_lc")
-        ).select("vec_id", F.col("_lc.codes").alias("codes"), F.col("_lc.list_id").alias("list_id"))
-    else:
-        codes_col = (
-            _grid_codes(F.col(vec_col), levels=GRID_LEVELS, lo=-1.0, hi=1.0)
-            if is_grid
-            else _encode_codes_udf(cbs)(F.col(vec_col))
-        )
-        nearest_list = _nearest_list_udf(cent_rows)
-        appended = fresh.select(
-            F.col(id_col).alias("vec_id"),
-            codes_col.alias("codes"),
-            nearest_list(F.col(vec_col)).alias("list_id"),
-        )
-    # same ranged layout (and vec_id bloom) as the build: ~1 sorted
-    # run per list per batch instead of one file per (task × list)
-    from opentsdb_aura_spark.sources.batch import bloom_options
-
-    bloom_options(
-        appended.repartitionByRange("list_id", "vec_id")
-        .sortWithinPartitions("list_id", "vec_id")
-        .write.mode("append"),
-        "vec_id",
-        plain_encoding=("vec_id",),
-    ).partitionBy("list_id").parquet(f"{path}/codes")
+    coded = _ivfpq_coded(fresh, cent_rows, cbs, grid=is_grid, residual=is_residual, id_col=id_col, vec_col=vec_col)
+    _write_codes(coded, path, "append")
     # sustained appends still accumulate ~1 run per list per batch;
     # with ``compact_max_files`` set, rewrite oversized directories
     # into few vec_id-sorted runs (sources/maintenance.py)

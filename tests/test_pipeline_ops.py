@@ -1315,6 +1315,82 @@ def test_ivf_index_persist_and_probe_pruning(spark, emb_df, tmp_path):
     assert any(r["neighbor_id"] == 4 for r in probe1.collect())
 
 
+def test_ivf_index_partial_probe_equals_in_memory(spark, tmp_path):
+    """At nprobe < n_centroids the persisted IVF index and the in-memory
+    ivf_topk (same sample and n_centroids, hence the same centroids)
+    probe the same lists and return the same rows."""
+    import numpy as np
+
+    from opentsdb_aura_spark.operators.similarity import build_ivf_index, ivf_search_index, ivf_topk
+
+    rng = np.random.default_rng(23)
+    vecs = [(i, [float(x) for x in rng.uniform(-1, 1, 8)]) for i in range(40)]
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    q = df.where(F.col("vec_id") < 3)
+
+    path = str(tmp_path / "ivf")
+    build_ivf_index(df, path, n_centroids=4, sample=64)
+    got = {
+        (r["query_id"], r["neighbor_id"], r["cos_sim"])
+        for r in ivf_search_index(spark, path, q, k=5, nprobe=2).collect()
+    }
+    want = {
+        (r["query_id"], r["neighbor_id"], r["cos_sim"])
+        for r in ivf_topk(df, q, k=5, n_centroids=4, nprobe=2, sample=64).collect()
+    }
+    assert got == want and len(got) == 15
+
+
+@pytest.mark.parametrize("entry", ["ivf_topk", "ivf_search_index", "ivfpq_topk", "ivfpq_search_index"])
+def test_ivf_probe_rejects_nprobe_below_one(spark, tmp_path, entry):
+    """Every IVF entry point rejects nprobe < 1: the probe's top-nprobe
+    slice would otherwise probe no list (0) or quietly drop lists
+    (negative).  nprobe past the list count still clamps to a full
+    probe (3 queries × 11 neighbours)."""
+    import numpy as np
+
+    from opentsdb_aura_spark.operators import similarity as sim
+
+    rng = np.random.default_rng(11)
+    vecs = [(i, [float(x) for x in rng.uniform(-1, 1, 4)]) for i in range(12)]
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+    q = df.where(F.col("vec_id") < 3)
+    path = str(tmp_path / "idx")
+    if entry == "ivf_topk":
+        def run(n):
+            return sim.ivf_topk(df, q, k=12, n_centroids=4, nprobe=n)
+    elif entry == "ivf_search_index":
+        sim.build_ivf_index(df, path, n_centroids=4)
+
+        def run(n):
+            return sim.ivf_search_index(spark, path, q, k=12, nprobe=n)
+    elif entry == "ivfpq_topk":
+        def run(n):
+            return sim.ivfpq_topk(df, q, k=12, n_centroids=4, nprobe=n, m=2, pq_k=4)
+    else:
+        sim.build_ivfpq_index(df, path, n_centroids=4, m=2, pq_k=4)
+
+        def run(n):
+            return sim.ivfpq_search_index(spark, path, q, k=12, nprobe=n)
+
+    for bad in (0, -1, -3):
+        with pytest.raises(ValueError, match="nprobe"):
+            run(bad).collect()
+    assert run(4).count() == run(99).count() == 33
+
+
+def test_ivf_all_zero_training_sample_raises_clear_error(spark):
+    """Spherical k-means drops zero-norm rows; an all-zero sample leaves
+    none, and IVF must name that cause instead of crashing on an empty
+    argmax.  Brute force answers the same input (every pair scores 0)."""
+    from opentsdb_aura_spark.operators.similarity import ivf_topk
+
+    zeros = spark.createDataFrame([(i, [0.0] * 4) for i in range(5)], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="zero norm"):
+        ivf_topk(zeros, zeros, k=2, n_centroids=2, nprobe=2)
+    assert {r["cos_sim"] for r in brute_force_topk(zeros, zeros, k=2).collect()} == {0.0}
+
+
 def test_weighted_sample_determinism_and_bias(spark):
     """A-ES weighted sampling: (1) deterministic — same salt, same
     sample; (2) weight-proportional — across many salts a 20x-weight
