@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from opentsdb_aura_spark.sources.maintenance import new_rows, read_parquet_if_exists
+
 WARC_DATE = "2024-01-01T00:00:00Z"
 _CRLF = b"\r\n"
 
@@ -2557,17 +2559,12 @@ def update_frontier_index(
     rather than counts keeps the append idempotent per source doc;
     read-side :func:`frontier_counts` derives the scheduler's ranking
     signal with one groupBy.  Returns the refreshed index frame."""
-    from opentsdb_aura_spark.operators.dedup_text import _read_parquet_if_exists
-
     spark = links.sparkSession
     slim = links.select(
         F.col(url_col).alias("frontier_url"), F.col(id_col).cast("long").alias("doc_id")
     ).where(F.col("frontier_url").isNotNull() & F.col(id_col).isNotNull())
-    existing = _read_parquet_if_exists(spark, path)
-    if existing is not None:
-        have = existing.select("doc_id").distinct()
-        slim = slim.join(have, "doc_id", "left_anti")
-    slim.write.mode("append").parquet(path)
+    fresh = new_rows(slim, read_parquet_if_exists(spark, path), "doc_id", "doc_id")
+    fresh.write.mode("append").parquet(path)
     return spark.read.parquet(path)
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from opentsdb_aura_spark.operators.containers import _CHAIN_DEPTH
+from opentsdb_aura_spark.sources.maintenance import new_rows, read_parquet_if_exists
 
 
 def tokens(text: Column) -> Column:
@@ -424,25 +425,6 @@ def compute_minhash_index(
     return hashed.groupBy("doc_id").agg(*_perm_min_aggs(num_perm, F.col("h0")))
 
 
-def _read_parquet_if_exists(spark, path: str):
-    """Read a parquet table that may not exist yet, distinguishing
-    'not created' from real failures: only a missing path returns
-    None — any OTHER read error (storage hiccup, corrupted footer,
-    permissions) propagates.  A bare except here would silently turn
-    a transient failure into 'empty corpus', making an index append
-    skip its anti-join (duplicate rows forever) or a probe report
-    zero pairs (near-dups lost for good)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
-
-
-
 def update_minhash_index(
     docs: DataFrame,
     path: str,
@@ -461,12 +443,7 @@ def update_minhash_index(
     # lives wherever the warehouse does (HDFS/S3 at scale), where a
     # local-path check is always false and every batch would re-sign
     # and append the whole corpus
-    existing = _read_parquet_if_exists(spark, path)
-    have = existing.select("doc_id") if existing is not None else None
-    if have is not None:
-        fresh = docs.join(have, docs[id_col] == have["doc_id"], "left_anti")
-    else:
-        fresh = docs
+    fresh = new_rows(docs, read_parquet_if_exists(spark, path), id_col, "doc_id")
     sig = compute_minhash_index(fresh, num_perm=num_perm, n=n, text_col=text_col, id_col=id_col)
     sig.write.mode("append").parquet(path)
     return spark.read.parquet(path)
@@ -757,16 +734,9 @@ def update_fingerprint_index(
     by taking docs rather than signatures)."""
     spark = fingerprints.sparkSession
     # existence through Spark, not os.path — the index lives wherever
-    # the warehouse does (HDFS/S3 at scale).  No distinct() on the id
-    # side: anti-join semantics don't need it and it would shuffle the
-    # whole index id column per increment.
-    existing = _read_parquet_if_exists(spark, path)
-    have = existing.select("_id") if existing is not None else None
+    # the warehouse does (HDFS/S3 at scale)
     fps = fingerprints.where(F.col(hash_col).isNotNull())
-    if have is not None:
-        fresh = fps.join(have, fps[id_col] == have["_id"], "left_anti")
-    else:
-        fresh = fps
+    fresh = new_rows(fps, read_parquet_if_exists(spark, path), id_col, "_id")
     # range-partition by (band, bh): parallel writers per band AND
     # disjoint sorted bh ranges per file, so the probe's band-key
     # filter skips whole files via row-group stats; the bloom filter
@@ -833,7 +803,7 @@ def probe_fingerprint_index(
 
     Probing a not-yet-created index returns an empty pair set (the
     first micro-batch of a stream has no prior corpus to match)."""
-    idx = _read_parquet_if_exists(spark, path)
+    idx = read_parquet_if_exists(spark, path)
     if idx is None:  # not created yet — the stream's first micro-batch
         return spark.createDataFrame(
             [], "probe_id bigint, index_id bigint, hamming integer"

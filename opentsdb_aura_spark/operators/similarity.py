@@ -28,6 +28,8 @@ import pandas as pd  # noqa: F401 — must be module-level so pandas_udf can res
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from opentsdb_aura_spark.sources.maintenance import new_rows
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -1397,8 +1399,8 @@ def append_to_ivfpq_index(
     stays equivalent to in-memory search over the union."""
     spark = batch.sparkSession
     cent_rows, cbs = _read_centroids(spark, path), _read_codebooks(spark, path)
-    have = spark.read.parquet(f"{path}/codes").select("vec_id")
-    fresh = batch.join(have, batch[id_col] == have["vec_id"], "left_anti")
+    # strict read: a missing codes table is a broken index, not an empty one
+    fresh = new_rows(batch, spark.read.parquet(f"{path}/codes"), id_col, "vec_id")
     # The encoder follows the PERSISTED markers — shape inference would
     # misdetect a trained m==dim/pq_k==255 index, and residual is not
     # inferable from codebooks at all.

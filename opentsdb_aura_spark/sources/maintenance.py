@@ -1,15 +1,28 @@
-"""Index maintenance: small-file compaction for the persisted
-incremental indexes.
+"""Index maintenance for the persisted incremental indexes: the one
+append rule every incremental writer shares, and small-file
+compaction.
 
-The streaming append paths (``update_fingerprint_index``,
-``append_to_ivfpq_index``) write one range-partitioned file set per
-micro-batch.  At crawl cadence that accumulates thousands of small
-parquet files per band/list directory, which erodes exactly the
-row-group-stat and partition pruning those indexes exist for — every
-probe then opens thousands of footers to skip the same key ranges one
-footer used to skip.  The fix is the standard LSM discipline: a
-compaction job that rewrites a partition directory's many sorted runs
-into few, preserving the sort so pruning survives.
+Five append paths grow a table on disk one micro-batch at a time:
+``dedup_text.update_minhash_index``, ``dedup_text.update_fingerprint_index``,
+``containers.update_frontier_index``, ``similarity.append_to_ivfpq_index``
+and the capture-index sink of ``streaming.state.streaming_crawl_ingest``
+(whose quality/lang/ppl/dup sidecars and ``streaming_near_dup``'s
+pre-pair filter follow the same rule).  The rule: a batch row is NEW
+when its key is not yet in the table on disk.  It is written once,
+here — :func:`read_parquet_if_exists` reads the stored table (only a
+missing path reads as "nothing stored"; every other read error
+propagates) and :func:`new_rows` anti-joins the batch against its key
+column — so an at-least-once redelivery appends nothing and a storage
+error can never read as an empty index.
+
+Each append writes one range-partitioned file set per micro-batch.
+At crawl cadence that accumulates thousands of small parquet files
+per band/list directory, which erodes exactly the row-group-stat and
+partition pruning those indexes exist for — every probe then opens
+thousands of footers to skip the same key ranges one footer used to
+skip.  The fix is the standard LSM discipline: a compaction job that
+rewrites a partition directory's many sorted runs into few,
+preserving the sort so pruning survives.
 
 The job is warehouse-agnostic: file listing and the directory swap go
 through the Hadoop FileSystem API of whatever scheme ``path`` lives
@@ -23,8 +36,38 @@ repo defines is unchanged by that.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def read_parquet_if_exists(spark, path: str):
+    """Read a parquet table that may not exist yet, distinguishing
+    'not created' from real failures: only a missing path returns
+    None — any OTHER read error (storage hiccup, corrupted footer,
+    permissions) propagates.  A bare except here would silently turn
+    a transient failure into 'empty corpus', making an index append
+    skip its anti-join (duplicate rows forever) or a probe report
+    zero pairs (near-dups lost for good)."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+            return None
+        raise
+
+
+def new_rows(rows: DataFrame, stored: DataFrame | None, key: str, index_key: str) -> DataFrame:
+    """The rows of a batch whose ``key`` is not yet in the ``stored``
+    table's ``index_key`` column (``stored=None``: nothing is stored
+    yet, every row is new).  No distinct() on the index side: anti-join
+    semantics do not need it, and it would shuffle the whole stored key
+    column on every batch."""
+    if stored is None:
+        return rows
+    have = stored.select(index_key)
+    return rows.join(have, rows[key] == have[index_key], "left_anti")
 
 
 def _fs(spark: SparkSession, path: str):

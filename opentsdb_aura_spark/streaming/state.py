@@ -17,7 +17,10 @@ from typing import Iterable
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from opentsdb_aura_spark.sources.maintenance import new_rows, read_parquet_if_exists
 
 OUTPUT_SCHEMA = "series_id long, last_ts long, last_value double, n_points long"
 STATE_SCHEMA = "last_ts long, last_seq long, last_value double, n_points long"
@@ -248,6 +251,19 @@ def streaming_heavy_hitters(
     )
 
 
+def _start_batches(stream: DataFrame, process_batch, checkpoint: str, available_now: bool):
+    """Start ``process_batch`` as the stream's foreachBatch sink →
+    the started StreamingQuery."""
+    writer = (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def streaming_near_dup(
     stream_fps: DataFrame,
     index_path: str,
@@ -298,10 +314,6 @@ def streaming_near_dup(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from opentsdb_aura_spark.operators.dedup_text import _read_parquet_if_exists
-
         spark = batch_df.sparkSession
         fps = batch_df.where(F.col(hash_col).isNotNull()).select(id_col, hash_col)
         # drop RE-DELIVERED ids before pairing, not just before the
@@ -310,10 +322,7 @@ def streaming_near_dup(
         # (new, old) and once by the intra-batch join as (old, new) —
         # and the downstream (probe_id, index_id) dedup key can't
         # collapse flipped orientations
-        existing = _read_parquet_if_exists(spark, index_path)
-        if existing is not None:
-            have = existing.select("_id")
-            fps = fps.join(have, fps[id_col] == have["_id"], "left_anti")
+        fps = new_rows(fps, read_parquet_if_exists(spark, index_path), id_col, "_id")
         # checkpoint BEFORE the emptiness probe so the upstream
         # pipeline (possibly media decode) runs exactly once
         fps = fps.localCheckpoint()
@@ -342,14 +351,7 @@ def streaming_near_dup(
             compact_max_files=compact_max_files,
         )
 
-    writer = (
-        stream_fps.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(stream_fps, process_batch, checkpoint, trigger_available_now)
 
 
 def streaming_crawl_ingest(
@@ -453,50 +455,35 @@ def streaming_crawl_ingest(
     entry URLs through the SAME resolve/prefilter/politeness gates as
     extracted links — the loop eats its own discoveries, and
     discovery never bypasses compliance.
-    ``quality_model`` ({"weights": [...], "bias": b, "n_features": D,
-    "binary": bool}) applies a PRETRAINED hashed-feature classifier
-    (quality.train_logreg_weights output — training is a batch job;
-    the stream only scores) to each batch's extracted text, appending
-    (doc_id, prob, keep ≥ ``quality_threshold``) to
-    ``{docs_path}_quality`` — the model-based curation gate running
-    inline with ingestion, without widening the docs table's schema.
-    ``lang_models`` ({"models": {lang: (weights, bias), ...},
-    "n_features": D, "n": 3}) applies the PRETRAINED one-vs-rest
-    language-ID classifier (quality.train_ovr_logreg_weights output —
-    training is a batch job; the stream only scores) to each batch's
-    extracted text, appending (doc_id, pred_lang) to
-    ``{docs_path}_lang`` — the fastText-style lang gate running inline
-    with ingestion, the streaming twin of text_lang_id_trained's
-    scoring pass, with the same at-least-once append semantics as the
-    quality sidecar.
-    ``quality_model_path`` / ``lang_models_path`` consume the models
-    as PERSISTED Parquet dims instead of in-memory dicts (the
-    operators/artifacts.py ovr_model_save schema: full-precision
-    (class, bucket, weight) rows, intercept at pseudo-bucket −1) —
-    train once in a batch job, ship the artifact, and every stream
-    loads it at startup: the quality path must hold exactly ONE class
-    (a binary keep model; presence features assumed, the trained
-    catalog models' form), the lang path holds the K one-vs-rest
-    classes (char-trigram features, n=3).  Mutually exclusive with
-    the corresponding dict argument; scoring is bit-identical to the
-    dict form (doubles round-trip Parquet exactly).
-    ``kn_model_path`` scores each batch's extracted text against a
-    PERSISTED modified-KN tower (quality.lm_kn_save output — the
-    count tables stay distributed Parquet dims, never collected),
-    appending (doc_id, n_ngrams, avg_logprob) to ``{docs_path}_ppl``
-    with the same redelivery anti-join as the quality/lang sidecars —
-    the CCNet perplexity gate running inline with ingestion against a
-    model trained once on a reference corpus (Wenzek et al. §4.3),
-    full OOV backoff included (crawled text is OOV-heavy by nature).
-    ``dup_index_path`` screens each batch's extracted text against a
-    PERSISTED duplicate-gram index (suffix.build_dup_index output —
-    the one-time ExactSubstr pass over the existing corpus; the index
-    stays a distributed Parquet dim), appending
-    (doc_id, n_hit_positions, covered_chars, dup_frac) to
-    ``{docs_path}_dup`` with the same redelivery anti-join as the
-    quality/lang/ppl sidecars — incremental substring dedup running
-    inline with ingestion: ONE gram equi-join per batch, no suffix
-    array over new data, no rescan of the old corpus.
+    The SIDECAR TABLE applies PRETRAINED models inline (training is
+    a batch job; the stream only scores) and appends one row per doc
+    to ``{docs_path}_<suffix>``, keyed by doc_id so the docs table's
+    schema stays per-index-stable.  ``quality_model`` ({"weights":
+    [...], "bias": b, "n_features": D, "binary": bool},
+    quality.train_logreg_weights output) appends (doc_id, prob, keep ≥
+    ``quality_threshold``) to ``_quality``; ``lang_models``
+    ({"models": {lang: (weights, bias), ...}, "n_features": D, "n":
+    3}, quality.train_ovr_logreg_weights output) appends the
+    one-vs-rest argmax (doc_id, pred_lang) to ``_lang``;
+    ``kn_model_path`` (quality.lm_kn_save output — the count tables
+    stay distributed Parquet dims, never collected) appends the
+    modified-KN perplexity (doc_id, n_ngrams, avg_logprob) to
+    ``_ppl``, full OOV backoff included (Wenzek et al. §4.3);
+    ``dup_index_path`` (suffix.build_dup_index output, a distributed
+    Parquet dim) appends the ExactSubstr screen (doc_id,
+    n_hit_positions, covered_chars, dup_frac) to ``_dup`` — one gram
+    equi-join per batch, no suffix array over new data.
+    ``quality_model_path`` / ``lang_models_path`` load the first two
+    as PERSISTED Parquet dims at startup (operators/artifacts.py
+    ovr_model_save schema): the quality path must hold exactly ONE
+    class (a binary keep model), the lang path holds the K
+    one-vs-rest classes (char-trigram features, n=3); each is
+    mutually exclusive with its dict argument and scores
+    bit-identically to it.  Every scorer reads ONE spine, the batch's
+    (doc_id, text) de-duplicated on doc_id, so a doc delivered twice
+    in one trigger scores once; every output keeps only the doc_ids
+    its sidecar does not hold yet (sources.maintenance.new_rows), so
+    a replayed batch appends nothing.
     ``rank_refresh_every`` (with ``frontier_path``) refreshes the
     frontier AUTHORITY signal every N batches the way compaction
     already hooks the loop: containers.refresh_frontier_ranks runs
@@ -505,9 +492,28 @@ def streaming_crawl_ingest(
     index state, so redelivered batches (which the index anti-joins
     away) leave the ranks byte-identical.
     Returns the started StreamingQuery."""
-    from opentsdb_aura_spark.operators.containers import http_responses, warc_records
-    from opentsdb_aura_spark.operators.dedup_text import update_minhash_index
+    from pyspark.sql.window import Window
 
+    from opentsdb_aura_spark.operators.containers import (
+        canonicalize_url,
+        cdx_index,
+        http_responses,
+        refresh_frontier_ranks,
+        resolve_href,
+        update_frontier_index,
+        url_prefilter,
+        warc_records,
+    )
+    from opentsdb_aura_spark.operators.dedup_text import update_minhash_index
+    from opentsdb_aura_spark.operators.htmltext import html_links, html_to_text
+    from opentsdb_aura_spark.operators.robots import discovered_xml_urls, robots_allowed
+    from opentsdb_aura_spark.sources.maintenance import (
+        compact_capture_index,
+        compact_frontier_index,
+        compact_minhash_index,
+    )
+
+    spark = stream_files.sparkSession
     if frontier_path is not None and not http_html:
         raise ValueError(
             "streaming_crawl_ingest: frontier_path requires http_html=True "
@@ -557,7 +563,7 @@ def streaming_crawl_ingest(
             )
         from opentsdb_aura_spark.operators.artifacts import ovr_model_load
 
-        loaded_q = ovr_model_load(stream_files.sparkSession, quality_model_path)
+        loaded_q = ovr_model_load(spark, quality_model_path)
         if len(loaded_q) != 1:
             raise ValueError(
                 "streaming_crawl_ingest: quality_model_path must hold exactly "
@@ -578,7 +584,7 @@ def streaming_crawl_ingest(
             )
         from opentsdb_aura_spark.operators.artifacts import ovr_model_load
 
-        loaded_l = ovr_model_load(stream_files.sparkSession, lang_models_path)
+        loaded_l = ovr_model_load(spark, lang_models_path)
         if not loaded_l:
             raise ValueError(
                 f"streaming_crawl_ingest: empty lang model at {lang_models_path}"
@@ -588,60 +594,117 @@ def streaming_crawl_ingest(
             "n_features": len(next(iter(loaded_l.values()))[0]),
             "n": 3,
         }
-    kn_model = None
-    if kn_model_path is not None:
-        from opentsdb_aura_spark.operators.quality import lm_kn_load
 
-        kn_model = lm_kn_load(stream_files.sparkSession, kn_model_path)
+    # the sidecar table: suffix -> scorer of the batch's distinct
+    # (doc_id, text) spine, in append order
+    scorers = {}
+    if quality_model is not None:
+        from opentsdb_aura_spark.operators.quality import logreg_scores
+
+        def score_quality(spine: DataFrame) -> DataFrame:
+            return logreg_scores(
+                spine,
+                list(quality_model["weights"]),
+                float(quality_model["bias"]),
+                n_features=int(quality_model["n_features"]),
+                binary=bool(quality_model.get("binary", True)),
+            ).select(
+                "doc_id",
+                "prob",
+                (F.col("prob") >= F.lit(float(quality_threshold))).alias("keep"),
+            )
+
+        scorers["quality"] = score_quality
+    if lang_models is not None:
+        from opentsdb_aura_spark.operators.quality import (
+            hashed_char_ngram_features,
+            ovr_logreg_scores,
+        )
+
+        def score_lang(spine: DataFrame) -> DataFrame:
+            nf = int(lang_models["n_features"])
+            return ovr_logreg_scores(
+                hashed_char_ngram_features(
+                    spine, n=int(lang_models.get("n", 3)), n_features=nf
+                ),
+                {k: (list(v[0]), float(v[1])) for k, v in lang_models["models"].items()},
+                spine.select("doc_id"),
+                n_features=nf,
+            ).select("doc_id", "pred_lang")
+
+        scorers["lang"] = score_lang
+    if kn_model_path is not None:
+        from opentsdb_aura_spark.operators.quality import lm_kn_load, lm_kn_score
+
+        kn_model = lm_kn_load(spark, kn_model_path)
+        scorers["ppl"] = lambda spine: lm_kn_score(kn_model, spine)
     if dup_index_path is not None:
+        from opentsdb_aura_spark.operators.suffix import probe_dup_index
+
         # a distributed Parquet dim, like the KN tower: loaded once as
         # a scan, never collected
-        dup_index = stream_files.sparkSession.read.parquet(dup_index_path)
+        dup_index = spark.read.parquet(dup_index_path)
+        scorers["dup"] = lambda spine: probe_dup_index(spine, dup_index)
 
+    id_expr = (
+        doc_id_expr
+        if doc_id_expr is not None
+        else F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1).try_cast("long")
+    )
+
+    def frontier_edges(df: DataFrame, base: str, href: str) -> DataFrame:
+        # one (frontier_url, doc_id) projection for every discovery
+        # source, keyed by the SAME doc_id the docs/index writers use,
+        # so redelivery idempotence holds across all the sinks
+        return df.select(
+            canonicalize_url(resolve_href(base, F.col(href))).alias("frontier_url"),
+            id_expr.alias("doc_id"),
+        )
+
+    def gate(links: DataFrame, url_col: str, admitted) -> DataFrame:
+        # ``admitted`` maps the distinct non-NULL discovered URLs (as
+        # column ``url_col``) to the ones that pass (as column ``url``)
+        urls = (
+            links.where(F.col("frontier_url").isNotNull())
+            .select(F.col("frontier_url").alias(url_col))
+            .distinct()
+        )
+        kept = admitted(urls).select(F.col("url").alias("frontier_url"))
+        return links.join(kept, "frontier_url", "left_semi")
+
+    # errors sidecar schema is uniform across all three writers:
+    # (file_id, record_id, target_uri, error) — record-level failures
+    # keep the identifiers a crawl operator needs to diagnose WHICH
+    # fetch failed (ADVICE r8); file-level parse failures carry NULL
+    # record fields.
+    err_cols = ("file_id", "record_id", "target_uri", "error")
     _sidecar_checked: list = []  # one-time legacy-schema probe memo
     _cdx_schema_checked: list = []  # one-time capture-index validator-schema probe
 
+    def write_errors(df: DataFrame) -> None:
+        # one-time upgrade of a pre-r9 sidecar: appending 4-column
+        # files next to legacy (file_id, error) files would leave a
+        # mixed-schema dir that a plain parquet read resolves from
+        # whichever footer it samples — rewrite legacy rows to the
+        # wide schema first.  read_parquet_if_exists distinguishes a
+        # missing path from a REAL read failure (which must propagate,
+        # not be mistaken for "no legacy sidecar"), and the probe runs
+        # once per query, not per write (review r9).
+        if not _sidecar_checked:
+            _sidecar_checked.append(True)
+            old = read_parquet_if_exists(df.sparkSession, f"{docs_path}_errors")
+            if old is not None and "record_id" not in old.columns:
+                widened = old.select(
+                    "file_id",
+                    F.lit(None).cast("string").alias("record_id"),
+                    F.lit(None).cast("string").alias("target_uri"),
+                    "error",
+                ).localCheckpoint()  # materialize BEFORE overwriting the source
+                widened.write.mode("overwrite").parquet(f"{docs_path}_errors")
+        df.select(*err_cols).write.mode("append").parquet(f"{docs_path}_errors")
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        id_expr = (
-            doc_id_expr
-            if doc_id_expr is not None
-            else F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1).try_cast(
-                "long"
-            )
-        )
-        # errors sidecar schema is uniform across all three writers:
-        # (file_id, record_id, target_uri, error) — record-level
-        # failures keep the identifiers a crawl operator needs to
-        # diagnose WHICH fetch failed (ADVICE r8); file-level parse
-        # failures carry NULL record fields.
-        err_cols = ("file_id", "record_id", "target_uri", "error")
-
-        def write_errors(df: DataFrame) -> None:
-            # one-time upgrade of a pre-r9 sidecar: appending 4-column
-            # files next to legacy (file_id, error) files would leave a
-            # mixed-schema dir that a plain parquet read resolves from
-            # whichever footer it samples — rewrite legacy rows to the
-            # wide schema first.  _read_parquet_if_exists distinguishes
-            # a missing path from a REAL read failure (which must
-            # propagate, not be mistaken for "no legacy sidecar"), and
-            # the probe runs once per query, not per write (review r9).
-            from opentsdb_aura_spark.operators.dedup_text import _read_parquet_if_exists
-
-            spark_l = df.sparkSession
-            if not _sidecar_checked:
-                _sidecar_checked.append(True)
-                old = _read_parquet_if_exists(spark_l, f"{docs_path}_errors")
-                if old is not None and "record_id" not in old.columns:
-                    widened = old.select(
-                        "file_id",
-                        F.lit(None).cast("string").alias("record_id"),
-                        F.lit(None).cast("string").alias("target_uri"),
-                        "error",
-                    ).localCheckpoint()  # materialize BEFORE overwriting the source
-                    widened.write.mode("overwrite").parquet(f"{docs_path}_errors")
-            df.select(*err_cols).write.mode("append").parquet(f"{docs_path}_errors")
+        spark = batch_df.sparkSession
         recs = warc_records(batch_df, skip_errors=True, with_payload=True).localCheckpoint()
         errs = recs.where(F.col("error").isNotNull())
         if errs.take(1):
@@ -649,23 +712,16 @@ def streaming_crawl_ingest(
         good = recs.where((F.col("error").isNull()) & (F.col("warc_type") == "response"))
         if cdx_path is not None:
             # incremental capture index: one pass over this batch's
-            # records, anti-joined on record_id so redelivery is a no-op
-            from opentsdb_aura_spark.operators.containers import cdx_index
-            from opentsdb_aura_spark.operators.dedup_text import _read_parquet_if_exists
-
-            from pyspark.sql.window import Window as _W
-
-            batch_cdx = cdx_index(
-                recs, skip_errors=True, with_validators=cdx_validators
-            )
+            # records, only record_ids the index does not hold yet
+            batch_cdx = cdx_index(recs, skip_errors=True, with_validators=cdx_validators)
             # a record re-fetched WITHIN one batch (availableNow can
             # fold several files into a single trigger) dedupes here,
             # first capture by (file_id, offset) wins deterministically
             _rn = F.row_number().over(
-                _W.partitionBy("record_id").orderBy("file_id", "offset")
+                Window.partitionBy("record_id").orderBy("file_id", "offset")
             )
             batch_cdx = batch_cdx.withColumn("_rn", _rn).where(F.col("_rn") == 1).drop("_rn")
-            have = _read_parquet_if_exists(batch_df.sparkSession, cdx_path)
+            have = read_parquet_if_exists(spark, cdx_path)
             if have is not None and not _cdx_schema_checked:
                 # the validator flag is per-INDEX, not per-query: a
                 # mismatched append would leave a mixed-schema parquet
@@ -685,24 +741,13 @@ def streaming_crawl_ingest(
                         f"{had_validators} — the flag is per-index; restart with "
                         "the matching value or rebuild the index"
                     )
-            if have is not None:
-                batch_cdx = batch_cdx.join(
-                    have.select("record_id").distinct(), "record_id", "left_anti"
-                )
-            batch_cdx.write.mode("append").parquet(cdx_path)
+            fresh = new_rows(batch_cdx, have, "record_id", "record_id")
+            fresh.write.mode("append").parquet(cdx_path)
             if compact_max_files is not None:
                 # same LSM posture as the minhash/frontier indexes: one
                 # small file lands per batch; bound the buildup
-                from opentsdb_aura_spark.sources.maintenance import (
-                    compact_capture_index,
-                )
-
-                compact_capture_index(
-                    batch_df.sparkSession, cdx_path, max_files=compact_max_files
-                )
+                compact_capture_index(spark, cdx_path, max_files=compact_max_files)
         if http_html:
-            from opentsdb_aura_spark.operators.htmltext import html_to_text
-
             resp = http_responses(good, skip_errors=True, with_body=True).localCheckpoint()
             http_errs = resp.where(F.col("error").isNotNull())
             if http_errs.take(1):
@@ -713,26 +758,10 @@ def streaming_crawl_ingest(
             )
             if frontier_path is not None:
                 # fetch → extract → DISCOVER → schedule: outgoing links
-                # resolved against the fetch URI, canonicalized, and
-                # appended as reference edges keyed by the SAME doc_id
-                # the docs/index writers use, so redelivery idempotence
-                # holds across all three sinks
-                from opentsdb_aura_spark.operators.containers import (
-                    canonicalize_url,
-                    resolve_href,
-                    update_frontier_index,
-                )
-                from opentsdb_aura_spark.operators.htmltext import html_links
-
-                batch_links = html_links(
-                    pages,
-                    keep_cols=("record_id", "target_uri"),
-                    charset_col="charset",
-                ).select(
-                    canonicalize_url(
-                        resolve_href("target_uri", "href")
-                    ).alias("frontier_url"),
-                    id_expr.alias("doc_id"),
+                # resolved against the fetch URI and canonicalized
+                batch_links = frontier_edges(
+                    html_links(pages, keep_cols=("record_id", "target_uri"), charset_col="charset"),
+                    "target_uri", "href",
                 )
                 # 3xx Locations are discovery too (~a third of real
                 # fetches redirect; dropping them loses the moved half
@@ -742,20 +771,13 @@ def streaming_crawl_ingest(
                     F.col("error").isNull()
                     & F.col("status_code").between(300, 399)
                     & F.col("location").isNotNull()
-                ).select(
-                    canonicalize_url(
-                        resolve_href("target_uri", F.col("location"))
-                    ).alias("frontier_url"),
-                    id_expr.alias("doc_id"),
                 )
-                batch_links = batch_links.unionByName(redirects)
+                batch_links = batch_links.unionByName(
+                    frontier_edges(redirects, "target_uri", "location")
+                )
                 if xml_discovery:
                     # fetched sitemap/feed bodies are discovery too:
-                    # their entries enter through the SAME gates below
-                    from opentsdb_aura_spark.operators.robots import (
-                        discovered_xml_urls,
-                    )
-
+                    # their entries enter through the SAME gates below.
                     # admission: any content type CONTAINING 'xml'
                     # (covers +xml suffixes and text/xml variants), or
                     # an .xml/.xml.gz path when servers mislabel —
@@ -782,67 +804,38 @@ def streaming_crawl_ingest(
                         url_col="target_uri",
                         charset_col="charset",
                         keep_cols=("record_id",),
-                    ).select(
-                        canonicalize_url(
-                            resolve_href("page_url", F.col("loc"))
-                        ).alias("frontier_url"),
-                        id_expr.alias("doc_id"),
                     )
-                    batch_links = batch_links.unionByName(xml_urls)
+                    batch_links = batch_links.unionByName(
+                        frontier_edges(xml_urls, "page_url", "loc")
+                    )
                 if url_prefilter_gate:
                     # string-only fetch-budget gate FIRST: no dim join,
                     # and it shrinks the robots join's probe side
-                    from opentsdb_aura_spark.operators.containers import url_prefilter
-
-                    kept = (
-                        url_prefilter(
-                            batch_links.where(F.col("frontier_url").isNotNull())
-                            .select(F.col("frontier_url").alias("url"))
-                            .distinct()
-                        )
-                        .where(F.col("url_keep"))
-                        .select(F.col("url").alias("frontier_url"))
+                    batch_links = gate(
+                        batch_links, "url",
+                        lambda urls: url_prefilter(urls).where(F.col("url_keep")),
                     )
-                    batch_links = batch_links.join(kept, "frontier_url", "left_semi")
                 if robots_rules_path is not None:
                     # politeness BEFORE scheduling: a disallowed URL
                     # never enters the frontier index at all
-                    from opentsdb_aura_spark.operators.robots import robots_allowed
-
-                    rules = batch_df.sparkSession.read.parquet(robots_rules_path)
-                    verdicts = robots_allowed(
-                        batch_links.where(F.col("frontier_url").isNotNull())
-                        .select("frontier_url")
-                        .distinct(),
-                        rules,
-                        url_col="frontier_url",
+                    rules = spark.read.parquet(robots_rules_path)
+                    batch_links = gate(
+                        batch_links, "frontier_url",
+                        lambda urls: robots_allowed(
+                            urls, rules, url_col="frontier_url"
+                        ).where(F.col("allowed")),
                     )
-                    allowed = verdicts.where(F.col("allowed")).select(
-                        F.col("url").alias("frontier_url")
-                    )
-                    batch_links = batch_links.join(allowed, "frontier_url", "left_semi")
                 update_frontier_index(batch_links, frontier_path)
                 if compact_max_files is not None:
-                    from opentsdb_aura_spark.sources.maintenance import (
-                        compact_frontier_index,
-                    )
-
-                    compact_frontier_index(
-                        batch_df.sparkSession, frontier_path,
-                        max_files=compact_max_files,
-                    )
+                    compact_frontier_index(spark, frontier_path, max_files=compact_max_files)
                 if (
                     rank_refresh_every is not None
                     and batch_id % int(rank_refresh_every) == 0
                 ):
                     # authority refresh on the compaction cadence model:
                     # a pure function of the index state, so redelivery
-                    # (anti-joined away above) cannot move the ranks
-                    from opentsdb_aura_spark.operators.containers import (
-                        refresh_frontier_ranks,
-                    )
-
-                    refresh_frontier_ranks(batch_df.sparkSession, frontier_path)
+                    # (kept out of the index above) cannot move the ranks
+                    refresh_frontier_ranks(spark, frontier_path)
             # charset-aware decode (r9): bodies arrive in whatever
             # encoding the server declared — same seam as the batch
             # chain, inflation already handled inside http_responses
@@ -878,149 +871,22 @@ def streaming_crawl_ingest(
         if not docs.take(1):
             return
         docs.write.mode("append").parquet(docs_path)
-        if quality_model is not None:
-            # score the batch with the PRETRAINED classifier (the
-            # fit is a batch job — train_logreg_weights — and the
-            # stream only applies it: literal weight array, pure
-            # Catalyst, one narrow pass + one groupBy per batch);
-            # scores land in a sidecar keyed by doc_id so the docs
-            # table schema stays per-index-stable, with the same
-            # at-least-once append semantics as the docs sink
-            from opentsdb_aura_spark.operators.quality import logreg_scores
-
-            qs = logreg_scores(
-                docs.select("doc_id", "text"),
-                list(quality_model["weights"]),
-                float(quality_model["bias"]),
-                n_features=int(quality_model["n_features"]),
-                binary=bool(quality_model.get("binary", True)),
-            )
-            out_q = qs.select(
-                "doc_id",
-                "prob",
-                (F.col("prob") >= F.lit(float(quality_threshold))).alias("keep"),
-            )
-            # redelivery idempotence (VERDICT r13): a replayed batch
-            # must not duplicate (doc_id, prob) rows — anti-join the
-            # existing sidecar exactly as the minhash/cdx/frontier
-            # indexes do (scores are a pure function of doc text, so
-            # the already-present rows are the correct ones)
-            from opentsdb_aura_spark.operators.dedup_text import (
-                _read_parquet_if_exists,
-            )
-
-            have_q = _read_parquet_if_exists(
-                docs.sparkSession, f"{docs_path}_quality"
-            )
-            if have_q is not None:
-                out_q = out_q.join(
-                    have_q.select("doc_id"), "doc_id", "left_anti"
-                )
-            out_q.write.mode("append").parquet(f"{docs_path}_quality")
-        if lang_models is not None:
-            # pretrained one-vs-rest lang-id applied inline (the fit is
-            # a batch job — train_ovr_logreg_weights — the stream only
-            # argmaxes all K models as literal-array folds over one
-            # packed feature pass); predictions land in a sidecar keyed
-            # by doc_id, same at-least-once semantics as the docs sink
-            from opentsdb_aura_spark.operators.quality import (
-                hashed_char_ngram_features,
-                ovr_logreg_scores,
-            )
-
-            nf = int(lang_models["n_features"])
-            feats = hashed_char_ngram_features(
-                docs.select("doc_id", "text"),
-                n=int(lang_models.get("n", 3)),
-                n_features=nf,
-            )
-            # DISTINCT spine: a doc redelivered twice WITHIN one batch
-            # (two files of the same trigger) must score once — the
-            # quality leg gets this from logreg_scores' internal
-            # distinct spine; ovr_logreg_scores scores whatever spine
-            # it is handed
-            ls = ovr_logreg_scores(
-                feats,
-                {k: (list(v[0]), float(v[1])) for k, v in lang_models["models"].items()},
-                docs.select("doc_id").distinct(),
-                n_features=nf,
-            )
-            out_l = ls.select("doc_id", "pred_lang")
-            # same redelivery anti-join as the quality sidecar: the
-            # pretrained model is deterministic per doc, so dropping
-            # already-indexed doc_ids loses nothing and a replayed
-            # batch appends zero rows
-            from opentsdb_aura_spark.operators.dedup_text import (
-                _read_parquet_if_exists,
-            )
-
-            have_l = _read_parquet_if_exists(
-                docs.sparkSession, f"{docs_path}_lang"
-            )
-            if have_l is not None:
-                out_l = out_l.join(
-                    have_l.select("doc_id"), "doc_id", "left_anti"
-                )
-            out_l.write.mode("append").parquet(f"{docs_path}_lang")
-        if kn_model is not None:
-            # perplexity gate against the PERSISTED tower: the loaded
-            # count tables are distributed dims the batch's distinct
-            # n-gram types LEFT-join (full OOV backoff — crawled text
-            # is OOV-heavy against any reference model); the distinct
-            # doc spine keeps an in-trigger redelivery from doubling
-            # n_ngrams, and the anti-join keeps replayed batches out
-            from opentsdb_aura_spark.operators.dedup_text import (
-                _read_parquet_if_exists,
-            )
-            from opentsdb_aura_spark.operators.quality import lm_kn_score
-
-            out_p = lm_kn_score(
-                kn_model,
-                docs.select("doc_id", "text").dropDuplicates(["doc_id"]),
-            )
-            have_p = _read_parquet_if_exists(
-                docs.sparkSession, f"{docs_path}_ppl"
-            )
-            if have_p is not None:
-                out_p = out_p.join(
-                    have_p.select("doc_id"), "doc_id", "left_anti"
-                )
-            out_p.write.mode("append").parquet(f"{docs_path}_ppl")
-        if dup_index_path is not None:
-            # incremental ExactSubstr screen against the persisted
-            # index: the distinct doc spine keeps an in-trigger
-            # redelivery from double-counting hit windows, the
-            # anti-join keeps replayed batches out
-            from opentsdb_aura_spark.operators.dedup_text import (
-                _read_parquet_if_exists,
-            )
-            from opentsdb_aura_spark.operators.suffix import probe_dup_index
-
-            out_d = probe_dup_index(
-                docs.select("doc_id", "text").dropDuplicates(["doc_id"]),
-                dup_index,
-            )
-            have_d = _read_parquet_if_exists(
-                docs.sparkSession, f"{docs_path}_dup"
-            )
-            if have_d is not None:
-                out_d = out_d.join(
-                    have_d.select("doc_id"), "doc_id", "left_anti"
-                )
-            out_d.write.mode("append").parquet(f"{docs_path}_dup")
+        if scorers:
+            # one spine for every scorer, de-duplicated on doc_id so a
+            # doc delivered twice in one trigger scores once, and
+            # materialized once instead of once per scorer (the
+            # checkpoint also drops the doc_id partitioning, so each
+            # scorer's aggregation plan — and its doubles — stays the
+            # one its batch twin runs).  A sidecar row is a pure
+            # function of the doc's text, so the rows already stored
+            # are the right ones: append only new doc_ids.
+            spine = docs.select("doc_id", "text").dropDuplicates(["doc_id"]).localCheckpoint()
+        for suffix, score in scorers.items():
+            sidecar = f"{docs_path}_{suffix}"
+            fresh = new_rows(score(spine), read_parquet_if_exists(spark, sidecar), "doc_id", "doc_id")
+            fresh.write.mode("append").parquet(sidecar)
         update_minhash_index(docs, index_path)
         if compact_max_files is not None:
-            from opentsdb_aura_spark.sources.maintenance import compact_minhash_index
+            compact_minhash_index(spark, index_path, max_files=compact_max_files)
 
-            compact_minhash_index(
-                docs.sparkSession, index_path, max_files=compact_max_files
-            )
-
-    writer = (
-        stream_files.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batches(stream_files, process_batch, checkpoint, trigger_available_now)

@@ -412,3 +412,43 @@ def test_compact_capture_index_bounds_files_and_preserves_rows(spark, tmp_path):
     assert len(_glob.glob(f"{path}/*.parquet")) <= 4
     after = {tuple(r) for r in spark.read.parquet(path).collect()}
     assert after == before and len(after) == 60
+
+
+def test_new_rows_is_the_one_append_rule(spark, tmp_path):
+    """The append rule every incremental index and stream sidecar
+    shares: a missing table lets every batch row through, a stored key
+    is dropped, and a table that exists but cannot be read raises
+    instead of reading as empty — an append over a corrupt index fails
+    and writes nothing (reading it as "nothing stored" would append
+    duplicate rows forever)."""
+    import os
+
+    from opentsdb_aura_spark.operators.dedup_text import update_minhash_index
+    from opentsdb_aura_spark.sources.maintenance import new_rows, read_parquet_if_exists
+
+    batch = spark.createDataFrame(
+        [(1, "a b c d"), (2, "e f g h")], "doc_id long, text string"
+    )
+    missing = str(tmp_path / "missing")
+    assert read_parquet_if_exists(spark, missing) is None
+    assert sorted(r["doc_id"] for r in new_rows(batch, None, "doc_id", "doc_id").collect()) == [1, 2]
+
+    stored_path = str(tmp_path / "stored")
+    spark.createDataFrame([(1,)], "_id long").write.parquet(stored_path)
+    stored = read_parquet_if_exists(spark, stored_path)
+    assert [r["doc_id"] for r in new_rows(batch, stored, "doc_id", "_id").collect()] == [2]
+
+    corrupt = tmp_path / "corrupt"
+    spark.createDataFrame([(1, 0)], "doc_id long, h0 long").coalesce(1).write.parquet(
+        str(corrupt)
+    )
+    (part,) = [f for f in os.listdir(corrupt) if f.endswith(".parquet")]
+    (corrupt / part).write_bytes(b"not a parquet file")
+    before = sorted(os.listdir(corrupt))
+    with pytest.raises(Exception) as exc:
+        read_parquet_if_exists(spark, str(corrupt))
+    assert "PATH_NOT_FOUND" not in str(exc.value)
+    with pytest.raises(Exception):
+        update_minhash_index(batch, str(corrupt))
+    assert sorted(os.listdir(corrupt)) == before
+    assert (corrupt / part).read_bytes() == b"not a parquet file"

@@ -1661,6 +1661,52 @@ def test_streaming_quality_lang_sidecars_redelivery_idempotent(spark, tmpdirs):
     assert {r["doc_id"]: r["pred_lang"] for r in lrows} == twin_l
 
 
+def test_streaming_lang_sidecar_scores_in_trigger_duplicate_once(spark, tmpdirs):
+    """A doc delivered twice in ONE trigger scores once in the lang
+    sidecar.  hashed_char_ngram_features de-duplicates buckets per
+    row, not per doc_id, so featurizing both copies would double the
+    doc's dot product: "abcdefgh" hits 6 of D=16 buckets, the batch
+    twin gives margin_a = 0.6 < margin_b = 1.0 (pred 'b'), the doubled
+    features margin_a = 1.2 (pred 'a').  The sidecar must match the
+    twin."""
+    from opentsdb_aura_spark.operators import containers as C
+    from opentsdb_aura_spark.operators.quality import (
+        hashed_char_ngram_features,
+        ovr_logreg_scores,
+    )
+    from opentsdb_aura_spark.streaming.state import streaming_crawl_ingest
+
+    D = 16
+    models = {"a": ([0.1] * D, 0.0), "b": ([0.0] * D, 1.0)}
+    rec = C.encode_warc_record(
+        "response", "urn:uuid:doc-1", b"abcdefgh",
+        target_uri="http://example.com/doc/1",
+    )
+    file_schema = "file_id long, content binary"
+    # one WARC file carrying doc-1 twice: both copies land in one trigger
+    spark.createDataFrame([(0, rec + rec)], file_schema).coalesce(1).write.parquet(
+        tmpdirs["in"] + "/b1"
+    )
+    docs_path = tmpdirs["out"] + "/docs"
+    stream = spark.readStream.schema(file_schema).parquet(tmpdirs["in"] + "/*")
+    streaming_crawl_ingest(
+        stream, tmpdirs["store"], docs_path, tmpdirs["ckpt"],
+        lang_models={"models": models, "n_features": D, "n": 3},
+    ).awaitTermination(120)
+
+    ingested = spark.read.parquet(docs_path).select("doc_id", "text")
+    assert ingested.count() == 2  # the docs table keeps both deliveries
+    spine = ingested.distinct()
+    twin = ovr_logreg_scores(
+        hashed_char_ngram_features(spine, n=3, n_features=D),
+        models, spine.select("doc_id"), n_features=D,
+    ).collect()
+    assert [(r["doc_id"], r["margin_b"], r["pred_lang"]) for r in twin] == [(1, 1.0, "b")]
+    assert twin[0]["margin_a"] == pytest.approx(0.6)
+    sidecar = spark.read.parquet(docs_path + "_lang").collect()
+    assert [(r["doc_id"], r["pred_lang"]) for r in sidecar] == [(1, "b")]
+
+
 def test_streaming_gates_consume_persisted_models(spark, tmpdirs):
     """The streaming quality/lang gates consume PERSISTED model dims
     (quality_model_path / lang_models_path — the ovr_model_save
