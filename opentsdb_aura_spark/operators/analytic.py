@@ -17,15 +17,12 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from opentsdb_aura_spark.model import NAN
-
-
-def _non_nan(c: Column) -> Column:
-    return F.when(~F.isnan(c), c)
+from opentsdb_aura_spark.operators.downsample import non_nan
 
 
 def moving_average(
@@ -57,7 +54,7 @@ def moving_average(
         .rowsBetween(-(samples - 1), 0)
     )
     if not exponential:
-        avg = F.avg(_non_nan(F.col(value_col))).over(w)
+        avg = F.avg(non_nan(F.col(value_col))).over(w)
         return df.withColumn(value_col, F.coalesce(avg, NAN()))
 
     a = alpha if alpha is not None else 2.0 / (samples + 1)
@@ -65,7 +62,7 @@ def moving_average(
     # collect_list drops NULL scalars (breaking age positions), so wrap
     # each value in a struct — struct elements are never dropped and
     # the frame order gives each element its age
-    arr = F.collect_list(F.struct(_non_nan(F.col(value_col)).alias("v"))).over(w)
+    arr = F.collect_list(F.struct(non_nan(F.col(value_col)).alias("v"))).over(w)
     age = lambda i: F.size(arr) - 1 - i  # noqa: E731 — 0 = current bucket
     num = F.aggregate(
         F.transform(arr, lambda x, i: F.when(x["v"].isNotNull(), F.pow(decay, age(i)) * x["v"])),
@@ -101,7 +98,7 @@ def fill_gaps(
     output-cardinality data, same scale envelope as moving_average.
     All columns other than (order, value) form the series identity."""
     group_cols = [c for c in df.columns if c not in (value_col, order_col)]
-    v = _non_nan(F.col(value_col))  # NaN → NULL so ignorenulls applies
+    v = non_nan(F.col(value_col))  # NaN → NULL so ignorenulls applies
     part = Window.partitionBy(*[F.col(c) for c in group_cols]).orderBy(order_col)
     before = part.rowsBetween(Window.unboundedPreceding, -1)
 
@@ -154,7 +151,7 @@ def sliding_window(
         .orderBy(F.col(order_col))
         .rangeBetween(-(int(window_seconds) - 1), 0)
     )
-    v = _non_nan(F.col(value_col))
+    v = non_nan(F.col(value_col))
     out = aggs[agg](v).over(w).cast("double")
     if agg == "count":
         out = F.when(out > 0, out)  # count() yields 0, not NULL, on an empty window
@@ -201,7 +198,7 @@ def bucket_quantile(
     part = [F.col(c) for c in group_cols]
     cum_w = Window.partitionBy(*part).orderBy(F.col(lower_col)).rowsBetween(Window.unboundedPreceding, 0)
     tot_w = Window.partitionBy(*part)
-    cnt = F.coalesce(_non_nan(F.col(count_col)), F.lit(0.0))
+    cnt = F.coalesce(non_nan(F.col(count_col)), F.lit(0.0))
     staged = hist.select(
         *group_cols,
         reps[mode].cast("double").alias("_rep"),
@@ -230,7 +227,7 @@ def ratio(
     partitions are time buckets, so parallelism scales with the query
     range regardless of series count skew within a bucket."""
     w = Window.partitionBy(bucket_col)
-    total = F.sum(_non_nan(F.col(value_col))).over(w)
+    total = F.sum(non_nan(F.col(value_col))).over(w)
     # a bucket whose values sum to exactly 0 (signed metrics) has no
     # defined shares: NaN, not an ANSI divide-by-zero abort
     share = F.when(total == 0.0, NAN()).otherwise(F.col(value_col) / total)
@@ -269,7 +266,7 @@ def rolling_zscore(
     # NaN spine buckets are "no data", not data: they drop out of the
     # baseline (NaN→NULL, aggregates skip NULL) and score NULL
     # themselves rather than poisoning the window with NaN arithmetic
-    v = _non_nan(F.col(value_col))
+    v = non_nan(F.col(value_col))
     mu = F.avg(v).over(w)
     sd = F.stddev_samp(v).over(w)
     n = F.count(v).over(w)
@@ -302,13 +299,13 @@ def seasonal_baseline_deviation(
     no per-series sort task, no hot-series straggler — and a NaN spine
     slot is "no data" on either side (NULL baseline / NULL deviation),
     not arithmetic poison."""
-    v = _non_nan(F.col(value_col))
+    v = non_nan(F.col(value_col))
     gcols = list(group_cols)
     cur = df.withColumn("_v", v)
     prev = df.select(
         *gcols,
         (F.col(bucket_col) + F.lit(int(period))).alias(bucket_col),
-        _non_nan(F.col(value_col)).alias("baseline"),
+        non_nan(F.col(value_col)).alias("baseline"),
     )
     return (
         cur.join(prev, gcols + [bucket_col], "left")

@@ -24,10 +24,20 @@ aggregation.  Semantics preserved:
 Aggregator names follow the reference registry, including OpenTSDB
 aliases zimsum/mimmin/mimmax
 (core/.../downsample/AggregatorType.java:20-116).
+
+This module also holds the engine's one NumericAggregator chain
+(core/.../downsample/Aggregator.java:45-132, avg = sum/count as in
+AverageAggregator.java:40-43): ``non_nan`` (the NaN-skipping mask),
+``accumulate`` (the partials) and ``select_value`` (agg → value, then
+empty → NaN, then infectious NaN).  ``downsample``, ``groupby.group_merge``,
+``rollup.build_rollup`` / ``downsample_from_rollup``,
+``summarizer.summarize`` and the streaming window-close rollup are
+front ends of it, so a NaN point means the same thing on every path.
 """
 
 from __future__ import annotations
 
+import re
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -90,41 +100,94 @@ def bucket_expr(ts: Column, start: int, interval: int) -> Column:
     )
 
 
-def _final_value(agg: str, reporting_dps: float | None) -> Column:
-    """Select the output value from the shared accumulator columns.
+def non_nan(v: Column) -> Column:
+    """NaN → NULL: the one NaN-skipping value mask (``NAN``'s sibling).
+    Every aggregate of the chain and every window of ``analytic`` reads
+    values through it, so a NaN point is "no data" everywhere (kernel
+    lines 465-473)."""
+    return F.when(F.isnan(v), F.lit(None).cast("double")).otherwise(v)
 
-    Mirrors the interval-close switch (kernel lines 502-536); all
-    accumulators come from one hash-aggregate pass, so adding agg
-    types costs no extra shuffle.
-    """
-    if agg == "sum":
-        if reporting_dps:  # reporting-average: sum / expected dps (kernel 506-511)
-            return F.col("_sum") / F.lit(float(reporting_dps))
-        return F.col("_sum")
-    if agg == "avg":
-        return F.col("_sum") / F.col("_cnt")
-    if agg == "count":
-        return F.col("_cnt").cast("double")
-    if agg == "min":
-        return F.col("_min")
-    if agg == "max":
-        return F.col("_max")
-    if agg == "last":
-        return F.col("_last")
+
+def percentile_fraction(agg: str) -> float | None:
+    """The quantile a percentile aggregator names: median → 0.5,
+    p90 → 0.90, p999 → 0.999 (the digits are the decimals); else None."""
     if agg == "median":
-        return F.col("_median")
-    if agg == "stddev":
-        # n=1 → NaN (not the SQL NULL), matching the rollup-served path
-        return F.coalesce(F.col("_stddev"), NAN())
-    if agg == "var":
-        return F.coalesce(F.col("_var"), NAN())
-    if agg == "sumsq":
-        return F.col("_sumsq")
+        return 0.5
+    m = re.fullmatch(r"p(\d{1,3})", agg)
+    return float("0." + m.group(1)) if m else None
+
+
+def _exact(agg: str | None) -> list[Column]:
+    """The non-mergeable aggregate a raw-point ``agg`` needs beside the
+    partials (none for the mergeable ones)."""
+    if agg in ("stddev", "var"):
+        return [(F.stddev_samp if agg == "stddev" else F.var_samp)("_v").alias(f"_{agg}")]
+    if agg == "median":
+        return [F.expr("median(_v)").alias("_exact")]
     if agg in CUSTOM_AGGS:
-        return F.col("_custom")
-    if agg.startswith("p"):
-        return F.col("_perc")
-    raise AssertionError(agg)
+        # registry names are arbitrary — check BEFORE the percentile
+        # parse or a custom agg named "p..." would be read as one
+        return [CUSTOM_AGGS[agg](F.col("_v")).alias("_exact")]
+    q = percentile_fraction(agg or "")
+    return [] if q is None else [F.expr(f"percentile(_v, {q})").alias("_exact")]
+
+
+def accumulate(
+    df: DataFrame,
+    keys: Sequence,
+    value_col: str = "value",
+    *,
+    agg: str | None = None,
+    bucket: tuple[str, Column] | None = None,
+    order_col: str | None = None,
+) -> DataFrame:
+    """The chain's accumulate step (Aggregator.java:45-132): group by
+    ``keys`` the masked value ``_v`` into ``_sum, _cnt, _min, _max,
+    _sumsq, _has_nan``; with ``order_col`` also ``_first``/``_last``
+    (non-NaN, in that order); with ``agg`` its non-mergeable aggregate.
+    ``bucket`` = (name, Column) derives a key beside ``_v``.  The
+    optimizer prunes the partials no parent selects."""
+    v = F.col(value_col)
+    df = df.withColumn("_v", non_nan(v)).withColumn("_isnan", F.isnan(v))
+    if bucket is not None:
+        df = df.withColumn(*bucket)
+    aggs = [
+        F.sum("_v").alias("_sum"),
+        F.count("_v").alias("_cnt"),
+        F.min("_v").alias("_min"),
+        F.max("_v").alias("_max"),
+        F.sum(F.col("_v") * F.col("_v")).alias("_sumsq"),
+    ]
+    if order_col is not None:
+        at = F.when(F.col("_v").isNotNull(), F.col(order_col))
+        aggs += [F.min_by("_v", at).alias("_first"), F.max_by("_v", at).alias("_last")]
+    aggs.append(F.max("_isnan").alias("_has_nan"))
+    return df.groupBy(*keys).agg(*aggs, *_exact(agg))
+
+
+def select_value(
+    agg: str, *, reporting_dps: float | None = None, infectious_nan: bool = False
+) -> Column:
+    """The chain's select step over ``accumulate``'s partials: ``agg``
+    → value (the interval-close switch, kernel lines 502-536), then an
+    empty interval (no non-NaN value) → NaN, then infectious NaN."""
+    if agg == "sum" and reporting_dps:  # reporting-average: sum / expected dps (kernel 506-511)
+        value = F.col("_sum") / F.lit(float(reporting_dps))
+    elif agg == "avg":
+        value = F.col("_sum") / F.col("_cnt")
+    elif agg == "count":
+        value = F.col("_cnt").cast("double")
+    elif agg in ("stddev", "var"):
+        # n=1 → NaN (not the SQL NULL)
+        value = F.coalesce(F.col(f"_{agg}"), NAN())
+    elif agg in ("sum", "min", "max", "sumsq", "first", "last"):
+        value = F.col(f"_{agg}")
+    else:
+        value = F.col("_exact")
+    value = F.when(F.col("_cnt") == 0, NAN()).otherwise(value)
+    if infectious_nan:
+        value = F.when(F.col("_has_nan"), NAN()).otherwise(value)
+    return value
 
 
 def downsample(
@@ -156,52 +219,14 @@ def downsample(
         interval = int(end) - int(start)
     interval = int(interval)
 
-    v = F.col(value_col)
     ts = F.col(ts_col)
-    in_range = (ts >= F.lit(int(start))) & (ts < F.lit(int(end)))
-    df = points.where(in_range)
-
-    masked = F.when(F.isnan(v), F.lit(None).cast("double")).otherwise(v)
-    df = df.withColumn("_v", masked).withColumn("_isnan", F.isnan(v)).withColumn(
-        "bucket_ts", bucket_expr(ts, start, interval)
+    df = points.where((ts >= F.lit(int(start))) & (ts < F.lit(int(end))))
+    grouped = accumulate(
+        df, [*group_cols, "bucket_ts"], value_col, agg=agg,
+        bucket=("bucket_ts", bucket_expr(ts, start, interval)), order_col=ts_col,
     )
-
-    aggs = [
-        F.sum("_v").alias("_sum"),
-        F.count("_v").alias("_cnt"),
-        F.min("_v").alias("_min"),
-        F.max("_v").alias("_max"),
-        F.max_by(F.col("_v"), F.when(F.col("_v").isNotNull(), ts)).alias("_last"),
-        F.max(F.col("_isnan")).alias("_has_nan"),
-    ]
-    if agg == "median":
-        aggs.append(F.expr("median(_v)").alias("_median"))
-    if agg == "stddev":
-        aggs.append(F.stddev_samp("_v").alias("_stddev"))
-    if agg == "var":
-        aggs.append(F.var_samp("_v").alias("_var"))
-    if agg == "sumsq":
-        aggs.append(F.sum(F.col("_v") * F.col("_v")).alias("_sumsq"))
-    if agg in CUSTOM_AGGS:
-        # registry names are arbitrary — check BEFORE the percentile
-        # prefix match or a custom agg named "p..." would be parsed as
-        # a percentile (matching _final_value's dispatch order)
-        aggs.append(CUSTOM_AGGS[agg](F.col("_v")).alias("_custom"))
-    elif agg == "p50":
-        aggs.append(F.expr("percentile(_v, 0.5)").alias("_perc"))
-    elif agg.startswith("p"):  # exact percentile: p90 → 0.90, p999 → 0.999
-        q = float("0." + agg[1:])
-        aggs.append(F.expr(f"percentile(_v, {q})").alias("_perc"))
-
-    grouped = df.groupBy(*group_cols, "bucket_ts").agg(*aggs)
-
-    value = _final_value(agg, reporting_dps)
-    # empty interval (no non-NaN values) → NaN; infectious NaN → NaN
-    value = F.when(F.col("_cnt") == 0, NAN()).otherwise(value)
-    if infectious_nan:
-        value = F.when(F.col("_has_nan"), NAN()).otherwise(value)
+    value = select_value(agg, reporting_dps=reporting_dps, infectious_nan=infectious_nan)
     result = grouped.select(*group_cols, "bucket_ts", value.alias("value"))
-
     if fill != "none":
         result = fill_spine(
             result, start, end, interval, group_cols, fill=fill, spine_groups=spine_groups

@@ -14,21 +14,20 @@ plans this as partial+final hash aggregation — the exact analogue of
 the reference's per-job partial group maps + pairwise merge
 (AerospikeBatchQueryNode.java:388-447).
 
-NaN handling: the array aggregators skip NaN inputs (a NaN per-series
-interval simply doesn't contribute); a group-interval with no non-NaN
-contributions is NaN.  With ``infectious_nan`` set the NaN poisons the
-group interval instead.
+NaN handling is the downsample chain's (``downsample.accumulate`` →
+``select_value``): a NaN per-series interval simply doesn't
+contribute; a group-interval with no non-NaN contributions is NaN.
+With ``infectious_nan`` set the NaN poisons the group interval instead.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from opentsdb_aura_spark.model import NAN
-from opentsdb_aura_spark.operators.downsample import AGG_ALIASES
+from opentsdb_aura_spark.operators.downsample import AGG_ALIASES, accumulate, select_value
 
 
 GROUP_AGGS = {"sum", "avg", "min", "max", "count"}
@@ -59,31 +58,9 @@ def group_merge(
     """
     agg = normalize_group_agg(agg)
     group_cols = list(group_cols)
-    v = F.col(value_col)
-    masked = F.when(F.isnan(v), F.lit(None).cast("double")).otherwise(v)
-
-    grouped = per_series.withColumn("_v", masked).groupBy(*group_cols, bucket_col).agg(
-        F.sum("_v").alias("_sum"),
-        F.count("_v").alias("_cnt"),
-        F.min("_v").alias("_min"),
-        F.max("_v").alias("_max"),
-        F.max(F.isnan(v)).alias("_has_nan"),
-    )
-    if agg == "sum":
-        out = F.col("_sum")
-    elif agg == "avg":
-        out = F.col("_sum") / F.col("_cnt")
-    elif agg == "min":
-        out = F.col("_min")
-    elif agg == "max":
-        out = F.col("_max")
-    else:  # count of contributing (non-NaN) series per interval
-        out = F.col("_cnt").cast("double")
-
-    out = F.when(F.col("_cnt") == 0, NAN()).otherwise(out)
-    if infectious_nan:
-        out = F.when(F.col("_has_nan"), NAN()).otherwise(out)
-    return grouped.select(*group_cols, bucket_col, out.alias(value_col))
+    grouped = accumulate(per_series, [*group_cols, bucket_col], value_col)
+    value = select_value(agg, infectious_nan=infectious_nan)
+    return grouped.select(*group_cols, bucket_col, value.alias(value_col))
 
 
 def with_group_keys(points: DataFrame, tag_keys: Sequence[str], tags_col: str = "tags") -> DataFrame:

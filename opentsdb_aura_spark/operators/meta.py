@@ -169,7 +169,15 @@ def build_presence_hll(
     merge.
     """
     epoch = (F.col("ts") - F.col("ts") % F.lit(int(epoch_width))).cast("long")
-    return points.groupBy(*group_cols, epoch.alias("epoch")).agg(
+    return presence_hll_partials(points, [*group_cols, epoch.alias("epoch")], id_col=id_col, lg_k=lg_k)
+
+
+def presence_hll_partials(
+    df: DataFrame, keys: list, *, id_col: str = "series_id", lg_k: int = 12
+) -> DataFrame:
+    """(keys…, hll, n_points): the aggregate of ``build_presence_hll``
+    and of its window-close twin ``streaming_presence_hll``."""
+    return df.groupBy(*keys).agg(
         F.hll_sketch_agg(F.col(id_col), F.lit(int(lg_k))).alias("hll"),
         F.count("*").alias("n_points"),
     )

@@ -881,19 +881,18 @@ def logreg_scores(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus-wide scoring pass with trained weights → (doc_id,
-    margin, prob, pred).  Pure Catalyst: the weight vector is a
-    literal array (no join), the score is one explode + groupBy with
-    map-side combine, and docs with no tokens still surface (bias-only
-    margin) via the left join against the id spine — the gate a
-    curation run applies corpus-wide after a small-seed fit.
+    margin, prob, pred): each doc's features packed bucket-ascending
+    (``sort_array``), then :func:`logreg_scores_packed`'s literal-array
+    fold — so the doubles never depend on how the input is partitioned.
+    Docs with no tokens still surface (bias-only margin) via the left
+    join against the id spine — the gate a curation run applies
+    corpus-wide after a small-seed fit.
 
     ``threshold`` calibrates the keep gate: pred fires at probability
     ≥ threshold, compared in MARGIN space (margin ≥ logit(threshold))
     so the verdict never rides on a σ(·) rounding difference between
     engines — the precision/recall knob a gate consumer turns without
     retraining.  Default 0.5 is the classic margin ≥ 0 rule."""
-    import math
-
     if len(weights) != int(n_features):
         raise ValueError(
             f"logreg_scores: {len(weights)} weights for n_features={n_features} — "
@@ -901,22 +900,18 @@ def logreg_scores(
         )
     if not 0.0 < float(threshold) < 1.0:
         raise ValueError(f"logreg_scores: threshold must be in (0, 1), got {threshold}")
-    thr_margin = math.log(float(threshold) / (1.0 - float(threshold)))
     feats = hashed_token_features(
         docs, n_features=n_features, binary=binary, text_col=text_col, id_col=id_col
     )
-    w_arr = F.lit([float(x) for x in weights])
-    dots = feats.groupBy("doc_id").agg(
-        F.sum(F.col("cnt") * F.element_at(w_arr, F.col("bucket") + 1)).alias("_dot")
+    packed = feats.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list(F.struct("bucket", "cnt"))).alias("fx")
     )
     all_ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    margin = F.coalesce(F.col("_dot"), F.lit(0.0)) + F.lit(float(bias))
-    return all_ids.join(dots, "doc_id", "left").select(
-        "doc_id",
-        margin.alias("margin"),
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))).alias("prob"),
-        (margin >= F.lit(thr_margin)).alias("pred"),
+    empty = F.array().cast("array<struct<bucket:int,cnt:double>>")
+    spine = all_ids.join(packed, "doc_id", "left").select(
+        "doc_id", F.coalesce(F.col("fx"), empty).alias("fx")
     )
+    return logreg_scores_packed(spine, weights, bias, threshold=threshold)
 
 
 def logreg_scores_packed(

@@ -9,10 +9,13 @@ requested aggregator is available and the downsample interval is
 compatible (opentsdb/.../AerospikeBatchQueryNode.java:195-225).
 
 Spark re-expression: a ``rollup_<interval>`` Parquet table
-(series keys, window_start, sum, count, min, max, sumsq) built by one
-hash aggregation; query-time substitution re-aggregates rollup rows
-into the requested buckets — sum of sums, min of mins, etc., with
-avg = Σsum/Σcount.  The planner picks the rollup iff:
+(series keys, window_start, sum, count, min, max, sumsq) holding the
+partials of the downsample chain (``downsample.accumulate``), built by
+one hash aggregation — ``streaming.ingest.streaming_rollup`` emits the
+same rows at window close.  Query-time substitution only adds the
+partial merge — sum of sums, min of mins, etc., and the sample
+variance from sumsq — before the chain's ``select_value``, so avg =
+Σsum/Σcount as on raw points.  The planner picks the rollup iff:
 
   - the downsample aggregator is derivable from the stored chain,
   - ds_interval % rollup_interval == 0,
@@ -27,16 +30,34 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from opentsdb_aura_spark.model import NAN
-from opentsdb_aura_spark.operators.downsample import bucket_expr
-
-
+from opentsdb_aura_spark.operators.downsample import accumulate, bucket_expr, select_value
 
 
 #: aggregators answerable from the stored chain (avg via sum/count;
 #: variance/stddev via sum/count/sumsq — the downstream use the
 #: reference stores sumofsquare FOR, SumOfSquareAggregator.java:20-40)
 ROLLUP_SERVABLE = {"sum", "count", "min", "max", "avg", "sumsq", "var", "stddev"}
+
+
+#: the stored chain: rollup column → (the chain partial it keeps, how
+#: windows merge into a coarser bucket)
+ROLLUP_CHAIN = {
+    "sum": ("_sum", F.sum),
+    "count": ("_cnt", F.sum),
+    "min": ("_min", F.min),
+    "max": ("_max", F.max),
+    "sumsq": ("_sumsq", F.sum),
+}
+
+
+def rollup_partials(
+    df: DataFrame, keys: Sequence, value_col: str = "value", bucket: tuple[str, Column] | None = None
+) -> DataFrame:
+    """(keys…, sum, count, min, max, sumsq): the chain's partials under
+    their stored names — the aggregate of ``build_rollup`` and of its
+    window-close twin ``streaming_rollup``."""
+    p = accumulate(df, keys, value_col, bucket=bucket)
+    return p.select(*p.columns[: len(keys)], *(F.col(src).alias(c) for c, (src, _) in ROLLUP_CHAIN.items()))
 
 
 def build_rollup(
@@ -49,21 +70,8 @@ def build_rollup(
 ) -> DataFrame:
     """Write-side downsample: epoch-aligned windows, NaN-skipping
     chained aggregates (one pass, map-side partial agg)."""
-    v = F.col(value_col)
-    masked = F.when(F.isnan(v), F.lit(None).cast("double")).otherwise(v)
     w = (F.col(ts_col) - F.col(ts_col) % F.lit(int(rollup_interval))).cast("long")
-    return (
-        points.withColumn("_v", masked)
-        .withColumn("window_start", w)
-        .groupBy(*group_cols, "window_start")
-        .agg(
-            F.sum("_v").alias("sum"),
-            F.count("_v").alias("count"),
-            F.min("_v").alias("min"),
-            F.max("_v").alias("max"),
-            F.sum(F.col("_v") * F.col("_v")).alias("sumsq"),
-        )
-    )
+    return rollup_partials(points, [*group_cols, "window_start"], value_col, bucket=("window_start", w))
 
 
 def downsample_from_rollup(
@@ -75,10 +83,11 @@ def downsample_from_rollup(
     *,
     group_cols: Sequence[str] = ("series_id",),
 ) -> DataFrame:
-    """Serve a downsample query from the rollup table: re-aggregate
-    pre-aggregates into query-start-aligned buckets.  Output schema
-    matches ``downsample(..., fill='none')``: (group_cols…, bucket_ts,
-    value)."""
+    """Serve a downsample query from the rollup table: merge the stored
+    partials into query-start-aligned buckets (Σsum, Σcount, min of
+    mins, max of maxes, Σsumsq, and the sample variance from them),
+    then the chain's ``select_value``.  Output schema matches
+    ``downsample(..., fill='none')``: (group_cols…, bucket_ts, value)."""
     agg = agg.lower()
     if agg not in ROLLUP_SERVABLE:
         raise ValueError(f"aggregator {agg} not servable from rollups")
@@ -86,31 +95,15 @@ def downsample_from_rollup(
     df = rollup.where((F.col("window_start") >= F.lit(int(start))) & (F.col("window_start") < F.lit(int(end))))
     bucket = bucket_expr(F.col("window_start"), start, interval)
     grouped = df.withColumn("bucket_ts", bucket).groupBy(*group_cols, "bucket_ts").agg(
-        F.sum("sum").alias("_sum"),
-        F.sum("count").alias("_cnt"),
-        F.min("min").alias("_min"),
-        F.max("max").alias("_max"),
-        F.sum("sumsq").alias("_sumsq"),
+        *(merge(c).alias(p) for c, (p, merge) in ROLLUP_CHAIN.items())
     )
-    # sample variance from the chain: (Σv² − (Σv)²/n) / (n−1)
-    var = (F.col("_sumsq") - F.col("_sum") * F.col("_sum") / F.col("_cnt")) / (F.col("_cnt") - 1)
-    # clamp tiny negative fp residue so stddev never goes NaN on
-    # near-constant data
-    var = F.greatest(var, F.lit(0.0))
-    value = {
-        "sum": F.col("_sum"),
-        "count": F.col("_cnt").cast("double"),
-        "min": F.col("_min"),
-        "max": F.col("_max"),
-        "avg": F.col("_sum") / F.col("_cnt"),
-        "sumsq": F.col("_sumsq"),
-        "var": var,
-        "stddev": F.sqrt(var),
-    }[agg]
-    if agg in ("var", "stddev"):
-        value = F.when(F.col("_cnt") < 2, NAN()).otherwise(value)
-    value = F.when(F.col("_cnt") == 0, NAN()).otherwise(value)
-    return grouped.select(*group_cols, "bucket_ts", value.alias("value"))
+    # sample variance from the chain: (Σv² − (Σv)²/n) / (n−1), NULL
+    # below two points; the clamp keeps tiny negative fp residue from
+    # turning stddev NaN on near-constant data
+    n = F.col("_cnt")
+    var = F.when(n >= 2, F.greatest((F.col("_sumsq") - F.col("_sum") * F.col("_sum") / n) / (n - 1), F.lit(0.0)))
+    grouped = grouped.withColumn("_var", var).withColumn("_stddev", F.sqrt(var))
+    return grouped.select(*group_cols, "bucket_ts", select_value(agg).alias("value"))
 
 
 def choose_rollup_interval(

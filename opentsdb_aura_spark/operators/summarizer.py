@@ -8,27 +8,28 @@ same NumericAggregator family the reference wires in
 (AuraMetricsNumericArrayIterator.java:182-195 — SURVEY.md §2.11 UD1);
 supported summaries there: avg, sum, count, min, max, first, last.
 
-Spark shape: one hash aggregation over the already-aggregated result
-(group keys only, the bucket_ts axis folds away).  NaN intervals are
+Spark shape: the downsample chain (``downsample.accumulate`` →
+``select_value``) over the already-aggregated result, keyed by the
+group keys only (the bucket_ts axis folds away).  NaN intervals are
 skipped (they mean "no data in this bucket"), matching the upstream
 summarizer's NaN guard; a series with no non-NaN buckets summarizes
-to NaN.  first/last are by bucket_ts order via min_by/max_by.
+to NaN (count: 0).  first/last are the chain's first/last non-NaN
+value in bucket_ts order.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from opentsdb_aura_spark.model import NAN
+from opentsdb_aura_spark.operators.downsample import accumulate, select_value
+from opentsdb_aura_spark.operators.groupby import group_merge
 
 __all__ = ["SUMMARIES", "summarize", "topn"]
 
 SUMMARIES = ("avg", "sum", "count", "min", "max", "first", "last")
-
-
 
 
 def summarize(
@@ -47,37 +48,28 @@ def summarize(
         raise ValueError(f"unsupported summaries {bad}; one of {SUMMARIES}")
     group_cols = list(group_cols)
 
-    v = F.col(value_col)
-    masked = F.when(F.isnan(v), F.lit(None).cast("double")).otherwise(v)
-    base = df.withColumn("_v", masked)
-
-    aggs = [
-        F.sum("_v").alias("_sum"),
-        F.count("_v").alias("_cnt"),
-        F.min("_v").alias("_min"),
-        F.max("_v").alias("_max"),
-        # first/last non-NaN bucket by time order
-        F.min_by("_v", F.when(F.col("_v").isNotNull(), F.col(bucket_col))).alias("_first"),
-        F.max_by("_v", F.when(F.col("_v").isNotNull(), F.col(bucket_col))).alias("_last"),
+    grouped = accumulate(df, group_cols, value_col, order_col=bucket_col)
+    # count is the number of non-NaN buckets (0, never NaN)
+    out = [
+        (F.col("_cnt").cast("double") if s == "count" else select_value(s)).alias(s)
+        for s in summaries
     ]
-    grouped = base.groupBy(*group_cols).agg(*aggs)
+    return grouped.select(*group_cols, *out)
 
-    exprs = {
-        "sum": F.col("_sum"),
-        "avg": F.col("_sum") / F.col("_cnt"),
-        "count": F.col("_cnt").cast("double"),
-        "min": F.col("_min"),
-        "max": F.col("_max"),
-        "first": F.col("_first"),
-        "last": F.col("_last"),
-    }
-    out_cols = []
-    for s in summaries:
-        e = exprs[s]
-        if s != "count":
-            e = F.when(F.col("_cnt") == 0, NAN()).otherwise(e)
-        out_cols.append(e.cast("double").alias(s))
-    return grouped.select(*group_cols, *out_cols)
+
+def _winners(df, k, summary, top, group_cols, bucket_col, value_col) -> DataFrame:
+    """The ``k`` groups ranked first by ``summary`` (NaN never wins,
+    ties break by group key)."""
+    if k <= 0:
+        raise ValueError(f"k must be positive, got {k}")
+    ranked = summarize(df, [summary], group_cols=group_cols, bucket_col=bucket_col, value_col=value_col)
+    s = F.col(summary)
+    return (
+        ranked.where(~F.isnan(s))
+        .orderBy(s.desc() if top else s.asc(), *group_cols)
+        .limit(int(k))
+        .select(*group_cols)
+    )
 
 
 def topn(
@@ -103,18 +95,8 @@ def topn(
     group key for determinism; NaN summaries (series with no data)
     never win.
     """
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
     group_cols = list(group_cols)
-    ranked = summarize(df, [summary], group_cols=group_cols, bucket_col=bucket_col, value_col=value_col)
-    s = F.col(summary)
-    order = s.desc() if top else s.asc()
-    winners = (
-        ranked.where(~F.isnan(s))
-        .orderBy(order, *group_cols)
-        .limit(int(k))
-        .select(*group_cols)
-    )
+    winners = _winners(df, k, summary, top, group_cols, bucket_col, value_col)
     return df.join(F.broadcast(winners), group_cols, "left_semi")
 
 
@@ -140,24 +122,12 @@ def topn_with_other(
     set); the losers' fold is one hash aggregate over the anti-join
     remainder.  Group columns become strings (the label must inhabit
     them)."""
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
     group_cols = list(group_cols)
-    ranked = summarize(df, [summary], group_cols=group_cols, bucket_col=bucket_col, value_col=value_col)
-    s = F.col(summary)
-    order = s.desc() if top else s.asc()
-    winners = (
-        ranked.where(~F.isnan(s))
-        .orderBy(order, *group_cols)
-        .limit(int(k))
-        .select(*group_cols)
-    )
+    winners = _winners(df, k, summary, top, group_cols, bucket_col, value_col)
     as_str = [F.col(c).cast("string").alias(c) for c in group_cols]
     kept = df.join(F.broadcast(winners), group_cols, "left_semi").select(
         *as_str, F.col(bucket_col), F.col(value_col)
     )
-    from opentsdb_aura_spark.operators.groupby import group_merge
-
     losers = df.join(F.broadcast(winners), group_cols, "left_anti")
     other = group_merge(
         losers, merge_agg, group_cols=[], bucket_col=bucket_col, value_col=value_col

@@ -18,7 +18,6 @@ runs BEFORE downsample, exactly as the reference kernel does.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -28,10 +27,11 @@ from pyspark.sql import functions as F
 from opentsdb_aura_spark.filters import Filter, compile_filter, time_range
 from opentsdb_aura_spark.model import SEGMENT_WIDTH_SECONDS
 from opentsdb_aura_spark.operators.dedupe import dedupe_last_write_wins
-from opentsdb_aura_spark.operators.downsample import downsample, fill_spine, normalize_agg
+from opentsdb_aura_spark.operators.downsample import downsample, fill_spine, normalize_agg, percentile_fraction
 from opentsdb_aura_spark.operators.groupby import group_merge, normalize_group_agg, with_group_keys
 from opentsdb_aura_spark.operators.rate import RateOptions, rate, time_shift
 from opentsdb_aura_spark.operators.rollup import (
+    ROLLUP_CHAIN,
     ROLLUP_SERVABLE,
     choose_rollup_interval,
     downsample_from_rollup,
@@ -127,18 +127,8 @@ def _matched_series(
     return dim.select("series_id", *group_keys), group_keys, out_groups
 
 
-_ROLLUP_COLS = ("series_id", "window_start", "sum", "count", "min", "max", "sumsq")
+_ROLLUP_COLS = ("series_id", "window_start", *ROLLUP_CHAIN)
 _HIST_COLS = ("series_id", "window_start", "sign", "bin", "cnt")
-_PERCENTILE_RE = re.compile(r"^p(\d{1,3})$")
-
-
-def _percentile_fraction(agg: str) -> float | None:
-    """Mirror downsample's percentile-name parse: p90 → 0.90,
-    p999 → 0.999 (digits after 'p' are the decimals)."""
-    if agg == "median":
-        return 0.5
-    m = _PERCENTILE_RE.match(agg)
-    return float("0." + m.group(1)) if m else None
 
 
 def _rollup_reader(ds: str, gb: str | None):
@@ -175,7 +165,7 @@ def _hist_reader(ds: str, gb: str | None, hist_eps: float | None):
     INTERPOLATES between ranks — with many points per bucket the two
     converge, but a 2-point bucket can differ by the gap between its
     values, far beyond eps."""
-    frac = _percentile_fraction(ds)
+    frac = percentile_fraction(ds)
     if frac is None:
         return None
     eps_kw = {"eps": float(hist_eps)} if hist_eps is not None else {}
@@ -339,63 +329,39 @@ def run_metric_query(
         matched, _, out_groups = _matched_series(points, q, series_dim)
         spine_groups = matched.select(*out_groups)
 
-    if q.group_tag_keys is None:
-        # raw per-series result (G4)
-        return downsample(
-            df,
-            q.start,
-            q.end,
-            q.interval,
-            q.ds_agg,
-            group_cols=["series_id"],
-            infectious_nan=q.infectious_nan,
-            reporting_dps=q.reporting_dps,
-            run_all=q.run_all,
-            fill=q.fill,
-            spine_groups=spine_groups,
-        )
-
-    group_keys = [f"tag_{k}" for k in q.group_tag_keys]
-    df = with_group_keys(df, q.group_tag_keys)
-    fused = _FUSABLE_DS_GB.get((normalize_agg(q.ds_agg), normalize_group_agg(q.gb_agg)))
-    if fused is not None:
-        # single-shot: one hash aggregation by (group keys, bucket)
-        # replaces per-series downsample + group merge (SURVEY §2.3b
-        # G1 "one shot" note) — same values, one fewer shuffle
-        return downsample(
-            df,
-            q.start,
-            q.end,
-            q.interval,
-            fused,
-            group_cols=group_keys,
-            infectious_nan=q.infectious_nan,
-            reporting_dps=q.reporting_dps,
-            run_all=q.run_all,
-            fill=q.fill,
-            spine_groups=spine_groups,
-        )
-    # two-stage: per-series downsample (sparse), then group merge,
-    # then the NaN spine once at group granularity — cheaper than
-    # densifying every series first.
-    per_series = downsample(
+    # the shape picks (agg, group columns, fill) of the one downsample:
+    # raw per-series (G4); fused — one hash aggregation by (group keys,
+    # bucket) replaces per-series downsample + group merge (SURVEY §2.3b
+    # G1 "one shot" note), same values, one fewer shuffle; or two-stage
+    # — per-series downsample (sparse), then group merge, then the NaN
+    # spine once at group granularity, cheaper than densifying every
+    # series first
+    group_keys: list[str] = []
+    ds_agg, ds_groups, fill, merge_agg = q.ds_agg, ["series_id"], q.fill, None
+    if q.group_tag_keys is not None:
+        group_keys = [f"tag_{k}" for k in q.group_tag_keys]
+        df = with_group_keys(df, q.group_tag_keys)
+        fused = _FUSABLE_DS_GB.get((normalize_agg(q.ds_agg), normalize_group_agg(q.gb_agg)))
+        if fused is not None:
+            ds_agg, ds_groups = fused, group_keys
+        else:
+            ds_groups, fill, merge_agg = ["series_id", *group_keys], "none", q.gb_agg
+    res = downsample(
         df,
         q.start,
         q.end,
         q.interval,
-        q.ds_agg,
-        group_cols=["series_id", *group_keys],
+        ds_agg,
+        group_cols=ds_groups,
         infectious_nan=q.infectious_nan,
         reporting_dps=q.reporting_dps,
         run_all=q.run_all,
-        fill="none",
+        fill=fill,
+        spine_groups=spine_groups,
     )
-    merged = group_merge(
-        per_series,
-        q.gb_agg,
-        group_cols=group_keys,
-        infectious_nan=q.infectious_nan,
-    )
+    if merge_agg is None:
+        return res
+    merged = group_merge(res, merge_agg, group_cols=group_keys, infectious_nan=q.infectious_nan)
     if q.fill != "none":
         interval = (q.end - q.start) if (q.run_all or q.interval is None) else q.interval
         merged = fill_spine(

@@ -115,7 +115,7 @@ def bloom_options(writer, *cols, ndv: int | None = BLOOM_NDV, plain_encoding: tu
 
 
 def write_metrics_store(
-    points: DataFrame, path: str, files_per_partition: int = 1, reshuffle: bool = True
+    points: DataFrame, path: str, files_per_partition: int = 1, reshuffle: bool = True, mode: str = "overwrite"
 ) -> None:
     """Land normalized (and already deduped) points, partitioned by
     segment_time, sorted within files by (series_id, ts), with a
@@ -129,7 +129,11 @@ def write_metrics_store(
     file layout, costs an extra exchange.  ``reshuffle=False`` writes
     from the input's existing partitioning (e.g. straight out of the
     dedupe shuffle) — ~1.6× faster ingest, more files per partition;
-    the right default when a compaction pass follows anyway."""
+    the right default when a compaction pass follows anyway.
+
+    ``mode="append"`` adds files beside the existing ones (streaming
+    micro-batches); the default replaces the store (bulk load,
+    compaction)."""
     from pyspark.sql import functions as F
 
     df = points
@@ -138,18 +142,15 @@ def write_metrics_store(
             df = df.repartition(F.col("segment_time"), F.pmod(F.col("series_id"), F.lit(files_per_partition)))
         else:
             df = df.repartition(F.col("segment_time"))
-        # segment_time MUST lead the sort even though the shuffle keys
-        # on it: the file writer requires ordering on the partition
-        # column, and [series_id, ts] alone makes Spark stack its own
-        # SortExec(segment_time) on top — redundant work whose spill
-        # merge interleaves equal-segment runs and silently destroys
-        # the (series_id, ts) order the row-group pruning contract
-        # depends on (review r9).  With the prefix, the writer reuses
-        # this single sort.
-        df = df.sortWithinPartitions("segment_time", "series_id", "ts")
-    else:
-        df = df.sortWithinPartitions("segment_time", "series_id", "ts")
-    bloom_options(df.write.mode("overwrite"), "series_id").partitionBy(
+    # segment_time MUST lead the sort even though the shuffle keys on
+    # it: the file writer requires ordering on the partition column,
+    # and [series_id, ts] alone makes Spark plan its own
+    # Sort(segment_time), which replaces this one and leaves the files
+    # out of the (series_id, ts) order the row-group pruning contract
+    # depends on (review r9).  With the prefix, the writer reuses this
+    # single sort.
+    df = df.sortWithinPartitions("segment_time", "series_id", "ts")
+    bloom_options(df.write.mode(mode), "series_id").partitionBy(
         "segment_time"
     ).parquet(path)
 

@@ -13,8 +13,10 @@ Reference behavior re-expressed on Structured Streaming:
   also applies in foreachBatch (watermarks only gate stateful ops).
 - T2 early-data drop: future timestamps dropped
   (BaseStorage.java:116-124).
-- S2 point write: normalize (series_id, segment_time) → append to the
-  partitioned Parquet store; per-batch last-write-wins dedupe.
+- S2 point write: normalize (series_id, segment_time) → per-batch
+  last-write-wins dedupe → append through the store's one writer
+  (``sources.batch.write_metrics_store``: files sorted by
+  (series_id, ts), series_id bloom filter).
 - W2 last-value state: series_dim merged per batch with
   max_by(last_ts/value) — the streaming analogue of the per-series
   lastTimestamp/lastValue fields
@@ -23,7 +25,10 @@ Reference behavior re-expressed on Structured Streaming:
   (TimeSeriesShard.java:446-645 purge job → partition expiry).
 - T4 window-close rollup: streaming windowed aggregation with
   watermark in append mode — windows emit once closed
-  (TimeSeriesShard flush → rollup on segment close).
+  (TimeSeriesShard flush → rollup on segment close).  The rollup and
+  HLL presence windows aggregate with ``build_rollup``'s and
+  ``build_presence_hll``'s own aggregates through one window-close
+  tail, so a streamed window row equals the batch row.
 """
 
 from __future__ import annotations
@@ -37,7 +42,9 @@ from pyspark.sql import functions as F
 
 from opentsdb_aura_spark.model import normalize_points
 from opentsdb_aura_spark.operators.dedupe import dedupe_last_write_wins
-from opentsdb_aura_spark.operators.meta import build_series_dim
+from opentsdb_aura_spark.operators.meta import build_presence_hll, build_series_dim, presence_hll_partials
+from opentsdb_aura_spark.operators.rollup import rollup_partials
+from opentsdb_aura_spark.sources.batch import write_metrics_store
 
 
 @dataclass
@@ -112,17 +119,9 @@ class StreamingIngest:
         valid = batch_df.where((F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi)))
 
         pts = dedupe_last_write_wins(normalize_points(valid, width=self.segment_width))
-        (
-            pts.repartition(F.col("segment_time"))
-            .sortWithinPartitions("series_id", "ts")
-            .write.mode("append")
-            .partitionBy("segment_time")
-            .parquet(self.store_path)
-        )
+        write_metrics_store(pts, self.store_path, mode="append")
         self._merge_dim(pts)
         if self.presence_hll_path:
-            from opentsdb_aura_spark.operators.meta import build_presence_hll
-
             build_presence_hll(
                 pts, self.presence_hll_epoch_width, group_cols=("metric",)
             ).write.mode("append").parquet(self.presence_hll_path)
@@ -171,8 +170,13 @@ class StreamingIngest:
             )
         else:
             merged = batch_dim
+        self._overwrite_buckets(merged, len(affected))
+
+    def _overwrite_buckets(self, dim: DataFrame, n_buckets: int) -> None:
+        """Rewrite exactly the dim buckets present in ``dim`` (dynamic
+        partition overwrite, one task per bucket); the others stay."""
         (
-            merged.repartition(max(len(affected), 1), "dim_bucket")
+            dim.repartition(max(n_buckets, 1), "dim_bucket")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("dim_bucket")
@@ -246,13 +250,7 @@ class StreamingIngest:
             for r in survivors.select("dim_bucket").distinct().collect()
         }
         if surviving_buckets:
-            (
-                survivors.repartition(len(surviving_buckets), "dim_bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("dim_bucket")
-                .parquet(self.dim_path)
-            )
+            self._overwrite_buckets(survivors, len(surviving_buckets))
         # dynamic overwrite never touches partitions absent from the
         # output — fully-idle buckets must be dropped explicitly
         for bucket in affected - surviving_buckets:
@@ -260,38 +258,35 @@ class StreamingIngest:
         return removed
 
 
+def _window_close(
+    stream_points: DataFrame, width: int, watermark: str, keys: list[str], start_col: str, aggregate
+) -> DataFrame:
+    """The one watermark/window-close tail: tumbling event-time windows
+    of ``width`` seconds over ``ts``, emitted once the watermark passes
+    (append mode), aggregated by ``aggregate(frame, keys)`` — the batch
+    builder's own aggregate, so a window row equals the batch row over
+    the same points.  → (keys…, start_col = window start, aggregates…)."""
+    timed = stream_points.withColumn("event_time", F.col("ts").cast("timestamp")).withWatermark(
+        "event_time", watermark
+    )
+    rows = aggregate(timed, [*keys, F.window("event_time", f"{int(width)} seconds").alias("w")])
+    return rows.select(
+        *keys,
+        F.unix_timestamp(F.col("w.start")).cast("long").alias(start_col),
+        *rows.columns[len(keys) + 1:],
+    )
+
+
 def streaming_rollup(
     stream_points: DataFrame,
     interval_seconds: int = 3600,
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """T4 — window-close rollup: tumbling event-time windows emitted
-    once the watermark passes (append mode).  Equivalent of the
-    flush-time DownSampler chain, continuously."""
-    with_event_time = stream_points.withColumn("event_time", F.col("ts").cast("timestamp"))
-    return (
-        with_event_time.withWatermark("event_time", watermark)
-        .groupBy(
-            F.col("series_id"),
-            F.window("event_time", f"{interval_seconds} seconds").alias("w"),
-        )
-        .agg(
-            F.sum("value").alias("sum"),
-            F.count("value").alias("count"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.sum(F.col("value") * F.col("value")).alias("sumsq"),
-        )
-        .select(
-            "series_id",
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("window_start"),
-            "sum",
-            "count",
-            "min",
-            "max",
-            "sumsq",
-        )
-    )
+    """T4 — window-close rollup: ``build_rollup``'s NaN-skipping
+    partials per (series_id, window), emitted once the watermark
+    passes.  Equivalent of the flush-time DownSampler chain,
+    continuously."""
+    return _window_close(stream_points, interval_seconds, watermark, ["series_id"], "window_start", rollup_partials)
 
 
 def streaming_presence_hll(
@@ -311,23 +306,9 @@ def streaming_presence_hll(
     (``meta.cardinality_from_presence_hll``) current without any
     batch re-distinct — the sketches from ingest merge with the ones
     already at rest via ``hll_union_agg``."""
-    with_event_time = stream_points.withColumn("event_time", F.col("ts").cast("timestamp"))
-    return (
-        with_event_time.withWatermark("event_time", watermark)
-        .groupBy(
-            F.col(group_col),
-            F.window("event_time", f"{int(epoch_width)} seconds").alias("w"),
-        )
-        .agg(
-            F.hll_sketch_agg(F.col(id_col), F.lit(int(lg_k))).alias("hll"),
-            F.count("*").alias("n_points"),
-        )
-        .select(
-            group_col,
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("epoch"),
-            "hll",
-            "n_points",
-        )
+    return _window_close(
+        stream_points, epoch_width, watermark, [group_col], "epoch",
+        lambda df, keys: presence_hll_partials(df, keys, id_col=id_col, lg_k=lg_k),
     )
 
 

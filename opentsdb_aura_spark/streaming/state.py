@@ -808,6 +808,11 @@ def streaming_crawl_ingest(
                     batch_links = batch_links.unionByName(
                         frontier_edges(xml_urls, "page_url", "loc")
                     )
+                if url_prefilter_gate or robots_rules_path is not None:
+                    # each gate reads its input twice (the URL probe and
+                    # the semi-join back): materialize the links once so
+                    # html_links / discovered_xml_urls run once a batch
+                    batch_links = batch_links.localCheckpoint()
                 if url_prefilter_gate:
                     # string-only fetch-budget gate FIRST: no dim join,
                     # and it shrinks the robots join's probe side

@@ -375,6 +375,33 @@ def test_logreg_l2_shrinks_weights_and_threshold_gates(spark):
         logreg_scores(d, w0, b0, n_features=32, binary=True, threshold=1.0)
 
 
+def test_logreg_scores_independent_of_input_partitioning(spark):
+    """The margin is a bucket-ascending fold of the doc's packed
+    features, so the same docs score to the same doubles whether the
+    input arrives hash-partitioned by doc_id (a dropDuplicates output,
+    where the planner skips the (doc_id, bucket) exchange) or not."""
+    from opentsdb_aura_spark.operators.quality import logreg_scores
+
+    D = 64
+    w = [((i * 37) % 11 - 5) / 7.0 for i in range(D)]
+    docs = spark.createDataFrame(
+        [
+            (1, "neue seite der die und ist das"),
+            (2, "new page the and of to is"),
+            (3, "filler words here der die und ist das the and of to is a b c d e f g h i j k"),
+        ],
+        "doc_id long, text string",
+    )
+
+    def scored(d):
+        return sorted(
+            (r["doc_id"], r["margin"], r["prob"])
+            for r in logreg_scores(d, w, 0.25, n_features=D, binary=True).collect()
+        )
+
+    assert scored(docs.dropDuplicates(["doc_id"])) == scored(docs)
+
+
 def test_lm_kn_scores_order_edges(spark):
     """Generic-order modified KN: short docs surface n_ngrams=0 with
     NULL score; occurrence counts equal len-N+1 per doc; order < 2

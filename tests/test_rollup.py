@@ -295,10 +295,10 @@ def test_hist_substitution_p999_and_custom_eps(spark, make_points):
     correctly when hist_eps is passed — and garbage when it is not."""
     import random
 
+    from opentsdb_aura_spark.operators.downsample import percentile_fraction as _percentile_fraction
     from opentsdb_aura_spark.operators.rollup import build_rollup_histogram
     from opentsdb_aura_spark.plans.query import (
         MetricQuery,
-        _percentile_fraction,
         _preagg_substitution,
         run_metric_query,
     )

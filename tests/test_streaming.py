@@ -203,8 +203,10 @@ def test_retention_purge(spark, tmpdirs):
 
 def test_streaming_rollup_window_close(spark, tmpdirs):
     # two hourly windows of data + a late sentinel far ahead that
-    # advances the watermark, closing the first windows
+    # advances the watermark, closing the first windows; hour 0 also
+    # holds one NaN point, which the chain skips (no data)
     rows0 = [("m", {"h": "a"}, BASE + i * 600, 1.0, i) for i in range(6)]  # hour 0
+    rows0.append(("m", {"h": "a"}, BASE + 300, float("nan"), 6))
     rows1 = [("m", {"h": "a"}, BASE + 3600 + i * 600, 2.0, 10 + i) for i in range(6)]  # hour 1
     _write_input(spark, tmpdirs["in"], rows0, "b0")
     _write_input(spark, tmpdirs["in"], rows1, "b1")
@@ -227,6 +229,56 @@ def test_streaming_rollup_window_close(spark, tmpdirs):
     # hour-0 and hour-1 windows must have closed and emitted
     assert BASE in rows and rows[BASE]["sum"] == 6.0 and rows[BASE]["count"] == 6
     assert BASE + 3600 in rows and rows[BASE + 3600]["sum"] == 12.0
+    # twin parity: the streamed window row IS build_rollup's row over
+    # the same points
+    from opentsdb_aura_spark.operators.rollup import build_rollup
+
+    batch = normalize_points(spark.read.schema(POINT_SCHEMA).parquet(tmpdirs["in"] + "/b0"))
+    (want,) = build_rollup(batch, 3600).collect()
+    assert rows[BASE].asDict() == want.asDict()
+
+
+def test_streamed_store_files_sorted_by_series_ts(spark, tmpdirs):
+    """Micro-batch appends land through the store's one writer: every
+    file under segment_time=* reads back in (series_id, ts) order (the
+    row-group min/max pruning contract), batch after batch.  Partition
+    coalescing is off so the deduped batch reaches the writer as
+    several sorted runs, as it does once a batch outgrows one
+    partition."""
+    import glob
+    import random
+
+    from pyspark.sql import Row
+
+    now = BASE + 7200
+    ing = StreamingIngest(store_path=tmpdirs["store"], dim_path=tmpdirs["dim"], now_fn=lambda: now)
+    rnd = random.Random(7)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for b in range(2):
+            rows = [
+                ("m", {"h": f"h{h}"}, BASE + 10 * i + b * 3600, float(i), b * 10_000 + h * 1000 + i)
+                for h in range(12)
+                for i in range(40)
+            ]
+            rnd.shuffle(rows)
+            df = spark.createDataFrame(
+                [Row(namespace="test", metric=m, tags=t, ts=ts, value=v, ingest_seq=q) for m, t, ts, v, q in rows],
+                POINT_SCHEMA,
+            ).repartition(4)
+            ing.process_batch(df, b)
+    finally:
+        spark.conf.set(key, prev)
+    files = glob.glob(os.path.join(tmpdirs["store"], "segment_time=*", "*.parquet"))
+    assert len(files) >= 2
+    import pyarrow.parquet as pq
+
+    for f in files:
+        t = pq.read_table(f, columns=["series_id", "ts"])
+        keys = list(zip(t["series_id"].to_pylist(), t["ts"].to_pylist()))
+        assert keys == sorted(keys), f
 
 
 def test_streaming_last_value_state(spark, tmpdirs):
