@@ -1,7 +1,7 @@
 """Real audio/video decode for the multimodal pipeline: WAV (RIFF
 PCM16) and Y4M (YUV4MPEG2) codecs, dependency-free (struct + numpy),
 plus the Spark plumbing that runs them inside Arrow-batched
-``mapInPandas``.
+``mapInPandas`` (front ends of ``rowpass.map_rows``).
 
 Extension beyond the reference (which is a metrics/events engine with
 no media path): these are the audio/video legs of the training-data
@@ -27,15 +27,23 @@ Format notes (both fully public):
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from opentsdb_aura_spark.operators.multimodal import MEDIA_SCHEMA
+from opentsdb_aura_spark.operators.multimodal import (
+    _DECODE_ERRORS,
+    MEDIA_COLS,
+    MEDIA_SCHEMA,
+    _attach_media,
+    _error_text,
+    _hash_error_row,
+    _kind_pass,
+    _pack64,
+)
+from opentsdb_aura_spark.operators.rowpass import map_rows
 
 # ---------------------------------------------------------------- WAV codec
 
@@ -159,31 +167,13 @@ def attach_audio_media(
     lengthens every clip by the same factor; the fingerprint surface
     uses scale=8 so each of its 65 energy windows holds ≥1 sample."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, rates, ns = [], [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                text = text or "x"
-                n = (mid % 64 + 16) * scale
-                rate = 8000 + (mid % 4) * 4000
-                smp = ((_codepoints(text, n) - 80) * 256).astype(np.int16)
-                payloads.append(encode_wav(rate, smp))
-                rates.append(rate)
-                ns.append(n)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "kind": "audio",
-                    "payload": payloads,
-                    "width": pd.Series([0] * len(pdf), dtype="int32"),
-                    "height": pd.Series([0] * len(pdf), dtype="int32"),
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "n_frames": pd.Series(ns, dtype="int32"),
-                }
-            )
+    def audio(mid, text):
+        n = (mid % 64 + 16) * scale
+        rate = 8000 + (mid % 4) * 4000
+        smp = ((_codepoints(text, n) - 80) * 256).astype(np.int16)
+        return encode_wav(rate, smp), 0, 0, rate, n
 
-    return docs.mapInPandas(op, schema=MEDIA_SCHEMA)
+    return _attach_media(docs, id_col, text_col, "audio", audio)
 
 
 def attach_video_media(
@@ -197,33 +187,14 @@ def attach_video_media(
     lengthens every clip; the temporal-fingerprint surface uses 6 so
     qualifying clips carry ≥65 frames (64 delta bits)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, ws, hs, nfs = [], [], [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                text = text or "x"
-                w, h, nf = mid % 8 + 2, mid % 6 + 2, (mid % 10 + 3) * frames_scale
-                wh = w * h
-                stream = (_codepoints(text, nf * wh) & 0xFF).astype(np.uint8)
-                frames = [stream[f * wh : (f + 1) * wh].tobytes() for f in range(nf)]
-                payloads.append(encode_y4m(w, h, frames))
-                ws.append(w)
-                hs.append(h)
-                nfs.append(nf)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "kind": "video",
-                    "payload": payloads,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "sample_rate": pd.Series([0] * len(pdf), dtype="int32"),
-                    "n_frames": pd.Series(nfs, dtype="int32"),
-                }
-            )
+    def video(mid, text):
+        w, h, nf = mid % 8 + 2, mid % 6 + 2, (mid % 10 + 3) * frames_scale
+        wh = w * h
+        stream = (_codepoints(text, nf * wh) & 0xFF).astype(np.uint8)
+        frames = [stream[f * wh : (f + 1) * wh].tobytes() for f in range(nf)]
+        return encode_y4m(w, h, frames), w, h, 0, nf
 
-    return docs.mapInPandas(op, schema=MEDIA_SCHEMA)
+    return _attach_media(docs, id_col, text_col, "video", video)
 
 
 def attach_animated_gif_media(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -243,43 +214,22 @@ def attach_animated_gif_media(docs: DataFrame, *, id_col: str = "doc_id", text_c
     trick."""
     from opentsdb_aura_spark.operators.gif import encode_gif_animated
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, ws, hs, nfs = [], [], [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                text = text or "x"
-                w, h, nf = mid % 8 + 2, mid % 6 + 2, mid % 10 + 3
-                wh = w * h
-                stream = (_codepoints(text, nf * wh) & 0xFF).astype(np.uint8)
-                frames = [(0, 0, w, h, np.repeat(stream[:wh], 3).tobytes())]
-                bw, bh = w - 1, h - 1
-                for f in range(1, nf):
-                    blk = stream[f * wh : f * wh + bw * bh]
-                    frames.append((0, 0, bw, bh, np.repeat(blk, 3).tobytes()))
-                payloads.append(
-                    encode_gif_animated(w, h, frames, transparent=(101, 101, 101))
-                )
-                ws.append(w)
-                hs.append(h)
-                nfs.append(nf)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    # a DISTINCT kind: the Y4M stages (sample_video_frames,
-                    # video_scene_changes, video_temporal_fingerprint) route
-                    # on kind=='video' and parse YUV4MPEG2 — tagging GIFs
-                    # 'video' would crash any mixed media table fed to them
-                    "kind": "gif",
-                    "payload": payloads,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "sample_rate": pd.Series([0] * len(pdf), dtype="int32"),
-                    "n_frames": pd.Series(nfs, dtype="int32"),
-                }
-            )
+    def gif(mid, text):
+        w, h, nf = mid % 8 + 2, mid % 6 + 2, mid % 10 + 3
+        wh = w * h
+        stream = (_codepoints(text, nf * wh) & 0xFF).astype(np.uint8)
+        frames = [(0, 0, w, h, np.repeat(stream[:wh], 3).tobytes())]
+        bw, bh = w - 1, h - 1
+        for f in range(1, nf):
+            blk = stream[f * wh : f * wh + bw * bh]
+            frames.append((0, 0, bw, bh, np.repeat(blk, 3).tobytes()))
+        return encode_gif_animated(w, h, frames, transparent=(101, 101, 101)), w, h, 0, nf
 
-    return docs.mapInPandas(op, schema=MEDIA_SCHEMA)
+    # a DISTINCT kind: the Y4M stages (sample_video_frames,
+    # video_scene_changes, video_temporal_fingerprint) route on
+    # kind=='video' and parse YUV4MPEG2 — tagging GIFs 'video' would
+    # crash any mixed media table fed to them
+    return _attach_media(docs, id_col, text_col, "gif", gif)
 
 
 # ---------------------------------------------------------- feature stages
@@ -296,29 +246,18 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     count) — all recomputable by a SQL oracle from the generation
     rule.  Vectorized numpy per payload; Arrow-batched transfer."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rates, ns, means, rmss, zcs = [], [], [], [], []
-            for payload in pdf["payload"]:
-                rate, smp = decode_wav(bytes(payload))
-                s = smp.astype(np.float64)
-                rates.append(rate)
-                ns.append(len(s))
-                means.append(float(s.mean()) if len(s) else 0.0)
-                rmss.append(float(np.sqrt(np.mean(s * s))) if len(s) else 0.0)
-                zcs.append(int(np.sum(s[:-1] * s[1:] < 0)) if len(s) > 1 else 0)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "n_samples": pd.Series(ns, dtype="int64"),
-                    "mean_amp": pd.Series(means, dtype="float64"),
-                    "rms": pd.Series(rmss, dtype="float64"),
-                    "zero_crossings": pd.Series(zcs, dtype="int64"),
-                }
-            )
+    def features(mid, payload):
+        rate, smp = decode_wav(bytes(payload))
+        s = smp.astype(np.float64)
+        n = len(s)
+        return [(
+            mid, rate, n,
+            float(s.mean()) if n else 0.0,
+            float(np.sqrt(np.mean(s * s))) if n else 0.0,
+            int(np.sum(s[:-1] * s[1:] < 0)) if n > 1 else 0,
+        )]
 
-    return media.where(F.col("kind") == "audio").mapInPandas(op, schema=AUDIO_FEATURE_SCHEMA)
+    return _kind_pass(media, "audio", features, AUDIO_FEATURE_SCHEMA)
 
 
 def resample_audio(media: DataFrame, target_rate: int, *, skip_errors: bool = False) -> DataFrame:
@@ -336,34 +275,25 @@ def resample_audio(media: DataFrame, target_rate: int, *, skip_errors: bool = Fa
     ``skip_errors`` follows the error-ROW contract: undecodable
     payloads keep their original payload and carry the exception text
     in ``error``; decodable rows have ``error`` NULL."""
-    out_schema = MEDIA_SCHEMA + ", error string"
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, rates, errors = [], [], []
-            for payload in pdf["payload"]:
-                try:
-                    rate, smp = decode_wav(bytes(payload))
-                except (ValueError, NotImplementedError) as e:
-                    if not skip_errors:
-                        raise
-                    payloads.append(bytes(payload))
-                    rates.append(0)
-                    errors.append(f"{type(e).__name__}: {e}")
-                    continue
-                n = len(smp)
-                n_out = max(1, (n * target_rate) // rate) if n else 0
-                idx = (np.arange(n_out, dtype=np.int64) * rate) // target_rate
-                payloads.append(encode_wav(target_rate, smp[idx] if n else smp))
-                rates.append(target_rate)
-                errors.append(None)
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["sample_rate"] = pd.Series(rates, dtype="int32")
-            out["error"] = pd.Series(errors, dtype="object")
-            yield out
+    def resample(*m):
+        rate, smp = decode_wav(bytes(m[2]))
+        n = len(smp)
+        n_out = max(1, (n * target_rate) // rate) if n else 0
+        idx = (np.arange(n_out, dtype=np.int64) * rate) // target_rate
+        payload = encode_wav(target_rate, smp[idx] if n else smp)
+        return [(*m[:2], payload, *m[3:5], target_rate, m[6], None)]
 
-    return media.where(F.col("kind") == "audio").mapInPandas(op, schema=out_schema)
+    def error_row(m, exc):
+        return (*m[:2], bytes(m[2]), *m[3:5], 0, m[6], _error_text(exc))
+
+    return map_rows(
+        media.where(F.col("kind") == "audio"), resample, MEDIA_SCHEMA + ", error string",
+        cols=MEDIA_COLS,
+        skip_errors=skip_errors,
+        on_error=error_row,
+        catch=_DECODE_ERRORS,
+    )
 
 
 FRAME_FEATURE_SCHEMA = (
@@ -380,33 +310,13 @@ def sample_video_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     ``multimodal.sample_frames`` stubs, now backed by a real
     container parse."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, nps, cks, mls = [], [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = decode_y4m(bytes(payload))
-                for fi in range(0, len(frames), every_n):
-                    px = np.frombuffer(frames[fi], dtype=np.uint8)
-                    ids.append(mid)
-                    idxs.append(fi)
-                    ws.append(w)
-                    hs.append(h)
-                    nps.append(len(px))
-                    cks.append(int(px.sum()))
-                    mls.append(float(px.mean()) if len(px) else 0.0)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "n_pixels": pd.Series(nps, dtype="int64"),
-                    "checksum": pd.Series(cks, dtype="int64"),
-                    "mean_luma": pd.Series(mls, dtype="float64"),
-                }
-            )
+    def frames(mid, payload):
+        w, h, frames = decode_y4m(bytes(payload))
+        for fi in range(0, len(frames), every_n):
+            px = np.frombuffer(frames[fi], dtype=np.uint8)
+            yield (mid, fi, w, h, len(px), int(px.sum()), float(px.mean()) if len(px) else 0.0)
 
-    return media.where(F.col("kind") == "video").mapInPandas(op, schema=FRAME_FEATURE_SCHEMA)
+    return _kind_pass(media, "video", frames, FRAME_FEATURE_SCHEMA)
 
 
 def sample_gif_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
@@ -419,42 +329,21 @@ def sample_gif_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     so luma is the integer grayscale (r+g+b)//3 the dHash path uses.
     Routes on kind=='gif' (animated GIFs carry their own kind so the
     Y4M-parsing video stages never see them in a mixed table)."""
+    from opentsdb_aura_spark.operators.gif import decode_gif_frames
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from opentsdb_aura_spark.operators.gif import decode_gif_frames
-
-        for pdf in batches:
-            ids, idxs, ws, hs, nps, cks, mls = [], [], [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = decode_gif_frames(bytes(payload))
-                for fi in range(0, len(frames), every_n):
-                    gray = (
-                        np.frombuffer(frames[fi], dtype=np.uint8)
-                        .reshape(-1, 3)
-                        .astype(np.int64)
-                        .sum(axis=1)
-                        // 3
-                    )
-                    ids.append(mid)
-                    idxs.append(fi)
-                    ws.append(w)
-                    hs.append(h)
-                    nps.append(len(gray))
-                    cks.append(int(gray.sum()))
-                    mls.append(float(gray.mean()) if len(gray) else 0.0)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "n_pixels": pd.Series(nps, dtype="int64"),
-                    "checksum": pd.Series(cks, dtype="int64"),
-                    "mean_luma": pd.Series(mls, dtype="float64"),
-                }
+    def frames(mid, payload):
+        w, h, frames = decode_gif_frames(bytes(payload))
+        for fi in range(0, len(frames), every_n):
+            gray = (
+                np.frombuffer(frames[fi], dtype=np.uint8)
+                .reshape(-1, 3)
+                .astype(np.int64)
+                .sum(axis=1)
+                // 3
             )
+            yield (mid, fi, w, h, len(gray), int(gray.sum()), float(gray.mean()) if len(gray) else 0.0)
 
-    return media.where(F.col("kind") == "gif").mapInPandas(op, schema=FRAME_FEATURE_SCHEMA)
+    return _kind_pass(media, "gif", frames, FRAME_FEATURE_SCHEMA)
 
 
 SPECTRAL_FEATURE_SCHEMA = (
@@ -485,49 +374,33 @@ def extract_audio_spectral_features(media: DataFrame, *, n_bands: int = 4) -> Da
     numpy — embarrassingly parallel across executors like the other
     codec stages."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "sample_rate", "n_samples",
-                                    "energy_td", "energy_fd",
-                                    "spectral_centroid_hz", "band_energies")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, smp = decode_wav(bytes(payload))
-                s = smp.astype(np.float64)
-                n = len(s)
-                out["media_id"].append(int(mid))
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(n)
-                if n == 0:
-                    out["energy_td"].append(0.0)
-                    out["energy_fd"].append(0.0)
-                    out["spectral_centroid_hz"].append(0.0)
-                    out["band_energies"].append([0.0] * n_bands)
-                    continue
-                spec = np.fft.rfft(s)
-                power = np.abs(spec) ** 2 / n
-                # one-sided spectrum: double every bin except DC (and
-                # Nyquist when n is even) to conserve total energy
-                scale = np.full(len(power), 2.0)
-                scale[0] = 1.0
-                if n % 2 == 0:
-                    scale[-1] = 1.0
-                power *= scale
-                freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-                total = float(power.sum())
-                centroid = float((freqs * power).sum() / total) if total > 0 else 0.0
-                nyquist = rate / 2.0
-                band_idx = np.minimum(
-                    (freqs / max(nyquist, 1e-12) * n_bands).astype(int), n_bands - 1
-                )
-                bands = np.zeros(n_bands)
-                np.add.at(bands, band_idx, power)
-                out["energy_td"].append(float((s * s).sum()))
-                out["energy_fd"].append(total)
-                out["spectral_centroid_hz"].append(centroid)
-                out["band_energies"].append(bands.tolist())
-            yield pd.DataFrame(out)
+    def spectral(mid, payload):
+        rate, smp = decode_wav(bytes(payload))
+        s = smp.astype(np.float64)
+        n = len(s)
+        if n == 0:
+            return [(int(mid), rate, n, 0.0, 0.0, 0.0, [0.0] * n_bands)]
+        spec = np.fft.rfft(s)
+        power = np.abs(spec) ** 2 / n
+        # one-sided spectrum: double every bin except DC (and
+        # Nyquist when n is even) to conserve total energy
+        scale = np.full(len(power), 2.0)
+        scale[0] = 1.0
+        if n % 2 == 0:
+            scale[-1] = 1.0
+        power *= scale
+        freqs = np.fft.rfftfreq(n, d=1.0 / rate)
+        total = float(power.sum())
+        centroid = float((freqs * power).sum() / total) if total > 0 else 0.0
+        nyquist = rate / 2.0
+        band_idx = np.minimum(
+            (freqs / max(nyquist, 1e-12) * n_bands).astype(int), n_bands - 1
+        )
+        bands = np.zeros(n_bands)
+        np.add.at(bands, band_idx, power)
+        return [(int(mid), rate, n, float((s * s).sum()), total, centroid, bands.tolist())]
 
-    return media.where(F.col("kind") == "audio").mapInPandas(op, schema=SPECTRAL_FEATURE_SCHEMA)
+    return _kind_pass(media, "audio", spectral, SPECTRAL_FEATURE_SCHEMA)
 
 
 SCENE_SCHEMA = "media_id bigint, n_frames int, n_cuts bigint, mean_frame_diff double"
@@ -543,24 +416,15 @@ def video_scene_changes(media: DataFrame, *, threshold: float = 10.0) -> DataFra
     Vectorized numpy over the decoded frame stack; Arrow-batched
     ``mapInPandas`` like every codec stage."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "n_frames", "n_cuts", "mean_frame_diff")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _w, _h, frames = decode_y4m(bytes(payload))
-                out["media_id"].append(int(mid))
-                out["n_frames"].append(len(frames))
-                if len(frames) < 2:
-                    out["n_cuts"].append(0)
-                    out["mean_frame_diff"].append(0.0)
-                    continue
-                stack = np.stack([np.frombuffer(f, dtype=np.uint8) for f in frames]).astype(np.int16)
-                mads = np.abs(np.diff(stack, axis=0)).mean(axis=1)
-                out["n_cuts"].append(int((mads > threshold).sum()))
-                out["mean_frame_diff"].append(float(mads.mean()))
-            yield pd.DataFrame(out)
+    def scenes(mid, payload):
+        _w, _h, frames = decode_y4m(bytes(payload))
+        if len(frames) < 2:
+            return [(int(mid), len(frames), 0, 0.0)]
+        stack = np.stack([np.frombuffer(f, dtype=np.uint8) for f in frames]).astype(np.int16)
+        mads = np.abs(np.diff(stack, axis=0)).mean(axis=1)
+        return [(int(mid), len(frames), int((mads > threshold).sum()), float(mads.mean()))]
 
-    return media.where(F.col("kind") == "video").mapInPandas(op, schema=SCENE_SCHEMA)
+    return _kind_pass(media, "video", scenes, SCENE_SCHEMA)
 
 
 # --------------------------------------------- perceptual fingerprints
@@ -606,57 +470,34 @@ def audio_energy_fingerprint(
         # int64 pack rely on
         raise ValueError(f"n_windows must be 65 (64 delta bits), got {n_windows}")
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "afp": [], "afp_bits": [], "error": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _rate, smp = decode_wav(bytes(payload))
-                except (ValueError, NotImplementedError) as e:
-                    if not skip_errors:
-                        raise
-                    out["media_id"].append(int(mid))
-                    out["afp"].append(None)
-                    out["afp_bits"].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}")
-                    continue
-                s = smp.astype(np.int64)
-                n = len(s)
-                sq = s * s  # ≤ 2^30 per sample; cumsum overflows int64
-                # only past ~8.5e9 samples (~2.7 days at 44.1 kHz/clip)
-                csum = np.concatenate(([0], np.cumsum(sq)))
-                lo = (np.arange(n_windows) * n) // n_windows
-                hi = (np.arange(1, n_windows + 1) * n) // n_windows
-                sums = [int(x) for x in csum[hi] - csum[lo]]
-                cnts = [max(int(x), 1) for x in hi - lo]
-                # cross-multiply in PYTHON ints: sum·cnt exceeds int64
-                # once a clip passes ~6M samples (~2 min at 44.1 kHz),
-                # and numpy would wrap silently — 64 comparisons per
-                # clip cost nothing
-                bits = np.array(
-                    [
-                        1 if sums[k + 1] * cnts[k] > sums[k] * cnts[k + 1] else 0
-                        for k in range(64)
-                    ],
-                    dtype=np.uint64,
-                )
-                val = int((bits << np.arange(64, dtype=np.uint64)).sum())
-                if val >= 1 << 63:
-                    val -= 1 << 64
-                out["media_id"].append(int(mid))
-                out["afp"].append(val)
-                out["afp_bits"].append("".join("1" if b else "0" for b in bits))
-                out["error"].append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": out["media_id"],
-                    "afp": pd.Series(out["afp"], dtype="object"),
-                    "afp_bits": out["afp_bits"],
-                    "error": pd.Series(out["error"], dtype="object"),
-                }
-            )
+    def fingerprint(mid, payload):
+        _rate, smp = decode_wav(bytes(payload))
+        s = smp.astype(np.int64)
+        n = len(s)
+        sq = s * s  # ≤ 2^30 per sample; cumsum overflows int64
+        # only past ~8.5e9 samples (~2.7 days at 44.1 kHz/clip)
+        csum = np.concatenate(([0], np.cumsum(sq)))
+        lo = (np.arange(n_windows) * n) // n_windows
+        hi = (np.arange(1, n_windows + 1) * n) // n_windows
+        sums = [int(x) for x in csum[hi] - csum[lo]]
+        cnts = [max(int(x), 1) for x in hi - lo]
+        # cross-multiply in PYTHON ints: sum·cnt exceeds int64
+        # once a clip passes ~6M samples (~2 min at 44.1 kHz),
+        # and numpy would wrap silently — 64 comparisons per
+        # clip cost nothing
+        bits = np.array(
+            [
+                1 if sums[k + 1] * cnts[k] > sums[k] * cnts[k + 1] else 0
+                for k in range(64)
+            ],
+            dtype=np.uint64,
+        )
+        return [(int(mid), *_pack64(bits), None)]
 
-    return media.where(F.col("kind") == "audio").mapInPandas(op, schema=AUDIO_FP_SCHEMA)
+    return _kind_pass(
+        media, "audio", fingerprint, AUDIO_FP_SCHEMA,
+        skip_errors=skip_errors, on_error=_hash_error_row, catch=_DECODE_ERRORS,
+    )
 
 
 def audio_near_pairs(fingerprints: DataFrame, *, max_hamming: int = 3) -> DataFrame:
@@ -704,45 +545,22 @@ def video_temporal_fingerprint(media: DataFrame, *, skip_errors: bool = False) -
     ``skip_errors`` follows the error-ROW contract of
     ``multimodal.image_dhash``."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "vfp": [], "vfp_bits": [], "error": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _w, _h, frames = decode_y4m(bytes(payload))
-                except (ValueError, NotImplementedError) as e:
-                    if not skip_errors:
-                        raise
-                    out["media_id"].append(int(mid))
-                    out["vfp"].append(None)
-                    out["vfp_bits"].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}")
-                    continue
-                sums = np.array(
-                    [np.frombuffer(f, dtype=np.uint8).astype(np.int64).sum() for f in frames],
-                    dtype=np.int64,
-                )
-                deltas = (sums[1:] > sums[:-1]).astype(np.uint64) if len(sums) > 1 else np.array([], dtype=np.uint64)
-                bits = np.zeros(64, dtype=np.uint64)
-                k = min(64, len(deltas))
-                bits[:k] = deltas[:k]
-                val = int((bits << np.arange(64, dtype=np.uint64)).sum())
-                if val >= 1 << 63:
-                    val -= 1 << 64
-                out["media_id"].append(int(mid))
-                out["vfp"].append(val)
-                out["vfp_bits"].append("".join("1" if b else "0" for b in bits))
-                out["error"].append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": out["media_id"],
-                    "vfp": pd.Series(out["vfp"], dtype="object"),
-                    "vfp_bits": out["vfp_bits"],
-                    "error": pd.Series(out["error"], dtype="object"),
-                }
-            )
+    def fingerprint(mid, payload):
+        _w, _h, frames = decode_y4m(bytes(payload))
+        sums = np.array(
+            [np.frombuffer(f, dtype=np.uint8).astype(np.int64).sum() for f in frames],
+            dtype=np.int64,
+        )
+        deltas = (sums[1:] > sums[:-1]).astype(np.uint64) if len(sums) > 1 else np.array([], dtype=np.uint64)
+        bits = np.zeros(64, dtype=np.uint64)
+        k = min(64, len(deltas))
+        bits[:k] = deltas[:k]
+        return [(int(mid), *_pack64(bits), None)]
 
-    return media.where(F.col("kind") == "video").mapInPandas(op, schema=VIDEO_FP_SCHEMA)
+    return _kind_pass(
+        media, "video", fingerprint, VIDEO_FP_SCHEMA,
+        skip_errors=skip_errors, on_error=_hash_error_row, catch=_DECODE_ERRORS,
+    )
 
 
 def video_near_pairs(fingerprints: DataFrame, *, max_hamming: int = 3) -> DataFrame:

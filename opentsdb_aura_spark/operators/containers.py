@@ -18,11 +18,14 @@ digests are recomputable by a DuckDB oracle from the generation rule
 alone — the parse path gets a FULL value-hash oracle, not a
 rows-only check.
 
-Both parsers follow the extract_features skip_errors contract
-(multimodal.py): ``skip_errors=True`` turns a malformed file into an
-error ROW (fields nulled, ``error`` holding the exception text)
-instead of killing the stage — one bad file in a billion costs one
-row.  Default False keeps fail-fast semantics for clean fixtures.
+Both parsers follow the one error-row contract of
+``rowpass.map_rows``: ``skip_errors=True`` turns a malformed file into
+the records parsed before the corruption point plus one error ROW
+(fields nulled, ``error`` holding the exception text) instead of
+killing the stage — one bad file in a billion costs one row.  Default
+False keeps fail-fast semantics for clean fixtures.  Every pass here
+is a front end of ``rowpass.map_rows`` (the record walkers) or
+``rowpass.pack_groups`` (the file writers).
 
 Scale shape: files are opaque binaries read as whole rows (Spark's
 binaryFile source at 100 TB); parsing walks each file ONCE, emits
@@ -42,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from opentsdb_aura_spark.operators.rowpass import map_rows, pack_groups
 from opentsdb_aura_spark.sources.maintenance import new_rows, read_parquet_if_exists
 
 WARC_DATE = "2024-01-01T00:00:00Z"
@@ -311,43 +315,20 @@ def encode_warc_file(
     return b"".join(out)
 
 
-#: chained-Python depth the fixture pipelines reach (build → parse →
-#: http → html): a task running k chained mapInPandas/applyInPandas
-#: nodes holds k Python workers AT ONCE, so spreading the build to a
-#: full ``defaultParallelism`` partitions put k×cores workers on the
-#: box — 4× oversubscription that made every downstream decode stage
-#: SLOWER at 32 cores than at 8 (VERDICT r14's regression cluster:
-#: corpus_warc_typed_records 0.98→5.02 s, c8/c32 ratios 0.10–0.27).
-#: Dividing the spread by the chain depth keeps concurrent workers ≈
-#: cores at ANY core count (measured same-session min-of-3 at sf0.1:
-#: gzip_html_text 1.93→1.02 s, link_density 1.67→1.01 s, ccnet_curate
-#: 5.83→3.64 s, typed_records 0.86→0.58 s vs the full spread — and
-#: spread=1, the pre-r14 AQE collapse, is 2× worse again).
-_CHAIN_DEPTH = 4
+#: the (file_id, content) frame every container writer returns
+_FILE_SCHEMA = "file_id long, content binary"
 
 
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Pin the fixture-build shuffle to ``defaultParallelism /
-    _CHAIN_DEPTH`` partitions hashed on ``key``.  The
-    groupBy→applyInPandas build that follows requires exactly this
-    hash distribution, so no extra exchange is added — but the
-    EXPLICIT partition count opts the one exchange out of AQE
-    partition coalescing.  That matters because the synthetic
-    container files are kilobytes: AQE's byte-based targets collapse
-    them to a single post-shuffle partition, and since every
-    downstream decode pass (mapInPandas / mapInArrow) is narrow, the
-    whole encode→parse→extract chain then runs on ONE task regardless
-    of cores (observed: 8-9 s single-task stages in
-    pipeline_ccnet_curate).  Each row here costs a full Python
-    encode + parse chain — orders of magnitude more per byte than
-    AQE's heuristic assumes (guide §2.5: input skew is fixed at the
-    source).  A real .warc.gz scan gets its parallelism from
-    maxPartitionBytes file splits instead; the divided spread is the
-    worker-per-core parallelism such a scan's chained decode would
-    want (see _CHAIN_DEPTH)."""
-    sc = df.sparkSession.sparkContext
-    n = max(1, sc.defaultParallelism // _CHAIN_DEPTH)
-    return df.repartition(n, F.col(key))
+def _by_file(docs: DataFrame, docs_per_file: int, id_col: str, text_col: str, *more) -> DataFrame:
+    """(file_id, _id, _text, *more) rows of a documents frame, file_id
+    = doc_id DIV docs_per_file — the grouping rule every document-keyed
+    writer packs by."""
+    return docs.select(
+        F.expr(f"CAST(`{id_col}` DIV {int(docs_per_file)} AS LONG)").alias("file_id"),  # integer DIV: double division drifts above 2^53 doc ids
+        F.col(id_col).cast("long").alias("_id"),
+        F.col(text_col).alias("_text"),
+        *more,
+    )
 
 
 def synthesize_warc(
@@ -373,21 +354,15 @@ def synthesize_warc(
     doc_id // docs_per_file, records ordered by doc_id inside each
     file (``gzip_records`` for the production .warc.gz member-per-
     record layout; ``http_envelope``/``html_body`` per
-    :func:`encode_warc_file`).  One applyInPandas per file group —
+    :func:`encode_warc_file`).  One file pack per file group —
     the build shuffles each doc once to its file and writes it once.
     Returns (file_id long, content binary)."""
-    grouped = docs.select(
-        F.expr(f"CAST(`{id_col}` DIV {int(docs_per_file)} AS LONG)").alias("file_id"),  # integer DIV: double division drifts above 2^53 doc ids
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(text_col).alias("_text"),
-    )
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_id")
-        fid = int(pdf["file_id"].iloc[0])
+    def encode(fid, docs):
+        fid = int(fid)
         content = encode_warc_file(
             fid,
-            list(zip(pdf["_id"], pdf["_text"])),
+            docs,
             gzip_records=gzip_records,
             http_envelope=http_envelope,
             html_body=html_body,
@@ -401,9 +376,9 @@ def synthesize_warc(
             metadata_records=metadata_records,
             resource_records=resource_records,
         )
-        return pd.DataFrame({"file_id": [fid], "content": [content]})
+        return [(fid, content)]
 
-    return _spread(grouped, "file_id").groupBy("file_id").applyInPandas(build, "file_id long, content binary")
+    return pack_groups(_by_file(docs, docs_per_file, id_col, text_col), "file_id", "_id", encode, _FILE_SCHEMA)
 
 
 # ------------------------------------------------------------------ WARC parse
@@ -516,46 +491,44 @@ def warc_records(
     survives, the row carries the diagnosis).  ``with_payload`` adds
     the raw payload bytes column — the form downstream decode / dedup
     stages consume (header-only scans leave it off and stay narrow)."""
-    cols = [
-        "file_id",
-        "offset",
-        "record_length",
-        "warc_type",
-        "record_id",
-        "target_uri",
-        "content_length",
-        "payload_md5",
-        "concurrent_to",
-        "refers_to",
-        "profile",
-        "truncated",
-        "warc_date",
-        "error",
-    ]
-    if with_payload:
-        cols = cols + ["payload"]
+    return _walk_files(
+        files, _parse_warc_any, WARC_RECORD_SCHEMA, skip_errors=skip_errors, with_payload=with_payload
+    )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fid, data in zip(pdf["file_id"], pdf["content"]):
-                fid = int(fid)
-                blob = bytes(data)
-                # gzip magic → .warc.gz member walk, else plain WARC
-                walk = _parse_warc_gz_bytes if blob[:2] == b"\x1f\x8b" else _parse_warc_bytes
-                try:
-                    for rec in walk(blob):
-                        row = (fid, *rec[:-1], None)
-                        rows.append(row + (rec[-1],) if with_payload else row)
-                except Exception as exc:  # noqa: BLE001 — crawl-grade per-file containment
-                    if not skip_errors:
-                        raise
-                    err = (fid,) + (None,) * 12 + (str(exc),)
-                    rows.append(err + (None,) if with_payload else err)
-            yield pd.DataFrame(rows, columns=cols)
 
-    return files.mapInPandas(
-        op, schema=WARC_RECORD_PAYLOAD_SCHEMA if with_payload else WARC_RECORD_SCHEMA
+def _parse_warc_any(blob: bytes) -> Iterator[tuple]:
+    # gzip magic → .warc.gz member walk, else plain WARC
+    walk = _parse_warc_gz_bytes if blob[:2] == b"\x1f\x8b" else _parse_warc_bytes
+    return walk(blob)
+
+
+def _walk_files(
+    files: DataFrame, parse, schema: str, *, skip_errors: bool, with_payload: bool
+) -> DataFrame:
+    """The container walkers' one pass: ``parse(blob)`` yields
+    (*fields, payload) per record of one (file_id, content) file; rows
+    are (file_id, *fields, error[, payload]).  A malformed file keeps
+    the records parsed before the corruption point and adds one error
+    row (crawl-grade per-file containment, ``rowpass.map_rows``)."""
+    n_fields = len(schema.split(", ")) - 2  # between file_id and error
+
+    def walk(fid, data):
+        fid = int(fid)
+        for *rec, payload in parse(bytes(data)):
+            row = (fid, *rec, None)
+            yield row + (payload,) if with_payload else row
+
+    def error_row(row, exc):
+        err = (int(row[0]),) + (None,) * n_fields + (str(exc),)
+        return err + (None,) if with_payload else err
+
+    return map_rows(
+        files,
+        walk,
+        schema + ", payload binary" if with_payload else schema,
+        cols=("file_id", "content"),
+        skip_errors=skip_errors,
+        on_error=error_row,
     )
 
 
@@ -605,19 +578,14 @@ def warc_fields(records: DataFrame) -> DataFrame:
         "file_id", "record_id", "warc_type", "payload"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fid, rid, wt, payload in zip(
-                pdf["file_id"], pdf["record_id"], pdf["warc_type"], pdf["payload"]
-            ):
-                for pos, (k, v) in enumerate(parse_warc_fields(bytes(payload))):
-                    rows.append((int(fid), rid, wt, pos, k, v))
-            yield pd.DataFrame(
-                rows, columns=["file_id", "record_id", "warc_type", "pos", "field", "value"]
-            )
+    def fields(fid, rid, wt, payload):
+        fid = int(fid)
+        return [
+            (fid, rid, wt, pos, k, v)
+            for pos, (k, v) in enumerate(parse_warc_fields(bytes(payload)))
+        ]
 
-    return slim.mapInPandas(op, schema=WARC_FIELDS_SCHEMA)
+    return map_rows(slim, fields, WARC_FIELDS_SCHEMA)
 
 
 # ------------------------------------------------------------------- TAR build
@@ -669,21 +637,12 @@ def synthesize_tar(
     rule as :func:`synthesize_warc` (``gzip_stream`` wraps each
     archive in one deterministic gzip stream, the .tar.gz shape).
     Returns (file_id, content)."""
-    grouped = docs.select(
-        F.expr(f"CAST(`{id_col}` DIV {int(docs_per_file)} AS LONG)").alias("file_id"),  # integer DIV: double division drifts above 2^53 doc ids
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(text_col).alias("_text"),
-    )
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_id")
-        fid = int(pdf["file_id"].iloc[0])
-        content = encode_tar_file(list(zip(pdf["_id"], pdf["_text"])))
-        if gzip_stream:
-            content = _gzip_member(content)
-        return pd.DataFrame({"file_id": [fid], "content": [content]})
+    def encode(fid, docs):
+        content = encode_tar_file(docs)
+        return [(int(fid), _gzip_member(content) if gzip_stream else content)]
 
-    return _spread(grouped, "file_id").groupBy("file_id").applyInPandas(build, "file_id long, content binary")
+    return pack_groups(_by_file(docs, docs_per_file, id_col, text_col), "file_id", "_id", encode, _FILE_SCHEMA)
 
 
 # ------------------------------------------------------------------- TAR parse
@@ -736,34 +695,17 @@ def tar_members(
     """1→many member extraction over (file_id, content) TAR archives —
     same contract as :func:`warc_records` (per-file containment under
     ``skip_errors``, optional payload column for downstream stages)."""
-    cols = ["file_id", "offset", "name", "size", "mtime", "typeflag", "payload_md5", "error"]
-    if with_payload:
-        cols = cols + ["payload"]
+    return _walk_files(
+        files, _parse_tar_any, TAR_MEMBER_SCHEMA, skip_errors=skip_errors, with_payload=with_payload
+    )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _parse_tar_any(blob: bytes) -> Iterator[tuple]:
+    if blob[:2] == b"\x1f\x8b":  # .tar.gz: whole-stream gzip
         import zlib
 
-        for pdf in batches:
-            rows = []
-            for fid, data in zip(pdf["file_id"], pdf["content"]):
-                fid = int(fid)
-                blob = bytes(data)
-                try:
-                    if blob[:2] == b"\x1f\x8b":  # .tar.gz: whole-stream gzip
-                        blob = zlib.decompress(blob, 16 + zlib.MAX_WBITS)
-                    for rec in _parse_tar_bytes(blob):
-                        row = (fid, *rec[:-1], None)
-                        rows.append(row + (rec[-1],) if with_payload else row)
-                except Exception as exc:  # noqa: BLE001 — crawl-grade per-file containment
-                    if not skip_errors:
-                        raise
-                    err = (fid, None, None, None, None, None, None, str(exc))
-                    rows.append(err + (None,) if with_payload else err)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(
-        op, schema=TAR_MEMBER_PAYLOAD_SCHEMA if with_payload else TAR_MEMBER_SCHEMA
-    )
+        blob = zlib.decompress(blob, 16 + zlib.MAX_WBITS)
+    return _parse_tar_bytes(blob)
 
 
 # ------------------------------------------------- HTTP response envelope
@@ -950,32 +892,20 @@ def http_requests(records: DataFrame, *, skip_errors: bool = False) -> DataFrame
     if "error" in records.columns:
         records = records.where(F.col("error").isNull())
     proj = records.select("file_id", "record_id", "concurrent_to", "target_uri", "payload")
-    cols = [
-        "file_id", "record_id", "concurrent_to", "target_uri",
-        "method", "req_target", "http_version", "host", "user_agent",
-        "n_headers", "error",
-    ]
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fid, rid, cto, uri, payload in zip(
-                pdf["file_id"], pdf["record_id"], pdf["concurrent_to"],
-                pdf["target_uri"], pdf["payload"],
-            ):
-                fid = int(fid)
-                try:
-                    if payload is None:
-                        raise ValueError("record has no payload (re-read with_payload=True)")
-                    method, tgt, ver, host, ua, nh = _parse_http_request(bytes(payload))
-                    rows.append((fid, rid, cto, uri, method, tgt, ver, host, ua, nh, None))
-                except Exception as exc:  # noqa: BLE001 — crawl-grade per-record containment
-                    if not skip_errors:
-                        raise
-                    rows.append((fid, rid, cto, uri) + (None,) * 6 + (str(exc),))
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(fid, rid, cto, uri, payload):
+        return [(int(fid), rid, cto, uri, *_parse_http_request(_payload_bytes(payload)), None)]
 
-    return proj.mapInPandas(op, schema=HTTP_REQUEST_SCHEMA)
+    def error_row(row, exc):
+        return (int(row[0]), *row[1:4]) + (None,) * 6 + (str(exc),)
+
+    return map_rows(proj, parse, HTTP_REQUEST_SCHEMA, skip_errors=skip_errors, on_error=error_row)
+
+
+def _payload_bytes(payload) -> bytes:
+    if payload is None:
+        raise ValueError("record has no payload (re-read with_payload=True)")
+    return bytes(payload)
 
 
 def _dechunk(data: bytes) -> bytes:
@@ -1304,74 +1234,36 @@ def http_responses(
         raise ValueError(f"extra_cols collide with output columns: {sorted(clash)}")
     # "payload" as an extra col (a revisit-dedup writer needs the raw
     # envelope bytes back) must not re-select the already-projected
-    # input column — dedupe, the zip below reads it by name either way
+    # input column — dedupe; the passthrough columns follow the
+    # projection's order, payload first when it is one of them
     proj = records.select(
         "file_id", "record_id", "target_uri", "payload",
         *[c for c in extra_cols if c != "payload"],
     )
-    extra_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in proj.schema.fields
-        if f.name in extra_cols
-    )
+    extras = [f for f in proj.schema.fields if f.name in extra_cols]
+    extra_schema = "".join(f", {f.name} {f.dataType.simpleString()}" for f in extras)
 
-    cols = [
-        "file_id",
-        "record_id",
-        "target_uri",
-        "http_version",
-        "status_code",
-        "reason",
-        "content_type",
-        "charset",
-        "content_encoding",
-        "chunked",
-        "content_length",
-        "n_headers",
-        "location",
-        "etag",
-        "last_modified",
-        "retry_after",
-        "body_md5",
-        "error",
-    ]
-    if with_body:
-        cols = cols + ["body"]
-    cols = cols + list(extra_cols)
+    def parse(fid, rid, uri, payload, *extras):
+        *head, body = _parse_http_response(
+            _payload_bytes(payload), max_inflated_bytes=max_inflated_bytes
+        )
+        row = (int(fid), rid, uri, *head, hashlib.md5(body).hexdigest(), None)
+        return [(row + (body,) if with_body else row) + extras]
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fid, rid, uri, payload, *extras in zip(
-                pdf["file_id"], pdf["record_id"], pdf["target_uri"], pdf["payload"],
-                *(pdf[c] for c in extra_cols),
-            ):
-                fid = int(fid)
-                extras = tuple(extras)
-                try:
-                    if payload is None:
-                        raise ValueError("record has no payload (re-read with_payload=True)")
-                    (ver, code, reason, ctype, cset, cenc, chunked, clen,
-                     nh, loc, etag, lmod, retry_after, body) = (
-                        _parse_http_response(
-                            bytes(payload), max_inflated_bytes=max_inflated_bytes
-                        )
-                    )
-                    row = (
-                        fid, rid, uri, ver, code, reason, ctype, cset, cenc,
-                        chunked, clen, nh, loc, etag, lmod, retry_after,
-                        hashlib.md5(body).hexdigest(), None,
-                    )
-                    rows.append((row + (body,) if with_body else row) + extras)
-                except Exception as exc:  # noqa: BLE001 — crawl-grade per-record containment
-                    if not skip_errors:
-                        raise
-                    err = (fid, rid, uri) + (None,) * 14 + (str(exc),)
-                    rows.append((err + (None,) if with_body else err) + extras)
-            yield pd.DataFrame(rows, columns=cols)
+    def error_row(row, exc):
+        fid, rid, uri, _payload, *extras = row
+        err = (int(fid), rid, uri) + (None,) * 14 + (str(exc),)
+        return (err + (None,) if with_body else err) + tuple(extras)
 
     base_schema = HTTP_RESPONSE_BODY_SCHEMA if with_body else HTTP_RESPONSE_SCHEMA
-    return proj.mapInPandas(op, schema=base_schema + extra_schema)
+    return map_rows(
+        proj,
+        parse,
+        base_schema + extra_schema,
+        cols=("file_id", "record_id", "target_uri", "payload", *(f.name for f in extras)),
+        skip_errors=skip_errors,
+        on_error=error_row,
+    )
 
 
 # ------------------------------------------------------------- WET text sink
@@ -1395,7 +1287,7 @@ def write_wet_files(
     this repo's own ``warc_records``) already read — the round trip
     is value-hash-oracled in ``corpus_wet_roundtrip``.
 
-    Same shape as :func:`synthesize_warc`: one applyInPandas per file
+    Same shape as :func:`synthesize_warc`: one file pack per file
     group keyed on ``doc_id DIV docs_per_file``, returns
     (file_id long, content binary) for the caller to write (e.g.
     ``.write.parquet`` or per-file blob upload).  ``uri_col``
@@ -1404,28 +1296,21 @@ def write_wet_files(
         # DIV 0 would NULL every file_id and misfire the NULL-doc_id
         # guard below with a misleading message (review r9)
         raise ValueError(f"write_wet_files: docs_per_file must be >= 1, got {docs_per_file}")
-    cols = [
-        F.expr(f"CAST(`{id_col}` DIV {int(docs_per_file)} AS LONG)").alias("file_id"),
-        F.col(id_col).cast("long").alias("_id"),
-        F.col(text_col).alias("_text"),
-    ]
-    cols.append(
-        F.col(uri_col).alias("_uri")
+    uri = (
+        F.col(uri_col)
         if uri_col is not None
-        else F.concat(F.lit("http://example.com/doc/"), F.col(id_col).cast("long")).alias("_uri")
+        else F.concat(F.lit("http://example.com/doc/"), F.col(id_col).cast("long"))
     )
-    grouped = texts.select(*cols)
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["file_id"].isna().any():
+    def encode(fid, docs):
+        if pd.isna(fid):
             # NULL doc_id → NaN file_id → int() would die opaquely
             # mid-export; fail at the API boundary with the fix
             raise ValueError(
                 "write_wet_files: NULL doc_id rows in input — filter them or "
                 "repair the id derivation upstream (e.g. try_cast fallout)"
             )
-        pdf = pdf.sort_values("_id")
-        fid = int(pdf["file_id"].iloc[0])
+        fid = int(fid)
         out = [
             encode_warc_record(
                 "warcinfo",
@@ -1434,7 +1319,7 @@ def write_wet_files(
                 content_type="application/warc-fields",
             )
         ]
-        for doc_id, text, uri in zip(pdf["_id"], pdf["_text"], pdf["_uri"]):
+        for doc_id, text, uri in docs:
             out.append(
                 encode_warc_record(
                     "conversion",
@@ -1444,9 +1329,10 @@ def write_wet_files(
                     content_type="text/plain",
                 )
             )
-        return pd.DataFrame({"file_id": [fid], "content": [b"".join(out)]})
+        return [(fid, b"".join(out))]
 
-    return _spread(grouped, "file_id").groupBy("file_id").applyInPandas(build, "file_id long, content binary")
+    grouped = _by_file(texts, docs_per_file, id_col, text_col, uri.alias("_uri"))
+    return pack_groups(grouped, "file_id", "_id", encode, _FILE_SCHEMA)
 
 
 # -------------------------------------------------------------- URL curation
@@ -1618,14 +1504,9 @@ def write_revisit_warc_files(
         F.col("payload").alias("_payload"),
     ).where(F.col("_id").isNotNull())
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_off")
-        fid = int(pdf["file_id"].iloc[0])
+    def encode(fid, records):
         out = []
-        for _off, rid, uri, digest, orig, payload in zip(
-            pdf["_off"], pdf["_id"], pdf["_uri"], pdf["_digest"],
-            pdf["_orig"], pdf["_payload"],
-        ):
+        for _off, rid, uri, digest, orig, payload in records:
             uri = None if uri is None else str(uri)
             if orig is None:
                 out.append(
@@ -1646,9 +1527,9 @@ def write_revisit_warc_files(
                         payload_digest=f"md5:{digest}",
                     )
                 )
-        return pd.DataFrame({"file_id": [fid], "content": [b"".join(out)]})
+        return [(int(fid), b"".join(out))]
 
-    return _spread(slim, "file_id").groupBy("file_id").applyInPandas(build, "file_id long, content binary")
+    return pack_groups(slim, "file_id", "_off", encode, _FILE_SCHEMA)
 
 
 def resolve_revisits(records: DataFrame) -> DataFrame:
@@ -2104,29 +1985,18 @@ def write_zipnum_cdx(
         _cdx_line_expr().alias("line"),
     )
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["urlkey", "_rec_off"])
-        shard = int(pdf["shard_id"].iloc[0])
-        lines = pdf["line"].tolist()
-        keys = pdf["urlkey"].tolist()
-        tss = pdf["cdx_ts"].tolist()
+    def encode(shard, cdx_lines):
+        shard = int(shard)
         out = []
         off = 0
-        for b, start in enumerate(range(0, len(lines), n)):
-            chunk = "\n".join(lines[start : start + n]) + "\n"
-            gz = _gzip_member(chunk.encode())
-            out.append(
-                (shard, b, keys[start], tss[start], off, len(gz),
-                 len(lines[start : start + n]), gz)
-            )
+        for b, start in enumerate(range(0, len(cdx_lines), n)):
+            block = cdx_lines[start : start + n]
+            gz = _gzip_member(("\n".join(r[3] for r in block) + "\n").encode())
+            out.append((shard, b, block[0][0], block[0][1], off, len(gz), len(block), gz))
             off += len(gz)
-        return pd.DataFrame(
-            out,
-            columns=["shard_id", "block_idx", "first_urlkey", "first_ts",
-                     "offset", "length", "n_lines", "content"],
-        )
+        return out
 
-    return _spread(rows, "shard_id").groupBy("shard_id").applyInPandas(build, ZIPNUM_BLOCK_SCHEMA)
+    return pack_groups(rows, "shard_id", ["urlkey", "_rec_off"], encode, ZIPNUM_BLOCK_SCHEMA)
 
 
 def zipnum_idx(blocks: DataFrame) -> DataFrame:
@@ -2144,14 +2014,10 @@ def zipnum_shard_files(blocks: DataFrame) -> DataFrame:
     yields the sorted CDXJ lines).  Returns (shard_id, content)."""
     slim = blocks.select("shard_id", "block_idx", "content")
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("block_idx")
-        return pd.DataFrame(
-            {"shard_id": [int(pdf["shard_id"].iloc[0])],
-             "content": [b"".join(bytes(c) for c in pdf["content"])]}
-        )
+    def encode(shard, blocks):
+        return [(int(shard), b"".join(bytes(c) for _b, c in blocks))]
 
-    return _spread(slim, "shard_id").groupBy("shard_id").applyInPandas(build, "shard_id long, content binary")
+    return pack_groups(slim, "shard_id", "block_idx", encode, "shard_id long, content binary")
 
 
 def zipnum_candidate_blocks(
@@ -2244,29 +2110,25 @@ def zipnum_lookup(
         "offset long, length long, record_id string"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def seek(off, ln, plist, content):
         import zlib
 
-        for pdf in batches:
-            rows = []
-            for shard, off, ln, plist, content in zip(
-                pdf["shard_id"], pdf["offset"], pdf["length"], pdf["_probes"], pdf["content"]
-            ):
-                gz = bytes(content)[int(off) : int(off) + int(ln)]
-                text = zlib.decompress(gz, 16 + zlib.MAX_WBITS).decode()
-                want = set(plist)
-                for line in text.splitlines():
-                    key, _, rest = line.partition(" ")
-                    key = (
-                        key.replace("%0D", "\r").replace("%0A", "\n")
-                        .replace("%20", " ").replace("%25", "%")
-                    )
-                    if key in want:
-                        ts, _, js = rest.partition(" ")
-                        rows.append((key, ts, js))
-            yield pd.DataFrame(rows, columns=["urlkey", "cdx_ts", "_json"])
+        gz = bytes(content)[int(off) : int(off) + int(ln)]
+        want = set(plist)
+        for line in zlib.decompress(gz, 16 + zlib.MAX_WBITS).decode().splitlines():
+            key, _, rest = line.partition(" ")
+            key = (
+                key.replace("%0D", "\r").replace("%0A", "\n")
+                .replace("%20", " ").replace("%25", "%")
+            )
+            if key in want:
+                ts, _, js = rest.partition(" ")
+                yield (key, ts, js)
 
-    hits = opened.mapInPandas(op, schema="urlkey string, cdx_ts string, _json string")
+    hits = map_rows(
+        opened, seek, "urlkey string, cdx_ts string, _json string",
+        cols=("offset", "length", "_probes", "content"),
+    )
     parsed = hits.select(
         "urlkey", "cdx_ts", F.from_json(F.col("_json"), json_schema).alias("j")
     )
@@ -2477,7 +2339,7 @@ def write_wat_files(
     The JSON payload is built JVM-side with ``to_json`` over
     ``meta_cols`` (field order = tuple order, the deterministic form
     the round-trip oracle reconstructs in SQL); the per-file packing
-    is the WET sink's applyInPandas shape — one shuffle on file_id.
+    is the WET sink's file pack — one shuffle on file_id.
     Returns (file_id long, content binary)."""
     wat_id = F.concat(
         F.lit("urn:uuid:wat-"),
@@ -2490,9 +2352,8 @@ def write_wat_files(
         F.to_json(F.struct(*[F.col(c) for c in meta_cols])).alias("_json"),
     ).where(F.col("_id").isNotNull())  # a NULL capture id would stringify as junk
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_id")
-        fid = int(pdf["file_id"].iloc[0])
+    def encode(fid, captures):
+        fid = int(fid)
         out = [
             encode_warc_record(
                 "warcinfo",
@@ -2501,7 +2362,7 @@ def write_wat_files(
                 content_type="application/warc-fields",
             )
         ]
-        for rid, uri, js in zip(pdf["_id"], pdf["_uri"], pdf["_json"]):
+        for rid, uri, js in captures:
             out.append(
                 encode_warc_record(
                     "metadata",
@@ -2511,9 +2372,9 @@ def write_wat_files(
                     content_type="application/json",
                 )
             )
-        return pd.DataFrame({"file_id": [fid], "content": [b"".join(out)]})
+        return [(fid, b"".join(out))]
 
-    return _spread(grouped, "file_id").groupBy("file_id").applyInPandas(build, "file_id long, content binary")
+    return pack_groups(grouped, "file_id", "_id", encode, _FILE_SCHEMA)
 
 
 def resolve_href(base, href):

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from opentsdb_aura_spark.operators.containers import _CHAIN_DEPTH
+from opentsdb_aura_spark.operators.rowpass import _CHAIN_DEPTH
 from opentsdb_aura_spark.sources.maintenance import new_rows, read_parquet_if_exists
 
 
@@ -55,7 +55,7 @@ def _spread(df: DataFrame, depth: int = _CHAIN_DEPTH) -> DataFrame:
     and the explode would run on a single core; the fix is a cheap
     round-robin repartition of the doc rows.  Target is
     defaultParallelism/``depth``.  The default depth,
-    containers._CHAIN_DEPTH, is the width this helper gives
+    rowpass._CHAIN_DEPTH, is the width this helper gives
     queries.base.docs(), whose frames arrive here already that wide (a
     larger target would re-shuffle them right back to full width,
     undoing the measured task-launch win; see base.docs for the

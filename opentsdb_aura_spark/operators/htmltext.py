@@ -20,13 +20,13 @@ the exact extracted title/text/block-counts from the generation rule
 alone — the extractor is value-hash-checked end to end, including
 through the WARC → HTTP → HTML composition.
 
-Scale shape: one Arrow-batched 1→1 pass (mapInPandas), no shuffle,
+Scale shape: one Arrow-batched 1→1 pass (``rowpass.map_rows``), no shuffle,
 no state across rows — embarrassingly parallel by document, the same
 posture as the container parsers.  Regex-based extraction is the
 documented boundary: attribute values containing ``>`` and unclosed
 tag soup degrade gracefully (extra/missing block splits) but are not
 spec-parsed; a production deployment can swap a real parser into the
-same mapInPandas seam without touching the plan shape.
+same row-pass seam without touching the plan shape.
 
 The reference has no HTML path at all (extension surface per the
 driver's brief).
@@ -36,12 +36,11 @@ from __future__ import annotations
 
 import html as _htmllib
 import re
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from opentsdb_aura_spark.operators.rowpass import map_rows
 
 # Tags that end a text block (HTML5 flow-content boundaries).  <br>
 # and <hr> count: they break lines visually, so they bound blocks for
@@ -297,23 +296,47 @@ def html_to_text(
     being blind-cast as UTF-8 (NULL charset defaults to utf-8;
     unknown labels fall back with replacement, see
     :func:`_decode_page`)."""
+    thr = float(boilerplate_threshold)
+    return _page_pass(
+        pages, html_col, keep_cols, charset_col,
+        ["title string", "text string", "n_blocks int", "n_boilerplate int",
+         "link_chars long", "text_chars long"],
+        lambda src: [extract_html_text(src, boilerplate_threshold=thr)],
+        null_row=(None, None, 0, 0, 0, 0),
+    )
+
+
+def _keep_fields(pages: DataFrame, keep_cols, charset_col: str | None) -> dict:
+    """``{name: simpleString type}`` of a pages frame, after checking
+    that every ``keep_cols`` entry and ``charset_col`` exist — the
+    API-boundary check of every page pass (a missing column fails
+    here, not as an AnalysisException deep in the plan)."""
     in_fields = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
     missing = [c for c in keep_cols if c not in in_fields]
     if missing:
         raise ValueError(f"keep_cols not in input: {missing}")
     if charset_col is not None and charset_col not in in_fields:
         raise ValueError(f"charset_col not in input: {charset_col}")
-    out_schema = ", ".join(
-        [f"{c} {in_fields[c]}" for c in keep_cols]
-        + [
-            "title string",
-            "text string",
-            "n_blocks int",
-            "n_boilerplate int",
-            "link_chars long",
-            "text_chars long",
-        ]
-    )
+    return in_fields
+
+
+def _page_pass(
+    pages: DataFrame,
+    html_col: str,
+    keep_cols: tuple[str, ...],
+    charset_col: str | None,
+    out_fields: list[str],
+    extract,
+    *,
+    null_row: tuple | None = None,
+) -> DataFrame:
+    """The page passes' one prelude and row function: keep_cols + the
+    html column (BYTES decoded per row with the ``charset_col`` label
+    when given, else cast to string) → keep_cols + ``out_fields``, one
+    row per tuple ``extract(src)`` returns.  NULL html yields
+    ``null_row`` (or no row) — containment happened upstream."""
+    in_fields = _keep_fields(pages, keep_cols, charset_col)
+    out_schema = ", ".join([f"{c} {in_fields[c]}" for c in keep_cols] + out_fields)
     if charset_col is None:
         proj = pages.select(*keep_cols, F.col(html_col).cast("string").alias("_html"))
     else:
@@ -322,30 +345,17 @@ def html_to_text(
             F.col(charset_col).cast("string").alias("_charset"),
             F.col(html_col).cast("binary").alias("_html"),
         )
-    thr = float(boilerplate_threshold)
-    with_charset = charset_col is not None
-    out_cols = list(keep_cols) + [
-        "title", "text", "n_blocks", "n_boilerplate", "link_chars", "text_chars",
-    ]
+    n_keys = len(keep_cols)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf.itertuples(index=False):
-                if with_charset:
-                    *keys, charset, src = tup
-                else:
-                    *keys, src = tup
-                    charset = None
-                if src is None:
-                    rows.append((*keys, None, None, 0, 0, 0, 0))
-                    continue
-                if with_charset:
-                    src = _decode_page(src, charset)
-                rows.append((*keys, *extract_html_text(src, boilerplate_threshold=thr)))
-            yield pd.DataFrame(rows, columns=out_cols)
+    def page(*row):
+        keys, src = row[:n_keys], row[-1]
+        if src is None:
+            return [] if null_row is None else [(*keys, *null_row)]
+        if charset_col is not None:
+            src = _decode_page(src, row[n_keys])
+        return [(*keys, *r) for r in extract(src)]
 
-    return proj.mapInPandas(op, schema=out_schema)
+    return map_rows(proj, page, out_schema)
 
 
 _RE_A_TAG = re.compile(r"(?is)(<a\b[^>]*>)(.*?)</a\s*>")
@@ -444,43 +454,12 @@ def html_page_directives(
     page: keep_cols + (canonical_href string, noindex boolean,
     nofollow boolean).  NULL html yields a no-directive row shape
     (NULL/False/False).  Same charset seam as the other page passes."""
-    in_fields = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
-    missing = [c for c in keep_cols if c not in in_fields]
-    if missing:
-        raise ValueError(f"keep_cols not in input: {missing}")
-    out_schema = ", ".join(
-        [f"{c} {in_fields[c]}" for c in keep_cols]
-        + ["canonical_href string", "noindex boolean", "nofollow boolean"]
+    return _page_pass(
+        pages, html_col, keep_cols, charset_col,
+        ["canonical_href string", "noindex boolean", "nofollow boolean"],
+        lambda src: [extract_page_directives(src)],
+        null_row=(None, False, False),
     )
-    if charset_col is None:
-        proj = pages.select(*keep_cols, F.col(html_col).cast("string").alias("_html"))
-    else:
-        proj = pages.select(
-            *keep_cols,
-            F.col(charset_col).cast("string").alias("_charset"),
-            F.col(html_col).cast("binary").alias("_html"),
-        )
-    with_charset = charset_col is not None
-    out_cols = list(keep_cols) + ["canonical_href", "noindex", "nofollow"]
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf.itertuples(index=False):
-                if with_charset:
-                    *keys, charset, src = tup
-                else:
-                    *keys, src = tup
-                    charset = None
-                if src is None:
-                    rows.append((*keys, None, False, False))
-                    continue
-                if with_charset:
-                    src = _decode_page(src, charset)
-                rows.append((*keys, *extract_page_directives(src)))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return proj.mapInPandas(op, schema=out_schema)
 
 
 def extract_feed_links(src: str) -> list:
@@ -525,43 +504,11 @@ def html_feed_links(
     page: keep_cols + (feed_href string, feed_kind string), one row
     per discovered feed in document order.  NULL html yields no rows.
     Same charset seam as the other page passes."""
-    in_fields = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
-    missing = [c for c in keep_cols if c not in in_fields]
-    if missing:
-        raise ValueError(f"keep_cols not in input: {missing}")
-    out_schema = ", ".join(
-        [f"{c} {in_fields[c]}" for c in keep_cols]
-        + ["feed_href string", "feed_kind string"]
+    return _page_pass(
+        pages, html_col, keep_cols, charset_col,
+        ["feed_href string", "feed_kind string"],
+        extract_feed_links,
     )
-    if charset_col is None:
-        proj = pages.select(*keep_cols, F.col(html_col).cast("string").alias("_html"))
-    else:
-        proj = pages.select(
-            *keep_cols,
-            F.col(charset_col).cast("string").alias("_charset"),
-            F.col(html_col).cast("binary").alias("_html"),
-        )
-    with_charset = charset_col is not None
-    out_cols = list(keep_cols) + ["feed_href", "feed_kind"]
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf.itertuples(index=False):
-                if with_charset:
-                    *keys, charset, src = tup
-                else:
-                    *keys, src = tup
-                    charset = None
-                if src is None:
-                    continue
-                if with_charset:
-                    src = _decode_page(src, charset)
-                for href, kind in extract_feed_links(src):
-                    rows.append((*keys, href, kind))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return proj.mapInPandas(op, schema=out_schema)
 
 
 def html_links(
@@ -584,47 +531,17 @@ def html_links(
     page decodes once).  The frontier feed: at
     100 TB this is the narrow pass whose output joins the URL-dedup
     canonicalizer to schedule the next crawl wave."""
-    in_fields = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
-    missing = [c for c in keep_cols if c not in in_fields]
-    if missing:
-        raise ValueError(f"keep_cols not in input: {missing}")
-    if charset_col is not None and charset_col not in in_fields:
-        raise ValueError(f"charset_col not in input: {charset_col}")
-    out_schema = ", ".join(
-        [f"{c} {in_fields[c]}" for c in keep_cols]
-        + ["link_idx int", "href string", "anchor_text string", "nofollow boolean"]
+
+    def links(src):
+        if respect_meta_nofollow and extract_page_directives(src)[2]:
+            return []  # page-level robots nofollow: no links vote or follow
+        return extract_links(src)
+
+    return _page_pass(
+        pages, html_col, keep_cols, charset_col,
+        ["link_idx int", "href string", "anchor_text string", "nofollow boolean"],
+        links,
     )
-    if charset_col is None:
-        proj = pages.select(*keep_cols, F.col(html_col).cast("string").alias("_html"))
-    else:
-        proj = pages.select(
-            *keep_cols,
-            F.col(charset_col).cast("string").alias("_charset"),
-            F.col(html_col).cast("binary").alias("_html"),
-        )
-    with_charset = charset_col is not None
-    out_cols = list(keep_cols) + ["link_idx", "href", "anchor_text", "nofollow"]
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf.itertuples(index=False):
-                if with_charset:
-                    *keys, charset, src = tup
-                else:
-                    *keys, src = tup
-                    charset = None
-                if src is None:
-                    continue
-                if with_charset:
-                    src = _decode_page(src, charset)
-                if respect_meta_nofollow and extract_page_directives(src)[2]:
-                    continue  # page-level robots nofollow: no links vote or follow
-                for ln in extract_links(src):
-                    rows.append((*keys, *ln))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return proj.mapInPandas(op, schema=out_schema)
 
 
 def html_to_blocks(
@@ -643,41 +560,13 @@ def html_to_blocks(
     keep_cols + (block_idx int, block_text string, n_words int,
     link_chars long, text_chars long, link_density double,
     is_boilerplate boolean)."""
-    in_fields = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
-    missing = [c for c in keep_cols if c not in in_fields]
-    if missing:
-        raise ValueError(f"keep_cols not in input: {missing}")
-    out_schema = ", ".join(
-        [f"{c} {in_fields[c]}" for c in keep_cols]
-        + [
-            "block_idx int",
-            "block_text string",
-            "n_words int",
-            "link_chars long",
-            "text_chars long",
-            "link_density double",
-            "is_boilerplate boolean",
-        ]
-    )
-    proj = pages.select(*keep_cols, F.col(html_col).cast("string").alias("_html"))
     thr = float(boilerplate_threshold)
-    out_cols = list(keep_cols) + [
-        "block_idx", "block_text", "n_words",
-        "link_chars", "text_chars", "link_density", "is_boilerplate",
-    ]
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf.itertuples(index=False):
-                *keys, src = tup
-                if src is None:
-                    continue
-                for blk in extract_html_blocks(src, boilerplate_threshold=thr):
-                    rows.append((*keys, *blk))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return proj.mapInPandas(op, schema=out_schema)
+    return _page_pass(
+        pages, html_col, keep_cols, None,
+        ["block_idx int", "block_text string", "n_words int", "link_chars long",
+         "text_chars long", "link_density double", "is_boilerplate boolean"],
+        lambda src: extract_html_blocks(src, boilerplate_threshold=thr),
+    )
 
 
 # --------------------------------------------------- fixture page renderer
@@ -793,16 +682,7 @@ def synthesize_html(
             return '<link rel="alternate" type="application/rss+xml" href="/feed.rss">'
         return '<link rel="alternate" type="application/atom+xml" href="/feed.atom">'
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [
-                        render_fixture_html(int(d), t, meta_tag=tag(int(d)))
-                        for d, t in zip(pdf["doc_id"], pdf["_text"])
-                    ],
-                }
-            )
+    def render(doc_id, text):
+        return [(doc_id, render_fixture_html(int(doc_id), text, meta_tag=tag(int(doc_id))))]
 
-    return proj.mapInPandas(op, schema="doc_id long, html string")
+    return map_rows(proj, render, "doc_id long, html string")

@@ -1,6 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata, processed via Arrow-batched
-``mapInPandas``.
+``mapInPandas`` (every stage is a front end of ``rowpass.map_rows``).
 
 Decode support is format-tiered:
 
@@ -22,22 +22,55 @@ Decode support is format-tiered:
 from __future__ import annotations
 
 import struct
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from opentsdb_aura_spark.operators.rowpass import map_rows
 
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, payload binary, "
     "width int, height int, sample_rate int, n_frames int"
 )
+MEDIA_COLS = tuple(f.split(" ")[0] for f in MEDIA_SCHEMA.split(", "))
 
 FEATURE_SCHEMA = (
     "media_id bigint, kind string, n_bytes bigint, checksum bigint, "
     "feat array<double>, error string"
 )
+
+
+#: what a codec raises for a payload it cannot decode (the
+#: :func:`_decode_real` contract) — the exceptions a media stage's
+#: ``skip_errors`` turns into error rows
+_DECODE_ERRORS = (ValueError, NotImplementedError)
+
+
+def _error_text(exc: Exception) -> str:
+    return f"{type(exc).__name__}: {exc}"
+
+
+def _pack64(bits) -> tuple[int, str]:
+    """64 fingerprint bits (bit k = element k) → (two's-complement
+    int64, the 64-char bit string a SQL oracle can mirror)."""
+    import numpy as np
+
+    val = int((bits << np.arange(64, dtype=np.uint64)).sum())
+    if val >= 1 << 63:
+        val -= 1 << 64
+    return val, "".join("1" if b else "0" for b in bits)
+
+
+def _attach_media(docs: DataFrame, id_col: str, text_col: str, kind: str, make) -> DataFrame:
+    """The corpus generators' one pass: ``make(id, text)`` renders one
+    doc's media as (payload, width, height, sample_rate, n_frames);
+    NULL text renders as "x".  Returns MEDIA_SCHEMA rows of ``kind``."""
+
+    def media(doc_id, text):
+        doc_id = int(doc_id)
+        return [(doc_id, kind, *make(doc_id, text or "x"))]
+
+    return map_rows(docs, media, MEDIA_SCHEMA, cols=(id_col, text_col))
 
 
 def attach_fake_media(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -423,8 +456,9 @@ def _decode_real(payload: bytes, kind: str) -> tuple[int, int, bytes]:
     Error contract: every corrupt/truncated payload surfaces as
     ValueError (or NotImplementedError for honest format boundaries) —
     low-level zlib/struct/index errors from any codec are converted
-    here so per-payload skip logic (``extract_features(skip_errors=
-    True)``) can rely on catching exactly those two types."""
+    here so the per-payload skip logic can catch exactly those two
+    types (``_DECODE_ERRORS``, the ``catch`` every media stage hands
+    ``rowpass.map_rows``)."""
     import zlib
 
     payload = bytes(payload)
@@ -490,33 +524,16 @@ def attach_image_media(
         "jpeg_prog": functools.partial(encode_jpeg, subsampling="420", progressive=True),
     }
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, widths, heights = [], [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                text = (text or "x").encode("utf-8", "replace")
-                w, h = mid % 16 + 1, mid % 12 + 1
-                n = w * h * 3
-                reps = -(-n // len(text))
-                rgb = (text * reps)[:n]
-                enc = encoders[formats[mid % len(formats)]]
-                payloads.append(enc(w, h, rgb))
-                widths.append(w)
-                heights.append(h)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "kind": "image",
-                    "payload": payloads,
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "sample_rate": pd.Series([0] * len(pdf), dtype="int32"),
-                    "n_frames": pd.Series([1] * len(pdf), dtype="int32"),
-                }
-            )
+    def image(doc_id, text):
+        text = text.encode("utf-8", "replace")
+        w, h = doc_id % 16 + 1, doc_id % 12 + 1
+        n = w * h * 3
+        reps = -(-n // len(text))
+        rgb = (text * reps)[:n]
+        enc = encoders[formats[doc_id % len(formats)]]
+        return enc(w, h, rgb), w, h, 0, 1
 
-    return docs.mapInPandas(op, schema=MEDIA_SCHEMA)
+    return _attach_media(docs, id_col, text_col, "image", image)
 
 
 def attach_bmp_media(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -555,60 +572,28 @@ def extract_features(
     a mixed media frame does not abort the stage on the first RIFF/Y4M
     payload.
     """
+    import numpy as np
+
     if not fake:
         media = media.where(F.col("kind") == "image")
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def features(media_id, kind, payload):
+        if fake:
+            c = sum(payload[:256]) if len(payload) else 0
+            feat = [float((c * (i + 1)) % 997) / 997.0 for i in range(feat_dim)]
+            return [(media_id, kind, len(payload), c, feat, None)]
+        w, h, rgb = _decode_real(payload, kind)
+        px = np.frombuffer(rgb, dtype=np.uint8).reshape(-1, 3)
+        feat = [float(w), float(h), *px.mean(axis=0).tolist()]
+        return [(media_id, kind, len(rgb), int(px.sum()), feat, None)]
 
-        for pdf in batches:
-            if not fake:
-                n_bytes, checksums, feats, errors = [], [], [], []
-                for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                    try:
-                        w, h, rgb = _decode_real(payload, kind)
-                    except (ValueError, NotImplementedError) as e:
-                        if not skip_errors:
-                            raise
-                        n_bytes.append(0)
-                        checksums.append(0)
-                        feats.append([])
-                        errors.append(f"{type(e).__name__}: {e}")
-                        continue
-                    px = np.frombuffer(rgb, dtype=np.uint8).reshape(-1, 3)
-                    n_bytes.append(len(rgb))
-                    checksums.append(int(px.sum()))
-                    feats.append([float(w), float(h), *px.mean(axis=0).tolist()])
-                    errors.append(None)
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "kind": pdf["kind"],
-                        "n_bytes": pd.Series(n_bytes, dtype="int64"),
-                        "checksum": pd.Series(checksums, dtype="int64"),
-                        "feat": feats,
-                        "error": pd.Series(errors, dtype="object"),
-                    }
-                )
-                continue
-            n_bytes = pdf["payload"].map(len)
-            checksum = pdf["payload"].map(lambda b: sum(b[:256]) if len(b) else 0)
-            feats = [
-                [float((int(c) * (i + 1)) % 997) / 997.0 for i in range(feat_dim)]
-                for c in checksum
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": n_bytes.astype("int64"),
-                    "checksum": checksum.astype("int64"),
-                    "feat": feats,
-                    "error": pd.Series([None] * len(pdf), dtype="object"),
-                }
-            )
-
-    return media.mapInPandas(op, schema=FEATURE_SCHEMA)
+    return map_rows(
+        media, features, FEATURE_SCHEMA,
+        cols=("media_id", "kind", "payload"),
+        skip_errors=skip_errors,
+        on_error=lambda row, exc: (row[0], row[1], 0, 0, [], _error_text(exc)),
+        catch=_DECODE_ERRORS,
+    )
 
 
 def media_stats(media: DataFrame) -> DataFrame:
@@ -637,30 +622,24 @@ def resize_images(media: DataFrame, out_width: int, out_height: int, *, fake: bo
     neighbor sample (vectorized numpy index map) → re-encode BMP.
     ``fake=True`` derives a deterministic payload without decoding so
     the Arrow plumbing stays testable for undecodable formats."""
+    import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    target = max(1, out_width * out_height // 64)
 
-        for pdf in batches:
-            if not fake:
-                resized = []
-                for payload in pdf["payload"]:
-                    w, h, rgb = _decode_real(payload, "image")
-                    px = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                    ys = (np.arange(out_height) * h) // out_height
-                    xs = (np.arange(out_width) * w) // out_width
-                    resized.append(encode_bmp(out_width, out_height, px[ys][:, xs].tobytes()))
-            else:
-                # deterministic fake: truncate/pad payload to out_w*out_h/64 bytes
-                target = max(1, out_width * out_height // 64)
-                resized = [bytes(b[:target]).ljust(target, b"\0") for b in pdf["payload"]]
-            out = pdf.copy()
-            out["resized"] = resized
-            out["out_width"] = out_width
-            out["out_height"] = out_height
-            yield out
+    def resize(*m):
+        payload = m[2]
+        if fake:
+            # deterministic fake: truncate/pad payload to out_w*out_h/64 bytes
+            resized = bytes(payload[:target]).ljust(target, b"\0")
+        else:
+            w, h, rgb = _decode_real(payload, "image")
+            px = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
+            ys = (np.arange(out_height) * h) // out_height
+            xs = (np.arange(out_width) * w) // out_width
+            resized = encode_bmp(out_width, out_height, px[ys][:, xs].tobytes())
+        return [(*m, resized, out_width, out_height)]
 
-    return media.where(F.col("kind") == "image").mapInPandas(op, schema=RESIZED_SCHEMA)
+    return map_rows(media.where(F.col("kind") == "image"), resize, RESIZED_SCHEMA, cols=MEDIA_COLS)
 
 
 def sample_frames(media: DataFrame, every_n: int = 30, *, fake: bool = True) -> DataFrame:
@@ -678,20 +657,17 @@ def sample_frames(media: DataFrame, every_n: int = 30, *, fake: bool = True) -> 
             "multimodal.sample_frames is the schema-plumbing fake"
         )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for mid, raw, n_frames in zip(pdf["media_id"], pdf["payload"], pdf["n_frames"]):
-                payload = bytes(raw)
-                for fi in range(0, int(n_frames), every_n):
-                    ids.append(mid)
-                    idxs.append(fi)
-                    # deterministic fake frame: 16-byte slice keyed by index
-                    start = (fi * 7) % max(1, len(payload))
-                    frames.append(payload[start : start + 16].ljust(16, b"\0"))
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
+    def frames(media_id, raw, n_frames):
+        payload = bytes(raw)
+        for fi in range(0, int(n_frames), every_n):
+            # deterministic fake frame: 16-byte slice keyed by index
+            start = (fi * 7) % max(1, len(payload))
+            yield (media_id, fi, payload[start : start + 16].ljust(16, b"\0"))
 
-    return media.where(F.col("kind") == "video").mapInPandas(op, schema=FRAMES_SCHEMA)
+    return map_rows(
+        media.where(F.col("kind") == "video"), frames, FRAMES_SCHEMA,
+        cols=("media_id", "payload", "n_frames"),
+    )
 
 
 DHASH_SCHEMA = "media_id bigint, dhash bigint, dhash_bits string, error string"
@@ -720,43 +696,34 @@ def image_dhash(media: DataFrame, *, skip_errors: bool = False) -> DataFrame:
     :func:`dhash_near_pairs` banding."""
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "dhash": [], "dhash_bits": [], "error": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, rgb = _decode_real(payload, "image")
-                except (ValueError, NotImplementedError) as e:
-                    if not skip_errors:
-                        raise
-                    out["media_id"].append(int(mid))
-                    out["dhash"].append(None)
-                    out["dhash_bits"].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}")
-                    continue
-                px = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                gray = px.astype(np.int32).sum(axis=2) // 3
-                ys = (np.arange(8) * h) // 8
-                xs = (np.arange(9) * w) // 9
-                grid = gray[ys][:, xs]  # 8 rows x 9 cols
-                bits = (grid[:, 1:] > grid[:, :-1]).astype(np.uint64).reshape(64)
-                val = int((bits << np.arange(64, dtype=np.uint64)).sum())
-                if val >= 1 << 63:
-                    val -= 1 << 64
-                out["media_id"].append(int(mid))
-                out["dhash"].append(val)
-                out["dhash_bits"].append("".join("1" if b else "0" for b in bits))
-                out["error"].append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": out["media_id"],
-                    "dhash": pd.Series(out["dhash"], dtype="object"),
-                    "dhash_bits": out["dhash_bits"],
-                    "error": pd.Series(out["error"], dtype="object"),
-                }
-            )
+    def dhash(media_id, payload):
+        w, h, rgb = _decode_real(payload, "image")
+        px = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
+        gray = px.astype(np.int32).sum(axis=2) // 3
+        ys = (np.arange(8) * h) // 8
+        xs = (np.arange(9) * w) // 9
+        grid = gray[ys][:, xs]  # 8 rows x 9 cols
+        bits = (grid[:, 1:] > grid[:, :-1]).astype(np.uint64).reshape(64)
+        return [(int(media_id), *_pack64(bits), None)]
 
-    return media.where(F.col("kind") == "image").mapInPandas(op, schema=DHASH_SCHEMA)
+    return _kind_pass(
+        media, "image", dhash, DHASH_SCHEMA,
+        skip_errors=skip_errors, on_error=_hash_error_row, catch=_DECODE_ERRORS,
+    )
+
+
+def _kind_pass(media: DataFrame, kind: str, fn, schema: str, **errors) -> DataFrame:
+    """``rowpass.map_rows`` of ``fn(media_id, payload)`` over the
+    ``kind`` rows of a media frame."""
+    return map_rows(
+        media.where(F.col("kind") == kind), fn, schema, cols=("media_id", "payload"), **errors
+    )
+
+
+def _hash_error_row(row: tuple, exc: Exception) -> tuple:
+    """The fingerprint stages' error row: NULL hash and bit string
+    (self-excluded from banding) plus the exception text."""
+    return (int(row[0]), None, None, _error_text(exc))
 
 
 def dhash_near_pairs(hashes: DataFrame, *, max_hamming: int = 3) -> DataFrame:
@@ -809,28 +776,32 @@ def transcode_images(media: DataFrame, to: str = "png", *, skip_errors: bool = F
         raise ValueError(f"transcode target must be one of {sorted(encoders)}, got {to!r}")
     enc = encoders[to]
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep = []
-            payloads = []
-            for i, payload in enumerate(pdf["payload"]):
-                try:
-                    w, h, rgb = _decode_real(payload, "image")
-                except (ValueError, NotImplementedError):
-                    if not skip_errors:
-                        raise
-                    continue
-                try:
-                    payloads.append(enc(w, h, rgb))
-                except ValueError as e:
-                    raise ValueError(
-                        f"image decoded fine but cannot be encoded as {to!r}: {e} "
-                        "— a format-choice mismatch, not payload corruption; "
-                        "use a true-color target (bmp/ppm/png)"
-                    ) from e
-                keep.append(i)
-            out = pdf.iloc[keep].copy()
-            out["payload"] = payloads
-            yield out
+    def transcode(*m):
+        w, h, rgb = _decode_real(m[2], "image")
+        try:
+            payload = enc(w, h, rgb)
+        except ValueError as e:
+            raise _TargetMismatch(
+                f"image decoded fine but cannot be encoded as {to!r}: {e} "
+                "— a format-choice mismatch, not payload corruption; "
+                "use a true-color target (bmp/ppm/png)"
+            ) from e
+        return [(*m[:2], payload, *m[3:])]
 
-    return media.where(F.col("kind") == "image").mapInPandas(op, schema=MEDIA_SCHEMA)
+    def drop_undecodable(row, exc):
+        if isinstance(exc, _TargetMismatch):
+            raise exc
+        return None
+
+    return map_rows(
+        media.where(F.col("kind") == "image"), transcode, MEDIA_SCHEMA,
+        cols=MEDIA_COLS,
+        skip_errors=skip_errors,
+        on_error=drop_undecodable,
+        catch=_DECODE_ERRORS,
+    )
+
+
+class _TargetMismatch(ValueError):
+    """A decodable image the transcode target cannot hold — always
+    fatal, unlike the undecodable payloads ``skip_errors`` drops."""

@@ -54,6 +54,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from opentsdb_aura_spark.model import NAN
+from opentsdb_aura_spark.operators.downsample import non_nan
 
 
 
@@ -104,8 +105,8 @@ def _with_prev_global(df: DataFrame, group_cols: list, value_col: str, ts_col: s
     v, ts = F.col(value_col), F.col(ts_col)
     # lag over non-NaN points only: NaNs don't update previous (ts, value)
     w = Window.partitionBy(*group_cols).orderBy(ts).rowsBetween(Window.unboundedPreceding, -1)
-    prev_ts = F.last(F.when(~F.isnan(v), ts), ignorenulls=True).over(w)
-    prev_v = F.last(F.when(~F.isnan(v), v), ignorenulls=True).over(w)
+    prev_ts = F.last(F.when(non_nan(v).isNotNull(), ts), ignorenulls=True).over(w)
+    prev_v = F.last(non_nan(v), ignorenulls=True).over(w)
     return df.withColumn("_prev_ts", prev_ts).withColumn("_prev_v", prev_v)
 
 
@@ -122,7 +123,7 @@ def _with_prev_segmented(
 
     # one row per series-segment (map-side combined before the shuffle)
     seg_last = (
-        df.where(~F.isnan(v))
+        df.where(non_nan(v).isNotNull())
         .groupBy(*seg_keys)
         .agg(F.max(ts).alias("_bnd_ts0"), F.max_by(v, ts).alias("_bnd_v0"))
     )
@@ -137,8 +138,8 @@ def _with_prev_segmented(
     # so the big side shuffles once; AQE broadcasts `boundary` when small
     out = df.join(boundary, on=seg_keys, how="left")
     w = Window.partitionBy(*seg_keys).orderBy(ts).rowsBetween(Window.unboundedPreceding, -1)
-    in_seg_ts = F.last(F.when(~F.isnan(v), ts), ignorenulls=True).over(w)
-    in_seg_v = F.last(F.when(~F.isnan(v), v), ignorenulls=True).over(w)
+    in_seg_ts = F.last(F.when(non_nan(v).isNotNull(), ts), ignorenulls=True).over(w)
+    in_seg_v = F.last(non_nan(v), ignorenulls=True).over(w)
     return (
         out.withColumn("_prev_ts", F.coalesce(in_seg_ts, F.col("_bnd_ts")))
         .withColumn("_prev_v", F.coalesce(in_seg_v, F.col("_bnd_v")))

@@ -29,12 +29,13 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from opentsdb_aura_spark.operators.rowpass import map_rows
 
 # ------------------------------------------------------------------ fixture
 
@@ -69,19 +70,34 @@ def encode_robots_txt(host_idx: int) -> str:
 def synthesize_robots(hosts: DataFrame, *, host_col: str = "host") -> DataFrame:
     """(host, content) robots files for a hosts dim — fixture hosts are
     ``h<k>.example`` and the file is closed-form in k."""
+    return _fixture_files(hosts, host_col, encode_robots_txt, "synthesize_robots")
+
+
+def _fixture_files(hosts: DataFrame, host_col: str, encode, name: str) -> DataFrame:
+    """(host, encode(k)) per fixture host ``h<k>.example`` — the one
+    generator pass of the robots, sitemap and feed fixtures."""
     idx = F.regexp_extract(F.col(host_col), r"^h(\d+)\.example$", 1).try_cast("int")
     proj = hosts.select(F.col(host_col).alias("host"), idx.alias("_k"))
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, k in zip(pdf["host"], pdf["_k"]):
-                if k is None or pd.isna(k):
-                    raise ValueError(f"synthesize_robots: non-fixture host {host!r}")
-                rows.append((host, encode_robots_txt(int(k))))
-            yield pd.DataFrame(rows, columns=["host", "content"])
+    def render(host, k):
+        if k is None or pd.isna(k):
+            raise ValueError(f"{name}: non-fixture host {host!r}")
+        return [(host, encode(int(k)))]
 
-    return proj.mapInPandas(op, schema="host string, content string")
+    return map_rows(proj, render, "host string, content string")
+
+
+def _host_rows(files: DataFrame, parse, schema: str) -> DataFrame:
+    """1→many pass over (host, content) files: one (host, *tuple) row
+    per tuple ``parse(content)`` returns; a NULL content (no file)
+    yields no rows."""
+
+    def rows(host, content):
+        if content is None:
+            return ()
+        return [(host, *t) for t in parse(str(content))]
+
+    return map_rows(files, rows, schema, cols=("host", "content"))
 
 
 # ------------------------------------------------------------------- parsing
@@ -159,21 +175,7 @@ def parse_robots_files(files: DataFrame) -> DataFrame:
     """1→many Arrow pass over (host, content) robots files → one row
     per (agent, rule) with the regex compiled at parse time, so the
     downstream compliance join is pure Catalyst."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, content in zip(pdf["host"], pdf["content"]):
-                if content is None:
-                    continue  # no robots file: default allow (no rules)
-                for tup in parse_robots_txt(str(content)):
-                    rows.append((host, *tup))
-            yield pd.DataFrame(
-                rows,
-                columns=["host", "agent", "rule", "pattern", "pattern_len", "regex"],
-            )
-
-    return files.mapInPandas(op, schema=ROBOTS_RULE_SCHEMA)
+    return _host_rows(files, parse_robots_txt, ROBOTS_RULE_SCHEMA)
 
 
 # ---------------------------------------------------------------- compliance
@@ -378,19 +380,7 @@ def encode_sitemap_xml(host_idx: int, n_urls: int = 3) -> str:
 
 def synthesize_sitemaps(hosts: DataFrame, *, host_col: str = "host") -> DataFrame:
     """(host, content) fixture sitemap files for a hosts dim."""
-    idx = F.regexp_extract(F.col(host_col), r"^h(\d+)\.example$", 1).try_cast("int")
-    proj = hosts.select(F.col(host_col).alias("host"), idx.alias("_k"))
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, k in zip(pdf["host"], pdf["_k"]):
-                if k is None or pd.isna(k):
-                    raise ValueError(f"synthesize_sitemaps: non-fixture host {host!r}")
-                rows.append((host, encode_sitemap_xml(int(k))))
-            yield pd.DataFrame(rows, columns=["host", "content"])
-
-    return proj.mapInPandas(op, schema="host string, content string")
+    return _fixture_files(hosts, host_col, encode_sitemap_xml, "synthesize_sitemaps")
 
 
 def parse_sitemap_xml(content: str) -> list:
@@ -422,20 +412,7 @@ def parse_sitemap_files(files: DataFrame) -> DataFrame:
     (host, kind, loc, lastmod) rows — union with the link-discovery
     frontier (both feeds meet at the same canonicalize + politeness
     gates)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, content in zip(pdf["host"], pdf["content"]):
-                if content is None:
-                    continue
-                for tup in parse_sitemap_xml(str(content)):
-                    rows.append((host, *tup))
-            yield pd.DataFrame(rows, columns=["host", "kind", "loc", "lastmod"])
-
-    return files.mapInPandas(
-        op, schema="host string, kind string, loc string, lastmod string"
-    )
+    return _host_rows(files, parse_sitemap_xml, "host string, kind string, loc string, lastmod string")
 
 
 # ------------------------------------------------------- feed discovery
@@ -592,19 +569,7 @@ def encode_feed_xml(host_idx: int, n_items: int = 3) -> str:
 
 def synthesize_feeds(hosts: DataFrame, *, host_col: str = "host") -> DataFrame:
     """(host, content) fixture feed files for a hosts dim."""
-    idx = F.regexp_extract(F.col(host_col), r"^h(\d+)\.example$", 1).try_cast("int")
-    proj = hosts.select(F.col(host_col).alias("host"), idx.alias("_k"))
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, k in zip(pdf["host"], pdf["_k"]):
-                if k is None or pd.isna(k):
-                    raise ValueError(f"synthesize_feeds: non-fixture host {host!r}")
-                rows.append((host, encode_feed_xml(int(k))))
-            yield pd.DataFrame(rows, columns=["host", "content"])
-
-    return proj.mapInPandas(op, schema="host string, content string")
+    return _fixture_files(hosts, host_col, encode_feed_xml, "synthesize_feeds")
 
 
 def parse_feed_files(files: DataFrame) -> DataFrame:
@@ -613,21 +578,8 @@ def parse_feed_files(files: DataFrame) -> DataFrame:
     link/sitemap frontier (same canonicalize + politeness gates); the
     epoch updated_ts feeds recrawl_schedule / fetch planning directly,
     no further date parsing downstream."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, content in zip(pdf["host"], pdf["content"]):
-                if content is None:
-                    continue
-                for tup in parse_feed_xml(str(content)):
-                    rows.append((host, *tup))
-            yield pd.DataFrame(
-                rows, columns=["host", "kind", "loc", "title", "updated_ts"]
-            )
-
-    return files.mapInPandas(
-        op, schema="host string, kind string, loc string, title string, updated_ts long"
+    return _host_rows(
+        files, parse_feed_xml, "host string, kind string, loc string, title string, updated_ts long"
     )
 
 
@@ -658,18 +610,10 @@ def parse_sitemap_directive_files(files: DataFrame) -> DataFrame:
     (host, sitemap_url) rows — the missing first hop of the sitemap
     chain (robots.txt announces → fetch → parse_sitemap_files →
     frontier)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, content in zip(pdf["host"], pdf["content"]):
-                if content is None:
-                    continue
-                for url in parse_sitemap_directives(str(content)):
-                    rows.append((host, url))
-            yield pd.DataFrame(rows, columns=["host", "sitemap_url"])
-
-    return files.mapInPandas(op, schema="host string, sitemap_url string")
+    return _host_rows(
+        files, lambda c: [(url,) for url in parse_sitemap_directives(c)],
+        "host string, sitemap_url string",
+    )
 
 
 def discovered_xml_urls(
@@ -697,10 +641,9 @@ def discovered_xml_urls(
     as bytes decoded per row (the streaming seam), else as string;
     ``keep_cols`` pass through unchanged (the streaming loop keeps the
     record's doc_id for the frontier edge)."""
-    in_fields = {f.name: f.dataType.simpleString() for f in pages.schema.fields}
-    missing = [c for c in keep_cols if c not in in_fields]
-    if missing:
-        raise ValueError(f"keep_cols not in input: {missing}")
+    from opentsdb_aura_spark.operators.htmltext import _decode_page, _keep_fields
+
+    in_fields = _keep_fields(pages, keep_cols, charset_col)
     base_cols = [F.col(url_col).alias("_url")]
     if charset_col is not None:
         base_cols.append(F.col(charset_col).cast("string").alias("_charset"))
@@ -709,53 +652,47 @@ def discovered_xml_urls(
         base_cols.append(F.col(body_col).cast("string").alias("_body"))
     proj = pages.select(*base_cols, *keep_cols)
     with_charset = charset_col is not None
-    out_cols = ["page_url", "kind", "loc", "updated_ts"] + list(keep_cols)
     out_schema = "page_url string, kind string, loc string, updated_ts long" + "".join(
         f", {c} {in_fields[c]}" for c in keep_cols
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from opentsdb_aura_spark.operators.htmltext import _decode_page
+    def entries(*row):
+        if with_charset:
+            url, charset, body, *keys = row
+        else:
+            url, body, *keys = row
+            charset = None
+        if body is None:
+            return []
+        if (
+            with_charset
+            and isinstance(body, (bytes, bytearray))
+            and body[:2] == b"\x1f\x8b"
+        ):
+            # sitemaps.org allows gzipped sitemaps (.xml.gz);
+            # the fetch loop admits them by path suffix, so the
+            # raw gzip member must be inflated here or the
+            # document parses to zero entries.  Magic-byte
+            # sniff, not suffix: servers gzip mislabeled paths
+            # too, and a truncated/corrupt member degrades to
+            # the empty entry set rather than failing the batch
+            import gzip as _gzip
 
-        for pdf in batches:
-            rows = []
-            for tup in pdf.itertuples(index=False):
-                if with_charset:
-                    url, charset, body, *keys = tup
-                else:
-                    url, body, *keys = tup
-                    charset = None
-                if body is None:
-                    continue
-                if (
-                    with_charset
-                    and isinstance(body, (bytes, bytearray))
-                    and body[:2] == b"\x1f\x8b"
-                ):
-                    # sitemaps.org allows gzipped sitemaps (.xml.gz);
-                    # the fetch loop admits them by path suffix, so the
-                    # raw gzip member must be inflated here or the
-                    # document parses to zero entries.  Magic-byte
-                    # sniff, not suffix: servers gzip mislabeled paths
-                    # too, and a truncated/corrupt member degrades to
-                    # the empty entry set rather than failing the batch
-                    import gzip as _gzip
+            try:
+                body = _gzip.decompress(bytes(body))
+            except OSError:
+                return []
+        src = _decode_page(body, charset) if with_charset else str(body)
+        # lastmod normalizes to the SAME epoch column the feed entries
+        # carry (W3C dates are RFC 3339's date subset; junk stays None)
+        out = [
+            (url, kind, loc, _feed_epoch("atom", lastmod), *keys)
+            for kind, loc, lastmod in parse_sitemap_xml(src)
+        ]
+        out += [(url, kind, loc, ts, *keys) for kind, loc, _title, ts in parse_feed_xml(src)]
+        return out
 
-                    try:
-                        body = _gzip.decompress(bytes(body))
-                    except OSError:
-                        continue
-                src = _decode_page(body, charset) if with_charset else str(body)
-                for kind, loc, lastmod in parse_sitemap_xml(src):
-                    # lastmod normalizes to the SAME epoch column the
-                    # feed entries carry (W3C dates are RFC 3339's
-                    # date subset; junk stays None)
-                    rows.append((url, kind, loc, _feed_epoch("atom", lastmod), *keys))
-                for kind, loc, _title, ts in parse_feed_xml(src):
-                    rows.append((url, kind, loc, ts, *keys))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return proj.mapInPandas(op, schema=out_schema)
+    return map_rows(proj, entries, out_schema)
 
 
 def feed_fetch_plan(
@@ -846,18 +783,7 @@ def parse_crawl_delay_files(files: DataFrame) -> DataFrame:
     """1→many Arrow pass over (host, content) robots files → one
     (host, agent, crawl_delay) row per group that declares a delay —
     the per-host politeness dim next to the rules dim."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, content in zip(pdf["host"], pdf["content"]):
-                if content is None:
-                    continue
-                for agent, delay in parse_crawl_delays(str(content)):
-                    rows.append((host, agent, delay))
-            yield pd.DataFrame(rows, columns=["host", "agent", "crawl_delay"])
-
-    return files.mapInPandas(op, schema="host string, agent string, crawl_delay double")
+    return _host_rows(files, parse_crawl_delays, "host string, agent string, crawl_delay double")
 
 
 def crawl_delay_for(delays: DataFrame, *, agent: str = "aura-bot") -> DataFrame:

@@ -119,7 +119,7 @@ def docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus arrives as many files and gets parallelism from splits,
     # and the guarded spread then inserts no shuffle).
     # defaultParallelism/4, not the full core count: several consumers
-    # chain Python stages (k workers live per task — the containers
+    # chain Python stages (k workers live per task — the rowpass
     # _CHAIN_DEPTH rationale), and for the pure-Catalyst consumers the
     # fixture rows are so small that 32 task launches cost more than
     # they buy (same-session min-of-3 at sf0.1, 8 vs 32 partitions:

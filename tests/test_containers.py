@@ -125,6 +125,14 @@ def test_warc_records_skip_errors_contains_bad_file(spark):
     errs = [r for r in by_file[2] if r["error"] is not None]
     assert len(errs) == 1 and "terminated" in errs[0]["error"]
     assert errs[0]["offset"] is None
+    # the truncated file's records parsed before the corruption point
+    # survive beside its error row
+    prefix = sorted((r for r in by_file[2] if r["error"] is None), key=lambda r: r["offset"])
+    first = sorted(by_file[1], key=lambda r: r["offset"])[: len(by_file[1]) - 1]
+    assert len(prefix) == 2
+    assert [(r["offset"], r["record_id"], r["payload_md5"]) for r in prefix] == [
+        (r["offset"], r["record_id"], r["payload_md5"]) for r in first
+    ]
 
 
 def test_tar_members_skip_errors_contains_bad_file(spark):
@@ -782,6 +790,14 @@ def test_http_responses_extra_cols_passthrough(spark):
     assert ok["offset"] == 0 and ok["record_length"] > 0
     assert ok["warc_date"] == C.WARC_DATE
     assert bad["error"] is not None and bad["offset"] == ok["record_length"]
+    # "payload" among the passthroughs keeps every column on its own name,
+    # whatever position it takes in the list (error rows included)
+    out = http_responses(recs, skip_errors=True, extra_cols=("offset", "payload"))
+    rows = {r["record_id"]: r for r in out.collect()}
+    assert rows["urn:uuid:doc-1"]["offset"] == 0
+    assert rows["urn:uuid:doc-2"]["offset"] == ok["record_length"]
+    assert rows["urn:uuid:doc-2"]["payload"] == b"NOT HTTP"
+    assert b"hello" in rows["urn:uuid:doc-1"]["payload"]
 
 
 def test_cdx_write_parse_roundtrip_and_sort(spark):

@@ -164,3 +164,28 @@ def test_no_forced_broadcast_of_unbounded_frames():
         "forced broadcast of a frame not in the bounded-size allowlist "
         f"(series_dim-derived frames must use AQE): {hits}"
     )
+
+
+def test_python_row_passes_go_through_rowpass():
+    """Source lint: every per-row Python stage under operators/ is a
+    front end of ``rowpass.map_rows`` / ``rowpass.pack_groups`` (one
+    batch loop, one exact frame build, one error-row contract).  Only
+    passes that vectorise over a whole Arrow batch call
+    ``mapInPandas``/``applyInPandas`` themselves."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "opentsdb_aura_spark" / "operators"
+    allowed = {
+        "rowpass.py",  # the one row pass
+        "sketch.py",  # summarize: pandas groupby-size + nlargest over each whole batch
+        "similarity.py",  # ADC scoring: one numpy table lookup over each whole batch of codes
+    }
+    hits = []
+    for py in sorted(root.glob("*.py")):
+        if py.name in allowed:
+            continue
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            if re.search(r"\.(mapInPandas|applyInPandas)\(", line):
+                hits.append(f"{py.name}:{i}: {line.strip()}")
+    assert not hits, f"per-row Python pass outside rowpass.map_rows/pack_groups: {hits}"

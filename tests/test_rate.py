@@ -87,6 +87,20 @@ def test_nan_passthrough_and_skip(make_points):
     assert_close(out[BASE + 20], 1.0)  # (30-10)/20, NaN invisible
 
 
+def test_null_value_is_no_data_like_nan(make_points):
+    # a NULL value is "no data" for the lag pair exactly like NaN: it
+    # updates neither the previous ts nor the previous value
+    from pyspark.sql import functions as F
+
+    pts = make_points(
+        [("m", {}, BASE, 10.0), ("m", {}, BASE + 10, float("nan")), ("m", {}, BASE + 20, 30.0)]
+    ).withColumn("value", F.when(~F.isnan("value"), F.col("value")))
+    for seg in (None, "segment_time"):
+        out = _vals(rate(pts, RateOptions(interval_seconds=1), segment_col=seg))
+        assert out[BASE + 10] is None
+        assert_close(out[BASE + 20], 1.0)  # (30-10)/20, NULL invisible
+
+
 def test_per_series_isolation(make_points):
     pts = make_points(
         [("m", {"h": "a"}, BASE, 0.0), ("m", {"h": "b"}, BASE + 5, 100.0), ("m", {"h": "a"}, BASE + 10, 20.0)]
