@@ -9,7 +9,15 @@ split by domain under ``opentsdb_aura_spark/queries/`` (metric,
 events, tpch, pipeline, multimodal, and the extras_* family:
 extras_metric, extras_sketch, extras_tpch, extras_events,
 extras_corpus — the round-6 split of the old cross-domain
-extras.py).  This module re-exports
+extras.py).  The fixture chains several queries share are written once
+and each query is a front end of them: chains two domain modules use
+(the CCNet tercile label and keep tail, the lang-id pack, the KN
+tower, the Gopher and CCNet oracle fragments) live in
+``queries/base.py``; the crawl page chain, the CCNet crawl keep, the
+WAT link pack and the capture history in ``queries/containers.py``;
+the doc-graph and host-graph edges and the 'dup' classifier in
+``queries/pipeline.py``.
+This module re-exports
 everything so ``from opentsdb_aura_spark.catalog import ...`` keeps
 working unchanged — importing it populates the full registry.
 """

@@ -14,9 +14,111 @@ ustar block padding, checksums, digests).
 from __future__ import annotations
 
 from opentsdb_aura_spark.queries.base import *  # noqa: F401,F403
-from opentsdb_aura_spark.queries.base import _r  # shared underscore helper
+from opentsdb_aura_spark.queries.base import (  # shared underscore helpers
+    _CCNET_BKT_SQL,
+    _CCNET_LM_SQL,
+    _GOPHER_KEEP_QUALITY_SQL,
+    _GOPHER_SIGNALS_SQL,
+    _ccnet_keep,
+    _kn_order_parts,
+    _langid_corpus,
+    _langid_ctes,
+    _langid_margins_sql,
+    _langid_models,
+    _langid_packed,
+    _langid_planted_txt_sql,
+    _langid_pred_sql,
+    _langid_scores,
+    _r,
+)
 
 _DPF = 50  # docs per container file — mirrored in both oracles below
+
+
+def _crawl_pages(docs, *cols, **synth):
+    """The crawl front half every page query starts from: ``docs`` →
+    fixture HTML in an HTTP envelope → WARC files → records → HTTP
+    split with body → one row per response with ``doc_id`` (parsed
+    back out of the record id), the response columns ``cols`` and the
+    body as ``html``.  ``synth`` adds ``synthesize_warc`` options."""
+    from opentsdb_aura_spark.operators.containers import http_responses, synthesize_warc, warc_records
+
+    files = synthesize_warc(docs, docs_per_file=_DPF, http_envelope=True, html_body=True, **synth)
+    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
+    return resp.select(
+        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
+        .try_cast("long")
+        .alias("doc_id"),
+        *cols,
+        F.col("body").alias("html"),
+    )
+
+
+def _curate_flags(ext):
+    """Gopher flags over extracted pages, with the extractor's link and
+    text counters and the text riding along for the link-density and
+    badwords gates (extra_cols passthrough: no second pass)."""
+    from opentsdb_aura_spark.operators.quality import gopher_quality_flags
+
+    return gopher_quality_flags(ext, min_tokens=10, extra_cols=("link_chars", "text_chars", "text"))
+
+
+def _ccnet_crawl_keep(planted, lm, lang=None, **synth):
+    """The CCNet keep over the crawl chain: ``planted`` docs go through
+    ``_crawl_pages`` and one extraction pass, checkpointed eagerly
+    because the LM's corpus counts, the lang leg and the gates all
+    re-read it.  ``lang(ext)`` (default: the marker-word ``lang_id``)
+    gives each doc's ``pred_lang`` and ``lm(ext)`` its LM score; the
+    gates are Gopher ∧ link density ∧ badwords."""
+    from opentsdb_aura_spark.operators.htmltext import html_to_text
+    from opentsdb_aura_spark.operators.quality import FIXTURE_BADWORDS, badwords_exprs, link_density_exprs
+    from opentsdb_aura_spark.operators.text import lang_id
+
+    ext = html_to_text(_crawl_pages(planted, **synth)).localCheckpoint()
+    langs = (lang or lang_id)(ext).select("doc_id", F.col("pred_lang").alias("lang"))
+    lm_scores = lm(ext)
+    _, ok_ld = link_density_exprs()
+    _, ok_bw = badwords_exprs(FIXTURE_BADWORDS)
+    gates = _curate_flags(ext).select(
+        "doc_id",
+        F.col("keep").alias("keep_quality"),
+        ok_ld.alias("ok_link_density"),
+        ok_bw.alias("ok_badwords"),
+    )
+    return _ccnet_keep(gates, langs, lm_scores, ("keep_quality", "ok_link_density", "ok_badwords"))
+
+
+def _wat_link_records(spark, sf_dir, link):
+    """Crawl pages → their ``link`` values sorted into one list per page
+    → WAT metadata records (url, status, links) → re-parsed.  The
+    capture metadata rides the link explosion as keep_cols and folds
+    back in the same groupBy that builds the list: one shuffle and one
+    parse of the chain (a meta-side join would re-execute the whole
+    synth → parse → split chain for its second input)."""
+    from opentsdb_aura_spark.operators.containers import warc_records, write_wat_files
+    from opentsdb_aura_spark.operators.htmltext import html_links
+
+    pages = _crawl_pages(docs_raw(spark, sf_dir), "record_id", F.col("target_uri").alias("url"), "status_code")
+    meta = (
+        html_links(pages, keep_cols=("doc_id", "record_id", "url", "status_code"))
+        .groupBy("doc_id")
+        .agg(
+            F.first("record_id").alias("record_id"),
+            F.first("url").alias("url"),
+            F.first("status_code").alias("status"),
+            F.array_sort(F.collect_list(link)).alias("links"),
+        )
+        .withColumn(
+            "file_id",
+            F.expr(f"CAST(doc_id DIV {_DPF} AS LONG)"),  # integer DIV: double division drifts above 2^53 ids
+        )
+    )
+    wat = write_wat_files(meta, meta_cols=("url", "status", "links"))
+    return (
+        warc_records(wat)
+        .where(F.col("warc_type") == "metadata")
+        .select("record_id", "target_uri", "content_length", "payload_md5")
+    )
 
 # The response-record header exactly as encode_warc_record emits it —
 # built as a STRING in SQL so its length is measured, never hand-counted.
@@ -625,23 +727,9 @@ def corpus_warc_html_text(spark, sf_dir):
     oracle recomputes the expected title/text per doc_id, so a
     framing slip, charset mix-up, or boilerplate leak ANYWHERE in the
     four-stage round trip breaks the value hash."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-    )
     from opentsdb_aura_spark.operators.htmltext import html_to_text
 
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF, http_envelope=True, html_body=True
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        F.col("body").alias("html"),
-    )
+    pages = _crawl_pages(docs_raw(spark, sf_dir))
     return html_to_text(pages).select("doc_id", "title", "text")
 
 
@@ -671,25 +759,9 @@ def corpus_warc_charset_html_text(spark, sf_dir):
     the marker from doc_id alone, so a blind-UTF-8 cast (mojibake) or
     label normalization slip anywhere breaks the value hash — the
     non-ASCII path corpus_warc_html_text's ASCII fixture can't see."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-    )
     from opentsdb_aura_spark.operators.htmltext import html_to_text
 
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF,
-        http_envelope=True, html_body=True, charset_body=True,
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        "charset",
-        F.col("body").alias("html"),
-    )
+    pages = _crawl_pages(docs_raw(spark, sf_dir), "charset", charset_body=True)
     return html_to_text(pages, keep_cols=("doc_id", "charset"), charset_col="charset").select(
         "doc_id", "charset", "title", "text"
     )
@@ -723,25 +795,9 @@ def corpus_warc_sniff_html_text(spark, sf_dir):
     text closed-form per the doc_id%3 rule with UTF-8 SQL literals;
     the charset column pins that the HTTP layer genuinely carried no
     parameter for the meta-declared pages."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-    )
     from opentsdb_aura_spark.operators.htmltext import html_to_text
 
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF,
-        http_envelope=True, html_body=True, sniff_body=True,
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        "charset",
-        F.col("body").alias("html"),
-    )
+    pages = _crawl_pages(docs_raw(spark, sf_dir), "charset", sniff_body=True)
     return html_to_text(pages, keep_cols=("doc_id", "charset"), charset_col="charset").select(
         "doc_id", "charset", "title", "text"
     )
@@ -772,24 +828,10 @@ def quality_link_density(spark, sf_dir):
     density + flag, so the gate's arithmetic AND its composition with
     the chain are value-hash-checked (pages with near-empty document
     text flunk: chrome chars dominate)."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-    )
     from opentsdb_aura_spark.operators.htmltext import html_to_text
     from opentsdb_aura_spark.operators.quality import link_density_flags
 
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF, http_envelope=True, html_body=True
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        F.col("body").alias("html"),
-    )
+    pages = _crawl_pages(docs_raw(spark, sf_dir))
     flags = link_density_flags(html_to_text(pages))
     return flags.select(
         "doc_id", "link_chars", "text_chars",
@@ -803,7 +845,7 @@ def quality_link_density(spark, sf_dir):
 # pipeline_curate_to_wet's oracles.
 _CURATE_CTES = (
     _HTML_EXPECTED
-    + r""",
+    + rf""",
 w AS (
   SELECT doc_id, h1 || chr(10) || p || chr(10) || dv AS text,
          CAST(length('Home') + length('About') + length('next page')
@@ -817,22 +859,11 @@ t AS (
   FROM w),
 s AS (
   SELECT doc_id, link_chars, text_chars,
-         CAST(len(toks) AS BIGINT) AS n_tokens,
-         list_sum(list_transform(toks, x -> length(x))) * 1.0 / len(toks) AS mean_word_len,
-         list_sum(list_transform(toks, x -> length(x) - length(replace(x, '#', ''))
-           + CASE WHEN contains(x, '...') OR contains(x, '…') THEN 1 ELSE 0 END)) * 1.0 / len(toks) AS symbol_word_ratio,
-         len(list_filter(lines, l -> substr(l, 1, 2) IN ('- ', '* ', '• '))) * 1.0 / len(lines) AS bullet_line_frac,
-         len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…'))) * 1.0 / len(lines) AS ellipsis_line_frac,
-         len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) * 1.0 / len(toks) AS alpha_word_frac,
-         CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is'], x))) AS BIGINT) AS n_stopword_hits,
-         CAST(len(list_filter(toks, x -> list_contains(['dup','obscene','xxx-badword'], x))) AS BIGINT) AS n_badword_hits
+{_GOPHER_SIGNALS_SQL}
   FROM t),
 q AS (
   SELECT doc_id, n_tokens, n_stopword_hits, n_badword_hits, link_chars, text_chars,
-         (n_tokens BETWEEN 10 AND 100000) AND (mean_word_len BETWEEN 3 AND 10)
-           AND symbol_word_ratio <= 0.1 AND bullet_line_frac <= 0.9
-           AND ellipsis_line_frac <= 0.3 AND alpha_word_frac >= 0.8
-           AND n_stopword_hits >= 2 AS keep_quality
+{_GOPHER_KEEP_QUALITY_SQL}
   FROM s)"""
 )
 
@@ -859,28 +890,9 @@ def pipeline_crawl_curate(spark, sf_dir):
     fixture closed form and re-derives every Gopher signal, the
     density, and the final keep in DuckDB — the keep decision a real
     pipeline would act on is value-hash-checked end to end."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-    )
     from opentsdb_aura_spark.operators.htmltext import html_to_text
-    from opentsdb_aura_spark.operators.quality import gopher_quality_flags
 
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF, http_envelope=True, html_body=True
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        F.col("body").alias("html"),
-    )
-    ext = html_to_text(pages)
-    g = gopher_quality_flags(
-        ext, min_tokens=10, extra_cols=("link_chars", "text_chars", "text")
-    )
+    g = _curate_flags(html_to_text(_crawl_pages(docs_raw(spark, sf_dir))))
     # the SAME rule objects link_density_flags / badwords_flags use,
     # fused into this projection via the passthrough counters and text
     # — no second pass, no duplicated thresholds (review r9; r10 adds
@@ -906,27 +918,12 @@ def pipeline_crawl_curate(spark, sf_dir):
     )
 
 
-# everything downstream of the lang-id CTE (LM fit → per-language
-# tercile → fused keep) — shared verbatim by the heuristic and the
-# trained-lang-id variants, so the only difference between their
-# oracles is how ``lid`` is derived
-_CCNET_TAIL = r""",
-bg AS (SELECT doc_id, toks[i+1] || ' ' || toks[i+2] AS bigram, toks[i+1] AS w1
-       FROM t, unnest(range(0, greatest(len(toks) - 1, 0))) AS u(i)),
-uni AS (SELECT tok, count(*) AS ucnt
-        FROM (SELECT unnest(toks) AS tok FROM t) GROUP BY 1),
-v AS (SELECT CAST(count(*) AS DOUBLE) AS v FROM uni),
-big AS (SELECT bigram, count(*) AS bcnt FROM bg GROUP BY 1),
-sc AS (SELECT doc_id, round(avg(ln((bcnt + 0.1) / (ucnt + 0.1 * v.v))), 4) AS avg_logprob
-       FROM bg JOIN big USING (bigram) JOIN uni ON bg.w1 = uni.tok CROSS JOIN v
-       GROUP BY 1),
-bkt AS (SELECT doc_id, lang, avg_logprob,
-          CASE ntile(3) OVER (PARTITION BY lang
-                              ORDER BY avg_logprob DESC NULLS LAST, doc_id)
-               WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
-          END AS ppl_bucket
-        FROM (SELECT lid.doc_id, lid.lang, sc.avg_logprob
-              FROM lid LEFT JOIN sc USING (doc_id)))
+# everything downstream of the lang-id and LM CTEs (per-language
+# tercile → fused keep), and _CCNET_TAIL with the bigram LM fit in
+# front — shared verbatim by the heuristic, kn5 and trained-lang-id
+# variants, so their oracles differ only in how ``lid`` and ``sc`` are
+# derived
+_CCNET_BKT_TAIL = ",\n" + _CCNET_BKT_SQL + """
 SELECT q.doc_id, bkt.lang, bkt.avg_logprob, bkt.ppl_bucket,
        q.keep_quality,
        q.link_chars * 1.0 / q.text_chars <= 0.3 AS ok_link_density,
@@ -936,6 +933,7 @@ SELECT q.doc_id, bkt.lang, bkt.avg_logprob, bkt.ppl_bucket,
          AND q.n_badword_hits = 0
          AND bkt.ppl_bucket IN ('head', 'middle') AS keep
 FROM q JOIN bkt USING (doc_id)"""
+_CCNET_TAIL = ",\n" + _CCNET_LM_SQL + _CCNET_BKT_TAIL
 
 
 # the marker-word lang-id CTE over the extraction tokens — shared by
@@ -983,74 +981,9 @@ def pipeline_ccnet_curate(spark, sf_dir):
     keys with map-side combine; the tercile is one per-language
     window (CCNet's own cost — swap for train_perplexity_cutoffs at
     full corpus scale)."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-    )
-    from opentsdb_aura_spark.operators.htmltext import html_to_text
-    from opentsdb_aura_spark.operators.quality import (
-        FIXTURE_BADWORDS,
-        badwords_exprs,
-        gopher_quality_flags,
-        link_density_exprs,
-        lm_bigram_scores,
-        perplexity_buckets,
-    )
-    from opentsdb_aura_spark.operators.text import lang_id
+    from opentsdb_aura_spark.operators.quality import lm_bigram_scores
 
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF, http_envelope=True, html_body=True
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        F.col("body").alias("html"),
-    )
-    # one extraction pass feeds the gates AND the LM fit AND lang-id
-    # (eager: the LM's corpus-count aggregations scan it repeatedly)
-    ext = html_to_text(pages).localCheckpoint()
-    g = gopher_quality_flags(
-        ext, min_tokens=10, extra_cols=("link_chars", "text_chars", "text")
-    )
-    langs = lang_id(ext).select("doc_id", F.col("pred_lang").alias("lang"))
-    scores = lm_bigram_scores(ext, alpha=0.1).select(
-        "doc_id", _r("avg_logprob", 4).alias("avg_logprob")
-    )
-    bkt = perplexity_buckets(langs.join(scores, "doc_id"))
-    label = (
-        F.when(F.col("ppl_bucket") == 1, "head")
-        .when(F.col("ppl_bucket") == 2, "middle")
-        .otherwise("tail")
-    )
-    bkt = bkt.select("doc_id", "lang", "avg_logprob", label.alias("ppl_bucket"))
-    density, ok_ld = link_density_exprs()
-    bw_hits, ok_bw = badwords_exprs(FIXTURE_BADWORDS)
-    ok_ppl = F.col("ppl_bucket").isin("head", "middle")
-    gates = g.select(
-        "doc_id",
-        F.col("keep").alias("keep_quality"),
-        ok_ld.alias("ok_link_density"),
-        ok_bw.alias("ok_badwords"),
-    )
-    return gates.join(bkt, "doc_id").select(
-        "doc_id",
-        "lang",
-        "avg_logprob",
-        "ppl_bucket",
-        "keep_quality",
-        "ok_link_density",
-        "ok_badwords",
-        ok_ppl.alias("ok_ppl"),
-        (
-            F.col("keep_quality")
-            & F.col("ok_link_density")
-            & F.col("ok_badwords")
-            & ok_ppl
-        ).alias("keep"),
-    )
+    return _ccnet_crawl_keep(docs_raw(spark, sf_dir), lambda ext: lm_bigram_scores(ext, alpha=0.1))
 
 
 def _ccnet_kn_oracle() -> str:
@@ -1059,17 +992,15 @@ def _ccnet_kn_oracle() -> str:
     shared extraction + heuristic-lid CTEs, the kn_-prefixed tower
     parts reading the extraction tokens, a 1-line sc adapter, and the
     tercile + keep tail verbatim from the bigram variant."""
-    from opentsdb_aura_spark.queries.pipeline import _kn_order_parts
 
     kn_parts = _kn_order_parts(5, "n_5grams", "t")
-    bkt_idx = _CCNET_TAIL.index(",\nbkt AS")
     return (
         _CURATE_CTES
         + _CCNET_LID_HEURISTIC
         + ",\n"
         + ",\n".join(kn_parts)
         + ",\nsc AS (SELECT doc_id, avg_logprob FROM kns)"
-        + _CCNET_TAIL[bkt_idx:]
+        + _CCNET_BKT_TAIL
     )
 
 
@@ -1089,72 +1020,9 @@ def pipeline_ccnet_curate_kn(spark, sf_dir):
     over that text, and re-runs the tercile + keep tail verbatim —
     the production-order estimator's influence on the final curation
     verdict is value-hashed end to end."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-    )
-    from opentsdb_aura_spark.operators.htmltext import html_to_text
-    from opentsdb_aura_spark.operators.quality import (
-        FIXTURE_BADWORDS,
-        badwords_exprs,
-        gopher_quality_flags,
-        link_density_exprs,
-        lm_kn_scores_order,
-        perplexity_buckets,
-    )
-    from opentsdb_aura_spark.operators.text import lang_id
+    from opentsdb_aura_spark.operators.quality import lm_kn_scores_order
 
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF, http_envelope=True, html_body=True
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        F.col("body").alias("html"),
-    )
-    ext = html_to_text(pages).localCheckpoint()
-    g = gopher_quality_flags(
-        ext, min_tokens=10, extra_cols=("link_chars", "text_chars", "text")
-    )
-    langs = lang_id(ext).select("doc_id", F.col("pred_lang").alias("lang"))
-    scores = lm_kn_scores_order(ext, order=5).select(
-        "doc_id", _r("avg_logprob", 4).alias("avg_logprob")
-    )
-    bkt = perplexity_buckets(langs.join(scores, "doc_id"))
-    label = (
-        F.when(F.col("ppl_bucket") == 1, "head")
-        .when(F.col("ppl_bucket") == 2, "middle")
-        .otherwise("tail")
-    )
-    bkt = bkt.select("doc_id", "lang", "avg_logprob", label.alias("ppl_bucket"))
-    _, ok_ld = link_density_exprs()
-    _, ok_bw = badwords_exprs(FIXTURE_BADWORDS)
-    ok_ppl = F.col("ppl_bucket").isin("head", "middle")
-    gates = g.select(
-        "doc_id",
-        F.col("keep").alias("keep_quality"),
-        ok_ld.alias("ok_link_density"),
-        ok_bw.alias("ok_badwords"),
-    )
-    return gates.join(bkt, "doc_id").select(
-        "doc_id",
-        "lang",
-        "avg_logprob",
-        "ppl_bucket",
-        "keep_quality",
-        "ok_link_density",
-        "ok_badwords",
-        ok_ppl.alias("ok_ppl"),
-        (
-            F.col("keep_quality")
-            & F.col("ok_link_density")
-            & F.col("ok_badwords")
-            & ok_ppl
-        ).alias("keep"),
-    )
+    return _ccnet_crawl_keep(docs_raw(spark, sf_dir), lambda ext: lm_kn_scores_order(ext, order=5))
 
 
 def _ccnet_trained_e2e_oracle() -> str:
@@ -1164,13 +1032,6 @@ def _ccnet_trained_e2e_oracle() -> str:
     chains re-fit on the EXTRACTED page text, and the argmax
     prediction drives the per-language tercile — everything else is
     the shared _CCNET_TAIL verbatim."""
-    from opentsdb_aura_spark.queries.pipeline import (
-        _LANGID_ITERS,
-        _langid_ctes,
-        _langid_langs,
-        _langid_planted_txt_sql,
-        _langid_pred_sql,
-    )
 
     planted = _langid_planted_txt_sql()
     old = r"trim(regexp_replace(text, '\s+', ' ', 'g')) AS nt"
@@ -1182,10 +1043,7 @@ def _ccnet_trained_e2e_oracle() -> str:
     langid_block = _langid_ctes(corpus_sql=corpus_cte)
     assert langid_block.startswith("WITH ")
     langid_block = langid_block[len("WITH ") :]
-    langs, _ = _langid_langs()
-    R = _LANGID_ITERS
-    joins = "\n".join(f"JOIN m_{L}{R} ON m_{L}{R}.doc_id = corpus.doc_id" for L in langs)
-    margin_cols = ", ".join(f"m_{L}{R}.margin AS m_{L}" for L in langs)
+    margin_cols, joins = _langid_margins_sql()
     lid = f""",
 fin_l AS (SELECT corpus.doc_id, {margin_cols} FROM corpus {joins}),
 lid AS (SELECT doc_id, {_langid_pred_sql()} AS lang FROM fin_l)"""
@@ -1211,102 +1069,19 @@ def pipeline_ccnet_curate_trained_e2e(spark, sf_dir):
     across the entire container → classifier → keep span.  The marker
     heuristic remains the zero-training seam in
     pipeline_ccnet_curate."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-    )
-    from opentsdb_aura_spark.operators.htmltext import html_to_text
-    from opentsdb_aura_spark.operators.quality import (
-        FIXTURE_BADWORDS,
-        badwords_exprs,
-        gopher_quality_flags,
-        hashed_char_ngram_features,
-        link_density_exprs,
-        lm_bigram_scores,
-        ovr_logreg_scores,
-        perplexity_buckets,
-        train_ovr_logreg_weights,
-    )
-    from opentsdb_aura_spark.queries.pipeline import (
-        _LANGID_D,
-        _LANGID_ITERS,
-        _LANGID_LR,
-        _langid_corpus,
-        _langid_langs,
-    )
+    from opentsdb_aura_spark.operators.quality import lm_bigram_scores
 
     planted = _langid_corpus(spark, sf_dir)
-    files = synthesize_warc(
-        planted, docs_per_file=_DPF, http_envelope=True, html_body=True, text_col="txt"
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        F.col("body").alias("html"),
-    )
-    # one extraction pass feeds classifier training, scoring, the LM
-    # fit, and the gates (eager: ~36 downstream passes re-read it)
-    ext = html_to_text(pages).localCheckpoint()
-    feats = hashed_char_ngram_features(ext, n=3, n_features=_LANGID_D)
-    gold = planted.select("doc_id", "lang")
-    langs_list, _ = _langid_langs()
-    # one featurize+pack materialization shared by the fit and the
-    # scoring pass (the train/score shared-pack path)
-    from opentsdb_aura_spark.operators.quality import _pack_label_features
 
-    packed = _pack_label_features(gold, feats, ["lang"]).localCheckpoint(eager=False)
-    models = train_ovr_logreg_weights(
-        None,
-        None,
-        classes=langs_list,
-        n_features=_LANGID_D,
-        lr=_LANGID_LR,
-        n_iter=_LANGID_ITERS,
-        center=True,
-        packed=packed,
-    )
-    preds = ovr_logreg_scores(None, models, None, n_features=_LANGID_D, packed=packed)
-    langs_df = preds.select("doc_id", F.col("pred_lang").alias("lang"))
-    g = gopher_quality_flags(
-        ext, min_tokens=10, extra_cols=("link_chars", "text_chars", "text")
-    )
-    scores = lm_bigram_scores(ext, alpha=0.1).select(
-        "doc_id", _r("avg_logprob", 4).alias("avg_logprob")
-    )
-    bkt = perplexity_buckets(langs_df.join(scores, "doc_id"))
-    label = (
-        F.when(F.col("ppl_bucket") == 1, "head")
-        .when(F.col("ppl_bucket") == 2, "middle")
-        .otherwise("tail")
-    )
-    bkt = bkt.select("doc_id", "lang", "avg_logprob", label.alias("ppl_bucket"))
-    _, ok_ld = link_density_exprs()
-    _, ok_bw = badwords_exprs(FIXTURE_BADWORDS)
-    ok_ppl = F.col("ppl_bucket").isin("head", "middle")
-    gates = g.select(
-        "doc_id",
-        F.col("keep").alias("keep_quality"),
-        ok_ld.alias("ok_link_density"),
-        ok_bw.alias("ok_badwords"),
-    )
-    return gates.join(bkt, "doc_id").select(
-        "doc_id",
-        "lang",
-        "avg_logprob",
-        "ppl_bucket",
-        "keep_quality",
-        "ok_link_density",
-        "ok_badwords",
-        ok_ppl.alias("ok_ppl"),
-        (
-            F.col("keep_quality")
-            & F.col("ok_link_density")
-            & F.col("ok_badwords")
-            & ok_ppl
-        ).alias("keep"),
+    def trained_lang(ext):
+        # one featurize+pack of the EXTRACTED text, labelled with the
+        # planted gold lang, shared by the fit (30 bounded <= D+1-row
+        # collects) and the scoring pass
+        packed = _langid_packed(planted, ext, text_col="text")
+        return _langid_scores(packed, _langid_models(packed))
+
+    return _ccnet_crawl_keep(
+        planted, lambda ext: lm_bigram_scores(ext, alpha=0.1), trained_lang, text_col="txt"
     )
 
 
@@ -1335,12 +1110,7 @@ def pipeline_curate_to_wet(spark, sf_dir):
     extraction projection (extra_cols), survivors flow straight into
     the export groupBy — one shuffle (the WET file grouping) after
     the narrow chain."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-        write_wet_files,
-    )
+    from opentsdb_aura_spark.operators.containers import warc_records, write_wet_files
     from opentsdb_aura_spark.operators.htmltext import html_to_text
     from opentsdb_aura_spark.operators.quality import (
         FIXTURE_BADWORDS,
@@ -1349,16 +1119,7 @@ def pipeline_curate_to_wet(spark, sf_dir):
         link_density_exprs,
     )
 
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF, http_envelope=True, html_body=True
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        F.col("body").alias("html"),
-    )
+    pages = _crawl_pages(docs_raw(spark, sf_dir))
     ext = html_to_text(pages)
     flags = gopher_quality_flags(
         ext, min_tokens=10, extra_cols=("link_chars", "text_chars", "text")
@@ -1415,24 +1176,9 @@ def corpus_warc_gzip_html_text(spark, sf_dir):
     corpus_warc_html_text — identical title/text must emerge whether
     or not the server compressed, proving Content-Encoding inflation
     composes with every later stage."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-    )
     from opentsdb_aura_spark.operators.htmltext import html_to_text
 
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF,
-        http_envelope=True, html_body=True, content_encoding=True,
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        F.col("body").alias("html"),
-    )
+    pages = _crawl_pages(docs_raw(spark, sf_dir), content_encoding=True)
     return html_to_text(pages).select("doc_id", "title", "text")
 
 
@@ -1824,51 +1570,7 @@ def corpus_wat_links_roundtrip(spark, sf_dir):
     metadata rides the link explosion as keep_cols and folds back in
     the SAME groupBy that builds the link list — one shuffle, one
     parse of the chain (a meta-side join would re-execute it)."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-        write_wat_files,
-    )
-    from opentsdb_aura_spark.operators.htmltext import html_links
-
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF, http_envelope=True, html_body=True
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        "record_id",
-        F.col("target_uri").alias("url"),
-        "status_code",
-        F.col("body").alias("html"),
-    )
-    # ONE pass: the per-capture metadata rides the link explosion as
-    # keep_cols and folds back in the same aggregation that builds the
-    # link list — a separate meta branch would re-execute the whole
-    # synth→parse→split chain for the join's second input
-    meta = (
-        html_links(pages, keep_cols=("doc_id", "record_id", "url", "status_code"))
-        .groupBy("doc_id")
-        .agg(
-            F.first("record_id").alias("record_id"),
-            F.first("url").alias("url"),
-            F.first("status_code").alias("status"),
-            F.array_sort(F.collect_list("href")).alias("links"),
-        )
-        .withColumn(
-            "file_id",
-            F.expr(f"CAST(doc_id DIV {_DPF} AS LONG)"),  # integer DIV: double division drifts above 2^53 ids
-        )
-    )
-    wat = write_wat_files(meta, meta_cols=("url", "status", "links"))
-    return (
-        warc_records(wat)
-        .where(F.col("warc_type") == "metadata")
-        .select("record_id", "target_uri", "content_length", "payload_md5")
-    )
+    return _wat_link_records(spark, sf_dir, F.col("href"))
 
 
 # Fixture robots rules (operators/robots.py encode_robots_txt),
@@ -2705,51 +2407,7 @@ def corpus_wat_anchor_links(spark, sf_dir):
     order), so the anchor-text CAPTURE and the nested serialization
     are hash-proven together.  Same one-shuffle plan as the bare-href
     roundtrip — the text rides the same structs."""
-    from opentsdb_aura_spark.operators.containers import (
-        http_responses,
-        synthesize_warc,
-        warc_records,
-        write_wat_files,
-    )
-    from opentsdb_aura_spark.operators.htmltext import html_links
-
-    files = synthesize_warc(
-        docs_raw(spark, sf_dir), docs_per_file=_DPF, http_envelope=True, html_body=True
-    )
-    resp = http_responses(warc_records(files, with_payload=True), with_body=True)
-    pages = resp.select(
-        F.regexp_extract(F.col("record_id"), r"^urn:uuid:doc-(\d+)$", 1)
-        .try_cast("long")
-        .alias("doc_id"),
-        "record_id",
-        F.col("target_uri").alias("url"),
-        "status_code",
-        F.col("body").alias("html"),
-    )
-    meta = (
-        html_links(pages, keep_cols=("doc_id", "record_id", "url", "status_code"))
-        .groupBy("doc_id")
-        .agg(
-            F.first("record_id").alias("record_id"),
-            F.first("url").alias("url"),
-            F.first("status_code").alias("status"),
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("href"), F.col("anchor_text").alias("text"))
-                )
-            ).alias("links"),
-        )
-        .withColumn(
-            "file_id",
-            F.expr(f"CAST(doc_id DIV {_DPF} AS LONG)"),  # integer DIV: double division drifts above 2^53 ids
-        )
-    )
-    wat = write_wat_files(meta, meta_cols=("url", "status", "links"))
-    return (
-        warc_records(wat)
-        .where(F.col("warc_type") == "metadata")
-        .select("record_id", "target_uri", "content_length", "payload_md5")
-    )
+    return _wat_link_records(spark, sf_dir, F.struct(F.col("href"), F.col("anchor_text").alias("text")))
 
 
 @register(
@@ -2856,6 +2514,59 @@ def corpus_cdx_surt_index(spark, sf_dir):
     return idx.select("urlkey", "url", "record_id", "status", "digest")
 
 
+def _capture_history():
+    """The fixture capture history over documents: doc_id = 100·i + u
+    is capture i (one per day from 2024-01-01) of url key u, whose
+    content version is v = i DIV 3 (integer DIV: double division
+    drifts above 2^53 ids).  Returns (u, i, v, url, capture_ts)."""
+    u = (F.col("doc_id") % 100).cast("long")
+    i = F.expr("CAST(doc_id DIV 100 AS LONG)")
+    v = F.expr("CAST(doc_id DIV 100 DIV 3 AS LONG)")
+    url = F.concat(F.lit("http://example.com/page/"), u)
+    return u, i, v, url, (F.lit(1704067200) + i * 86400).cast("double").alias("capture_ts")
+
+
+def _version_digest(url):
+    """md5 of "<url>:<content version>": the body digest of a capture."""
+    return F.md5(F.concat(url, F.lit(":"), F.expr("CAST(doc_id DIV 100 DIV 3 AS STRING)")))
+
+
+def _validators(u, i, v):
+    """The captures' HTTP validators: ETag "e-<u>-<v>" (absent on every
+    3rd url and every 4th capture) and Last-Modified (absent on odd
+    urls and every 5th capture)."""
+    return (
+        F.when(
+            (u % 3 == 0) | (i % 4 == 3), F.lit(None)
+        ).otherwise(
+            F.concat(F.lit('"e-'), u, F.lit("-"), v, F.lit('"'))
+        ).alias("etag"),
+        F.when(
+            (u % 2 == 1) | (i % 5 == 4), F.lit(None)
+        ).otherwise(
+            F.concat(
+                F.lpad((v % 28 + 1).cast("string"), 2, "0"),
+                F.lit(" Jan 2024 00:00:00 GMT"),
+            )
+        ).alias("last_modified"),
+    )
+
+
+# The revisit policy over the ``m`` change flags (chg, rn per url and
+# ts): counts, change rate, unchanged streak and the next fetch after a
+# wait doubling per unchanged capture (capped at 2^5 days).
+_RECRAWL_POLICY_SQL = """a AS (SELECT url, CAST(count(*) AS BIGINT) AS n_captures,
+             CAST(sum(chg) AS BIGINT) AS n_changes,
+             max(CASE WHEN chg = 1 THEN rn END) AS lcr, max(ts) AS last_ts
+      FROM m GROUP BY 1)
+SELECT url, n_captures, n_changes,
+       round(CASE WHEN n_captures > 1
+                  THEN n_changes / CAST(n_captures - 1 AS DOUBLE) END, 6) AS change_rate,
+       CAST(coalesce(n_captures - lcr, n_captures - 1) AS BIGINT) AS streak,
+       round(last_ts + 86400.0 * power(2, least(coalesce(n_captures - lcr, n_captures - 1), 5)), 6) AS next_fetch_ts
+FROM a"""
+
+
 @register(
     "corpus_recrawl_schedule",
     """WITH caps AS (
@@ -2868,16 +2579,8 @@ m AS (SELECT url, ts,
              THEN 1 ELSE 0 END AS chg,
         row_number() OVER w AS rn
       FROM caps WINDOW w AS (PARTITION BY url ORDER BY ts, digest)),
-a AS (SELECT url, CAST(count(*) AS BIGINT) AS n_captures,
-             CAST(sum(chg) AS BIGINT) AS n_changes,
-             max(CASE WHEN chg = 1 THEN rn END) AS lcr, max(ts) AS last_ts
-      FROM m GROUP BY 1)
-SELECT url, n_captures, n_changes,
-       round(CASE WHEN n_captures > 1
-                  THEN n_changes / CAST(n_captures - 1 AS DOUBLE) END, 6) AS change_rate,
-       CAST(coalesce(n_captures - lcr, n_captures - 1) AS BIGINT) AS streak,
-       round(last_ts + 86400.0 * power(2, least(coalesce(n_captures - lcr, n_captures - 1), 5)), 6) AS next_fetch_ts
-FROM a""",
+"""
+    + _RECRAWL_POLICY_SQL,
 )
 def corpus_recrawl_schedule(spark, sf_dir):
     """Adaptive revisit policy over capture history — the classic CDX
@@ -2894,13 +2597,8 @@ def corpus_recrawl_schedule(spark, sf_dir):
     sorted by at rest."""
     from opentsdb_aura_spark.operators.containers import recrawl_schedule
 
-    i = F.expr("CAST(doc_id DIV 100 AS LONG)")  # integer DIV: double division drifts above 2^53 ids
-    url = F.concat(F.lit("http://example.com/page/"), (F.col("doc_id") % 100).cast("long"))
-    caps = docs_raw(spark, sf_dir).select(
-        url.alias("url"),
-        (F.lit(1704067200) + i * 86400).cast("double").alias("capture_ts"),
-        F.md5(F.concat(url, F.lit(":"), F.expr("CAST(doc_id DIV 100 DIV 3 AS STRING)"))).alias("digest"),
-    )
+    _, _, _, url, capture_ts = _capture_history()
+    caps = docs_raw(spark, sf_dir).select(url.alias("url"), capture_ts, _version_digest(url).alias("digest"))
     out = recrawl_schedule(caps)
     return out.select(
         "url", "n_captures", "n_changes",
@@ -2956,9 +2654,7 @@ def corpus_capture_change(spark, sf_dir):
     the recrawl policy already pays."""
     from opentsdb_aura_spark.operators.containers import capture_change_profile
 
-    u = (F.col("doc_id") % 100).cast("long")
-    i = F.expr("CAST(doc_id DIV 100 AS LONG)")
-    v = F.expr("CAST(doc_id DIV 100 DIV 3 AS LONG)")
+    u, _, v, url, capture_ts = _capture_history()
     toks = F.concat(
         F.transform(
             F.sequence(F.lit(0), F.lit(19)),
@@ -2968,11 +2664,7 @@ def corpus_capture_change(spark, sf_dir):
         ),
         F.array(F.concat(F.lit("u"), u)),
     )
-    caps = docs_raw(spark, sf_dir).select(
-        F.concat(F.lit("http://example.com/page/"), u).alias("url"),
-        (F.lit(1704067200) + i * 86400).cast("double").alias("capture_ts"),
-        F.array_join(toks, " ").alias("text"),
-    )
+    caps = docs_raw(spark, sf_dir).select(url.alias("url"), capture_ts, F.array_join(toks, " ").alias("text"))
     out = capture_change_profile(caps)
     return out.select(
         "url",
@@ -3020,26 +2712,8 @@ def corpus_conditional_fetch(spark, sf_dir):
     no window, no second shuffle."""
     from opentsdb_aura_spark.operators.containers import conditional_fetch_plan
 
-    u = (F.col("doc_id") % 100).cast("long")
-    i = F.expr("CAST(doc_id DIV 100 AS LONG)")
-    v = F.expr("CAST(doc_id DIV 100 DIV 3 AS LONG)")
-    caps = docs_raw(spark, sf_dir).select(
-        F.concat(F.lit("http://example.com/page/"), u).alias("url"),
-        (F.lit(1704067200) + i * 86400).cast("double").alias("capture_ts"),
-        F.when(
-            (u % 3 == 0) | (i % 4 == 3), F.lit(None)
-        ).otherwise(
-            F.concat(F.lit('"e-'), u, F.lit("-"), v, F.lit('"'))
-        ).alias("etag"),
-        F.when(
-            (u % 2 == 1) | (i % 5 == 4), F.lit(None)
-        ).otherwise(
-            F.concat(
-                F.lpad((v % 28 + 1).cast("string"), 2, "0"),
-                F.lit(" Jan 2024 00:00:00 GMT"),
-            )
-        ).alias("last_modified"),
-    )
+    u, i, v, url, capture_ts = _capture_history()
+    caps = docs_raw(spark, sf_dir).select(url.alias("url"), capture_ts, *_validators(u, i, v))
     out = conditional_fetch_plan(caps)
     return out.select(
         "url",
@@ -3172,27 +2846,12 @@ def corpus_recrawl_plan(spark, sf_dir):
         recrawl_schedule,
     )
 
-    u = (F.col("doc_id") % 100).cast("long")
-    i = F.expr("CAST(doc_id DIV 100 AS LONG)")
-    v = F.expr("CAST(doc_id DIV 100 DIV 3 AS LONG)")
-    url = F.concat(F.lit("http://example.com/page/"), u)
+    u, i, v, url, capture_ts = _capture_history()
     caps = docs_raw(spark, sf_dir).select(
         url.alias("url"),
-        (F.lit(1704067200) + i * 86400).cast("double").alias("capture_ts"),
+        capture_ts,
         F.md5(F.concat(url, F.lit(":"), v.cast("string"))).alias("digest"),
-        F.when(
-            (u % 3 == 0) | (i % 4 == 3), F.lit(None)
-        ).otherwise(
-            F.concat(F.lit('"e-'), u, F.lit("-"), v, F.lit('"'))
-        ).alias("etag"),
-        F.when(
-            (u % 2 == 1) | (i % 5 == 4), F.lit(None)
-        ).otherwise(
-            F.concat(
-                F.lpad((v % 28 + 1).cast("string"), 2, "0"),
-                F.lit(" Jan 2024 00:00:00 GMT"),
-            )
-        ).alias("last_modified"),
+        *_validators(u, i, v),
     )
     sched = recrawl_schedule(caps)
     plan = conditional_fetch_plan(caps)
@@ -3540,16 +3199,8 @@ m AS (SELECT url, ts,
                   AND eff <> lag(eff) OVER w THEN 1 ELSE 0 END AS chg,
         row_number() OVER w AS rn
       FROM e WINDOW w AS (PARTITION BY url ORDER BY ts)),
-a AS (SELECT url, CAST(count(*) AS BIGINT) AS n_captures,
-             CAST(sum(chg) AS BIGINT) AS n_changes,
-             max(CASE WHEN chg = 1 THEN rn END) AS lcr, max(ts) AS last_ts
-      FROM m GROUP BY 1)
-SELECT url, n_captures, n_changes,
-       round(CASE WHEN n_captures > 1
-                  THEN n_changes / CAST(n_captures - 1 AS DOUBLE) END, 6) AS change_rate,
-       CAST(coalesce(n_captures - lcr, n_captures - 1) AS BIGINT) AS streak,
-       round(last_ts + 86400.0 * power(2, least(coalesce(n_captures - lcr, n_captures - 1), 5)), 6) AS next_fetch_ts
-FROM a""",
+"""
+    + _RECRAWL_POLICY_SQL,
 )
 def corpus_recrawl_304(spark, sf_dir):
     """Conditional fetches feeding the revisit policy — the crawl-
@@ -3566,15 +3217,11 @@ def corpus_recrawl_304(spark, sf_dir):
     no extra shuffle)."""
     from opentsdb_aura_spark.operators.containers import recrawl_schedule
 
-    i = F.expr("CAST(doc_id DIV 100 AS LONG)")
-    url = F.concat(F.lit("http://example.com/page/"), (F.col("doc_id") % 100).cast("long"))
+    _, i, _, url, capture_ts = _capture_history()
     caps = docs_raw(spark, sf_dir).select(
         url.alias("url"),
-        (F.lit(1704067200) + i * 86400).cast("double").alias("capture_ts"),
-        F.when(
-            i % 4 != 3,
-            F.md5(F.concat(url, F.lit(":"), F.expr("CAST(doc_id DIV 100 DIV 3 AS STRING)"))),
-        ).alias("digest"),
+        capture_ts,
+        F.when(i % 4 != 3, _version_digest(url)).alias("digest"),
         F.when(i % 4 == 3, F.lit(304)).otherwise(F.lit(200)).alias("status"),
     )
     out = recrawl_schedule(caps, status_col="status")

@@ -389,7 +389,7 @@ def text_normalize_docs(spark, sf_dir):
 # ------------------------------------------------------------- BPE training
 
 
-def _bpe_oracle_ctes(n_merges: int, *, final_vocab: bool = False) -> str:
+def _merge_oracle_ctes(n_merges: int, *, final_vocab: bool = False, wordpiece: bool = False) -> str:
     """Unrolled-rounds DuckDB CTE chain for the BPE oracles: round k's
     CTEs are (p{k}) pair counts over vocab v{k}, (b{k}) the argmax
     merge with the same (count DESC, lhs, rhs) binary tie-break the
@@ -400,97 +400,37 @@ def _bpe_oracle_ctes(n_merges: int, *, final_vocab: bool = False) -> str:
     accumulator type == element type (same workaround family as
     text_fingerprint_md5's string-chained fold).  ``final_vocab``
     additionally materializes v{n_merges} — the per-word segmentation
-    AFTER all merges, which the apply-stage oracle joins against."""
+    AFTER all merges, which the apply-stage oracle joins against.
+
+    ``wordpiece`` is the WordPiece training chain: the same shape, every
+    CTE MATERIALIZED, plus a per-round unigram symbol-count CTE (u{k})
+    and the likelihood argmax — score = double(pair_count) /
+    (double(c_a)·double(c_b)), the SAME pinned expression shape the
+    Spark trainer computes, so the IEEE double (and therefore the
+    argmax with its (score DESC, a, b) tie-break) is engine-exact."""
     S = "chr(1)"
+    m = " MATERIALIZED" if wordpiece else ""
     cte = [
-        r"""w AS (
+        rf"""w AS{m} (
   SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
     SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'), _t -> _t <> '')) AS w
     FROM documents) GROUP BY 1),
-v0 AS (
+v0 AS{m} (
   SELECT w, array_to_string(list_append(list_filter(string_split(w, ''), c -> c <> ''), '</w>'), chr(1)) AS syms, cnt
   FROM w)"""
     ]
     for k in range(n_merges):
-        cte.append(
-            f"""p{k} AS (
+        pairs = f"""p{k} AS{m} (
   SELECT a, b, CAST(sum(cnt) AS BIGINT) AS pair_count FROM (
     SELECT cnt, parts[i] AS a, parts[i+1] AS b
     FROM (SELECT string_split(syms, {S}) AS parts, cnt FROM v{k}),
          unnest(range(1, len(parts))) AS t(i))
   GROUP BY 1, 2),
-b{k} AS (SELECT {k} AS rnk, a, b, pair_count FROM p{k} ORDER BY pair_count DESC, a, b LIMIT 1)"""
-        )
-        if k < n_merges - 1 or final_vocab:
+"""
+        if wordpiece:
             cte.append(
-                f"""v{k + 1} AS (
-  SELECT v.w, list_reduce(list_prepend('', string_split(v.syms, {S})),
-           (acc, s) -> CASE
-             WHEN acc <> '' AND string_split(acc, {S})[-1] = bk.a AND s = bk.b
-             THEN array_to_string(list_append(array_pop_back(string_split(acc, {S})), bk.a || bk.b), {S})
-             ELSE CASE WHEN acc = '' THEN s ELSE acc || {S} || s END END) AS syms,
-         v.cnt
-  FROM v{k} v CROSS JOIN b{k} bk)"""
-            )
-    return ",\n".join(cte)
-
-
-def _bpe_train_oracle_sql(n_merges: int) -> str:
-    sel = "\nUNION ALL ".join(
-        f"SELECT CAST(rnk AS INT) AS rank, a AS lhs, b AS rhs, a || b AS merged, pair_count FROM b{k}"
-        for k in range(n_merges)
-    )
-    return "WITH " + _bpe_oracle_ctes(n_merges) + "\n" + sel
-
-
-def _bpe_subword_oracle_sql(n_merges: int) -> str:
-    """Apply-stage oracle: per-doc subword counts under the LEARNED
-    merges = sum over the doc's words of the final vocab's segment
-    length (v{n_merges} carries every word's post-merge symbol
-    string)."""
-    return (
-        "WITH "
-        + _bpe_oracle_ctes(n_merges, final_vocab=True)
-        + f""",
-seg AS (SELECT w, len(string_split(syms, chr(1))) AS n_syms FROM v{n_merges}),
-dw AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), _t -> _t <> '')) AS w
-  FROM documents),
-per_doc AS (
-  SELECT doc_id, CAST(sum(n_syms) AS BIGINT) AS n_subwords
-  FROM dw JOIN seg USING (w) GROUP BY 1)
-SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-       coalesce(p.n_subwords, 0) AS n_subwords
-FROM documents d LEFT JOIN per_doc p USING (doc_id)"""
-    )
-
-
-def _wp_oracle_ctes(n_merges: int, final_vocab: bool = False) -> str:
-    """Unrolled WordPiece training chain: the BPE CTE shape plus a
-    per-round unigram symbol-count CTE and the likelihood argmax —
-    score = double(pair_count) / (double(c_a)·double(c_b)), the SAME
-    pinned expression shape the Spark trainer computes, so the IEEE
-    double (and therefore the argmax with its (score DESC, a, b)
-    tie-break) is engine-exact."""
-    S = "chr(1)"
-    cte = [
-        r"""w AS MATERIALIZED (
-  SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
-    SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'), _t -> _t <> '')) AS w
-    FROM documents) GROUP BY 1),
-v0 AS MATERIALIZED (
-  SELECT w, array_to_string(list_append(list_filter(string_split(w, ''), c -> c <> ''), '</w>'), chr(1)) AS syms, cnt
-  FROM w)"""
-    ]
-    for k in range(n_merges):
-        cte.append(
-            f"""p{k} AS MATERIALIZED (
-  SELECT a, b, CAST(sum(cnt) AS BIGINT) AS pair_count FROM (
-    SELECT cnt, parts[i] AS a, parts[i+1] AS b
-    FROM (SELECT string_split(syms, {S}) AS parts, cnt FROM v{k}),
-         unnest(range(1, len(parts))) AS t(i))
-  GROUP BY 1, 2),
-u{k} AS MATERIALIZED (
+                pairs
+                + f"""u{k} AS MATERIALIZED (
   SELECT s, CAST(sum(cnt) AS BIGINT) AS ucnt FROM (
     SELECT unnest(string_split(syms, {S})) AS s, cnt FROM v{k})
   GROUP BY 1),
@@ -498,10 +438,15 @@ b{k} AS (SELECT {k} AS rnk, a, b, pair_count,
                 CAST(pair_count AS DOUBLE) / (CAST(ua.ucnt AS DOUBLE) * CAST(ub.ucnt AS DOUBLE)) AS score
          FROM p{k} JOIN u{k} ua ON p{k}.a = ua.s JOIN u{k} ub ON p{k}.b = ub.s
          ORDER BY score DESC, a, b LIMIT 1)"""
-        )
+            )
+        else:
+            cte.append(
+                pairs
+                + f"b{k} AS (SELECT {k} AS rnk, a, b, pair_count FROM p{k} ORDER BY pair_count DESC, a, b LIMIT 1)"
+            )
         if k < n_merges - 1 or final_vocab:
             cte.append(
-                f"""v{k + 1} AS MATERIALIZED (
+                f"""v{k + 1} AS{m} (
   SELECT v.w, list_reduce(list_prepend('', string_split(v.syms, {S})),
            (acc, s) -> CASE
              WHEN acc <> '' AND string_split(acc, {S})[-1] = bk.a AND s = bk.b
@@ -513,23 +458,23 @@ b{k} AS (SELECT {k} AS rnk, a, b, pair_count,
     return ",\n".join(cte)
 
 
-def _wp_train_oracle_sql(n_merges: int) -> str:
-    sel = "\nUNION ALL ".join(
-        f"SELECT CAST(rnk AS INT) AS rank, a AS lhs, b AS rhs, a || b AS merged, pair_count, round(score, 6) AS score FROM b{k}"
-        for k in range(n_merges)
-    )
-    return "WITH " + _wp_oracle_ctes(n_merges) + "\n" + sel
+# the corpus words per doc, the head of every subword-apply oracle tail
+_DOC_WORDS_SQL = """dw AS (
+  SELECT doc_id, unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), _t -> _t <> '')) AS w
+  FROM documents)"""
 
 
-def _wp_subword_oracle_sql(n_merges: int) -> str:
+def _subword_count_oracle_sql(n_merges: int, *, wordpiece: bool = False) -> str:
+    """Apply-stage oracle: per-doc subword counts under the LEARNED
+    merges = sum over the doc's words of the final vocab's segment
+    length (v{n_merges} carries every word's post-merge symbol
+    string)."""
     return (
         "WITH "
-        + _wp_oracle_ctes(n_merges, final_vocab=True)
+        + _merge_oracle_ctes(n_merges, final_vocab=True, wordpiece=wordpiece)
         + f""",
 seg AS (SELECT w, len(string_split(syms, chr(1))) AS n_syms FROM v{n_merges}),
-dw AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), _t -> _t <> '')) AS w
-  FROM documents),
+{_DOC_WORDS_SQL},
 per_doc AS (
   SELECT doc_id, CAST(sum(n_syms) AS BIGINT) AS n_subwords
   FROM dw JOIN seg USING (w) GROUP BY 1)
@@ -537,6 +482,22 @@ SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
        coalesce(p.n_subwords, 0) AS n_subwords
 FROM documents d LEFT JOIN per_doc p USING (doc_id)"""
     )
+
+
+def _bpe_train_oracle_sql(n_merges: int) -> str:
+    sel = "\nUNION ALL ".join(
+        f"SELECT CAST(rnk AS INT) AS rank, a AS lhs, b AS rhs, a || b AS merged, pair_count FROM b{k}"
+        for k in range(n_merges)
+    )
+    return "WITH " + _merge_oracle_ctes(n_merges) + "\n" + sel
+
+
+def _wp_train_oracle_sql(n_merges: int) -> str:
+    sel = "\nUNION ALL ".join(
+        f"SELECT CAST(rnk AS INT) AS rank, a AS lhs, b AS rhs, a || b AS merged, pair_count, round(score, 6) AS score FROM b{k}"
+        for k in range(n_merges)
+    )
+    return "WITH " + _merge_oracle_ctes(n_merges, wordpiece=True) + "\n" + sel
 
 
 def _wp_greedy_oracle_sql(n_merges: int, max_symbols: int = 9) -> str:
@@ -566,7 +527,7 @@ def _wp_greedy_oracle_sql(n_merges: int, max_symbols: int = 9) -> str:
     )
     return (
         "WITH "
-        + _wp_oracle_ctes(n_merges)
+        + _merge_oracle_ctes(n_merges, wordpiece=True)
         + f""",
 vv AS MATERIALIZED (SELECT list(piece) AS vl FROM (
   SELECT DISTINCT unnest(list_filter(string_split(w, ''), c -> c <> '')) AS piece FROM w
@@ -581,9 +542,7 @@ seg AS (SELECT w,
                     ELSE CAST(string_split(st, '|')[2] AS INT) END AS n_syms,
                string_split(st, '|')[3] = '1' AS is_unk
         FROM segw),
-dw AS (
-  SELECT doc_id, unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), _t -> _t <> '')) AS w
-  FROM documents),
+{_DOC_WORDS_SQL},
 per_doc AS (
   SELECT doc_id, CAST(sum(n_syms) AS BIGINT) AS n_subwords,
          CAST(sum(CASE WHEN is_unk THEN 1 ELSE 0 END) AS BIGINT) AS n_unk_words
@@ -608,13 +567,20 @@ def text_wordpiece_greedy_count(spark, sf_dir):
     rule are part of the hashed contract).  The corpus vocabulary
     covers every base char, so n_unk_words is provably 0 here; the
     UNK path is pinned by a restricted-vocab unit test."""
-    from opentsdb_aura_spark.operators.dedup_text import tokens
-    from opentsdb_aura_spark.operators.text import (
-        wordpiece_greedy_apply,
-        wordpiece_train,
-    )
+    from opentsdb_aura_spark.operators.text import wordpiece_greedy_apply
 
     d = docs(spark, sf_dir)
+    vocab = _wp_vocab(d)
+    return wordpiece_greedy_apply(d, vocab, max_symbols=9)
+
+
+def _wp_vocab(d):
+    """The trained WordPiece vocabulary: the corpus alphabet, the
+    end-of-word symbol and the 8 learned merges, checked against the
+    oracles' pinned 9-symbol candidate span."""
+    from opentsdb_aura_spark.operators.dedup_text import tokens
+    from opentsdb_aura_spark.operators.text import wordpiece_train
+
     merges = wordpiece_train(d, n_merges=8).orderBy("rank").collect()
     wdf = d.select(F.explode(tokens(F.col("text"))).alias("w"))
     chars = (
@@ -624,9 +590,8 @@ def text_wordpiece_greedy_count(spark, sf_dir):
         .distinct()
         .collect()  # bounded: corpus alphabet
     )
-    vocab = [r["c"] for r in chars] + ["</w>"] + [r["merged"] for r in merges]
     _wp_assert_span(merges, 9)
-    return wordpiece_greedy_apply(d, vocab, max_symbols=9)
+    return [r["c"] for r in chars] + ["</w>"] + [r["merged"] for r in merges]
 
 
 def _wp_assert_span(merges, pinned: int) -> None:
@@ -680,7 +645,7 @@ def _wp_pieces_oracle_sql(n_merges: int, max_symbols: int = 9) -> str:
     )
     return (
         "WITH "
-        + _wp_oracle_ctes(n_merges)
+        + _merge_oracle_ctes(n_merges, wordpiece=True)
         + f""",
 vv AS MATERIALIZED (SELECT list(piece) AS vl FROM (
   SELECT DISTINCT unnest(list_filter(string_split(w, ''), c -> c <> '')) AS piece FROM w
@@ -714,24 +679,10 @@ def text_wordpiece_pieces(spark, sf_dir):
     the fold step-for-step with the emitted piece string riding in
     the accumulator, so the piece strings themselves (not just their
     counts) are value-hashed."""
-    from opentsdb_aura_spark.operators.dedup_text import tokens
-    from opentsdb_aura_spark.operators.text import (
-        wordpiece_pieces,
-        wordpiece_train,
-    )
+    from opentsdb_aura_spark.operators.text import wordpiece_pieces
 
     d = docs(spark, sf_dir)
-    merges = wordpiece_train(d, n_merges=8).orderBy("rank").collect()
-    wdf = d.select(F.explode(tokens(F.col("text"))).alias("w"))
-    chars = (
-        wdf.select(
-            F.explode(F.filter(F.split("w", ""), lambda t: t != "")).alias("c")
-        )
-        .distinct()
-        .collect()  # bounded: corpus alphabet
-    )
-    vocab = [r["c"] for r in chars] + ["</w>"] + [r["merged"] for r in merges]
-    _wp_assert_span(merges, 9)
+    vocab = _wp_vocab(d)
     return wordpiece_pieces(d, vocab, max_symbols=9)
 
 
@@ -759,7 +710,7 @@ def text_wordpiece_train_merges(spark, sf_dir):
     )
 
 
-@register("text_wordpiece_subword_count", _wp_subword_oracle_sql(8))
+@register("text_wordpiece_subword_count", _subword_count_oracle_sql(8, wordpiece=True))
 def text_wordpiece_subword_count(spark, sf_dir):
     """The apply half of WordPiece under the same FULL oracle: train
     8 likelihood-scored merges, segment every document's distinct
@@ -793,7 +744,7 @@ def text_bpe_train_merges(spark, sf_dir):
     return bpe_train(docs(spark, sf_dir), n_merges=_BPE_TRAIN_MERGES)
 
 
-@register("text_bpe_subword_count", _bpe_subword_oracle_sql(_BPE_TRAIN_MERGES))
+@register("text_bpe_subword_count", _subword_count_oracle_sql(_BPE_TRAIN_MERGES))
 def text_bpe_subword_count(spark, sf_dir):
     """The apply half of BPE under the same FULL oracle: train 8
     merges on the corpus, segment every document with them, return

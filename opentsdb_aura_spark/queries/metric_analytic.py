@@ -22,17 +22,40 @@ from opentsdb_aura_spark.queries.base import (  # shared underscore helpers
 # ==================================================== analytic processors (3.x graph)
 
 
-@register(
-    "movavg3_by_user_daily",
-    f"""{ORACLE_PTS},
+def _purchase_sums(spark, sf_dir, start, end, interval, group_tag_keys, fill="nan"):
+    """The purchase sums per ``interval`` bucket (and group) that the
+    processors post-process: run_metric_query over the store, no
+    dedupe pass (the store is already deduped)."""
+    q = _mq(
+        start=start,
+        end=end,
+        interval=interval,
+        ds_agg="sum",
+        filter=MetricLiteral("purchase"),
+        group_tag_keys=group_tag_keys,
+        gb_agg="sum",
+        fill=fill,
+    )
+    return run_metric_query(points(spark, sf_dir), q, dedupe=False)
+
+
+# the oracle side: purchase sums per user and day, and the same on the
+# dense (user × day) spine the windowed processors run over
+_USER_DAILY = f"""{ORACLE_PTS},
 agg AS (SELECT tag_user, {_bucket_sql(DAY)} AS bucket_ts, sum(value) AS v
         FROM dpts WHERE metric = 'purchase' AND ts >= {START} AND ts < {END}
-        GROUP BY 1, 2),
+        GROUP BY 1, 2)"""
+_USER_DAILY_DENSE = _USER_DAILY + f""",
 users AS (SELECT DISTINCT tag_user FROM agg),
 days AS (SELECT unnest(generate_series({START}, {END - 1}, {DAY})) AS bucket_ts),
 dense AS (SELECT u.tag_user, d.bucket_ts, a.v
           FROM users u CROSS JOIN days d
-          LEFT JOIN agg a ON a.tag_user = u.tag_user AND a.bucket_ts = d.bucket_ts)
+          LEFT JOIN agg a ON a.tag_user = u.tag_user AND a.bucket_ts = d.bucket_ts)"""
+
+
+@register(
+    "movavg3_by_user_daily",
+    f"""{_USER_DAILY_DENSE}
 SELECT tag_user, bucket_ts,
        round(avg(v) OVER (PARTITION BY tag_user ORDER BY bucket_ts
                           ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS ma_value
@@ -45,32 +68,14 @@ def movavg3_by_user_daily(spark, sf_dir):
     exactly)."""
     from opentsdb_aura_spark.operators.analytic import moving_average
 
-    q = _mq(
-        start=START,
-        end=END,
-        interval=DAY,
-        ds_agg="sum",
-        filter=MetricLiteral("purchase"),
-        group_tag_keys=["user"],
-        gb_agg="sum",
-        fill="nan",
-    )
-    res = run_metric_query(points(spark, sf_dir), q, dedupe=False)
+    res = _purchase_sums(spark, sf_dir, START, END, DAY, ["user"])
     res = moving_average(res, 3)
     return res.select("tag_user", "bucket_ts", _r(denan(F.col("value")), 4).alias("ma_value"))
 
 
 @register(
     "ewma3_by_user_daily",
-    f"""{ORACLE_PTS},
-agg AS (SELECT tag_user, {_bucket_sql(DAY)} AS bucket_ts, sum(value) AS v
-        FROM dpts WHERE metric = 'purchase' AND ts >= {START} AND ts < {END}
-        GROUP BY 1, 2),
-users AS (SELECT DISTINCT tag_user FROM agg),
-days AS (SELECT unnest(generate_series({START}, {END - 1}, {DAY})) AS bucket_ts),
-dense AS (SELECT u.tag_user, d.bucket_ts, a.v
-          FROM users u CROSS JOIN days d
-          LEFT JOIN agg a ON a.tag_user = u.tag_user AND a.bucket_ts = d.bucket_ts),
+    f"""{_USER_DAILY_DENSE},
 win AS (SELECT tag_user, bucket_ts,
                list(v) OVER (PARTITION BY tag_user ORDER BY bucket_ts
                              ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS arr
@@ -89,27 +94,14 @@ def ewma3_by_user_daily(spark, sf_dir):
     both numerator and denominator)."""
     from opentsdb_aura_spark.operators.analytic import moving_average
 
-    q = _mq(
-        start=START,
-        end=END,
-        interval=DAY,
-        ds_agg="sum",
-        filter=MetricLiteral("purchase"),
-        group_tag_keys=["user"],
-        gb_agg="sum",
-        fill="nan",
-    )
-    res = run_metric_query(points(spark, sf_dir), q, dedupe=False)
+    res = _purchase_sums(spark, sf_dir, START, END, DAY, ["user"])
     res = moving_average(res, 3, exponential=True)
     return res.select("tag_user", "bucket_ts", _r(denan(F.col("value")), 6).alias("ewma_value"))
 
 
 @register(
     "ratio_pct_by_user_daily",
-    f"""{ORACLE_PTS},
-agg AS (SELECT tag_user, {_bucket_sql(DAY)} AS bucket_ts, sum(value) AS v
-        FROM dpts WHERE metric = 'purchase' AND ts >= {START} AND ts < {END}
-        GROUP BY 1, 2)
+    f"""{_USER_DAILY}
 SELECT tag_user, bucket_ts,
        round(100.0 * v / sum(v) OVER (PARTITION BY bucket_ts), 6) AS pct_value
 FROM agg""",
@@ -119,32 +111,14 @@ def ratio_pct_by_user_daily(spark, sf_dir):
     all-user total per day."""
     from opentsdb_aura_spark.operators.analytic import ratio
 
-    q = _mq(
-        start=START,
-        end=END,
-        interval=DAY,
-        ds_agg="sum",
-        filter=MetricLiteral("purchase"),
-        group_tag_keys=["user"],
-        gb_agg="sum",
-        fill="none",
-    )
-    res = run_metric_query(points(spark, sf_dir), q, dedupe=False)
+    res = _purchase_sums(spark, sf_dir, START, END, DAY, ["user"], fill="none")
     res = ratio(res, as_percent=True)
     return res.select("tag_user", "bucket_ts", _r(denan(F.col("value")), 6).alias("pct_value"))
 
 
 @register(
     "slide3d_sum_by_user_daily",
-    f"""{ORACLE_PTS},
-agg AS (SELECT tag_user, {_bucket_sql(DAY)} AS bucket_ts, sum(value) AS v
-        FROM dpts WHERE metric = 'purchase' AND ts >= {START} AND ts < {END}
-        GROUP BY 1, 2),
-users AS (SELECT DISTINCT tag_user FROM agg),
-days AS (SELECT unnest(generate_series({START}, {END - 1}, {DAY})) AS bucket_ts),
-dense AS (SELECT u.tag_user, d.bucket_ts, a.v
-          FROM users u CROSS JOIN days d
-          LEFT JOIN agg a ON a.tag_user = u.tag_user AND a.bucket_ts = d.bucket_ts)
+    f"""{_USER_DAILY_DENSE}
 SELECT tag_user, bucket_ts,
        round(sum(v) OVER (PARTITION BY tag_user ORDER BY bucket_ts
                           RANGE BETWEEN {3 * DAY - 1} PRECEDING AND CURRENT ROW), 4) AS sw_value
@@ -157,17 +131,7 @@ def slide3d_sum_by_user_daily(spark, sf_dir):
     oracle side matches the NaN-skipping window exactly)."""
     from opentsdb_aura_spark.operators.analytic import sliding_window
 
-    q = _mq(
-        start=START,
-        end=END,
-        interval=DAY,
-        ds_agg="sum",
-        filter=MetricLiteral("purchase"),
-        group_tag_keys=["user"],
-        gb_agg="sum",
-        fill="nan",
-    )
-    res = run_metric_query(points(spark, sf_dir), q, dedupe=False)
+    res = _purchase_sums(spark, sf_dir, START, END, DAY, ["user"])
     res = sliding_window(res, 3 * DAY, "sum")
     return res.select("tag_user", "bucket_ts", _r(denan(F.col("value")), 4).alias("sw_value"))
 
@@ -247,17 +211,7 @@ def fill_previous_hourly(spark, sf_dir):
     NaN)."""
     from opentsdb_aura_spark.operators.analytic import fill_gaps
 
-    q = _mq(
-        start=SPINE_START,
-        end=SPINE_END,
-        interval=HOUR,
-        ds_agg="sum",
-        filter=MetricLiteral("purchase"),
-        group_tag_keys=[],
-        gb_agg="sum",
-        fill="nan",
-    )
-    res = run_metric_query(points(spark, sf_dir), q, dedupe=False)
+    res = _purchase_sums(spark, sf_dir, SPINE_START, SPINE_END, HOUR, [])
     res = fill_gaps(res, "previous")
     return res.select("bucket_ts", _r(denan(F.col("value")), 4).alias("filled_value"))
 
@@ -286,16 +240,6 @@ def fill_linear_hourly(spark, sf_dir):
     values, edges stay NaN."""
     from opentsdb_aura_spark.operators.analytic import fill_gaps
 
-    q = _mq(
-        start=SPINE_START,
-        end=SPINE_END,
-        interval=HOUR,
-        ds_agg="sum",
-        filter=MetricLiteral("purchase"),
-        group_tag_keys=[],
-        gb_agg="sum",
-        fill="nan",
-    )
-    res = run_metric_query(points(spark, sf_dir), q, dedupe=False)
+    res = _purchase_sums(spark, sf_dir, SPINE_START, SPINE_END, HOUR, [])
     res = fill_gaps(res, "linear")
     return res.select("bucket_ts", _r(denan(F.col("value")), 6).alias("filled_value"))

@@ -9,10 +9,30 @@ from __future__ import annotations
 
 from opentsdb_aura_spark.queries.base import *  # noqa: F401,F403
 from opentsdb_aura_spark.queries.base import (  # shared underscore helpers
+    _CCNET_BKT_SQL,
+    _CCNET_LM_SQL,
+    _GOPHER_KEEP_QUALITY_SQL,
+    _GOPHER_SIGNALS_SQL,
+    _LANGID_D,
+    _LANGID_ITERS,
     _bucket_sql,
+    _ccnet_keep,
     _ds_by_metric,
     _ds_by_metric_sql,
+    _kn3_coc_sql,
+    _kn_order_parts,
+    _kn_tower_parts,
+    _langid_corpus,
+    _langid_ctes,
+    _langid_feats,
+    _langid_langs,
+    _langid_margins_sql,
+    _langid_models,
+    _langid_packed,
+    _langid_pred_sql,
+    _langid_scores,
     _mq,
+    _ppl_terciles,
     _r,
     _rollup,
 )
@@ -104,9 +124,9 @@ def dedup_span_excise(spark, sf_dir):
     return excise_repeated_spans(docs(spark, sf_dir), n=8, min_docs=2)
 
 
-@register(
-    "dedup_ngram_jaccard",
-    f"""{ORACLE_SHINGLES},
+def _shingle_jaccard_sql(thr: float) -> str:
+    """Every doc pair whose exact 3-word-shingle Jaccard is >= thr."""
+    return f"""{ORACLE_SHINGLES},
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
   FROM shing a JOIN shing b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -116,7 +136,12 @@ SELECT doc_a, doc_b,
 FROM pairs
 JOIN sizes sa ON doc_a = sa.doc_id
 JOIN sizes sb ON doc_b = sb.doc_id
-WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= 0.2""",
+WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= {thr}"""
+
+
+@register(
+    "dedup_ngram_jaccard",
+    _shingle_jaccard_sql(0.2),
 )
 def dedup_ngram_jaccard(spark, sf_dir):
     """Near-dup detection: 3-word-shingle Jaccard ≥ 0.2 pairs."""
@@ -136,17 +161,7 @@ def dedup_minhash_lsh(spark, sf_dir):
 
 @register(
     "dedup_minhash_lsh_exact",
-    f"""{ORACLE_SHINGLES},
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-  FROM shing a JOIN shing b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2)
-SELECT doc_a, doc_b,
-       round(inter * 1.0 / (sa.n_sh + sb.n_sh - inter), 6) AS jaccard
-FROM pairs
-JOIN sizes sa ON doc_a = sa.doc_id
-JOIN sizes sb ON doc_b = sb.doc_id
-WHERE inter * 1.0 / (sa.n_sh + sb.n_sh - inter) >= 0.5""",
+    _shingle_jaccard_sql(0.5),
 )
 def dedup_minhash_lsh_exact(spark, sf_dir):
     """The flagship dedup path, hash-checked: MinHash-LSH candidates
@@ -368,9 +383,9 @@ def ann_ivfpq_recall(spark, sf_dir):
     return ann_recall_vs_exact(exact, approx, k_exact=10, k_approx=50)
 
 
-@register(
-    "ann_pq_exact_topk",
-    """WITH g AS (
+# Cosine of every (query, corpus) pair over the grid-quantized vectors
+# (254 levels per dimension), the head of the grid-PQ oracles.
+_GRID_COS_SQL = """WITH g AS (
   SELECT vec_id,
          list_transform(embedding, x ->
            greatest(least(CAST(floor((CAST(x AS DOUBLE) + 1.0) / 2.0 * 254.0 + 0.5) AS BIGINT),
@@ -384,7 +399,13 @@ s AS (
          list_sum(list_transform(range(1, len(qv)+1), i -> qv[i] * cv[i]))
          / (sqrt(list_sum(list_transform(qv, x -> x * x)))
             * sqrt(list_sum(list_transform(cv, x -> x * x)))) AS cs
-  FROM q, c WHERE query_id != neighbor_id),
+  FROM q, c WHERE query_id != neighbor_id)"""
+
+
+@register(
+    "ann_pq_exact_topk",
+    _GRID_COS_SQL
+    + """,
 r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rn FROM s)
 SELECT query_id, neighbor_id, round(cs, 6) AS cos_sim FROM r WHERE rn <= 5""",
 )
@@ -437,21 +458,8 @@ def ann_pq_rerank_topk(spark, sf_dir):
 
 @register(
     "ann_pq_rerank_exact_topk",
-    """WITH g AS (
-  SELECT vec_id,
-         list_transform(embedding, x ->
-           greatest(least(CAST(floor((CAST(x AS DOUBLE) + 1.0) / 2.0 * 254.0 + 0.5) AS BIGINT),
-                          254), 0)
-           * (2.0 / 254.0) - 1.0) AS v
-  FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS qv FROM g WHERE vec_id < 20),
-c AS (SELECT vec_id AS neighbor_id, v AS cv FROM g),
-s AS (
-  SELECT query_id, neighbor_id,
-         list_sum(list_transform(range(1, len(qv)+1), i -> qv[i] * cv[i]))
-         / (sqrt(list_sum(list_transform(qv, x -> x * x)))
-            * sqrt(list_sum(list_transform(cv, x -> x * x)))) AS cs
-  FROM q, c WHERE query_id != neighbor_id),
+    _GRID_COS_SQL
+    + """,
 short AS (
   SELECT query_id, neighbor_id FROM
     (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rn FROM s)
@@ -1155,9 +1163,10 @@ def quality_repetition_docs(spark, sf_dir):
     )
 
 
-@register(
-    "quality_gopher_flags",
-    r"""WITH t AS (SELECT doc_id, text,
+# The Gopher signals over the documents table (t tokens/lines, s
+# signals), the head of quality_gopher_flags' and pipeline_host_quality's
+# oracles.
+_GOPHER_DOCS_SQL = r"""WITH t AS (SELECT doc_id, text,
         list_filter(string_split_regex(lower(trim(text)), '\s+'), _t -> _t <> '') AS toks,
         string_split(text, chr(10)) AS lines FROM documents),
 s AS (SELECT doc_id,
@@ -1169,7 +1178,13 @@ s AS (SELECT doc_id,
         len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…'))) * 1.0 / len(lines) AS ellipsis_line_frac,
         len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) * 1.0 / len(toks) AS alpha_word_frac,
         CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is'], x))) AS BIGINT) AS n_stopword_hits
-      FROM t)
+      FROM t)"""
+
+
+@register(
+    "quality_gopher_flags",
+    _GOPHER_DOCS_SQL
+    + r"""
 SELECT doc_id, n_tokens, round(mean_word_len, 6) AS mean_word_len,
        round(symbol_word_ratio, 6) AS symbol_word_ratio,
        round(bullet_line_frac, 6) AS bullet_line_frac,
@@ -1363,6 +1378,37 @@ FROM b{R} CROSS JOIN off{R}"""
     )
 
 
+def _dup_labels(d):
+    """(doc_id, y): the planted separable class, 1.0 for docs holding
+    the 'dup' badword token."""
+    from opentsdb_aura_spark.operators.dedup_text import tokens
+
+    return d.select("doc_id", F.array_contains(tokens(F.col("text")), "dup").cast("double").alias("y"))
+
+
+def _dup_classifier(spark, sf_dir, **train_kw):
+    """The trained 'dup' classifier the classifier queries score with:
+    binary hashed-token features packed ONCE with the label (lazily
+    checkpointed; the corpus passes, not the tiny gradient shuffles,
+    are this family's unavoidable cost), then the deterministic
+    full-batch GD fit over the pack.  Returns (docs, packed, w, b)."""
+    from opentsdb_aura_spark.operators.quality import (
+        _pack_label_features,
+        hashed_token_features,
+        train_logreg_weights,
+    )
+
+    d = docs(spark, sf_dir)
+    labs = _dup_labels(d)
+    feats = hashed_token_features(d, n_features=_LOGREG_D, binary=True)
+    packed = _pack_label_features(labs, feats, ["y"]).localCheckpoint(eager=False)
+    w, b = train_logreg_weights(
+        None, None, n_features=_LOGREG_D, lr=_LOGREG_LR, n_iter=_LOGREG_ITERS,
+        center=True, packed=packed, **train_kw,
+    )
+    return d, packed, w, b
+
+
 @register("pipeline_quality_classifier", _logreg_oracle())
 def pipeline_quality_classifier(spark, sf_dir):
     """TRAINED quality classifier, the DCLM / FineWeb-Edu pattern
@@ -1382,33 +1428,9 @@ def pipeline_quality_classifier(spark, sf_dir):
     Catalyst, the 100 TB corpus pass.""".format(
         iters=_LOGREG_ITERS, lr=_LOGREG_LR, d=_LOGREG_D
     )
-    from opentsdb_aura_spark.operators.dedup_text import tokens
-    from opentsdb_aura_spark.operators.quality import (
-        _pack_label_features,
-        hashed_token_features,
-        logreg_scores_packed,
-        train_logreg_weights,
-    )
+    from opentsdb_aura_spark.operators.quality import logreg_scores_packed
 
-    d = docs(spark, sf_dir)
-    labs = d.select(
-        "doc_id",
-        F.array_contains(tokens(F.col("text")), "dup").cast("double").alias("y"),
-    )
-    feats = hashed_token_features(d, n_features=_LOGREG_D, binary=True)
-    # ONE featurize+pack materialization shared by the fit and the
-    # scoring pass (guide §1.2: the corpus passes, not the tiny
-    # gradient shuffles, are this query's unavoidable cost)
-    packed = _pack_label_features(labs, feats, ["y"]).localCheckpoint(eager=False)
-    w, b = train_logreg_weights(
-        None,
-        None,
-        n_features=_LOGREG_D,
-        lr=_LOGREG_LR,
-        n_iter=_LOGREG_ITERS,
-        center=True,
-        packed=packed,
-    )
+    _, packed, w, b = _dup_classifier(spark, sf_dir)
     scored = logreg_scores_packed(packed, w, b, keep_cols=("y",))
     return scored.select(
         "doc_id",
@@ -1439,31 +1461,9 @@ def pipeline_classifier_calibrated(spark, sf_dir):
     value-hashed end to end, not just exposed as parameters.""".format(
         l2=_LOGREG_L2, thr=_LOGREG_THR
     )
-    from opentsdb_aura_spark.operators.dedup_text import tokens
-    from opentsdb_aura_spark.operators.quality import (
-        _pack_label_features,
-        hashed_token_features,
-        logreg_scores_packed,
-        train_logreg_weights,
-    )
+    from opentsdb_aura_spark.operators.quality import logreg_scores_packed
 
-    d = docs(spark, sf_dir)
-    labs = d.select(
-        "doc_id",
-        F.array_contains(tokens(F.col("text")), "dup").cast("double").alias("y"),
-    )
-    feats = hashed_token_features(d, n_features=_LOGREG_D, binary=True)
-    packed = _pack_label_features(labs, feats, ["y"]).localCheckpoint(eager=False)
-    w, b = train_logreg_weights(
-        None,
-        None,
-        n_features=_LOGREG_D,
-        lr=_LOGREG_LR,
-        n_iter=_LOGREG_ITERS,
-        center=True,
-        l2=_LOGREG_L2,
-        packed=packed,
-    )
+    _, packed, w, b = _dup_classifier(spark, sf_dir, l2=_LOGREG_L2)
     scored = logreg_scores_packed(
         packed, w, b, threshold=_LOGREG_THR, keep_cols=("y",)
     )
@@ -1529,24 +1529,9 @@ def pipeline_classifier_pr_curve(spark, sf_dir):
     cell is value-hashed."""
     import math
 
-    from opentsdb_aura_spark.operators.dedup_text import tokens
-    from opentsdb_aura_spark.operators.quality import (
-        _pack_label_features,
-        hashed_token_features,
-        logreg_scores_packed,
-        train_logreg_weights,
-    )
+    from opentsdb_aura_spark.operators.quality import logreg_scores_packed
 
-    d = docs(spark, sf_dir)
-    labs = d.select(
-        "doc_id", F.array_contains(tokens(F.col("text")), "dup").cast("double").alias("y")
-    )
-    feats = hashed_token_features(d, n_features=_LOGREG_D, binary=True)
-    packed = _pack_label_features(labs, feats, ["y"]).localCheckpoint(eager=False)
-    w, b = train_logreg_weights(
-        None, None, n_features=_LOGREG_D, lr=_LOGREG_LR, n_iter=_LOGREG_ITERS,
-        center=True, packed=packed,
-    )
+    _, packed, w, b = _dup_classifier(spark, sf_dir)
     scores = logreg_scores_packed(packed, w, b, keep_cols=("y",))
     # each grid point carries its Python-computed logit cutoff as a
     # full-precision literal — the oracle embeds the SAME doubles, so
@@ -1623,24 +1608,9 @@ def pipeline_classifier_auc(spark, sf_dir):
     card would quote is value-hashed, not recomputed-and-trusted."""
     from pyspark.sql.window import Window
 
-    from opentsdb_aura_spark.operators.dedup_text import tokens
-    from opentsdb_aura_spark.operators.quality import (
-        _pack_label_features,
-        hashed_token_features,
-        logreg_scores_packed,
-        train_logreg_weights,
-    )
+    from opentsdb_aura_spark.operators.quality import logreg_scores_packed
 
-    d = docs(spark, sf_dir)
-    labs = d.select(
-        "doc_id", F.array_contains(tokens(F.col("text")), "dup").cast("double").alias("y")
-    )
-    feats = hashed_token_features(d, n_features=_LOGREG_D, binary=True)
-    packed = _pack_label_features(labs, feats, ["y"]).localCheckpoint(eager=False)
-    w, b = train_logreg_weights(
-        None, None, n_features=_LOGREG_D, lr=_LOGREG_LR, n_iter=_LOGREG_ITERS,
-        center=True, packed=packed,
-    )
+    _, packed, w, b = _dup_classifier(spark, sf_dir)
     rk = logreg_scores_packed(packed, w, b, keep_cols=("y",)).select(
         "y", _r(F.col("margin"), 4).alias("m")
     )
@@ -1692,17 +1662,13 @@ def pipeline_classifier_weights(spark, sf_dir):
     leans on).  The oracle re-runs the identical unrolled GD and
     reads the final weight CTE, so the MODEL — not just its scores —
     is proven portable across engines."""
-    from opentsdb_aura_spark.operators.dedup_text import tokens
     from opentsdb_aura_spark.operators.quality import (
         hashed_token_features,
         train_logreg_weights,
     )
 
     d = docs(spark, sf_dir)
-    labels = d.select(
-        "doc_id",
-        F.array_contains(tokens(F.col("text")), "dup").cast("double").alias("y"),
-    )
+    labels = _dup_labels(d)
     feats = hashed_token_features(d, n_features=_LOGREG_D, binary=True)
     w, b = train_logreg_weights(
         feats, labels, n_features=_LOGREG_D, lr=_LOGREG_LR, n_iter=_LOGREG_ITERS,
@@ -1731,25 +1697,9 @@ def pipeline_host_quality_prior(spark, sf_dir):
     the scoring pass; the oracle re-fits the identical unrolled GD and
     re-aggregates, so the prior a scheduler would consume is
     value-hashed."""
-    from opentsdb_aura_spark.operators.dedup_text import tokens
-    from opentsdb_aura_spark.operators.quality import (
-        _pack_label_features,
-        hashed_token_features,
-        logreg_scores_packed,
-        train_logreg_weights,
-    )
+    from opentsdb_aura_spark.operators.quality import logreg_scores_packed
 
-    d = docs(spark, sf_dir)
-    labs = d.select(
-        "doc_id",
-        F.array_contains(tokens(F.col("text")), "dup").cast("double").alias("y"),
-    )
-    feats = hashed_token_features(d, n_features=_LOGREG_D, binary=True)
-    packed = _pack_label_features(labs, feats, ["y"]).localCheckpoint(eager=False)
-    w, b = train_logreg_weights(
-        None, None, n_features=_LOGREG_D, lr=_LOGREG_LR, n_iter=_LOGREG_ITERS,
-        center=True, packed=packed,
-    )
+    _, packed, w, b = _dup_classifier(spark, sf_dir)
     scores = logreg_scores_packed(packed, w, b)
     host = F.concat(F.lit("h"), F.col("doc_id") % 16, F.lit(".example"))
     return (
@@ -1762,9 +1712,9 @@ def pipeline_host_quality_prior(spark, sf_dir):
     )
 
 
-@register(
-    "pipeline_ccnet_cutoff_buckets",
-    r"""WITH d AS (SELECT doc_id, lang,
+# The corpus-fit bigram LM per doc with its lang (s2), the head of the
+# two CCNet bucketing oracles (tercile window and trained cutoffs).
+_BIGRAM_LM_SQL = r"""WITH d AS (SELECT doc_id, lang,
         list_filter(string_split_regex(lower(trim(text)), '\s+'), _t -> _t <> '') AS toks
            FROM documents),
 bg AS (SELECT doc_id, toks[i+1] || ' ' || toks[i+2] AS bigram, toks[i+1] AS w1
@@ -1777,7 +1727,13 @@ s AS (SELECT doc_id, round(avg(ln((bcnt + 0.1) / (ucnt + 0.1 * v.v))), 4) AS avg
       FROM bg JOIN big USING (bigram) JOIN uni ON bg.w1 = uni.tok CROSS JOIN v
       GROUP BY 1),
 s2 AS (SELECT d.doc_id, d.lang, s.avg_logprob
-       FROM d LEFT JOIN s USING (doc_id)),
+       FROM d LEFT JOIN s USING (doc_id))"""
+
+
+@register(
+    "pipeline_ccnet_cutoff_buckets",
+    _BIGRAM_LM_SQL
+    + r""",
 cuts AS (SELECT lang,
            [quantile_cont(avg_logprob, 0.6666666666666667),
             quantile_cont(avg_logprob, 0.33333333333333337)] AS cl
@@ -2048,25 +2004,6 @@ def quality_kn_scores(spark, sf_dir):
     return res.select("doc_id", "n_bigrams", _r("avg_logprob", 4).alias("avg_logprob"))
 
 
-def _kn3_coc_sql(src: str, cname: str, a: str) -> str:
-    """Count-of-counts → modified-KN discounts for one order, as a
-    1-row CTE body (columns {a}1/{a}2/{a}3) mirroring
-    quality._kn_discount_row exactly: Y = n1/(n1+2n2)
-    (fallback 0.5), D_k clamped at 0, each falling back to 0.5 when
-    its count-of-count denominator is empty."""
-    return f"""(
-  SELECT CASE WHEN n1 > 0 THEN greatest(1 - 2 * y * n2 / n1, 0.0) ELSE 0.5 END AS {a}1,
-         CASE WHEN n2 > 0 THEN greatest(2 - 3 * y * n3 / n2, 0.0) ELSE 0.5 END AS {a}2,
-         CASE WHEN n3 > 0 THEN greatest(3 - 4 * y * n4 / n3, 0.0) ELSE 0.5 END AS {a}3
-  FROM (SELECT CASE WHEN n1 + 2 * n2 > 0 THEN n1 / (n1 + 2 * n2) ELSE 0.5 END AS y,
-               n1, n2, n3, n4
-        FROM (SELECT sum(CASE WHEN {cname} = 1 THEN 1.0 ELSE 0.0 END) AS n1,
-                     sum(CASE WHEN {cname} = 2 THEN 1.0 ELSE 0.0 END) AS n2,
-                     sum(CASE WHEN {cname} = 3 THEN 1.0 ELSE 0.0 END) AS n3,
-                     sum(CASE WHEN {cname} = 4 THEN 1.0 ELSE 0.0 END) AS n4
-              FROM {src})))"""
-
-
 @register(
     "quality_kn3_scores",
     r"""WITH d AS MATERIALIZED (SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\s+'), _t -> _t <> '') AS toks
@@ -2127,70 +2064,6 @@ def quality_kn3_scores(spark, sf_dir):
     )
 
 
-def _kn_order_parts(N: int, count_alias: str, toks_cte: str) -> list[str]:
-    """CTE parts for the order-``N`` modified-KN tower reading
-    (doc_id, toks) from ``toks_cte``: the raw top-level count table,
-    the continuation-count tower (one GROUP BY per level), per-level
-    context aggregates and count-of-count discount triples, and the
-    per-doc score CTE ``kns`` with the textual p-recursion in the SAME
-    nesting the Spark Column expression builds — so the two engines
-    associate every float identically before the 4-decimal round.
-    All CTE names carry a ``kn_`` prefix so the parts compose into
-    larger oracles (the ccnet-kn keep) without collisions; all
-    MATERIALIZED (each feeds several consumers; DuckDB would otherwise
-    inline the tower exponentially)."""
-    cols = [f"w{j}" for j in range(1, N + 1)]
-    wsel = ", ".join(f"toks[i+{j}] AS w{j}" for j in range(1, N + 1))
-    parts = [
-        f"""kn_og AS MATERIALIZED (SELECT doc_id, {wsel}
-       FROM {toks_cte}, unnest(range(0, greatest(len(toks) - {N - 1}, 0))) AS _kt(i))""",
-        f"""kn_g{N} AS MATERIALIZED (SELECT {', '.join(cols)}, CAST(count(*) AS DOUBLE) AS c{N}
-       FROM kn_og GROUP BY {', '.join(str(i + 1) for i in range(N))})""",
-    ]
-    for k in range(N - 1, 0, -1):
-        keys = cols[N - k :]
-        parts.append(
-            f"""kn_g{k} AS MATERIALIZED (SELECT {', '.join(keys)}, CAST(count(*) AS DOUBLE) AS c{k}
-       FROM kn_g{k + 1} GROUP BY {', '.join(str(i + 1) for i in range(k))})"""
-        )
-    for k in range(N, 1, -1):
-        ckeys = cols[N - k : N - 1]
-        parts.append(
-            f"""kn_x{k} AS MATERIALIZED (SELECT {', '.join(ckeys)}, sum(c{k}) AS tot{k},
-              sum(CASE WHEN c{k} = 1 THEN 1.0 ELSE 0.0 END) AS n1f{k},
-              sum(CASE WHEN c{k} = 2 THEN 1.0 ELSE 0.0 END) AS n2f{k},
-              sum(CASE WHEN c{k} >= 3 THEN 1.0 ELSE 0.0 END) AS n3f{k}
-       FROM kn_g{k} GROUP BY {', '.join(str(i + 1) for i in range(len(ckeys)))})"""
-        )
-        parts.append(
-            f"kn_dd{k} AS MATERIALIZED {_kn3_coc_sql(f'kn_g{k}', f'c{k}', f'd{k}_')}"
-        )
-    parts.append("kn_ut AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS u FROM kn_g2)")
-    p = "c1 / u"
-    for k in range(2, N + 1):
-        d_of = f"CASE WHEN c{k} = 1 THEN d{k}_1 WHEN c{k} = 2 THEN d{k}_2 ELSE d{k}_3 END"
-        gamma = f"(d{k}_1 * n1f{k} + d{k}_2 * n2f{k} + d{k}_3 * n3f{k}) / tot{k}"
-        p = f"greatest(c{k} - {d_of}, 0.0) / tot{k} + {gamma} * ({p})"
-    gram_joins = "\n           ".join(
-        f"JOIN kn_g{k} USING ({', '.join(cols[N - k :])})" for k in range(N - 1, 0, -1)
-    )
-    ctx_joins = "\n           ".join(
-        f"JOIN kn_x{k} USING ({', '.join(cols[N - k : N - 1])})" for k in range(N, 1, -1)
-    )
-    dd_joins = "\n           ".join(f"CROSS JOIN kn_dd{k}" for k in range(N, 1, -1))
-    parts.append(
-        f"""kns AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS {count_alias},
-             round(avg(ln({p})), 4) AS avg_logprob
-      FROM kn_og JOIN kn_g{N} USING ({', '.join(cols)})
-           {gram_joins}
-           {ctx_joins}
-           {dd_joins}
-           CROSS JOIN kn_ut
-      GROUP BY 1)"""
-    )
-    return parts
-
-
 def _kn_order_oracle(N: int, count_alias: str) -> str:
     """Standalone oracle for quality_kn{N}_scores: the knd tokenize
     CTE over documents + the shared tower parts + the doc spine."""
@@ -2247,29 +2120,7 @@ def _kn_heldout_oracle(N: int, count_alias: str) -> str:
            FROM documents WHERE doc_id % 10 <> 0)""",
         f"""knd_ho AS MATERIALIZED (SELECT doc_id, {tok_expr} AS toks
            FROM documents WHERE doc_id % 10 = 0)""",
-        f"""kn_og AS MATERIALIZED (SELECT doc_id, {wsel}
-       FROM knd_tr, unnest(range(0, greatest(len(toks) - {N - 1}, 0))) AS _kt(i))""",
-        f"""kn_g{N} AS MATERIALIZED (SELECT {', '.join(cols)}, CAST(count(*) AS DOUBLE) AS c{N}
-       FROM kn_og GROUP BY {', '.join(str(i + 1) for i in range(N))})""",
-    ]
-    for k in range(N - 1, 0, -1):
-        keys = cols[N - k :]
-        parts.append(
-            f"""kn_g{k} AS MATERIALIZED (SELECT {', '.join(keys)}, CAST(count(*) AS DOUBLE) AS c{k}
-       FROM kn_g{k + 1} GROUP BY {', '.join(str(i + 1) for i in range(k))})"""
-        )
-    for k in range(N, 1, -1):
-        ckeys = cols[N - k : N - 1]
-        parts.append(
-            f"""kn_x{k} AS MATERIALIZED (SELECT {', '.join(ckeys)}, sum(c{k}) AS tot{k},
-              sum(CASE WHEN c{k} = 1 THEN 1.0 ELSE 0.0 END) AS n1f{k},
-              sum(CASE WHEN c{k} = 2 THEN 1.0 ELSE 0.0 END) AS n2f{k},
-              sum(CASE WHEN c{k} >= 3 THEN 1.0 ELSE 0.0 END) AS n3f{k}
-       FROM kn_g{k} GROUP BY {', '.join(str(i + 1) for i in range(len(ckeys)))})"""
-        )
-        parts.append(
-            f"kn_dd{k} AS MATERIALIZED {_kn3_coc_sql(f'kn_g{k}', f'c{k}', f'd{k}_')}"
-        )
+    ] + _kn_tower_parts(N, "knd_tr")
     parts.append(f"kn_dd1 AS MATERIALIZED {_kn3_coc_sql('kn_g1', 'c1', 'd1_')}")
     parts.append(
         """kn_x1 AS MATERIALIZED (SELECT sum(CASE WHEN c1 = 1 THEN 1.0 ELSE 0.0 END) AS n1f1,
@@ -2449,25 +2300,14 @@ def quality_kn5_heldout_ppl_buckets(spark, sf_dir):
     The oracle re-fits, re-scores, and re-buckets end to end, so the
     tercile labels a curation mix consumes are value-hashed against
     the held-out estimator, not the training-corpus one."""
-    from opentsdb_aura_spark.operators.quality import (
-        lm_kn_fit,
-        lm_kn_score,
-        perplexity_buckets,
-    )
+    from opentsdb_aura_spark.operators.quality import lm_kn_fit, lm_kn_score
 
     train, held = _kn5_heldout_frames(spark, sf_dir)
     model = lm_kn_fit(train, order=5)
     sc = lm_kn_score(model, held).select(
         "doc_id", _r("avg_logprob", 4).alias("avg_logprob")
     )
-    scored = held.select("doc_id", "lang").join(sc, "doc_id")
-    bkt = perplexity_buckets(scored)
-    label = (
-        F.when(F.col("ppl_bucket") == 1, "head")
-        .when(F.col("ppl_bucket") == 2, "middle")
-        .otherwise("tail")
-    )
-    return bkt.select("doc_id", "lang", "avg_logprob", label.alias("ppl_bucket"))
+    return _ppl_terciles(held.select("doc_id", "lang").join(sc, "doc_id"))
 
 
 @register(
@@ -2595,20 +2435,8 @@ def quality_badwords_flags(spark, sf_dir):
 
 @register(
     "pipeline_ccnet_buckets",
-    r"""WITH d AS (SELECT doc_id, lang,
-        list_filter(string_split_regex(lower(trim(text)), '\s+'), _t -> _t <> '') AS toks
-           FROM documents),
-bg AS (SELECT doc_id, toks[i+1] || ' ' || toks[i+2] AS bigram, toks[i+1] AS w1
-       FROM d, unnest(range(0, greatest(len(toks) - 1, 0))) AS t(i)),
-uni AS (SELECT tok, count(*) AS ucnt
-        FROM (SELECT unnest(toks) AS tok FROM d) GROUP BY 1),
-v AS (SELECT CAST(count(*) AS DOUBLE) AS v FROM uni),
-big AS (SELECT bigram, count(*) AS bcnt FROM bg GROUP BY 1),
-s AS (SELECT doc_id, round(avg(ln((bcnt + 0.1) / (ucnt + 0.1 * v.v))), 4) AS avg_logprob
-      FROM bg JOIN big USING (bigram) JOIN uni ON bg.w1 = uni.tok CROSS JOIN v
-      GROUP BY 1),
-s2 AS (SELECT d.doc_id, d.lang, s.avg_logprob
-       FROM d LEFT JOIN s USING (doc_id))
+    _BIGRAM_LM_SQL
+    + r"""
 SELECT doc_id, lang, avg_logprob,
        CASE ntile(3) OVER (PARTITION BY lang
                            ORDER BY avg_logprob DESC NULLS LAST, doc_id)
@@ -2625,23 +2453,74 @@ def pipeline_ccnet_buckets(spark, sf_dir):
     with the identical (score DESC NULLS LAST, doc_id) order, so a
     ranking slip or an off-by-one in the bucket boundaries breaks the
     hash (the 4-decimal pre-round makes tie order engine-identical)."""
-    from opentsdb_aura_spark.operators.quality import (
-        lm_bigram_scores,
-        perplexity_buckets,
-    )
+    from opentsdb_aura_spark.operators.quality import lm_bigram_scores
 
     scores = lm_bigram_scores(docs(spark, sf_dir), alpha=0.1).select(
         "doc_id", _r("avg_logprob", 4).alias("avg_logprob")
     )
     langs = docs_raw(spark, sf_dir).select("doc_id", "lang")
-    scored = langs.join(scores, "doc_id", "left")
-    out = perplexity_buckets(scored)
-    label = (
-        F.when(F.col("ppl_bucket") == 1, "head")
-        .when(F.col("ppl_bucket") == 2, "middle")
-        .otherwise("tail")
+    return _ppl_terciles(langs.join(scores, "doc_id", "left"))
+
+
+def _doc_graph_edges(spark, sf_dir):
+    """The closed-form fixture link graph doc i -> (7i+1, 13i+2,
+    23i+3) mod N as (src, dst): three edge families unioned, out-degree
+    exactly 3 everywhere."""
+    d = docs_raw(spark, sf_dir).select("doc_id")
+    n = d.count()  # bounded scalar job: the node-space size
+    edges = None
+    for a, b in ((7, 1), (13, 2), (23, 3)):
+        part = d.select(
+            F.col("doc_id").alias("src"),
+            F.pmod(F.col("doc_id") * a + b, F.lit(n)).alias("dst"),
+        )
+        edges = part if edges is None else edges.unionByName(part)
+    return edges
+
+
+def _host_url(host_id, doc_id, n_hosts):
+    """http://h<host_id mod n_hosts>.example/doc/<doc_id>: a fixture
+    page URL whose host projects the doc graph onto n_hosts hosts."""
+    return F.concat(
+        F.lit("http://h"), F.pmod(host_id, F.lit(n_hosts)), F.lit(".example/doc/"), doc_id.cast("string")
     )
-    return out.select("doc_id", "lang", "avg_logprob", label.alias("ppl_bucket"))
+
+
+def _host_page_edges(spark, sf_dir, n_hosts):
+    """The single (13i+2) edge family as (src_url, dst_url) page URLs
+    on n_hosts fixture hosts: the input of the host-graph queries.
+    Returns (docs, page_edges)."""
+    d = docs_raw(spark, sf_dir).select("doc_id")
+    n = d.count()  # bounded scalar job: the node-space size
+    dst = F.pmod(F.col("doc_id") * 13 + 2, F.lit(n))
+    page_edges = d.select(
+        _host_url(F.col("doc_id"), F.col("doc_id"), n_hosts).alias("src_url"),
+        _host_url(dst, dst, n_hosts).alias("dst_url"),
+    )
+    return d, page_edges
+
+
+# The fixture link graph's oracle CTEs, shared by the graph queries:
+# the node count ``c``, the three edge families (the doc-graph edges
+# of _doc_graph_edges), the single 13i+2 family ``pe`` of the host-graph
+# queries and its projection onto fixture hosts ``he``.
+_GRAPH_C = "WITH c AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),\n"
+_PE_SQL = _GRAPH_C + "pe AS (SELECT doc_id AS src, (doc_id * 13 + 2) % cnt AS dst FROM documents, c)"
+
+
+def _graph_edges_sql(name: str) -> str:
+    return f"""{_GRAPH_C}{name} AS (
+  SELECT doc_id AS src, (doc_id * 7 + 1) % cnt AS dst FROM documents, c
+  UNION ALL SELECT doc_id, (doc_id * 13 + 2) % cnt FROM documents, c
+  UNION ALL SELECT doc_id, (doc_id * 23 + 3) % cnt FROM documents, c)"""
+
+
+def _host_edges_sql(n_hosts: int, src: str) -> str:
+    return f"""he AS (
+  SELECT 'h' || (src % {n_hosts}) || '.example' AS sh,
+         'h' || (dst % {n_hosts}) || '.example' AS dh,
+         CAST(count(*) AS DOUBLE) AS w
+  FROM {src} WHERE (src % {n_hosts}) <> (dst % {n_hosts}) GROUP BY 1, 2)"""
 
 
 # Unrolled power iteration (3 rounds) over the closed-form fixture
@@ -2654,19 +2533,16 @@ FROM documents d CROSS JOIN c
 LEFT JOIN (SELECT e.dst, sum(r.rank / 3) AS s
            FROM e JOIN {prev} r ON e.src = r.node GROUP BY 1) m
   ON d.doc_id = m.dst"""
+_PR_ITERS = f"""r0 AS (SELECT doc_id AS node, 1.0 / cnt AS rank FROM documents, c),
+i1 AS ({_PR_ROUND.format(prev="r0")}),
+i2 AS ({_PR_ROUND.format(prev="i1")}),
+i3 AS ({_PR_ROUND.format(prev="i2")})"""
 
 
 @register(
     "pipeline_pagerank",
-    f"""WITH c AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-e AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % cnt AS dst FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 13 + 2) % cnt FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 23 + 3) % cnt FROM documents, c),
-r0 AS (SELECT doc_id AS node, 1.0 / cnt AS rank FROM documents, c),
-i1 AS ({_PR_ROUND.format(prev="r0")}),
-i2 AS ({_PR_ROUND.format(prev="i1")}),
-i3 AS ({_PR_ROUND.format(prev="i2")})
+    f"""{_graph_edges_sql("e")},
+{_PR_ITERS}
 SELECT node, round(rank, 6) AS rank FROM i3""",
 )
 def pipeline_pagerank(spark, sf_dir):
@@ -2684,30 +2560,15 @@ def pipeline_pagerank(spark, sf_dir):
     iteration count."""
     from opentsdb_aura_spark.operators.corpus import pagerank
 
-    d = docs_raw(spark, sf_dir).select("doc_id")
-    n = d.count()  # bounded scalar job: the node-space size
-    edges = None
-    for a, b in ((7, 1), (13, 2), (23, 3)):
-        part = d.select(
-            F.col("doc_id").alias("src"),
-            F.pmod(F.col("doc_id") * a + b, F.lit(n)).alias("dst"),
-        )
-        edges = part if edges is None else edges.unionByName(part)
+    edges = _doc_graph_edges(spark, sf_dir)
     pr = pagerank(edges, n_iter=3)
     return pr.select("node", _r("rank", 6).alias("rank"))
 
 
 @register(
     "pipeline_frontier_rank",
-    f"""WITH c AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-e AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % cnt AS dst FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 13 + 2) % cnt FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 23 + 3) % cnt FROM documents, c),
-r0 AS (SELECT doc_id AS node, 1.0 / cnt AS rank FROM documents, c),
-i1 AS ({_PR_ROUND.format(prev="r0")}),
-i2 AS ({_PR_ROUND.format(prev="i1")}),
-i3 AS ({_PR_ROUND.format(prev="i2")})
+    f"""{_graph_edges_sql("e")},
+{_PR_ITERS}
 SELECT 'http://example.com/doc/' || e.dst AS frontier_url,
        round(0.85 * sum(r.rank / 3), 6) AS priority,
        CAST(count(*) AS BIGINT) AS n_refs
@@ -2728,15 +2589,7 @@ def pipeline_frontier_rank(spark, sf_dir):
     exactly one more pagerank round, no new shuffle pattern."""
     from opentsdb_aura_spark.operators.corpus import frontier_priorities, pagerank
 
-    d = docs_raw(spark, sf_dir).select("doc_id")
-    n = d.count()  # bounded scalar job: the node-space size
-    edges = None
-    for a, b in ((7, 1), (13, 2), (23, 3)):
-        part = d.select(
-            F.col("doc_id").alias("src"),
-            F.pmod(F.col("doc_id") * a + b, F.lit(n)).alias("dst"),
-        )
-        edges = part if edges is None else edges.unionByName(part)
+    edges = _doc_graph_edges(spark, sf_dir)
     pr = pagerank(edges, n_iter=3)
     out = frontier_priorities(edges, pr)
     return out.select(
@@ -2756,27 +2609,21 @@ LEFT JOIN (SELECT he.dh AS dst, sum(r.rank * he.w / o.ow) AS s
            FROM he JOIN {prev} r ON he.sh = r.node
            JOIN outw o ON he.sh = o.sh GROUP BY 1) m
   ON hn.host = m.dst"""
-
-
-@register(
-    "pipeline_host_rank",
-    f"""WITH c AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-e AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % cnt AS dst FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 13 + 2) % cnt FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 23 + 3) % cnt FROM documents, c),
-he AS (
-  SELECT 'h' || (src % 4) || '.example' AS sh,
-         'h' || (dst % 4) || '.example' AS dh,
-         CAST(count(*) AS DOUBLE) AS w
-  FROM e WHERE (src % 4) <> (dst % 4) GROUP BY 1, 2),
-hn AS (SELECT DISTINCT sh AS host FROM he UNION SELECT DISTINCT dh FROM he),
+# the host-graph nodes, node count, out-weights and the three rounds
+_HR_ITERS = f"""hn AS (SELECT DISTINCT sh AS host FROM he UNION SELECT DISTINCT dh FROM he),
 H AS (SELECT CAST(count(*) AS BIGINT) AS nh FROM hn),
 outw AS (SELECT sh, sum(w) AS ow FROM he GROUP BY 1),
 r0 AS (SELECT host AS node, 1.0 / nh AS rank FROM hn, H),
 i1 AS ({_HR_ROUND.format(prev="r0")}),
 i2 AS ({_HR_ROUND.format(prev="i1")}),
-i3 AS ({_HR_ROUND.format(prev="i2")})
+i3 AS ({_HR_ROUND.format(prev="i2")})"""
+
+
+@register(
+    "pipeline_host_rank",
+    f"""{_graph_edges_sql("e")},
+{_host_edges_sql(4, "e")},
+{_HR_ITERS}
 SELECT node, round(rank, 6) AS rank FROM i3""",
 )
 def pipeline_host_rank(spark, sf_dir):
@@ -2794,18 +2641,8 @@ def pipeline_host_rank(spark, sf_dir):
     over the small host state."""
     from opentsdb_aura_spark.operators.corpus import host_graph, pagerank
 
-    d = docs_raw(spark, sf_dir).select("doc_id")
-    n = d.count()  # bounded scalar job: the node-space size
-    url = lambda c: F.concat(  # noqa: E731
-        F.lit("http://h"), F.pmod(F.col(c), F.lit(4)), F.lit(".example/doc/"), F.col(c).cast("string")
-    )
-    edges = None
-    for a, b in ((7, 1), (13, 2), (23, 3)):
-        part = d.select(
-            F.col("doc_id").alias("src"),
-            F.pmod(F.col("doc_id") * a + b, F.lit(n)).alias("dst"),
-        )
-        edges = part if edges is None else edges.unionByName(part)
+    url = lambda c: _host_url(F.col(c), F.col(c), 4)  # noqa: E731
+    edges = _doc_graph_edges(spark, sf_dir)
     page_edges = edges.select(url("src").alias("src_url"), url("dst").alias("dst_url"))
     hg = host_graph(page_edges)
     pr = pagerank(hg, n_iter=3, src_col="src_host", dst_col="dst_host", weight_col="n_links")
@@ -2831,11 +2668,7 @@ pairs AS (SELECT u, v, 1 AS dist FROM d1
 
 @register(
     "pipeline_harmonic_centrality",
-    f"""WITH c AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-e0 AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % cnt AS dst FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 13 + 2) % cnt FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 23 + 3) % cnt FROM documents, c),
+    f"""{_graph_edges_sql("e0")},
 e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
 {_HC_LAYERS}
 SELECT d.doc_id AS node,
@@ -2859,23 +2692,14 @@ def pipeline_harmonic_centrality(spark, sf_dir):
     page-scale path is pipeline_harmonic_hyperball's HLL counters."""
     from opentsdb_aura_spark.operators.corpus import harmonic_centrality
 
-    d = docs_raw(spark, sf_dir).select("doc_id")
-    n = d.count()  # bounded scalar job: the node-space size
-    edges = None
-    for a, b in ((7, 1), (13, 2), (23, 3)):
-        part = d.select(
-            F.col("doc_id").alias("src"),
-            F.pmod(F.col("doc_id") * a + b, F.lit(n)).alias("dst"),
-        )
-        edges = part if edges is None else edges.unionByName(part)
+    edges = _doc_graph_edges(spark, sf_dir)
     hc = harmonic_centrality(edges, max_dist=3)
     return hc.select("node", _r("harmonic", 6).alias("harmonic"), "n_within")
 
 
 @register(
     "pipeline_host_centrality",
-    f"""WITH c AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-pe AS (SELECT doc_id AS src, (doc_id * 13 + 2) % cnt AS dst FROM documents, c),
+    f"""{_PE_SQL},
 e AS (SELECT DISTINCT 'h' || (src % 16) || '.example' AS src,
                       'h' || (dst % 16) || '.example' AS dst
       FROM pe WHERE (src % 16) <> (dst % 16)),
@@ -2900,20 +2724,7 @@ def pipeline_host_centrality(spark, sf_dir):
     together."""
     from opentsdb_aura_spark.operators.corpus import harmonic_centrality, host_graph
 
-    d = docs_raw(spark, sf_dir).select("doc_id")
-    n = d.count()  # bounded scalar job: the node-space size
-    url = lambda c: F.concat(  # noqa: E731
-        F.lit("http://h"), F.pmod(F.col(c), F.lit(16)), F.lit(".example/doc/"), F.col(c).cast("string")
-    )
-    page_edges = d.select(
-        url("doc_id").alias("src_url"),
-        F.concat(
-            F.lit("http://h"),
-            F.pmod(F.pmod(F.col("doc_id") * 13 + 2, F.lit(n)), F.lit(16)),
-            F.lit(".example/doc/"),
-            F.pmod(F.col("doc_id") * 13 + 2, F.lit(n)).cast("string"),
-        ).alias("dst_url"),
-    )
+    _, page_edges = _host_page_edges(spark, sf_dir, 16)
     hg = host_graph(page_edges)
     hc = harmonic_centrality(hg, max_dist=3, src_col="src_host", dst_col="dst_host")
     return hc.select("node", _r("harmonic", 6).alias("harmonic"), "n_within")
@@ -2921,20 +2732,9 @@ def pipeline_host_centrality(spark, sf_dir):
 
 @register(
     "pipeline_host_ranking",
-    f"""WITH c AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-pe AS (SELECT doc_id AS src, (doc_id * 13 + 2) % cnt AS dst FROM documents, c),
-he AS (
-  SELECT 'h' || (src % 8) || '.example' AS sh,
-         'h' || (dst % 8) || '.example' AS dh,
-         CAST(count(*) AS DOUBLE) AS w
-  FROM pe WHERE (src % 8) <> (dst % 8) GROUP BY 1, 2),
-hn AS (SELECT DISTINCT sh AS host FROM he UNION SELECT DISTINCT dh FROM he),
-H AS (SELECT CAST(count(*) AS BIGINT) AS nh FROM hn),
-outw AS (SELECT sh, sum(w) AS ow FROM he GROUP BY 1),
-r0 AS (SELECT host AS node, 1.0 / nh AS rank FROM hn, H),
-i1 AS ({_HR_ROUND.format(prev="r0")}),
-i2 AS ({_HR_ROUND.format(prev="i1")}),
-i3 AS ({_HR_ROUND.format(prev="i2")}),
+    f"""{_PE_SQL},
+{_host_edges_sql(8, "pe")},
+{_HR_ITERS},
 e AS (SELECT DISTINCT sh AS src, dh AS dst FROM he),
 {_HC_LAYERS},
 hc AS (SELECT n.host AS node, coalesce(sum(1.0 / dist), 0) AS harmonic,
@@ -2970,16 +2770,7 @@ def pipeline_host_ranking(spark, sf_dir):
         pagerank,
     )
 
-    d = docs_raw(spark, sf_dir).select("doc_id")
-    n = d.count()  # bounded scalar job: the node-space size
-    dst = F.pmod(F.col("doc_id") * 13 + 2, F.lit(n))
-    mk = lambda idc, idv: F.concat(  # noqa: E731
-        F.lit("http://h"), F.pmod(idc, F.lit(8)), F.lit(".example/doc/"), idv.cast("string")
-    )
-    page_edges = d.select(
-        mk(F.col("doc_id"), F.col("doc_id")).alias("src_url"),
-        mk(dst, dst).alias("dst_url"),
-    )
+    _, page_edges = _host_page_edges(spark, sf_dir, 8)
     hg = host_graph(page_edges).localCheckpoint()  # ONE projection, two consumers
     pr = pagerank(hg, n_iter=3, src_col="src_host", dst_col="dst_host", weight_col="n_links")
     hc = harmonic_centrality(hg, max_dist=3, src_col="src_host", dst_col="dst_host")
@@ -3000,11 +2791,7 @@ def pipeline_host_ranking(spark, sf_dir):
 
 @register(
     "pipeline_closeness_centrality",
-    f"""WITH c AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-e0 AS (
-  SELECT doc_id AS src, (doc_id * 7 + 1) % cnt AS dst FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 13 + 2) % cnt FROM documents, c
-  UNION ALL SELECT doc_id, (doc_id * 23 + 3) % cnt FROM documents, c),
+    f"""{_graph_edges_sql("e0")},
 e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
 {_HC_LAYERS}
 SELECT d.doc_id AS node,
@@ -3034,15 +2821,7 @@ def pipeline_closeness_centrality(spark, sf_dir):
     NULL or a division abort."""
     from opentsdb_aura_spark.operators.corpus import harmonic_centrality
 
-    d = docs_raw(spark, sf_dir).select("doc_id")
-    n = d.count()  # bounded scalar job: the node-space size
-    edges = None
-    for a, b in ((7, 1), (13, 2), (23, 3)):
-        part = d.select(
-            F.col("doc_id").alias("src"),
-            F.pmod(F.col("doc_id") * a + b, F.lit(n)).alias("dst"),
-        )
-        edges = part if edges is None else edges.unionByName(part)
+    edges = _doc_graph_edges(spark, sf_dir)
     hc = harmonic_centrality(edges, max_dist=3)
     nz = F.col("sum_dist") > 0
     return hc.select(
@@ -3063,20 +2842,9 @@ def pipeline_closeness_centrality(spark, sf_dir):
 
 @register(
     "pipeline_authority_sample",
-    f"""WITH c AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM documents),
-pe AS (SELECT doc_id AS src, (doc_id * 13 + 2) % cnt AS dst FROM documents, c),
-he AS (
-  SELECT 'h' || (src % 8) || '.example' AS sh,
-         'h' || (dst % 8) || '.example' AS dh,
-         CAST(count(*) AS DOUBLE) AS w
-  FROM pe WHERE (src % 8) <> (dst % 8) GROUP BY 1, 2),
-hn AS (SELECT DISTINCT sh AS host FROM he UNION SELECT DISTINCT dh FROM he),
-H AS (SELECT CAST(count(*) AS BIGINT) AS nh FROM hn),
-outw AS (SELECT sh, sum(w) AS ow FROM he GROUP BY 1),
-r0 AS (SELECT host AS node, 1.0 / nh AS rank FROM hn, H),
-i1 AS ({_HR_ROUND.format(prev="r0")}),
-i2 AS ({_HR_ROUND.format(prev="i1")}),
-i3 AS ({_HR_ROUND.format(prev="i2")}),
+    f"""{_PE_SQL},
+{_host_edges_sql(8, "pe")},
+{_HR_ITERS},
 dk AS (SELECT doc_id, 'h' || (doc_id % 8) || '.example' AS host,
              list_reduce(list_transform(str_split(substr(md5(doc_id || ':asample'), 1, 13), ''),
                c2 -> strpos('0123456789abcdef', c2) - 1), (a, b) -> a * 16 + b) AS hv
@@ -3108,16 +2876,7 @@ def pipeline_authority_sample(spark, sf_dir):
         weighted_sample,
     )
 
-    d = docs_raw(spark, sf_dir).select("doc_id")
-    n = d.count()  # bounded scalar job: the node-space size
-    dst = F.pmod(F.col("doc_id") * 13 + 2, F.lit(n))
-    mk = lambda idc, idv: F.concat(  # noqa: E731
-        F.lit("http://h"), F.pmod(idc, F.lit(8)), F.lit(".example/doc/"), idv.cast("string")
-    )
-    page_edges = d.select(
-        mk(F.col("doc_id"), F.col("doc_id")).alias("src_url"),
-        mk(dst, dst).alias("dst_url"),
-    )
+    d, page_edges = _host_page_edges(spark, sf_dir, 8)
     hr = pagerank(
         host_graph(page_edges), n_iter=3,
         src_col="src_host", dst_col="dst_host", weight_col="n_links",
@@ -3146,15 +2905,7 @@ def pipeline_harmonic_hyperball(spark, sf_dir):
     map-side-combined MAX groupBy per round — no explode, no Python."""
     from opentsdb_aura_spark.operators.corpus import hyperball_harmonic
 
-    d = docs_raw(spark, sf_dir).select("doc_id")
-    n = d.count()  # bounded scalar job: the node-space size
-    edges = None
-    for a, b in ((7, 1), (13, 2), (23, 3)):
-        part = d.select(
-            F.col("doc_id").alias("src"),
-            F.pmod(F.col("doc_id") * a + b, F.lit(n)).alias("dst"),
-        )
-        edges = part if edges is None else edges.unionByName(part)
+    edges = _doc_graph_edges(spark, sf_dir)
     hb = hyperball_harmonic(edges, max_dist=3)
     return hb.select(
         "node", _r("harmonic", 4).alias("harmonic"), _r("ball_est", 4).alias("ball_est")
@@ -3173,19 +2924,8 @@ _GOPHER_KEEP = """(n_tokens BETWEEN 10 AND 100000) AND n_tokens > 0
 
 @register(
     "pipeline_host_quality",
-    r"""WITH t AS (SELECT doc_id, text,
-        list_filter(string_split_regex(lower(trim(text)), '\s+'), _t -> _t <> '') AS toks,
-        string_split(text, chr(10)) AS lines FROM documents),
-s AS (SELECT doc_id,
-        CAST(len(toks) AS BIGINT) AS n_tokens,
-        list_sum(list_transform(toks, x -> length(x))) * 1.0 / len(toks) AS mean_word_len,
-        list_sum(list_transform(toks, x -> length(x) - length(replace(x, '#', ''))
-          + CASE WHEN contains(x, '...') OR contains(x, '…') THEN 1 ELSE 0 END)) * 1.0 / len(toks) AS symbol_word_ratio,
-        len(list_filter(lines, l -> substr(l, 1, 2) IN ('- ', '* ', '• '))) * 1.0 / len(lines) AS bullet_line_frac,
-        len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…'))) * 1.0 / len(lines) AS ellipsis_line_frac,
-        len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) * 1.0 / len(toks) AS alpha_word_frac,
-        CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is'], x))) AS BIGINT) AS n_stopword_hits
-      FROM t),
+    _GOPHER_DOCS_SQL
+    + r""",
 f AS (SELECT doc_id, """ + _GOPHER_KEEP + r""" AS keep FROM s)
 SELECT 'h' || (doc_id % 4) || '.example' AS host,
        CAST(count(*) AS BIGINT) AS n_docs,
@@ -3224,197 +2964,26 @@ def pipeline_host_quality(spark, sf_dir):
 
 
 # ---------------------------------------- trained language-ID (fastText-style)
-#
-# CCNet identifies document language with a TRAINED linear classifier
-# over hashed character n-grams (fastText langid — Joulin et al. 2017;
-# Wenzek et al. 2020 §4.2), not marker-word lookups.  The engine-native
-# form: char-trigram presence features (operators/quality.py
-# hashed_char_ngram_features), one-vs-rest deterministic batch-GD
-# logistic fits (the SAME bounded-collect loop the quality classifier
-# uses), and an alphabetical-tie-break argmax over the class margins —
-# every stage expressible in plain SQL, so the whole multi-class model
-# re-fits in DuckDB and the predictions value-hash.
-#
-# The fixture corpus's lang column is uncorrelated with its text, so
-# the query slice PLANTS per-language marker sentences (the dedup
-# planting recipe): each doc's gold-lang marker words are appended
-# plus ONE cross-language noise word keyed by doc_id — the classifier
-# must weigh n-gram combinations, not single-word presence, and
-# training must RECOVER the planted distribution (fit quality is part
-# of the hash: a diverged fit mispredicts and reds the gate).
-
-_LANGID_D = 128
-_LANGID_LR = 10.0
-_LANGID_ITERS = 6
+# The planted corpus, the pack, the OvR fit and the oracle CTE chain are
+# in queries/base.py (containers' trained CCNet keep builds them too).
 
 
-def _langid_langs():
-    from opentsdb_aura_spark.operators.text import LANG_MARKERS
-
-    return sorted(LANG_MARKERS), LANG_MARKERS
-
-
-def _langid_corpus(spark, sf_dir):
-    """(doc_id, lang, txt): fixture docs with the gold lang's marker
-    sentence appended plus one doc_id-keyed cross-language noise word,
-    lowercased — the planted-separable corpus both the Spark fit and
-    the DuckDB re-fit train on."""
-    langs, markers = _langid_langs()
-    d = docs(spark, sf_dir)
-    mk = F.when(F.col("lang") == langs[0], F.lit(" ".join(markers[langs[0]])))
-    for L in langs[1:]:
-        mk = mk.when(F.col("lang") == L, F.lit(" ".join(markers[L])))
-    mk = mk.otherwise(F.lit(""))
-    noise = [markers[L][0] for L in langs]
-    nz = F.when(F.col("doc_id") % 5 == 0, F.lit(noise[0]))
-    for i in range(1, 5):
-        nz = nz.when(F.col("doc_id") % 5 == i, F.lit(noise[i]))
-    return d.select(
+def _langid_verdict(scores, kind):
+    """The per-doc lang-id answer: gold lang, each class's ``kind``
+    (margin or prob) at 4 dp, the prediction and its agreement."""
+    langs, _ = _langid_langs()
+    return scores.select(
         "doc_id",
-        "lang",
-        F.lower(F.concat_ws(" ", F.col("text"), mk, nz)).alias("txt"),
+        F.col("lang").alias("true_lang"),
+        *[_r(f"{kind}_{L}", 4).alias(f"{kind}_{L}") for L in langs],
+        "pred_lang",
+        (F.col("pred_lang") == F.col("lang")).alias("correct"),
     )
-
-
-def _langid_packed(corpus, feats):
-    """The corpus featurized and packed ONCE — (doc_id, lang, fx),
-    lazily checkpointed — shared by the OvR fit and the scoring pass
-    (the train/score shared-materialization path the binary
-    classifier family uses)."""
-    from opentsdb_aura_spark.operators.quality import _pack_label_features
-
-    return _pack_label_features(
-        corpus.select("doc_id", "lang"), feats, ["lang"]
-    ).localCheckpoint(eager=False)
-
-
-def _langid_models(packed):
-    """One-vs-rest fit: K binary logreg fits over the SAME packed
-    frame, all K classes sharing each distributed pass
-    (train_ovr_logreg_weights — n_iter bounded collects total, each
-    <= D+1 rows wide by K gradient columns; arithmetic identical to K
-    independent train_logreg_weights calls, so the unrolled-SQL
-    oracles are unchanged)."""
-    from opentsdb_aura_spark.operators.quality import train_ovr_logreg_weights
-
-    langs, _ = _langid_langs()
-    return train_ovr_logreg_weights(
-        None,
-        None,
-        classes=langs,
-        n_features=_LANGID_D,
-        lr=_LANGID_LR,
-        n_iter=_LANGID_ITERS,
-        center=True,
-        packed=packed,
-    )
-
-
-def _langid_planted_txt_sql(text_expr: str = "text") -> str:
-    """The planted-corpus text as one SQL expression over
-    (``text_expr``, lang, doc_id) — shared by the standalone lang-id
-    oracle and the ccnet-trained composition in queries/containers.py
-    (which plants the SAME text BEFORE WARC synthesis so the language
-    signal survives extraction)."""
-    langs, markers = _langid_langs()
-    mk = " ".join(
-        f"WHEN '{L}' THEN '{' '.join(markers[L])}'" for L in langs
-    )
-    noise = [markers[L][0] for L in langs]
-    nz = " ".join(f"WHEN {i} THEN '{noise[i]}'" for i in range(5))
-    return (
-        f"lower({text_expr} || ' ' || CASE lang {mk} ELSE '' END"
-        f" || ' ' || CASE CAST(doc_id % 5 AS INTEGER) {nz} ELSE '' END)"
-    )
-
-
-def _langid_corpus_sql() -> str:
-    return f"""corpus AS MATERIALIZED (
-  SELECT doc_id, lang,
-         {_langid_planted_txt_sql()} AS txt
-  FROM documents)"""
-
-
-def _langid_ctes(corpus_sql: str | None = None) -> str:
-    """Shared CTE chain: planted corpus → char-trigram presence
-    triples (identical polynomial hash fold) → shared centering means
-    → one unrolled batch-GD chain PER CLASS (the _logreg_oracle block
-    with class-suffixed names), ending at each class's final margin
-    table m_<L><ITERS>.  Every iteration CTE is MATERIALIZED — the
-    chained references would otherwise inline exponentially.
-
-    ``corpus_sql`` swaps the training-corpus CTE (must still be named
-    ``corpus`` with columns doc_id/lang/txt) — the ccnet-trained
-    composition feeds the EXTRACTED page text instead of the raw
-    planted documents."""
-    langs, _ = _langid_langs()
-    lr, D, R = _LANGID_LR, _LANGID_D, _LANGID_ITERS
-    parts = [
-        corpus_sql if corpus_sql is not None else _langid_corpus_sql(),
-        f"""trip AS MATERIALIZED (
-  SELECT DISTINCT doc_id,
-         CAST(list_reduce(list_transform(range(1, 4),
-                j -> ord(substr(g, CAST(j AS INTEGER), 1))),
-              (a, b) -> (a * 31 + b) % 1000003) % {D} AS INTEGER) AS bucket,
-         1.0 AS cnt
-  FROM (SELECT doc_id, substr(txt, CAST(i AS INTEGER), 3) AS g
-        FROM corpus, unnest(range(1, length(txt) - 1)) AS u(i))),
-nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM corpus),
-mu AS MATERIALIZED (SELECT bucket, sum(cnt) / nn.n AS mu
-  FROM trip CROSS JOIN nn GROUP BY bucket, nn.n)""",
-    ]
-    for L in langs:
-        parts.append(
-            f"""lab_{L} AS MATERIALIZED (SELECT doc_id,
-  CASE WHEN lang = '{L}' THEN 1.0 ELSE 0.0 END AS y FROM corpus),
-m_{L}0 AS (SELECT doc_id, y, 0.0 AS margin FROM lab_{L})"""
-        )
-        for k in range(R):
-            parts.append(
-                f"""r_{L}{k} AS MATERIALIZED (SELECT doc_id, 1.0/(1.0+exp(-margin)) - y AS resid FROM m_{L}{k}),
-g_{L}{k} AS MATERIALIZED (SELECT bucket, sum(resid * cnt) AS s FROM trip JOIN r_{L}{k} USING (doc_id) GROUP BY 1),
-gb_{L}{k} AS MATERIALIZED (SELECT sum(resid) AS s FROM r_{L}{k})"""
-            )
-            if k == 0:
-                parts.append(
-                    f"""w_{L}1 AS MATERIALIZED (SELECT bucket, -{lr} * (g_{L}0.s - mu.mu * gb_{L}0.s) / nn.n AS w
-  FROM g_{L}0 JOIN mu USING (bucket) CROSS JOIN gb_{L}0 CROSS JOIN nn),
-b_{L}1 AS MATERIALIZED (SELECT -{lr} * s / nn.n AS b FROM gb_{L}0 CROSS JOIN nn)"""
-                )
-            else:
-                parts.append(
-                    f"""w_{L}{k + 1} AS MATERIALIZED (SELECT g_{L}{k}.bucket, w_{L}{k}.w - {lr} * (g_{L}{k}.s - mu.mu * gb_{L}{k}.s) / nn.n AS w
-  FROM g_{L}{k} JOIN mu USING (bucket) JOIN w_{L}{k} USING (bucket) CROSS JOIN gb_{L}{k} CROSS JOIN nn),
-b_{L}{k + 1} AS MATERIALIZED (SELECT b_{L}{k}.b - {lr} * s / nn.n AS b FROM gb_{L}{k} CROSS JOIN b_{L}{k} CROSS JOIN nn)"""
-                )
-            parts.append(
-                f"""off_{L}{k + 1} AS MATERIALIZED (SELECT sum(w * mu.mu) AS o FROM w_{L}{k + 1} JOIN mu USING (bucket)),
-m_{L}{k + 1} AS MATERIALIZED (SELECT lab_{L}.doc_id, lab_{L}.y, b_{L}{k + 1}.b - off_{L}{k + 1}.o + coalesce(dp_{L}{k + 1}.v, 0) AS margin
-  FROM lab_{L} CROSS JOIN b_{L}{k + 1} CROSS JOIN off_{L}{k + 1}
-  LEFT JOIN (SELECT trip.doc_id, sum(cnt * w_{L}{k + 1}.w ORDER BY trip.bucket) AS v
-             FROM trip JOIN w_{L}{k + 1} USING (bucket) GROUP BY 1) dp_{L}{k + 1} USING (doc_id))"""
-            )
-    return "WITH " + ",\n".join(parts)
-
-
-def _langid_pred_sql(prefix: str = "m_") -> str:
-    """Alphabetically-first argmax over the class margin columns —
-    the cascading CASE equivalent of greatest + first-match."""
-    langs, _ = _langid_langs()
-    arms = []
-    for i, L in enumerate(langs[:-1]):
-        conds = " AND ".join(f"{prefix}{L} >= {prefix}{M}" for M in langs[i + 1 :])
-        arms.append(f"WHEN {conds} THEN '{L}'")
-    return "CASE " + " ".join(arms) + f" ELSE '{langs[-1]}' END"
 
 
 def _langid_pred_oracle() -> str:
     langs, _ = _langid_langs()
-    R = _LANGID_ITERS
-    joins = "\n".join(
-        f"JOIN m_{L}{R} ON m_{L}{R}.doc_id = corpus.doc_id" for L in langs
-    )
-    margin_cols = ", ".join(f"m_{L}{R}.margin AS m_{L}" for L in langs)
+    margin_cols, joins = _langid_margins_sql()
     out_margins = ", ".join(f"round(m_{L}, 4) AS margin_{L}" for L in langs)
     pred = _langid_pred_sql()
     return (
@@ -3458,28 +3027,9 @@ def text_lang_id_trained(spark, sf_dir):
     step; scoring packs each doc's sparse vector once and evaluates
     all K models as literal-array folds — one corpus pass total,
     no per-class re-scan."""
-    from opentsdb_aura_spark.operators.quality import (
-        hashed_char_ngram_features,
-        ovr_logreg_scores,
-    )
-
-    corpus = _langid_corpus(spark, sf_dir)
-    feats = hashed_char_ngram_features(
-        corpus, n=3, n_features=_LANGID_D, text_col="txt"
-    )
-    packed = _langid_packed(corpus, feats)
-    models = _langid_models(packed)
-    langs, _ = _langid_langs()
-    scores = ovr_logreg_scores(
-        None, models, None, n_features=_LANGID_D, packed=packed, keep_cols=("lang",)
-    )
-    return scores.select(
-        "doc_id",
-        F.col("lang").alias("true_lang"),
-        *[_r(f"margin_{L}", 4).alias(f"margin_{L}") for L in langs],
-        "pred_lang",
-        (F.col("pred_lang") == F.col("lang")).alias("correct"),
-    )
+    packed = _langid_packed(_langid_corpus(spark, sf_dir))
+    scores = _langid_scores(packed, _langid_models(packed), keep_cols=("lang",))
+    return _langid_verdict(scores, "margin")
 
 
 @register("text_lang_id_trained_weights", _langid_weights_oracle())
@@ -3491,15 +3041,7 @@ def text_lang_id_trained_weights(spark, sf_dir):
     re-runs the identical five unrolled GD chains and reads their
     final weight CTEs, proving the model (not just its predictions)
     portable across engines."""
-    from opentsdb_aura_spark.operators.quality import (
-        hashed_char_ngram_features,
-    )
-
-    corpus = _langid_corpus(spark, sf_dir)
-    feats = hashed_char_ngram_features(
-        corpus, n=3, n_features=_LANGID_D, text_col="txt"
-    )
-    packed = _langid_packed(corpus, feats)
+    packed = _langid_packed(_langid_corpus(spark, sf_dir))
     models = _langid_models(packed)
     langs, _ = _langid_langs()
     # the populated-bucket set re-read from the materialized pack (its
@@ -3547,33 +3089,15 @@ def text_lang_id_persisted(spark, sf_dir):
         ovr_model_load,
         ovr_model_save,
     )
-    from opentsdb_aura_spark.operators.quality import (
-        hashed_char_ngram_features,
-        ovr_logreg_scores,
-    )
     from opentsdb_aura_spark.sources.batch import STORE_ROOT
 
-    corpus = _langid_corpus(spark, sf_dir)
-    feats = hashed_char_ngram_features(
-        corpus, n=3, n_features=_LANGID_D, text_col="txt"
-    )
-    packed = _langid_packed(corpus, feats)
+    packed = _langid_packed(_langid_corpus(spark, sf_dir))
     base = os.path.basename(os.path.normpath(sf_dir))
     path = os.path.join(STORE_ROOT, base, "langid_ovr_model_v1")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         ovr_model_save(spark, _langid_models(packed), path)
-    models = ovr_model_load(spark, path)
-    langs, _ = _langid_langs()
-    scores = ovr_logreg_scores(
-        None, models, None, n_features=_LANGID_D, packed=packed, keep_cols=("lang",)
-    )
-    return scores.select(
-        "doc_id",
-        F.col("lang").alias("true_lang"),
-        *[_r(f"margin_{L}", 4).alias(f"margin_{L}") for L in langs],
-        "pred_lang",
-        (F.col("pred_lang") == F.col("lang")).alias("correct"),
-    )
+    scores = _langid_scores(packed, ovr_model_load(spark, path), keep_cols=("lang",))
+    return _langid_verdict(scores, "margin")
 
 
 ORACLES["text_lang_id_persisted"] = ORACLES["text_lang_id_trained"]
@@ -3706,20 +3230,11 @@ def text_lang_id_softmax(spark, sf_dir):
     )
     from opentsdb_aura_spark.operators.quality import (
         _pack_label_features,
-        hashed_char_ngram_features,
         ovr_softmax_scores,
     )
 
-    clean = _langid_corpus(spark, sf_dir)
-    feats_tr = hashed_char_ngram_features(
-        clean, n=3, n_features=_LANGID_D, text_col="txt"
-    )
-    models = _langid_models(_langid_packed(clean, feats_tr))
+    models = _langid_models(_langid_packed(_langid_corpus(spark, sf_dir)))
     mixed = _langid_mixed_corpus(spark, sf_dir)
-    feats_sc = hashed_char_ngram_features(
-        mixed, n=3, n_features=_LANGID_D, text_col="txt"
-    )
-    langs, _ = _langid_langs()
     # pack the scoring corpus ONCE with the gold label riding along
     # (the ovr_logreg_scores packed/keep_cols shape) — deletes the
     # scorer's own pack + spine join and the true_lang re-attach join
@@ -3731,26 +3246,15 @@ def text_lang_id_softmax(spark, sf_dir):
         temperature=_LANGID_SOFTMAX_T,
         threshold=_LANGID_SOFTMAX_THR,
         packed=_pack_label_features(
-            mixed.select("doc_id", "lang"), feats_sc, ["lang"]
+            mixed.select("doc_id", "lang"), _langid_feats(mixed), ["lang"]
         ),
         keep_cols=("lang",),
     )
-    return scores.select(
-        "doc_id",
-        F.col("lang").alias("true_lang"),
-        *[_r(f"prob_{L}", 4).alias(f"prob_{L}") for L in langs],
-        "pred_lang",
-        (F.col("pred_lang") == F.col("lang")).alias("correct"),
-    )
+    return _langid_verdict(scores, "prob")
 
 
 def _langid_confusion_oracle() -> str:
-    langs, _ = _langid_langs()
-    R = _LANGID_ITERS
-    joins = "\n".join(
-        f"JOIN m_{L}{R} ON m_{L}{R}.doc_id = corpus.doc_id" for L in langs
-    )
-    margin_cols = ", ".join(f"m_{L}{R}.margin AS m_{L}" for L in langs)
+    margin_cols, joins = _langid_margins_sql()
     pred = _langid_pred_sql()
     return (
         _langid_ctes()
@@ -3775,24 +3279,28 @@ def text_lang_id_confusion(spark, sf_dir):
     router).  The oracle re-fits the identical five unrolled GD
     chains and re-aggregates the same cells, so the error structure
     (which languages leak into which) is value-hashed, not sampled."""
-    from opentsdb_aura_spark.operators.quality import (
-        hashed_char_ngram_features,
-        ovr_logreg_scores,
-    )
-
-    corpus = _langid_corpus(spark, sf_dir)
-    feats = hashed_char_ngram_features(
-        corpus, n=3, n_features=_LANGID_D, text_col="txt"
-    )
-    packed = _langid_packed(corpus, feats)
-    models = _langid_models(packed)
-    scores = ovr_logreg_scores(
-        None, models, None, n_features=_LANGID_D, packed=packed, keep_cols=("lang",)
-    )
+    packed = _langid_packed(_langid_corpus(spark, sf_dir))
+    scores = _langid_scores(packed, _langid_models(packed), keep_cols=("lang",))
     return (
         scores.select(F.col("lang").alias("true_lang"), "pred_lang")
         .groupBy("true_lang", "pred_lang")
         .agg(F.count("*").cast("bigint").alias("n_docs"))
+    )
+
+
+def _quality_badwords_gates(df, text_col="text"):
+    """(doc_id, ok_badwords, keep_quality): the C4 blocklist gate and
+    the Gopher keep over ``df``'s ``text_col``."""
+    from opentsdb_aura_spark.operators.quality import (
+        FIXTURE_BADWORDS,
+        badwords_exprs,
+        gopher_quality_flags,
+    )
+
+    g = gopher_quality_flags(df, min_tokens=10, text_col=text_col)
+    _, ok_bw = badwords_exprs(FIXTURE_BADWORDS, text_col=text_col)
+    return df.select("doc_id", ok_bw.alias("ok_badwords")).join(
+        g.select("doc_id", F.col("keep").alias("keep_quality")), "doc_id"
     )
 
 
@@ -3801,12 +3309,7 @@ def _ccnet_trained_oracle() -> str:
     chains → per-doc predicted lang → corpus-fit bigram LM → per-
     predicted-lang tercile split → Gopher + badwords + perplexity
     fused keep, all re-derived in SQL over the same planted corpus."""
-    langs, _ = _langid_langs()
-    R = _LANGID_ITERS
-    joins = "\n".join(
-        f"JOIN m_{L}{R} ON m_{L}{R}.doc_id = corpus.doc_id" for L in langs
-    )
-    margin_cols = ", ".join(f"m_{L}{R}.margin AS m_{L}" for L in langs)
+    margin_cols, joins = _langid_margins_sql()
     pred = _langid_pred_sql()
     return (
         _langid_ctes()
@@ -3819,39 +3322,14 @@ t AS MATERIALIZED (SELECT doc_id,
   FROM corpus),
 s AS (
   SELECT doc_id,
-         CAST(len(toks) AS BIGINT) AS n_tokens,
-         list_sum(list_transform(toks, x -> length(x))) * 1.0 / len(toks) AS mean_word_len,
-         list_sum(list_transform(toks, x -> length(x) - length(replace(x, '#', ''))
-           + CASE WHEN contains(x, '...') OR contains(x, '…') THEN 1 ELSE 0 END)) * 1.0 / len(toks) AS symbol_word_ratio,
-         len(list_filter(lines, l -> substr(l, 1, 2) IN ('- ', '* ', '• '))) * 1.0 / len(lines) AS bullet_line_frac,
-         len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…'))) * 1.0 / len(lines) AS ellipsis_line_frac,
-         len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) * 1.0 / len(toks) AS alpha_word_frac,
-         CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is'], x))) AS BIGINT) AS n_stopword_hits,
-         CAST(len(list_filter(toks, x -> list_contains(['dup','obscene','xxx-badword'], x))) AS BIGINT) AS n_badword_hits
+{_GOPHER_SIGNALS_SQL}
   FROM t),
 q AS (
   SELECT doc_id, n_badword_hits,
-         (n_tokens BETWEEN 10 AND 100000) AND (mean_word_len BETWEEN 3 AND 10)
-           AND symbol_word_ratio <= 0.1 AND bullet_line_frac <= 0.9
-           AND ellipsis_line_frac <= 0.3 AND alpha_word_frac >= 0.8
-           AND n_stopword_hits >= 2 AS keep_quality
+{_GOPHER_KEEP_QUALITY_SQL}
   FROM s),
-bg AS (SELECT doc_id, toks[i+1] || ' ' || toks[i+2] AS bigram, toks[i+1] AS w1
-       FROM t, unnest(range(0, greatest(len(toks) - 1, 0))) AS u(i)),
-uni AS (SELECT tok, count(*) AS ucnt
-        FROM (SELECT unnest(toks) AS tok FROM t) GROUP BY 1),
-v AS (SELECT CAST(count(*) AS DOUBLE) AS v FROM uni),
-big AS (SELECT bigram, count(*) AS bcnt FROM bg GROUP BY 1),
-sc AS (SELECT doc_id, round(avg(ln((bcnt + 0.1) / (ucnt + 0.1 * v.v))), 4) AS avg_logprob
-       FROM bg JOIN big USING (bigram) JOIN uni ON bg.w1 = uni.tok CROSS JOIN v
-       GROUP BY 1),
-bkt AS (SELECT doc_id, lang, avg_logprob,
-          CASE ntile(3) OVER (PARTITION BY lang
-                              ORDER BY avg_logprob DESC NULLS LAST, doc_id)
-               WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail'
-          END AS ppl_bucket
-        FROM (SELECT lid.doc_id, lid.lang, sc.avg_logprob
-              FROM lid LEFT JOIN sc USING (doc_id)))
+{_CCNET_LM_SQL},
+{_CCNET_BKT_SQL}
 SELECT q.doc_id, bkt.lang, bkt.avg_logprob, bkt.ppl_bucket,
        q.keep_quality,
        q.n_badword_hits = 0 AS ok_badwords,
@@ -3882,51 +3360,16 @@ def pipeline_ccnet_curate_trained(spark, sf_dir):
     literal-array fold, the LM joins shuffle on high-cardinality gram
     keys, and the tercile is one per-language window — swap for
     train_perplexity_cutoffs at full corpus scale."""
-    from opentsdb_aura_spark.operators.quality import (
-        FIXTURE_BADWORDS,
-        badwords_exprs,
-        gopher_quality_flags,
-        hashed_char_ngram_features,
-        lm_bigram_scores,
-        perplexity_buckets,
-    )
-    from opentsdb_aura_spark.operators.quality import ovr_logreg_scores
+    from opentsdb_aura_spark.operators.quality import lm_bigram_scores
 
     corpus = _langid_corpus(spark, sf_dir).localCheckpoint(eager=False)
-    feats = hashed_char_ngram_features(
-        corpus, n=3, n_features=_LANGID_D, text_col="txt"
+    packed = _langid_packed(corpus)
+    langs = _langid_scores(packed, _langid_models(packed)).select(
+        "doc_id", F.col("pred_lang").alias("lang")
     )
-    packed = _langid_packed(corpus, feats)
-    models = _langid_models(packed)
-    langs = ovr_logreg_scores(
-        None, models, None, n_features=_LANGID_D, packed=packed
-    ).select("doc_id", F.col("pred_lang").alias("lang"))
-    g = gopher_quality_flags(corpus, min_tokens=10, text_col="txt")
-    bw_hits, ok_bw = badwords_exprs(FIXTURE_BADWORDS, text_col="txt")
-    gates = corpus.select("doc_id", ok_bw.alias("ok_badwords")).join(
-        g.select("doc_id", F.col("keep").alias("keep_quality")), "doc_id"
-    )
-    scores = lm_bigram_scores(corpus, alpha=0.1, text_col="txt").select(
-        "doc_id", _r("avg_logprob", 4).alias("avg_logprob")
-    )
-    bkt = perplexity_buckets(langs.join(scores, "doc_id"))
-    label = (
-        F.when(F.col("ppl_bucket") == 1, "head")
-        .when(F.col("ppl_bucket") == 2, "middle")
-        .otherwise("tail")
-    )
-    bkt = bkt.select("doc_id", "lang", "avg_logprob", label.alias("ppl_bucket"))
-    ok_ppl = F.col("ppl_bucket").isin("head", "middle")
-    return gates.join(bkt, "doc_id").select(
-        "doc_id",
-        "lang",
-        "avg_logprob",
-        "ppl_bucket",
-        "keep_quality",
-        "ok_badwords",
-        ok_ppl.alias("ok_ppl"),
-        (F.col("keep_quality") & F.col("ok_badwords") & ok_ppl).alias("keep"),
-    )
+    gates = _quality_badwords_gates(corpus, text_col="txt")
+    lm_scores = lm_bigram_scores(corpus, alpha=0.1, text_col="txt")
+    return _ccnet_keep(gates, langs, lm_scores, ("keep_quality", "ok_badwords"))
 
 
 def _quality_gate_oracle() -> str:
@@ -3947,22 +3390,11 @@ gt AS MATERIALIZED (SELECT doc_id,
   FROM documents),
 gs AS (
   SELECT doc_id,
-         CAST(len(toks) AS BIGINT) AS n_tokens,
-         list_sum(list_transform(toks, x -> length(x))) * 1.0 / len(toks) AS mean_word_len,
-         list_sum(list_transform(toks, x -> length(x) - length(replace(x, '#', ''))
-           + CASE WHEN contains(x, '...') OR contains(x, '…') THEN 1 ELSE 0 END)) * 1.0 / len(toks) AS symbol_word_ratio,
-         len(list_filter(lines, l -> substr(l, 1, 2) IN ('- ', '* ', '• '))) * 1.0 / len(lines) AS bullet_line_frac,
-         len(list_filter(lines, l -> ends_with(l, '...') OR ends_with(l, '…'))) * 1.0 / len(lines) AS ellipsis_line_frac,
-         len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]'))) * 1.0 / len(toks) AS alpha_word_frac,
-         CAST(len(list_filter(toks, x -> list_contains(['the','a','of','and','to','in','is'], x))) AS BIGINT) AS n_stopword_hits,
-         CAST(len(list_filter(toks, x -> list_contains(['dup','obscene','xxx-badword'], x))) AS BIGINT) AS n_badword_hits
+{_GOPHER_SIGNALS_SQL}
   FROM gt),
 gq AS (
   SELECT doc_id, n_badword_hits,
-         (n_tokens BETWEEN 10 AND 100000) AND (mean_word_len BETWEEN 3 AND 10)
-           AND symbol_word_ratio <= 0.1 AND bullet_line_frac <= 0.9
-           AND ellipsis_line_frac <= 0.3 AND alpha_word_frac >= 0.8
-           AND n_stopword_hits >= 2 AS keep_quality
+{_GOPHER_KEEP_QUALITY_SQL}
   FROM gs)
 SELECT gq.doc_id,
        round(1.0/(1.0+exp(-m.margin)), 4) AS prob,
@@ -3993,28 +3425,9 @@ def pipeline_quality_gate(spark, sf_dir):
     itself is one literal-array scoring pass + the zero-shuffle
     Gopher map — per-batch cost in the stream, one corpus pass in
     batch."""
-    from opentsdb_aura_spark.operators.dedup_text import tokens
-    from opentsdb_aura_spark.operators.quality import (
-        FIXTURE_BADWORDS,
-        _pack_label_features,
-        badwords_exprs,
-        gopher_quality_flags,
-        hashed_token_features,
-        logreg_scores_packed,
-        train_logreg_weights,
-    )
+    from opentsdb_aura_spark.operators.quality import logreg_scores_packed
 
-    d = docs(spark, sf_dir)
-    labels = d.select(
-        "doc_id",
-        F.array_contains(tokens(F.col("text")), "dup").cast("double").alias("y"),
-    )
-    feats = hashed_token_features(d, n_features=_LOGREG_D, binary=True)
-    packed = _pack_label_features(labels, feats, ["y"]).localCheckpoint(eager=False)
-    w, b = train_logreg_weights(
-        None, None, n_features=_LOGREG_D, lr=_LOGREG_LR, n_iter=_LOGREG_ITERS,
-        center=True, packed=packed,
-    )
+    d, packed, w, b = _dup_classifier(spark, sf_dir)
     # the PRETRAINED-weights dim exactly as the stream consumes it
     model = {"weights": w, "bias": b, "n_features": _LOGREG_D, "binary": True}
     qs = logreg_scores_packed(
@@ -4022,11 +3435,7 @@ def pipeline_quality_gate(spark, sf_dir):
         list(model["weights"]),
         float(model["bias"]),
     ).select("doc_id", "prob", (F.col("prob") >= F.lit(0.5)).alias("keep_clf"))
-    g = gopher_quality_flags(d, min_tokens=10)
-    bw_hits, ok_bw = badwords_exprs(FIXTURE_BADWORDS)
-    gates = d.select("doc_id", ok_bw.alias("ok_badwords")).join(
-        g.select("doc_id", F.col("keep").alias("keep_quality")), "doc_id"
-    )
+    gates = _quality_badwords_gates(d)
     return gates.join(qs, "doc_id").select(
         "doc_id",
         _r("prob", 4).alias("prob"),

@@ -189,3 +189,48 @@ def test_python_row_passes_go_through_rowpass():
             if re.search(r"\.(mapInPandas|applyInPandas)\(", line):
                 hits.append(f"{py.name}:{i}: {line.strip()}")
     assert not hits, f"per-row Python pass outside rowpass.map_rows/pack_groups: {hits}"
+
+
+def test_register_rejects_duplicate_names():
+    """A second registration under a taken name raises instead of
+    silently replacing the first query or its oracle, and leaves the
+    registry as it was."""
+    from opentsdb_aura_spark.catalog import ORACLES, SPARK_QUERIES, register
+
+    for name in ("pipeline_ccnet_curate", "text_lang_id_persisted"):  # with and without its own oracle SQL
+        before = (SPARK_QUERIES[name], ORACLES.get(name))
+        with pytest.raises(ValueError, match=name):
+            register(name, "SELECT 1 AS x")(lambda spark, sf_dir: None)
+        with pytest.raises(ValueError, match=name):
+            register(name)(lambda spark, sf_dir: None)
+        assert (SPARK_QUERIES[name], ORACLES.get(name)) == before
+
+
+def test_fixture_chains_written_once():
+    """Source lint: the crawl page chain (WARC → HTTP split with body →
+    doc_id parsed from the record id) and the doc-graph edge loop are
+    built only by their shared helpers; every catalog query that needs
+    one calls the helper."""
+    import ast
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "opentsdb_aura_spark" / "queries"
+    chains = {
+        "crawl page chain": (re.compile(r"with_body=True|urn:uuid:doc-\("), {"_crawl_pages"}),
+        "doc-graph edge loop": (
+            re.compile(r"\(7, 1\), \(13, 2\), \(23, 3\)|F\.col\(\"doc_id\"\) \* 13 \+ 2"),
+            {"_doc_graph_edges", "_host_page_edges"},
+        ),
+    }
+    hits = []
+    for py in sorted(root.glob("*.py")):
+        src = py.read_text()
+        for fn in ast.walk(ast.parse(src)):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            body = ast.get_source_segment(src, fn)
+            for chain, (pat, owners) in chains.items():
+                if fn.name not in owners and pat.search(body):
+                    hits.append(f"{py.name}:{fn.lineno}: {fn.name} builds the {chain}")
+    assert not hits, f"fixture chain built outside its shared helper: {hits}"
