@@ -38,6 +38,7 @@ front ends of it, so a NaN point means the same thing on every path.
 from __future__ import annotations
 
 import re
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -148,9 +149,10 @@ def accumulate(
     ``bucket`` = (name, Column) derives a key beside ``_v``.  The
     optimizer prunes the partials no parent selects."""
     v = F.col(value_col)
-    df = df.withColumn("_v", non_nan(v)).withColumn("_isnan", F.isnan(v))
+    cols = {"_v": non_nan(v), "_isnan": F.isnan(v)}
     if bucket is not None:
-        df = df.withColumn(*bucket)
+        cols[bucket[0]] = bucket[1]
+    df = df.withColumns(cols)
     aggs = [
         F.sum("_v").alias("_sum"),
         F.count("_v").alias("_cnt"),
@@ -248,18 +250,32 @@ def fill_spine(
     — NaN (reference default), 0 (the rollup count fill,
     GorillaDownSampledTimeSeriesEncoder.java:171), or NULL.
 
-    The spine is |groups| × |buckets| — identical to the reference's
-    dense per-series output arrays, so it is not a scale hazard: it is
-    the *output* cardinality, produced by an explode of a generated
-    ``sequence`` (no shuffle beyond the distinct on group keys, which
-    the preceding aggregation already partitioned by).
+    One pass over ``result``, as the reference's fused iterator fills
+    its dense per-series array while it aggregates
+    (AuraMetricsNumericArrayIterator.java:285-670): one aggregate
+    gathers each group's observed cells into a ``bucket_ts → value``
+    map, then an explode of ``sequence(0, n_buckets - 1)`` reads
+    ``coalesce(cell, fill)`` per bucket.  The spine is |groups| ×
+    |buckets| — the *output* cardinality, not a scale hazard.  Cells
+    off the grid or outside [start, end) are never read; a row with a
+    NULL ``bucket_ts`` adds no cell but still names its group.  Group
+    keys compare null-safely: a series missing a grouped tag forms a
+    NULL-keyed group (``with_group_keys``) whose values survive.
+    Group-all (no ``group_cols``) is a global aggregate, which yields
+    one row on empty input, so it always emits the full fill grid.
+
+    Input contract: at most one ``result`` row per (group, bucket).
+    Every caller meets it — the downsample / group-merge / rollup
+    aggregates output one row per key, and the hot/cold splice unions
+    tier-disjoint buckets; a duplicate raises at the map build.
 
     ``spine_groups`` — optional meta-driven group universe (one row per
-    group, exactly ``group_cols`` columns).  By default the spine
-    derives from the *result*, so a series the filter matched that has
-    zero in-range points emits nothing; the reference's meta index
-    selects series independently of the scanned range and such a series
-    yields an all-NaN vector (TimeSeriesShard.java:677-758 selection vs
+    group, exactly ``group_cols`` columns), left-joined to the cells.
+    By default the spine derives from the *result*, so a series the
+    filter matched that has zero in-range points emits nothing; the
+    reference's meta index selects series independently of the scanned
+    range and such a series yields an all-NaN vector
+    (TimeSeriesShard.java:677-758 selection vs
     AuraMetricsNumericArrayIterator missing-segment NaN fill).  Pass the
     filtered ``series_dim`` projection to reproduce that contract.
     """
@@ -274,39 +290,16 @@ def fill_spine(
         # empty range: no spine rows (and sequence(0, -1) would step
         # BACKWARD, inventing buckets)
         return result.where(F.lit(False))
-    if not group_cols:
-        spark = result.sparkSession
-        spine = spark.range(n_buckets).select(
-            (F.lit(int(start)) + F.col("id") * F.lit(int(interval))).cast("long").alias("bucket_ts")
-        )
-        joined = spine.join(result, on="bucket_ts", how="left")
-        return joined.withColumn("value", F.coalesce(F.col("value"), fill_value))
-    if spine_groups is not None:
-        groups = spine_groups.select(*group_cols).distinct()
-    else:
-        groups = result.select(*group_cols).distinct()
-    spine = groups.select(
-        *group_cols,
-        F.explode(
-            F.sequence(
-                F.lit(0), F.lit(n_buckets - 1)
-            )
-        ).alias("_i"),
-    ).select(
-        *group_cols,
-        (F.lit(int(start)) + F.col("_i") * F.lit(int(interval))).cast("long").alias("bucket_ts"),
+    b = F.col("bucket_ts")
+    cells = result.groupBy(*group_cols).agg(
+        F.map_from_entries(F.collect_list(F.when(b.isNotNull(), F.struct(b, F.col("value"))))).alias("_cells")
     )
-    # NULL-SAFE group-key equality: a series missing a grouped tag
-    # forms a NULL-keyed group (with_group_keys), and a null-unsafe
-    # join would never match its result rows — the whole group would
-    # silently come back as the fill value
-    s, r = spine.alias("_spine"), result.alias("_res")
-    cond = F.col("_spine.bucket_ts") == F.col("_res.bucket_ts")
-    for c in group_cols:
-        cond = cond & F.col(f"_spine.{c}").eqNullSafe(F.col(f"_res.{c}"))
-    joined = s.join(r, cond, "left").select(
-        *[F.col(f"_spine.{c}") for c in group_cols],
-        F.col("_spine.bucket_ts").alias("bucket_ts"),
-        F.coalesce(F.col("_res.value"), fill_value).alias("value"),
+    keys = [F.col(c) for c in group_cols]
+    if spine_groups is not None and group_cols:
+        g, c = spine_groups.select(*group_cols).distinct().alias("_g"), cells.alias("_c")
+        cond = reduce(Column.__and__, [F.col(f"_g.{k}").eqNullSafe(F.col(f"_c.{k}")) for k in group_cols])
+        cells, keys = g.join(c, cond, "left"), [F.col(f"_g.{k}") for k in group_cols]
+    ts = (F.lit(int(start)) + F.col("_i") * F.lit(int(interval))).cast("long")
+    return cells.select(*keys, "_cells", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))).alias("_i")).select(
+        *group_cols, ts.alias("bucket_ts"), F.coalesce(F.col("_cells")[ts], fill_value).alias("value")
     )
-    return joined

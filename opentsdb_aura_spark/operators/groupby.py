@@ -70,7 +70,4 @@ def with_group_keys(points: DataFrame, tag_keys: Sequence[str], tags_col: str = 
     own NULL-keyed group, matching the reference where group ids are
     the joined tag-value strings resolved by the meta layer
     (MystQueryBuilder.java:38-89)."""
-    df = points
-    for k in tag_keys:
-        df = df.withColumn(f"tag_{k}", F.col(tags_col)[k])
-    return df
+    return points.withColumns({f"tag_{k}": F.col(tags_col)[k] for k in tag_keys})

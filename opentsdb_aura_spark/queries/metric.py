@@ -16,7 +16,6 @@ from opentsdb_aura_spark.queries.base import (  # shared underscore helpers
     _ds_by_metric_sql,
     _mq,
     _r,
-    _rollup,
 )
 
 

@@ -13,7 +13,6 @@ from __future__ import annotations
 from opentsdb_aura_spark.queries.base import *  # noqa: F401,F403
 from opentsdb_aura_spark.queries.base import (  # shared underscore helpers
     _bucket_sql,
-    _ds_by_metric,
     _ds_by_metric_sql,
     _mq,
     _r,
@@ -60,7 +59,7 @@ GROUP BY 1, 2""",
 )
 def filter_regex_wildcard(spark, sf_dir):
     """F3+F4 — tag-value regexp (find semantics) + metric wildcard."""
-    from opentsdb_aura_spark.filters import TagRegexp, TagWildcard, compile_filter, time_range
+    from opentsdb_aura_spark.filters import TagRegexp, compile_filter, time_range
 
     flt = Chain("AND", [TagRegexp("k", "^[1-3]")])
     pts = points(spark, sf_dir)

@@ -15,10 +15,7 @@ from opentsdb_aura_spark.queries.base import (  # shared underscore helpers
     _GOPHER_SIGNALS_SQL,
     _LANGID_D,
     _LANGID_ITERS,
-    _bucket_sql,
     _ccnet_keep,
-    _ds_by_metric,
-    _ds_by_metric_sql,
     _kn3_coc_sql,
     _kn_order_parts,
     _kn_tower_parts,
@@ -31,10 +28,8 @@ from opentsdb_aura_spark.queries.base import (  # shared underscore helpers
     _langid_packed,
     _langid_pred_sql,
     _langid_scores,
-    _mq,
     _ppl_terciles,
     _r,
-    _rollup,
 )
 
 

@@ -7,14 +7,7 @@ side-effects only — query names, oracles, and behavior unchanged.
 from __future__ import annotations
 
 from opentsdb_aura_spark.queries.base import *  # noqa: F401,F403
-from opentsdb_aura_spark.queries.base import (  # shared underscore helpers
-    _bucket_sql,
-    _ds_by_metric,
-    _ds_by_metric_sql,
-    _mq,
-    _r,
-    _rollup,
-)
+from opentsdb_aura_spark.queries.base import _r  # shared underscore helper
 
 
 # ============================================================ relational health (TPC-H-ish)

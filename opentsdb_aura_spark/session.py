@@ -14,9 +14,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Number of local cores the driver gives us; on a real cluster this is
-# ignored (master comes from the submit environment).
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Number of local cores the driver gives us (the CPUs this process may
+# run on); on a real cluster this is ignored (master comes from the
+# submit environment).
+_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 
 def get_spark(app_name: str = "opentsdb_aura_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -46,6 +47,11 @@ def get_spark(app_name: str = "opentsdb_aura_spark", shuffle_partitions: int | N
         # rejects by default; read as raw long nanoseconds instead
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # no Python call-site capture on every F.* / DataFrame call (about
+        # 850 py4j round trips per dashboard plan; an AnalysisException then
+        # names no Python call site); PySpark caches the flag process-wide
+        # on first use, so it is set here, at build time
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

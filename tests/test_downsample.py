@@ -207,3 +207,80 @@ def test_custom_aggregator_name_starting_with_p(make_points):
     pts = make_points([("m", {}, BASE + i, float(i)) for i in range(4)])
     res = downsample(pts, BASE, BASE + 60, 60, "pmean", group_cols=[], fill="none")
     assert res.collect()[0]["value"] == 1.5
+
+
+# ---------------------------------------------------------------- fill_spine edges
+# One pass (cells gathered per group, then the bucket sequence exploded)
+# must give the same grid the spine-join form gave on every edge below.
+
+_G_SCHEMA = "g string, bucket_ts long, value double"
+_A_SCHEMA = "bucket_ts long, value double"
+_GRID = [BASE + 60 * i for i in range(5)]  # [BASE, BASE + 300) at 60 s
+
+
+def _spine_rows(df):
+    """Sorted rows with NaN spelled "NaN" so grids compare with ==."""
+    out = [tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r) for r in df.collect()]
+    return sorted(out, key=repr)
+
+
+def _edge_result(spark):
+    """One row per (group, bucket), the fill_spine input contract; every
+    edge at once: a NULL group, a NaN and a NULL value on the grid,
+    off-grid / before-window / at-end rows, a NULL bucket."""
+    return spark.createDataFrame(
+        [("a", BASE, 1.0), (None, BASE + 60, 2.0), (None, BASE + 120, NAN), ("a", BASE + 240, None),
+         ("b", BASE + 30, 9.0), ("b", BASE - 60, 8.0), ("b", BASE + 300, 7.0), ("c", None, 5.0)],
+        _G_SCHEMA,
+    )
+
+
+def test_fill_spine_empty_group_all_is_full_grid(spark):
+    from opentsdb_aura_spark.operators.downsample import fill_spine
+
+    res = fill_spine(spark.createDataFrame([], _A_SCHEMA), BASE, BASE + 300, 60, [])
+    assert res.columns == ["bucket_ts", "value"]
+    assert _spine_rows(res) == [(b, "NaN") for b in _GRID]
+
+
+def test_fill_spine_empty_grouped_is_empty(spark):
+    from opentsdb_aura_spark.operators.downsample import fill_spine
+
+    res = fill_spine(spark.createDataFrame([], _G_SCHEMA), BASE, BASE + 300, 60, ["g"])
+    assert res.columns == ["g", "bucket_ts", "value"]
+    assert res.collect() == []
+
+
+def test_fill_spine_edges_per_fill(spark):
+    """NULL group key kept; off-grid, out-of-window and NULL-bucket rows
+    add no cell but their group still gets its grid; a NULL value takes
+    the fill, a NaN value stays NaN; zero / null fills."""
+    from opentsdb_aura_spark.operators.downsample import fill_spine
+
+    for fill, f in (("nan", "NaN"), ("zero", 0.0), ("null", None)):
+        res = fill_spine(_edge_result(spark), BASE, BASE + 300, 60, ["g"], fill=fill)
+        assert res.columns == ["g", "bucket_ts", "value"]
+        want = {(g, b): f for g in ("a", "b", "c", None) for b in _GRID}
+        want[("a", BASE)], want[(None, BASE + 60)], want[(None, BASE + 120)] = 1.0, 2.0, "NaN"
+        assert _spine_rows(res) == sorted(((g, b, v) for (g, b), v in want.items()), key=repr), fill
+
+
+def test_fill_spine_group_all_edges(spark):
+    from opentsdb_aura_spark.operators.downsample import fill_spine
+
+    rows = [(BASE, 1.0), (BASE + 30, 9.0), (BASE - 60, 8.0), (BASE + 300, 7.0), (None, 5.0), (BASE + 120, None)]
+    res = fill_spine(spark.createDataFrame(rows, _A_SCHEMA), BASE, BASE + 300, 60, [], fill="zero")
+    assert _spine_rows(res) == [(BASE, 1.0)] + [(b, 0.0) for b in _GRID[1:]]
+
+
+def test_fill_spine_spine_groups_universe(spark):
+    """The meta-driven universe decides the groups: a group with no
+    points is all-NaN, a result group outside it is dropped, and a NULL
+    universe key matches the NULL result group."""
+    from opentsdb_aura_spark.operators.downsample import fill_spine
+
+    groups = spark.createDataFrame([("a",), ("d",), (None,)], "g string")
+    res = fill_spine(_edge_result(spark), BASE, BASE + 300, 60, ["g"], spine_groups=groups)
+    want = {(g, b): "NaN" for g in ("a", "d", None) for b in _GRID}
+    want[("a", BASE)], want[(None, BASE + 60)] = 1.0, 2.0
+    assert _spine_rows(res) == sorted(((g, b, v) for (g, b), v in want.items()), key=repr)

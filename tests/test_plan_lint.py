@@ -234,3 +234,29 @@ def test_fixture_chains_written_once():
                 if fn.name not in owners and pat.search(body):
                     hits.append(f"{py.name}:{fn.lineno}: {fn.name} builds the {chain}")
     assert not hits, f"fixture chain built outside its shared helper: {hits}"
+
+
+def test_queries_import_only_what_they_use():
+    """Source lint: no ``queries/`` module imports a name it never uses.
+    The module-level imports of ``base.py`` (re-exported to the domain
+    modules through ``from base import *``) and of ``__init__.py`` are
+    exempt."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "opentsdb_aura_spark" / "queries"
+    hits = []
+    for py in sorted(root.glob("*.py")):
+        tree = ast.parse(py.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        exempt = set(tree.body) if py.name in ("base.py", "__init__.py") else set()
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)) or node in exempt:
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for a in node.names:
+                name = (a.asname or a.name).split(".")[0]
+                if a.name != "*" and name not in used:
+                    hits.append(f"{py.name}:{node.lineno}: {name}")
+    assert not hits, f"unused imports in queries/: {hits}"

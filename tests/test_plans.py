@@ -47,6 +47,25 @@ def test_partition_pruning(spark):
     assert str(C.START + 2 * C.DAY) in m.group(1)  # upper bound present
 
 
+@pytest.mark.parametrize("group_tag_keys", [["user"], None], ids=["grouped", "per_series"])
+def test_nan_spine_scans_points_once(spark, group_tag_keys):
+    """A8 — the dense NaN spine is built from the query's own aggregate
+    output, so a fill="nan" query reads the points table once (no second
+    scan and dedupe to feed a distinct group universe)."""
+    q = C._mq(
+        start=C.START,
+        end=C.START + 2 * C.DAY,
+        interval=C.HOUR,
+        ds_agg="sum",
+        filter=MetricLiteral("purchase"),
+        group_tag_keys=group_tag_keys,
+        gb_agg="sum",
+    )
+    df = run_metric_query(C.points(spark, SF), q)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+
+
 def test_predicate_pushdown(spark):
     """F-filters and the time range must reach the Parquet scan."""
     plan = plan_of(C.SPARK_QUERIES["gb_sum_by_user_daily"](spark, SF))

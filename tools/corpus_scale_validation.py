@@ -24,10 +24,11 @@ Usage: python tools/corpus_scale_validation.py [n_docs_million=2] [n_vec_million
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

@@ -20,10 +20,11 @@ Usage: python tools/kn_heldout_scale_bench.py [n_docs_millions=1]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TOKS_PER_DOC = 12
 TRAIN_VOCAB = 10_000

@@ -12,12 +12,13 @@ Usage: python tools/scale_validation.py [n_million=50]
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = 1704067200  # segment-aligned
 

@@ -33,7 +33,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = "/tmp/spark_graft_sf1"

@@ -25,10 +25,11 @@ Usage: python tools/suffix_scale_bench.py [n_docs_thousands]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SHARED = "the quick brown fox jumps over the lazy dog again and again."  # 60 chars
 assert len(SHARED) == 60
