@@ -107,7 +107,8 @@ def _with_prev_global(df: DataFrame, group_cols: list, value_col: str, ts_col: s
     w = Window.partitionBy(*group_cols).orderBy(ts).rowsBetween(Window.unboundedPreceding, -1)
     prev_ts = F.last(F.when(non_nan(v).isNotNull(), ts), ignorenulls=True).over(w)
     prev_v = F.last(non_nan(v), ignorenulls=True).over(w)
-    return df.withColumn("_prev_ts", prev_ts).withColumn("_prev_v", prev_v)
+    # one withColumns: both columns share the spec, so one Window node
+    return df.withColumns({"_prev_ts": prev_ts, "_prev_v": prev_v})
 
 
 def _with_prev_segmented(
@@ -140,11 +141,9 @@ def _with_prev_segmented(
     w = Window.partitionBy(*seg_keys).orderBy(ts).rowsBetween(Window.unboundedPreceding, -1)
     in_seg_ts = F.last(F.when(non_nan(v).isNotNull(), ts), ignorenulls=True).over(w)
     in_seg_v = F.last(non_nan(v), ignorenulls=True).over(w)
-    return (
-        out.withColumn("_prev_ts", F.coalesce(in_seg_ts, F.col("_bnd_ts")))
-        .withColumn("_prev_v", F.coalesce(in_seg_v, F.col("_bnd_v")))
-        .drop("_bnd_ts", "_bnd_v")
-    )
+    return out.withColumns(
+        {"_prev_ts": F.coalesce(in_seg_ts, F.col("_bnd_ts")), "_prev_v": F.coalesce(in_seg_v, F.col("_bnd_v"))}
+    ).drop("_bnd_ts", "_bnd_v")
 
 
 def rate(

@@ -6,6 +6,12 @@ joins, partition coalescing), Arrow for the Pandas-UDF slow path, UTC
 session time so epoch math matches the reference's epoch-second
 timestamps (reference stores epoch seconds as int,
 core/src/main/java/net/opentsdb/aura/metrics/core/TimeSeriesShard.java:399).
+
+The reference compiles its fused downsample/rate/group-by iterators once,
+ahead of time; this engine generates Java per plan and compiles it with
+Janino.  The codegen cache is sized (``spark.sql.codegen.cache.maxEntries``,
+1000) to hold a dashboard session's working set, so a repeated plan
+compiles nothing.
 """
 
 from __future__ import annotations
@@ -52,6 +58,13 @@ def get_spark(app_name: str = "opentsdb_aura_spark", shuffle_partitions: int | N
         # names no Python call site); PySpark caches the flag process-wide
         # on first use, so it is set here, at build time
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Spark keys its generated-class cache by (class loader, source),
+        # so the driver's and the task thread's compiles of one
+        # whole-stage class are two entries; a dashboard session holds
+        # 300-365 of them, and at the default 100 every metric pass
+        # recompiles ~140 classes (11-16 ms each).  Static conf: it sizes
+        # the cache when the JVM first generates code
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

@@ -423,3 +423,40 @@ def test_active_series_reads_stored_presence_only(spark):
     assert "metrics" not in scanned.replace("metrics_bucketed", ""), plan
     m = re.findall(r"ReadSchema: (.*)", plan)
     assert m and not any("value" in s for s in m), plan
+
+
+def _codegen_compiles(spark) -> int:
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_metric_plan_compiles_nothing(spark, make_points):
+    """Spark keys generated classes by (class loader, source), so a
+    dashboard session's working set is a few hundred entries; the
+    session's codegen cache must hold it, or a repeated plan recompiles
+    every whole-stage class after a handful of other query shapes."""
+    from opentsdb_aura_spark.operators.rate import RateOptions
+    from opentsdb_aura_spark.plans.query import MetricQuery
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    base = 1704067200
+    pts = make_points(
+        [
+            ("m", {"host": f"h{h}", "dc": f"dc{h % 2}"}, base + 60 * i, float(i * (h + 1)))
+            for h in range(6)
+            for i in range(30)
+        ]
+    )
+
+    def run(**kw) -> None:
+        q = MetricQuery(start=base, end=base + 1800, interval=300, filter=MetricLiteral("m"), **kw)
+        run_metric_query(pts, q).collect()
+
+    first = dict(rate_options=RateOptions(interval_seconds=60), ds_agg="avg", group_tag_keys=["dc"], gb_agg="sum")
+    run(**first)
+    run(**first)
+    for agg in ("sum", "avg", "max", "p90", "last"):
+        for keys in (["dc"], None, ["host"]):
+            run(ds_agg=agg, group_tag_keys=keys, gb_agg="sum")
+    before = _codegen_compiles(spark)
+    run(**first)
+    assert _codegen_compiles(spark) == before

@@ -42,6 +42,9 @@ def dump(checkout: str, out_dir: str, store: str, only: list[str]) -> None:
     checkout = os.path.abspath(checkout)
     for sub in ("perfbench", ""):
         sys.path.insert(0, os.path.join(checkout, sub))
+    # the Python workers a query starts while it is built import the
+    # package too; they inherit PYTHONPATH, not sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [checkout, os.environ.get("PYTHONPATH")]))
     from opentsdb_aura_spark import get_spark
     from opentsdb_aura_spark.catalog import SPARK_QUERIES
     from opentsdb_aura_spark.sources.batch import STORE_ROOT

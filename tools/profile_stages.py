@@ -5,7 +5,8 @@ Usage: python tools/profile_stages.py <query> [query ...]
 Runs each query end-to-end with the noop sink (bench methodology) in a
 session with spark.eventLog enabled, then parses the event log and
 prints, per query, total wall plus the top stages by task-time with
-their callsites — the guide §1 "which stage is the time going to"
+their callsites, and per run the codegen compile count and compile
+time — the guide §1 "which stage is the time going to"
 loop, workable headless (spark.ui is disabled in this sandbox).
 """
 
@@ -50,20 +51,29 @@ def main() -> None:
 
     ensure_event_store(spark, SF_DIR)
 
+    # the codegen compile layer shows in no stage metric: read the JVM's
+    # running compile count and compile time (ns) around each run
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+    def run(fn) -> tuple[float, float, str]:
+        n0, ns0 = compiles.getCount(), codegen.compileTime()
+        t0 = time.time()
+        fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
+        t1 = time.time()
+        n, ms = compiles.getCount() - n0, (codegen.compileTime() - ns0) / 1e6
+        return t0, t1, f"{t1 - t0:.2f}s, {n} codegen compiles in {ms:.0f} ms"
+
     marks = {}
     for name in names:
         fn = SPARK_QUERIES[name]
         sc.setJobDescription(f"PROFILE:{name}")
-        t0 = time.time()
-        fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-        t1 = time.time()
-        # second run, warm
-        t2 = time.time()
-        fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-        t3 = time.time()
+        t0, t1, run1 = run(fn)
+        t2, t3, run2 = run(fn)  # second run, warm
         sc.setJobDescription(None)
         marks[name] = (t0, t1, t2, t3)
-        print(f"== {name}: run1 {t1 - t0:.2f}s  run2 {t3 - t2:.2f}s", flush=True)
+        print(f"== {name}: run1 {run1}  run2 {run2}", flush=True)
 
     app_id = sc.applicationId
     spark.stop()
