@@ -19,7 +19,11 @@ from opentsdb_aura_spark.filters import Filter, compile_filter
 
 
 def _filtered(series_dim: DataFrame, flt: Filter | None) -> DataFrame:
-    return series_dim.where(compile_filter(flt))
+    # the same one-partition rule as a metric read; a late import, as
+    # the store writer imports this module
+    from opentsdb_aura_spark.sources.batch import single_partition_read
+
+    return single_partition_read(series_dim.where(compile_filter(flt)), series_dim)
 
 
 def distinct_metrics(series_dim: DataFrame, flt: Filter | None = None) -> DataFrame:

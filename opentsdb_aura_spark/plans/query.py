@@ -10,10 +10,17 @@ AuraMetricsSourceFactory.java:120-128):
       → group-by merge → relabel(+Δ)
 
 Here each stage is declarative; Catalyst fuses filter+project into the
-Parquet scan (with partition pruning on ``segment_time``), and the
-rate window + per-series downsample share one hash partitioning by
-``series_id``.  Operator order is load-bearing: rate is per-point and
-runs BEFORE downsample, exactly as the reference kernel does.
+Parquet scan (with partition pruning on ``segment_time``).  A read
+whose pruned files total no more than ``spark.sql.files.openCostInBytes``
+(4 MB by default; ``sources.batch.single_partition_read``) is coalesced
+to one partition, so dedupe, rate, downsample, group-by and spine all
+run in that one task with no ``Exchange`` — the dashboard case, and the
+reference's one fused pass per shard.  Above the bound each of those
+keys its own hash exchange (dedupe on (series_id, ts, group keys), the
+rate window on series and segment, the aggregate on (group, bucket),
+the spine on the group keys).  Operator order is load-bearing: rate is
+per-point and runs BEFORE downsample, exactly as the reference kernel
+does.
 """
 
 from __future__ import annotations
@@ -37,6 +44,7 @@ from opentsdb_aura_spark.operators.rollup import (
     downsample_from_rollup,
     percentile_from_rollup_histogram,
 )
+from opentsdb_aura_spark.sources.batch import single_partition_read
 
 
 @dataclass
@@ -222,7 +230,8 @@ def _preagg_substitution(
             continue
         read, two_stage = plan
         matched, group_keys, out_groups = _matched_series(points, q, series_dim)
-        table = tables[riv].select(*cols).join(matched, on="series_id", how="inner")
+        table = single_partition_read(tables[riv].select(*cols), tables[riv])
+        table = table.join(matched, on="series_id", how="inner")
         if two_stage:
             per_series = read(table, scan_start, scan_end, q.interval, ["series_id", *group_keys])
             res = group_merge(per_series, gb, group_cols=group_keys)
@@ -291,14 +300,19 @@ def run_metric_query(
     scan_start, scan_end = q.start - shift, q.end - shift
 
     pred = compile_filter(q.filter) & time_range(scan_start, scan_end)
+    scan = points
     if "segment_time" in points.columns:
         # S4 segment-range planning: the ts predicate restated on the
         # partition column so Catalyst prunes partitions (the
         # reference's [start,end) → segment-list mapping,
         # core/.../LongRunningStorage.java:66-93)
         lo = scan_start - scan_start % q.segment_width
-        pred = pred & (F.col("segment_time") >= F.lit(lo)) & (F.col("segment_time") < F.lit(int(scan_end)))
-    df = points.where(pred)
+        seg_lo, seg_hi = F.col("segment_time") >= F.lit(lo), F.col("segment_time") < F.lit(int(scan_end))
+        pred = pred & seg_lo & seg_hi
+        # the size probe plans the partition predicate alone: the same
+        # files, a fraction of the planning
+        scan = points.where(seg_lo & seg_hi)
+    df = single_partition_read(points.where(pred), scan)
 
     if presence is not None:
         from opentsdb_aura_spark.operators.meta import presence_active_ids
@@ -308,8 +322,15 @@ def run_metric_query(
         # let AQE pick broadcast vs shuffled semi-join by its runtime size.
         df = df.join(active, "series_id", "left_semi")
 
+    # the group keys ride along as dedupe keys: a series' tags are fixed
+    # by its series_id, so the groups are the same, and the dedupe then
+    # carries no map-typed max_by (which forces a sort aggregate)
+    group_keys: list[str] = []
+    if q.group_tag_keys is not None:
+        group_keys = [f"tag_{k}" for k in q.group_tag_keys]
+        df = with_group_keys(df, q.group_tag_keys)
     if dedupe:
-        df = dedupe_last_write_wins(df)
+        df = dedupe_last_write_wins(df, ("series_id", "ts", *group_keys))
 
     if shift:
         df = time_shift(df, shift)
@@ -336,11 +357,8 @@ def run_metric_query(
     # — per-series downsample (sparse), then group merge, then the NaN
     # spine once at group granularity, cheaper than densifying every
     # series first
-    group_keys: list[str] = []
     ds_agg, ds_groups, fill, merge_agg = q.ds_agg, ["series_id"], q.fill, None
     if q.group_tag_keys is not None:
-        group_keys = [f"tag_{k}" for k in q.group_tag_keys]
-        df = with_group_keys(df, q.group_tag_keys)
         fused = _FUSABLE_DS_GB.get((normalize_agg(q.ds_agg), normalize_group_agg(q.gb_agg)))
         if fused is not None:
             ds_agg, ds_groups = fused, group_keys
