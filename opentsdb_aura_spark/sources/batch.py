@@ -183,8 +183,10 @@ def single_partition_read(df: DataFrame, scan: DataFrame) -> DataFrame:
     satisfies every clustered distribution above it, so the dedupe,
     rate, downsample, group-by and spine plan with no ``Exchange`` and
     the answer runs as one stage.  Larger reads keep the distributed
-    plan, which wins above a crossover measured between 4.4 and 10.8 MB
-    of scan at 4 cores.  ``scan`` is the cheapest frame to plan that
+    plan.  A one-task plan's time follows the points it reads, not the
+    bytes: at 4 cores it beat the distributed plan at 96 k points and
+    lost at 480 k, which a well-compressed store holds in 1.8 MB, under
+    the bound.  ``scan`` is the cheapest frame to plan that
     prunes like ``df``: the partition predicate alone, or the whole
     table when it has no partitions.  A negative conf value turns the
     rule off."""
