@@ -1,6 +1,6 @@
 """Check that every plan diff between two dumps is of one expected kind.
 
-Usage: python plans/pr13/classify_diffs.py gate|dedupe <before_dump> <after_dump>
+Usage: python classify_diffs.py gate|dedupe <before_dump> <after_dump>
 
 ``gate`` (the one-partition rule off → on): the after plan holds
 ``Coalesce`` nodes of one partition where the before plan has none, and

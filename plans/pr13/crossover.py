@@ -1,7 +1,7 @@
 """Where a one-partition metric plan stops paying: time one dashboard
 query over stores of growing size on both plans, in one session.
 
-Usage: python plans/pr13/crossover.py <work_dir> [points ...]
+Usage: python crossover.py <work_dir> [points ...]
 
 For each point count (default 96 000, 480 000, 1 150 000, 5 800 000) it
 writes a store of 48 series over 24 h (12 two-hour segments) through
