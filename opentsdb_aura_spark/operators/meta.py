@@ -23,7 +23,7 @@ def _filtered(series_dim: DataFrame, flt: Filter | None) -> DataFrame:
     # the store writer imports this module
     from opentsdb_aura_spark.sources.batch import single_partition_read
 
-    return single_partition_read(series_dim.where(compile_filter(flt)), series_dim)
+    return single_partition_read(series_dim.where(compile_filter(flt)))
 
 
 def distinct_metrics(series_dim: DataFrame, flt: Filter | None = None) -> DataFrame:

@@ -11,10 +11,10 @@ AuraMetricsSourceFactory.java:120-128):
 
 Here each stage is declarative; Catalyst fuses filter+project into the
 Parquet scan (with partition pruning on ``segment_time``).  A read
-whose pruned files total no more than ``spark.sql.files.openCostInBytes``
-(4 MB by default; ``sources.batch.single_partition_read``) is coalesced
-to one partition, so dedupe, rate, downsample, group-by and spine all
-run in that one task with no ``Exchange`` — the dashboard case, and the
+whose pruned files hold at most 96 000 rows
+(``sources.batch.single_partition_read``) is coalesced to one
+partition, so dedupe, rate, downsample, group-by and spine all run in
+that one task with no ``Exchange`` — the dashboard case, and the
 reference's one fused pass per shard.  Above the bound each of those
 keys its own hash exchange (dedupe on (series_id, ts, group keys), the
 rate window on series and segment, the aggregate on (group, bucket),
@@ -230,8 +230,7 @@ def _preagg_substitution(
             continue
         read, two_stage = plan
         matched, group_keys, out_groups = _matched_series(points, q, series_dim)
-        table = single_partition_read(tables[riv].select(*cols), tables[riv])
-        table = table.join(matched, on="series_id", how="inner")
+        table = single_partition_read(tables[riv].select(*cols)).join(matched, on="series_id", how="inner")
         if two_stage:
             per_series = read(table, scan_start, scan_end, q.interval, ["series_id", *group_keys])
             res = group_merge(per_series, gb, group_cols=group_keys)
@@ -300,19 +299,14 @@ def run_metric_query(
     scan_start, scan_end = q.start - shift, q.end - shift
 
     pred = compile_filter(q.filter) & time_range(scan_start, scan_end)
-    scan = points
     if "segment_time" in points.columns:
         # S4 segment-range planning: the ts predicate restated on the
         # partition column so Catalyst prunes partitions (the
         # reference's [start,end) → segment-list mapping,
         # core/.../LongRunningStorage.java:66-93)
         lo = scan_start - scan_start % q.segment_width
-        seg_lo, seg_hi = F.col("segment_time") >= F.lit(lo), F.col("segment_time") < F.lit(int(scan_end))
-        pred = pred & seg_lo & seg_hi
-        # the size probe plans the partition predicate alone: the same
-        # files, a fraction of the planning
-        scan = points.where(seg_lo & seg_hi)
-    df = single_partition_read(points.where(pred), scan)
+        pred = pred & (F.col("segment_time") >= F.lit(lo)) & (F.col("segment_time") < F.lit(int(scan_end)))
+    df = single_partition_read(points.where(pred))
 
     if presence is not None:
         from opentsdb_aura_spark.operators.meta import presence_active_ids

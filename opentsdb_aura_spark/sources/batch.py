@@ -18,6 +18,7 @@ partition lands k co-sorted files of bounded size.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
@@ -155,44 +156,59 @@ def write_metrics_store(
     ).parquet(path)
 
 
-def pruned_scan_bytes(df: DataFrame) -> int | None:
-    """Bytes of the files ``df``'s scans read after partition pruning,
-    or None when a leaf of its plan is not a file scan (an in-memory
-    frame, say).  Read from the planned scans: a path-based table is
-    pruned only at physical planning, so the optimizer's size estimate
-    is the whole table's whatever the window."""
+#: the largest read, in rows of its pruned files, that is planned as
+#: one partition.  A one-task plan's time follows the rows it reads,
+#: not their bytes: ``plans/pr13/crossover.py`` (4 cores) measured it
+#: ahead of the distributed plan at 64 000 points, even at 96 000 and
+#: behind at 128 000, on stores of 3.7 and 7 B per point alike.  Read
+#: at call time; a negative value turns the rule off.
+_SINGLE_PARTITION_MAX_ROWS = 96_000
+
+
+@functools.lru_cache(maxsize=4096)
+def _parquet_rows(url: str) -> int:
+    """Rows of one parquet file, from its footer.  Spark never writes
+    two files under one name, so the count is cached by path; a stale
+    count could only pick the other plan, never change an answer."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    fs, path = pafs.FileSystem.from_uri(url)
+    with fs.open_input_file(path) as f:
+        return pq.read_metadata(f).num_rows
+
+
+def pruned_scan_rows(df: DataFrame) -> int | None:
+    """Rows of the parquet files ``df``'s scans read after partition
+    pruning, or None when a leaf of its plan is not a parquet file scan
+    (an in-memory frame, say).  Read from the planned scans: a
+    path-based table is pruned only at physical planning, so the
+    optimizer's estimate is the whole table's whatever the window."""
     leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
     total = 0
     for i in range(leaves.length()):
         leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() != "FileSourceScanExec":
+        if (
+            leaf.getClass().getSimpleName() != "FileSourceScanExec"
+            or leaf.relation().fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        ):
             return None
-        total += leaf.selectedPartitions().totalFileSize()
+        files = leaf.selectedPartitions().toPartitionArray()
+        total += sum(_parquet_rows(files[j].urlEncodedPath()) for j in range(len(files)))
     return total
 
 
-def single_partition_read(df: DataFrame, scan: DataFrame) -> DataFrame:
-    """``df`` as one partition when the pruned input of ``scan``, a
-    frame over the same files, is no bigger than
-    ``spark.sql.files.openCostInBytes``; else ``df`` unchanged.
+def single_partition_read(df: DataFrame) -> DataFrame:
+    """``df`` as one partition when its pruned input holds at most
+    ``_SINGLE_PARTITION_MAX_ROWS`` rows; else ``df`` unchanged.
 
-    That conf is Spark's estimate, in bytes scanned, of what opening
-    one more file costs, and its split planner never cuts a file into
-    pieces smaller than it: a read no bigger is not worth spreading over
-    tasks.  A one-partition scan reports ``SinglePartition``, which
-    satisfies every clustered distribution above it, so the dedupe,
-    rate, downsample, group-by and spine plan with no ``Exchange`` and
-    the answer runs as one stage.  Larger reads keep the distributed
-    plan.  A one-task plan's time follows the points it reads, not the
-    bytes: at 4 cores it beat the distributed plan at 96 k points and
-    lost at 480 k, which a well-compressed store holds in 1.8 MB, under
-    the bound.  ``scan`` is the cheapest frame to plan that
-    prunes like ``df``: the partition predicate alone, or the whole
-    table when it has no partitions.  A negative conf value turns the
-    rule off."""
-    size = pruned_scan_bytes(scan)
-    bound = df.sparkSession._jsparkSession.sessionState().conf().filesOpenCostInBytes()
-    return df.coalesce(1) if size is not None and size <= bound else df
+    A one-partition scan reports ``SinglePartition``, which satisfies
+    every clustered distribution above it, so the dedupe, rate,
+    downsample, group-by and spine plan with no ``Exchange`` and the
+    answer runs as one stage.  Larger reads, and frames whose leaves
+    are not parquet scans, keep the distributed plan."""
+    rows = pruned_scan_rows(df)
+    return df.coalesce(1) if rows is not None and rows <= _SINGLE_PARTITION_MAX_ROWS else df
 
 
 def _atomic_build(build_fn, final_path: str) -> None:

@@ -1,24 +1,29 @@
 """Where a one-partition metric plan stops paying: time one dashboard
 query over stores of growing size on both plans, in one session.
 
-Usage: python crossover.py <work_dir> [points ...]
+Usage: python crossover.py <work_dir> [<kind>:<points> ...]
 
-For each point count (default 96 000, 480 000, 1 150 000, 5 800 000) it
-writes a store of 48 series over 24 h (12 two-hour segments) through
-``write_metrics_store``, then plans and collects ``ds_sum`` (sum by dc,
-15-minute buckets) and ``rate_ds_gb`` (rate → avg → sum by dc) over the
-whole store three ways: with the session's own bound (the default
-4 MB), forced to one partition (bound raised to 1 GB) and forced
-distributed (bound -1).  Each is the min of 3 warm runs after one
-unmeasured run.  One JSON line per (size, query): the pruned scan
-bytes, the plan the default bound picks, both times and their ratio.
-Run it from the checkout root with ``PYTHONPATH`` set to it.
+Each argument names a store (default: ``dense`` and ``noisy`` at
+64 000, 96 000, 128 000, 192 000 points, and ``dense`` at 480 000 and
+1 150 000).  A store holds 48 series over 24 h (12 two-hour segments),
+written through ``write_metrics_store``.  ``dense`` values are a
+counter that grows with noise (about 3.7 B per point once written);
+``noisy`` values are hashed doubles (about 13 B per point, like the
+dashboard store).  For each store, ``ds_sum`` (sum by dc, 15-minute
+buckets) and ``rate_ds_gb`` (rate → avg → sum by dc) over the whole
+store are planned and collected with the bound forced to one partition
+(``sources.batch._SINGLE_PARTITION_MAX_ROWS`` raised) and forced
+distributed (-1): one unmeasured run of each, then 5 runs of each,
+alternating.  One JSON line per (store, query): the store's bytes and
+rows, the plan the module's own bound picks, both medians and their
+ratio.  Run it from the checkout root with ``PYTHONPATH`` set to it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -29,21 +34,29 @@ from opentsdb_aura_spark.filters import MetricLiteral
 from opentsdb_aura_spark.model import normalize_points
 from opentsdb_aura_spark.operators.rate import RateOptions
 from opentsdb_aura_spark.plans.query import MetricQuery, run_metric_query
-from opentsdb_aura_spark.sources.batch import pruned_scan_bytes, write_metrics_store
+from opentsdb_aura_spark.sources import batch
+from opentsdb_aura_spark.sources.batch import pruned_scan_rows, write_metrics_store
 
 T0 = 1767225600
 SPAN = 86400
 SERIES = 48
-OPEN_COST = "spark.sql.files.openCostInBytes"
+DEFAULT = [f"{k}:{n}" for n in (64_000, 96_000, 128_000, 192_000) for k in ("dense", "noisy")] + [
+    "dense:480000", "dense:1150000",
+]
 
 
-def build(spark, path: str, n: int) -> None:
+def build(spark, path: str, kind: str, n: int) -> None:
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return
     per = n // SERIES
     step = SPAN / per
     s = F.col("id") % SERIES
     i = F.floor(F.col("id") / SERIES)
+    if kind == "dense":
+        # a counter that grows with noise, so rate and sums see varied values
+        value = (i * 10 + F.abs(F.xxhash64("id")) % 100).cast("double")
+    else:
+        value = (F.abs(F.xxhash64("id")) % 1_000_000_007) / F.lit(7.0) + i
     raw = spark.range(per * SERIES).select(
         F.lit("ns").alias("namespace"),
         F.lit("m").alias("metric"),
@@ -51,8 +64,7 @@ def build(spark, path: str, n: int) -> None:
             F.lit("host"), F.format_string("h%03d", s), F.lit("dc"), F.format_string("dc%d", s % 4)
         ).alias("tags"),
         (F.lit(T0) + F.floor(i * step)).cast("long").alias("ts"),
-        # a counter that grows with noise, so rate and sums see varied values
-        (i * 10 + F.abs(F.xxhash64("id")) % 100).cast("double").alias("value"),
+        value.alias("value"),
         F.col("id").alias("ingest_seq"),
     )
     write_metrics_store(normalize_points(raw), path)
@@ -64,42 +76,53 @@ QUERIES = {
 }
 
 
-def timed(spark, pts, q, bound: str | None) -> tuple[float, str]:
+def run(pts, q, bound: int | None) -> tuple[float, str]:
+    """One planned and collected run with the bound set to ``bound``
+    (None: the module's own); its time and the plan taken."""
+    own = batch._SINGLE_PARTITION_MAX_ROWS
     if bound is not None:
-        spark.conf.set(OPEN_COST, bound)
+        batch._SINGLE_PARTITION_MAX_ROWS = bound
     try:
-        best, plan = float("inf"), ""
-        for rep in range(4):
-            t0 = time.perf_counter()
-            df = run_metric_query(pts, q)
-            df.collect()
-            if rep:
-                best = min(best, time.perf_counter() - t0)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        return best, ("single" if "Coalesce 1" in plan else "distributed")
+        t0 = time.perf_counter()
+        df = run_metric_query(pts, q)
+        df.collect()
+        took = time.perf_counter() - t0
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return took, ("single" if "Coalesce 1" in plan else "distributed")
     finally:
-        spark.conf.unset(OPEN_COST)
+        batch._SINGLE_PARTITION_MAX_ROWS = own
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
+    )
 
 
 def main() -> None:
     work = sys.argv[1]
-    sizes = [int(x) for x in sys.argv[2:]] or [96_000, 480_000, 1_150_000, 5_800_000]
     spark = get_spark("crossover")
-    for n in sizes:
-        path = os.path.join(work, f"store_{n}")
-        build(spark, path, n)
+    for arg in sys.argv[2:] or DEFAULT:
+        kind, n = arg.split(":")
+        path = os.path.join(work, f"store_{kind}_{n}")
+        build(spark, path, kind, int(n))
         pts = spark.read.parquet(path)
         for name, kw in QUERIES.items():
             q = MetricQuery(
                 start=T0, end=T0 + SPAN, interval=900, filter=MetricLiteral("m"),
                 group_tag_keys=["dc"], **kw,
             )
-            _, picked = timed(spark, pts, q, None)
-            single, _ = timed(spark, pts, q, str(1 << 30))
-            dist, _ = timed(spark, pts, q, "-1")
+            _, picked = run(pts, q, None)
+            times: dict[int, list[float]] = {1 << 62: [], -1: []}
+            for rep in range(6):
+                for b in times if rep % 2 else reversed(list(times)):
+                    took, _ = run(pts, q, b)
+                    if rep:
+                        times[b].append(took)
+            single, dist = statistics.median(times[1 << 62]), statistics.median(times[-1])
             print(json.dumps({
-                "points": n, "query": name, "scan_bytes": pruned_scan_bytes(pts),
-                "default_bound_picks": picked, "single_s": round(single, 4),
+                "store": kind, "points": pruned_scan_rows(pts), "scan_bytes": _dir_bytes(path),
+                "query": name, "default_bound_picks": picked, "single_s": round(single, 4),
                 "distributed_s": round(dist, 4), "single_over_distributed": round(single / dist, 3),
             }), flush=True)
 

@@ -1,10 +1,10 @@
 """One partition for a dashboard-sized read (``sources.batch.single_partition_read``).
 
-A metric, pre-aggregate or meta read whose pruned input is no bigger
-than ``spark.sql.files.openCostInBytes`` is coalesced to one partition,
-so the whole answer plans with no ``Exchange``.  The rule is turned off
-by lowering that conf (a negative value: no read is that small), which
-these tests do inside try/finally.
+A metric, pre-aggregate or meta read whose pruned files hold at most
+``sources.batch._SINGLE_PARTITION_MAX_ROWS`` rows is coalesced to one
+partition, so the whole answer plans with no ``Exchange``.  The rule is
+turned off by lowering that bound (a negative value: no read is that
+small), which these tests do inside try/finally.
 """
 
 from __future__ import annotations
@@ -20,26 +20,27 @@ from opentsdb_aura_spark.filters import Chain, MetricLiteral, TagLiteralOr
 from opentsdb_aura_spark.operators.meta import cardinality, distinct_tag_values
 from opentsdb_aura_spark.operators.rate import RateOptions
 from opentsdb_aura_spark.plans.query import MetricQuery, run_metric_query
-from opentsdb_aura_spark.sources.batch import pruned_scan_bytes
+from opentsdb_aura_spark.sources import batch
+from opentsdb_aura_spark.sources.batch import pruned_scan_rows
 
 HOUR = 3600
 SEG = 7200
 SPAN = 6 * HOUR  # three segments
-OPEN_COST = "spark.sql.files.openCostInBytes"
 
 
 @contextmanager
-def open_cost(spark, value: int):
-    """Run the block with the single-partition bound set to ``value`` bytes."""
-    spark.conf.set(OPEN_COST, str(value))
+def bound(value: int):
+    """Run the block with the single-partition bound set to ``value`` rows."""
+    own = batch._SINGLE_PARTITION_MAX_ROWS
+    batch._SINGLE_PARTITION_MAX_ROWS = value
     try:
         yield
     finally:
-        spark.conf.unset(OPEN_COST)
+        batch._SINGLE_PARTITION_MAX_ROWS = own
 
 
-def distributed(spark):
-    return open_cost(spark, -1)
+def distributed():
+    return bound(-1)
 
 
 def _points(spark, rows):
@@ -166,7 +167,7 @@ def test_dashboard_read_plans_without_exchange_and_runs_one_job(spark, store):
 
 def test_lowered_bound_keeps_the_distributed_plan(spark, store):
     pts, dim, _ = _reads(spark, store)
-    with distributed(spark):
+    with distributed():
         df = run_metric_query(pts, _query("ds_sum", BASE, BASE + HOUR), series_dim=dim)
     plan = _plan(df)
     assert "Coalesce" not in plan, plan
@@ -177,22 +178,26 @@ def test_probe_reads_the_pruned_scan(spark, store):
     from pyspark.sql import functions as F
 
     pts, _, _ = _reads(spark, store)
-    one = pruned_scan_bytes(pts.where(F.col("segment_time") == F.lit(BASE)))
-    whole = pruned_scan_bytes(pts)
+    seg = pts.where(F.col("segment_time") == F.lit(BASE))
+    one, whole = pruned_scan_rows(seg), pruned_scan_rows(pts)
+    # the footers' counts are the files' rows
+    assert (one, whole) == (seg.count(), pts.count())
     assert 0 < one < whole
     # a bound between one segment's files and the whole store's
-    with open_cost(spark, (one + whole) // 2):
+    with bound((one + whole) // 2):
         small = run_metric_query(pts, _query("ds_sum", BASE, BASE + HOUR))
         large = run_metric_query(pts, _query("ds_sum", BASE, BASE + SPAN))
     assert "Coalesce 1" in _plan(small) and "Exchange" not in _plan(small)
     assert "Coalesce" not in _plan(large) and "Exchange hashpartitioning" in _plan(large)
 
 
-def test_in_memory_frame_keeps_its_plan(spark, make_points):
+def test_in_memory_or_non_parquet_frame_keeps_its_plan(spark, make_points, tmp_path):
     pts = make_points([("cpu", {"host": "a", "dc": "x"}, BASE + i, float(i)) for i in range(10)])
-    assert pruned_scan_bytes(pts) is None
+    assert pruned_scan_rows(pts) is None
     plan = _plan(run_metric_query(pts, _query("ds_sum", BASE, BASE + HOUR)))
     assert "Coalesce" not in plan, plan
+    pts.write.json(str(tmp_path / "json"))
+    assert pruned_scan_rows(spark.read.schema(pts.schema).json(str(tmp_path / "json"))) is None
 
 
 @pytest.mark.parametrize("shape", GROUPED_RAW)
@@ -204,7 +209,7 @@ def test_grouped_raw_dedupe_is_a_hash_aggregate(spark, store, shape):
         if gate:
             plan = _plan(run_metric_query(pts, _query(shape, BASE, BASE + SPAN), series_dim=dim))
         else:
-            with distributed(spark):
+            with distributed():
                 plan = _plan(run_metric_query(pts, _query(shape, BASE, BASE + SPAN), series_dim=dim))
         assert "SortAggregate" not in plan, plan
         assert re.search(r"HashAggregate\(keys=\[series_id#\d+L?, ts#\d+L?, tag_dc", plan), plan
@@ -236,7 +241,7 @@ def test_single_partition_parity(spark, store):
     """Every template shape and both meta calls give the same rows on
     the one-partition path and the distributed one."""
     single = _answers(spark, store)
-    with distributed(spark):
+    with distributed():
         dist = _answers(spark, store)
     assert single.keys() == dist.keys()
     for k in single:
