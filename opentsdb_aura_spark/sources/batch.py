@@ -160,7 +160,7 @@ def write_metrics_store(
 #: one partition.  A one-task plan's time follows the rows it reads,
 #: not their bytes: ``plans/pr13/crossover.py`` (4 cores) measured it
 #: ahead of the distributed plan at 64 000 points, even at 96 000 and
-#: behind at 128 000, on stores of 3.7 and 7 B per point alike.  Read
+#: behind at 128 000, on stores of 3.8 and 7 B per point alike.  Read
 #: at call time; a negative value turns the rule off.
 _SINGLE_PARTITION_MAX_ROWS = 96_000
 
