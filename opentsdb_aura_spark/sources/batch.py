@@ -166,22 +166,28 @@ _SINGLE_PARTITION_MAX_ROWS = 96_000
 
 
 @functools.lru_cache(maxsize=4096)
-def _parquet_rows(url: str) -> int:
-    """Rows of one parquet file, from its footer.  Spark never writes
-    two files under one name, so the count is cached by path; a stale
-    count could only pick the other plan, never change an answer."""
+def _parquet_rows(url: str) -> int | None:
+    """Rows of one parquet file, from its footer, or None when pyarrow
+    cannot read it (a file system it does not know, a file gone since
+    planning).  Spark never writes two files under one name, so the
+    count is cached by path; a stale or missing count could only pick
+    the other plan, never change an answer."""
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
-    fs, path = pafs.FileSystem.from_uri(url)
-    with fs.open_input_file(path) as f:
-        return pq.read_metadata(f).num_rows
+    try:
+        fs, path = pafs.FileSystem.from_uri(url)
+        with fs.open_input_file(path) as f:
+            return pq.read_metadata(f).num_rows
+    except (OSError, ValueError):  # pyarrow's IO and invalid-URI errors
+        return None
 
 
 def pruned_scan_rows(df: DataFrame) -> int | None:
     """Rows of the parquet files ``df``'s scans read after partition
     pruning, or None when a leaf of its plan is not a parquet file scan
-    (an in-memory frame, say).  Read from the planned scans: a
+    (an in-memory frame, say) or a footer cannot be read.  Read from
+    the planned scans: a
     path-based table is pruned only at physical planning, so the
     optimizer's estimate is the whole table's whatever the window."""
     leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
@@ -194,7 +200,11 @@ def pruned_scan_rows(df: DataFrame) -> int | None:
         ):
             return None
         files = leaf.selectedPartitions().toPartitionArray()
-        total += sum(_parquet_rows(files[j].urlEncodedPath()) for j in range(len(files)))
+        for j in range(len(files)):
+            rows = _parquet_rows(files[j].urlEncodedPath())
+            if rows is None:
+                return None
+            total += rows
     return total
 
 

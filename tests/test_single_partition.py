@@ -200,6 +200,13 @@ def test_in_memory_or_non_parquet_frame_keeps_its_plan(spark, make_points, tmp_p
     assert pruned_scan_rows(spark.read.schema(pts.schema).json(str(tmp_path / "json"))) is None
 
 
+def test_unreadable_footer_counts_nothing(tmp_path):
+    """A file pyarrow cannot read gives no count, so the read keeps the
+    distributed plan rather than failing the query."""
+    assert batch._parquet_rows((tmp_path / "gone.parquet").as_uri()) is None
+    assert batch._parquet_rows("nosuchfs://host/part-0.parquet") is None
+
+
 @pytest.mark.parametrize("shape", GROUPED_RAW)
 def test_grouped_raw_dedupe_is_a_hash_aggregate(spark, store, shape):
     """The group keys are dedupe keys, so the dedupe carries no map-typed
