@@ -9,8 +9,7 @@ Both operate on the downsampled/grouped result (bucket_ts, group
 tags, value) — OUTPUT-cardinality data, not raw points — so the
 analytic windows run over per-series bucket vectors whose length is
 bounded by the query range / interval, never by ingest volume.  That
-keeps the per-partition work O(buckets) at any corpus scale; the
-rate operator's segment-parallel machinery is unnecessary here.
+keeps the per-partition work O(buckets) at any corpus scale.
 """
 
 from __future__ import annotations

@@ -18,8 +18,7 @@ Implementation is the union + running-last trick, NOT a range join:
 
 Scale shape: ONE shuffle on the join keys (the window partitioning),
 no per-row range probe, no interval explosion; skew is bounded by the
-hottest key exactly as any per-key window (the segment-parallel
-variant in operators/rate.py applies if a single key dominates).
+hottest key exactly as any per-key window.
 The carry is WHOLE-ROW (the right attrs travel as one struct and the
 matched row's own NULLs are returned as-is — pandas ``merge_asof``
 semantics): a right row with a NULL attribute genuinely sets that

@@ -673,8 +673,8 @@ def cap_per_domain(
     phase 1 ranks within (domain, input-partition) — every window
     partition is bounded by the Parquet split size — and keeps its
     local top-``cap``; phase 2 ranks the ≤ cap × n_partitions
-    survivors per domain.  Same hot-key-bounded shape as the
-    segment-parallel rate and blocked sessionize windows."""
+    survivors per domain.  Same hot-key-bounded shape as the blocked
+    sessionize window."""
     local = docs.select(id_col, domain_col, quality_col).withColumn("_pid", F.spark_partition_id())
     w1 = Window.partitionBy(domain_col, "_pid").orderBy(F.col(quality_col).desc(), F.col(id_col))
     pruned = (

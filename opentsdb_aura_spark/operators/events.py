@@ -147,11 +147,10 @@ def sessionize(
     makes a single giant sort task, because the window partitions by
     key alone.
 
-    ``block_seconds=W`` bounds that (the segment-parallel two-phase
-    trick from operators/rate.py `_with_prev_segmented`, applied to
-    sessions): phase 1 sessionizes per (key, time-block) — window
-    partitioned by (key, block), task size bounded by a key's events
-    per block — and phase 2 stitches block-boundary sessions with an
+    ``block_seconds=W`` bounds that with a two-phase plan: phase 1
+    sessionizes per (key, time-block) — window partitioned by (key,
+    block), task size bounded by a key's events per block — and
+    phase 2 stitches block-boundary sessions with an
     interval-merge over the CANDIDATE SESSION rows (same gap rule:
     merge when next.start − running max(end) ≤ gap).  Candidate rows
     per key are bounded by range/W active blocks + range/gap true

@@ -31,18 +31,9 @@ Implemented as window-function expressions over
 which the downstream per-series downsample reuses.  The window is
 global per series (crosses segment/partition boundaries), fixing the
 reference's own limitation of NaN-ing the first point of each scan.
-
-Scale path (``segment_col``): a per-series window is ONE task per
-series no matter how many points it has — a high-frequency "hot"
-series becomes the straggler of the whole stage.  When the input
-carries the store's ``segment_time`` column the window instead
-partitions by (series, segment) — bounded work per task (the
-reference caps a series-segment at 32,767 points,
-GorillaRawTimeSeriesEncoder.java:132-136) — and the cross-segment
-previous point is recovered from a tiny per-(series, segment)
-last-point table (one row per series-segment, map-side combined)
-lag-joined back.  Results are bit-identical to the global window;
-``run_metric_query`` enables it automatically.
+After dedupe a series holds at most one point per second, so one
+series' window is bounded by the query range in seconds (86 400 rows
+per day), however hot the series.
 """
 
 from __future__ import annotations
@@ -50,12 +41,11 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from opentsdb_aura_spark.model import NAN
 from opentsdb_aura_spark.operators.downsample import non_nan
-
 
 
 @dataclass(frozen=True)
@@ -75,75 +65,20 @@ class RateOptions:
 def estimate_data_interval(
     points: DataFrame,
     group_cols: Sequence[str] = ("series_id",),
-    segment_col: str | None = None,
 ) -> DataFrame:
     """Mode of observed point spacing per series (kernel 364-420).
 
     Returns (group_cols…, data_interval).  Ties break toward the
     smaller spacing for determinism (the reference iterates a hash map
     — unspecified order; smallest-wins is the stable choice).
-
-    ``segment_col`` — partition the lag window by (series, segment)
-    instead of series alone, the same hot-series straggler bound as the
-    rate window itself: without it, one bot series re-serializes the
-    whole stage through a single sort task.  The cross-segment spacing
-    samples this loses are |segments| per series — noise for a mode
-    estimate over the in-segment population.
     """
-    keys = [*group_cols, segment_col] if segment_col else list(group_cols)
-    w = Window.partitionBy(*keys).orderBy("ts")
+    w = Window.partitionBy(*group_cols).orderBy("ts")
     spaced = points.withColumn("_dt", F.col("ts") - F.lag("ts").over(w)).where(F.col("_dt").isNotNull())
     counted = spaced.groupBy(*group_cols, "_dt").agg(F.count("*").alias("_n"))
     best = counted.groupBy(*group_cols).agg(
         F.max_by(F.col("_dt"), F.struct(F.col("_n"), -F.col("_dt"))).alias("data_interval")
     )
     return best
-
-
-def _with_prev_global(df: DataFrame, group_cols: list, value_col: str, ts_col: str) -> DataFrame:
-    """_prev_ts/_prev_v via one window per series (crosses segments)."""
-    v, ts = F.col(value_col), F.col(ts_col)
-    # lag over non-NaN points only: NaNs don't update previous (ts, value)
-    w = Window.partitionBy(*group_cols).orderBy(ts).rowsBetween(Window.unboundedPreceding, -1)
-    prev_ts = F.last(F.when(non_nan(v).isNotNull(), ts), ignorenulls=True).over(w)
-    prev_v = F.last(non_nan(v), ignorenulls=True).over(w)
-    # one withColumns: both columns share the spec, so one Window node
-    return df.withColumns({"_prev_ts": prev_ts, "_prev_v": prev_v})
-
-
-def _with_prev_segmented(
-    df: DataFrame, group_cols: list, value_col: str, ts_col: str, segment_col: str
-) -> DataFrame:
-    """_prev_ts/_prev_v via per-(series, segment) windows plus a
-    boundary handoff: for each series-segment, the last non-NaN point
-    of the nearest EARLIER segment with data (lag over the tiny
-    per-segment-last table, so multi-segment gaps resolve correctly).
-    """
-    v, ts = F.col(value_col), F.col(ts_col)
-    seg_keys = [*group_cols, segment_col]
-
-    # one row per series-segment (map-side combined before the shuffle)
-    seg_last = (
-        df.where(non_nan(v).isNotNull())
-        .groupBy(*seg_keys)
-        .agg(F.max(ts).alias("_bnd_ts0"), F.max_by(v, ts).alias("_bnd_v0"))
-    )
-    w_seg = Window.partitionBy(*group_cols).orderBy(segment_col)
-    boundary = seg_last.select(
-        *seg_keys,
-        F.lag("_bnd_ts0").over(w_seg).alias("_bnd_ts"),
-        F.lag("_bnd_v0").over(w_seg).alias("_bnd_v"),
-    )
-
-    # join partitioning (seg_keys) is exactly the window partitioning,
-    # so the big side shuffles once; AQE broadcasts `boundary` when small
-    out = df.join(boundary, on=seg_keys, how="left")
-    w = Window.partitionBy(*seg_keys).orderBy(ts).rowsBetween(Window.unboundedPreceding, -1)
-    in_seg_ts = F.last(F.when(non_nan(v).isNotNull(), ts), ignorenulls=True).over(w)
-    in_seg_v = F.last(non_nan(v), ignorenulls=True).over(w)
-    return out.withColumns(
-        {"_prev_ts": F.coalesce(in_seg_ts, F.col("_bnd_ts")), "_prev_v": F.coalesce(in_seg_v, F.col("_bnd_v"))}
-    ).drop("_bnd_ts", "_bnd_v")
 
 
 def rate(
@@ -153,15 +88,9 @@ def rate(
     group_cols: Sequence[str] = ("series_id",),
     value_col: str = "value",
     ts_col: str = "ts",
-    segment_col: str | None = None,
 ) -> DataFrame:
     """Replace ``value`` with its rate transform, preserving all other
-    columns.  NaN inputs stay NaN and are invisible to neighbours.
-
-    ``segment_col``: partition the lag window by (series, segment)
-    instead of series alone — identical results, bounded task size
-    (see module docstring).
-    """
+    columns.  NaN inputs stay NaN and are invisible to neighbours."""
     group_cols = list(group_cols)
     v = F.col(value_col)
     ts = F.col(ts_col)
@@ -184,8 +113,7 @@ def rate(
             # at dimension scale the sort-merge join lands on the same
             # (group_cols) partitioning the lag window shuffles to
             # anyway, so the fact table is not re-shuffled either way.
-            seg = segment_col if (segment_col is not None and segment_col in points.columns) else None
-            est = estimate_data_interval(points, group_cols, segment_col=seg)
+            est = estimate_data_interval(points, group_cols)
             df = df.join(est, on=group_cols, how="left")
             # kernel 416-419: long division, clamped to >= 1 (also the
             # empty-distribution default; greatest() skips the NULL of
@@ -194,10 +122,16 @@ def rate(
                 F.floor(F.col("data_interval") / F.lit(iv_long)).cast("double"), F.lit(1.0)
             )
 
-    if segment_col is not None and segment_col in df.columns:
-        df = _with_prev_segmented(df, group_cols, value_col, ts_col, segment_col)
-    else:
-        df = _with_prev_global(df, group_cols, value_col, ts_col)
+    # lag over non-NaN points only: NaNs don't update previous (ts, value);
+    # one window per series, crossing segments.  One withColumns: both
+    # columns share the spec, so one Window node
+    w = Window.partitionBy(*group_cols).orderBy(ts).rowsBetween(Window.unboundedPreceding, -1)
+    df = df.withColumns(
+        {
+            "_prev_ts": F.last(F.when(non_nan(v).isNotNull(), ts), ignorenulls=True).over(w),
+            "_prev_v": F.last(non_nan(v), ignorenulls=True).over(w),
+        }
+    )
 
     dr = (ts - F.col("_prev_ts")).cast("double") / F.lit(float(opts.interval_seconds))
     delta = v - F.col("_prev_v")

@@ -17,8 +17,8 @@ partition, so dedupe, rate, downsample, group-by and spine all run in
 that one task with no ``Exchange`` — the dashboard case, and the
 reference's one fused pass per shard.  Above the bound each of those
 keys its own hash exchange (dedupe on (series_id, ts, group keys), the
-rate window on series and segment, the aggregate on (group, bucket),
-the spine on the group keys).  Operator order is load-bearing: rate is
+rate window on series alone, the aggregate on (group, bucket), the
+spine on the group keys).  Operator order is load-bearing: rate is
 per-point and runs BEFORE downsample, exactly as the reference kernel
 does.
 """
@@ -330,11 +330,7 @@ def run_metric_query(
         df = time_shift(df, shift)
 
     if q.rate_options is not None:
-        # segment-parallel lag window when the store's partition column
-        # is present: bounded task size even for hot series (the shift,
-        # if any, moved ts by a constant, so segment order still holds)
-        seg = "segment_time" if "segment_time" in df.columns else None
-        df = rate(df, q.rate_options, segment_col=seg)
+        df = rate(df, q.rate_options)
 
     spine_groups = None
     if spine_from_dim and q.fill != "none":

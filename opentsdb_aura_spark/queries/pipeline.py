@@ -293,6 +293,22 @@ def ann_ivf_topk(spark, sf_dir):
     return res.select("query_id", "neighbor_id", _r("cos_sim", 6).alias("cos_sim"))
 
 
+def _cached_index(path: str, build) -> None:
+    """Build the at-rest index at ``path`` once, for every process that
+    shares STORE_ROOT: ``build`` writes into a tmp sibling, which gets a
+    top-level ``_SUCCESS`` and is renamed into place whole, so no reader
+    sees a partial index and a finished one is reused."""
+    import os
+
+    from opentsdb_aura_spark.sources.batch import _atomic_build
+
+    def build_marked(tmp: str) -> None:
+        build(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    _atomic_build(build_marked, path)
+
+
 @register("ann_ivf_index_topk", _ANN_ORACLE)
 def ann_ivf_index_topk(spark, sf_dir):
     """IVF with the index AT REST: centroids + list-partitioned
@@ -310,9 +326,8 @@ def ann_ivf_index_topk(spark, sf_dir):
     # params in the dir name: changed build parameters land in a fresh
     # dir instead of silently reading a stale index; the whole root is
     # version-rmtree'd with the event store on layout changes
-    path = os.path.join(STORE_ROOT, base, "ivf_index_c8_v1")
-    if not os.path.exists(os.path.join(path, "vectors", "_SUCCESS")):
-        build_ivf_index(embs(spark, sf_dir), path, n_centroids=8)
+    path = os.path.join(STORE_ROOT, base, "ivf_index_c8_v2")
+    _cached_index(path, lambda tmp: build_ivf_index(embs(spark, sf_dir), tmp, n_centroids=8))
     q = embs(spark, sf_dir).where(F.col("vec_id") < 20)
     res = ivf_search_index(spark, path, q, k=5, nprobe=8)
     return res.select("query_id", "neighbor_id", _r("cos_sim", 6).alias("cos_sim"))
@@ -519,10 +534,9 @@ def ann_ivfpq_rerank_exact_topk(spark, sf_dir):
     from opentsdb_aura_spark.sources.batch import STORE_ROOT
 
     base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(STORE_ROOT, base, "ivfpq_index_grid_c8_v1")
+    path = os.path.join(STORE_ROOT, base, "ivfpq_index_grid_c8_v2")
     e = embs(spark, sf_dir)
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        build_ivfpq_index(e, path, n_centroids=8, grid=True)
+    _cached_index(path, lambda tmp: build_ivfpq_index(e, tmp, n_centroids=8, grid=True))
     dq_queries = grid_decode(grid_quantize_vectors(e.where(F.col("vec_id") < 20)))
     short = ivfpq_search_index(spark, path, dq_queries, k=50, nprobe=8)
     res = shortlist_rerank(e, e.where(F.col("vec_id") < 20), short, k=5)
@@ -615,9 +629,8 @@ def ann_pq_index_topk(spark, sf_dir):
     from opentsdb_aura_spark.sources.batch import STORE_ROOT
 
     base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(STORE_ROOT, base, "pq_index_grid_v1")
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        build_pq_index(embs(spark, sf_dir), path, grid=True)
+    path = os.path.join(STORE_ROOT, base, "pq_index_grid_v2")
+    _cached_index(path, lambda tmp: build_pq_index(embs(spark, sf_dir), tmp, grid=True))
     e = embs(spark, sf_dir)
     dq_queries = grid_decode(grid_quantize_vectors(e.where(F.col("vec_id") < 20)))
     res = pq_search_index(spark, path, dq_queries, k=5)
@@ -650,9 +663,8 @@ def ann_ivfpq_index_topk(spark, sf_dir):
     from opentsdb_aura_spark.sources.batch import STORE_ROOT
 
     base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(STORE_ROOT, base, "ivfpq_index_grid_c8_v1")
-    if not os.path.exists(os.path.join(path, "codes", "_SUCCESS")):
-        build_ivfpq_index(embs(spark, sf_dir), path, n_centroids=8, grid=True)
+    path = os.path.join(STORE_ROOT, base, "ivfpq_index_grid_c8_v2")
+    _cached_index(path, lambda tmp: build_ivfpq_index(embs(spark, sf_dir), tmp, n_centroids=8, grid=True))
     e = embs(spark, sf_dir)
     dq_queries = grid_decode(grid_quantize_vectors(e.where(F.col("vec_id") < 20)))
     res = ivfpq_search_index(spark, path, dq_queries, k=5, nprobe=8)

@@ -225,7 +225,11 @@ def _atomic_build(build_fn, final_path: str) -> None:
     if os.path.exists(os.path.join(final_path, "_SUCCESS")):
         return
     tmp = f"{final_path}.tmp-{uuid.uuid4().hex[:8]}"
-    build_fn(tmp)
+    try:
+        build_fn(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     try:
         os.rename(tmp, final_path)
     except OSError:

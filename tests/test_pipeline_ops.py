@@ -1315,6 +1315,43 @@ def test_ivf_index_persist_and_probe_pruning(spark, emb_df, tmp_path):
     assert any(r["neighbor_id"] == 4 for r in probe1.collect())
 
 
+def test_cached_index_is_published_whole(spark, emb_df, tmp_path):
+    """The catalog's at-rest indexes are built into a tmp sibling and
+    renamed into place: a build that raises partway leaves nothing at
+    the path, the next call builds a complete index, and a finished
+    index is reused, never rebuilt."""
+    import os
+
+    from opentsdb_aura_spark.operators.similarity import build_ivf_index, ivf_search_index
+    from opentsdb_aura_spark.queries.pipeline import _cached_index
+
+    root = tmp_path / "store"
+    root.mkdir()
+    path = str(root / "ivf")
+
+    def killed(tmp):
+        build_ivf_index(emb_df, tmp, n_centroids=2, sample=16)
+        raise RuntimeError("killed after the vectors")
+
+    with pytest.raises(RuntimeError, match="killed"):
+        _cached_index(path, killed)
+    assert os.listdir(root) == []
+
+    builds = []
+
+    def build(tmp):
+        builds.append(tmp)
+        build_ivf_index(emb_df, tmp, n_centroids=2, sample=16)
+
+    _cached_index(path, build)
+    _cached_index(path, build)
+    assert len(builds) == 1
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "centroids", "vectors"]
+    assert os.listdir(root) == ["ivf"]
+    got = ivf_search_index(spark, path, emb_df.where("vec_id = 0"), k=2, nprobe=2).collect()
+    assert {r["neighbor_id"] for r in got} == {1, 4}
+
+
 def test_ivf_index_partial_probe_equals_in_memory(spark, tmp_path):
     """At nprobe < n_centroids the persisted IVF index and the in-memory
     ivf_topk (same sample and n_centroids, hence the same centroids)

@@ -131,12 +131,12 @@ def test_rate_matches_python_model(spark, make_points, rows):
         max_size=20,
     )
 )
-def test_segmented_rate_matches_python_model(spark, make_points, rows):
+def test_multi_segment_rate_matches_python_model(spark, make_points, rows):
     from opentsdb_aura_spark.operators.rate import RateOptions, rate
 
     items = sorted((off * 80, val) for off, val in rows.items())
     pts = make_points([("m", {}, BASE + off, val, i) for i, (off, val) in enumerate(items)])
-    res = rate(pts, RateOptions(interval_seconds=60), segment_col="segment_time")
+    res = rate(pts, RateOptions(interval_seconds=60))
     got = {r["ts"] - BASE: r["value"] for r in res.collect()}
     want = rate_python_model(items, 60)
     assert set(got) == set(want)

@@ -95,10 +95,9 @@ def test_null_value_is_no_data_like_nan(make_points):
     pts = make_points(
         [("m", {}, BASE, 10.0), ("m", {}, BASE + 10, float("nan")), ("m", {}, BASE + 20, 30.0)]
     ).withColumn("value", F.when(~F.isnan("value"), F.col("value")))
-    for seg in (None, "segment_time"):
-        out = _vals(rate(pts, RateOptions(interval_seconds=1), segment_col=seg))
-        assert out[BASE + 10] is None
-        assert_close(out[BASE + 20], 1.0)  # (30-10)/20, NULL invisible
+    out = _vals(rate(pts, RateOptions(interval_seconds=1)))
+    assert out[BASE + 10] is None
+    assert_close(out[BASE + 20], 1.0)  # (30-10)/20, NULL invisible
 
 
 def test_per_series_isolation(make_points):
@@ -122,12 +121,13 @@ def test_duplicate_ts_without_dedupe_yields_nan(make_points):
     assert not math.isnan(vals[2])
 
 
-# ------------------------------------------------- segment-parallel path
+# ------------------------------------------------- series across segments
 
 
 def _seg_cases():
-    """Multi-segment fleet: boundary handoff, multi-segment gap, NaNs
-    at segment edges, two series (segments are 7200 s wide)."""
+    """Multi-segment fleet: previous points in an earlier segment, a
+    multi-segment gap, NaNs at segment edges, three series (segments
+    are 7200 s wide)."""
     rows = []
     # series a: points straddling 3 segments, incl. a NaN as the last
     # point of segment 0 (boundary must skip it)
@@ -145,36 +145,9 @@ def _seg_cases():
     return rows
 
 
-def _assert_same(df_global, df_seg):
-    def key(df):
-        out = {}
-        for r in df.collect():
-            out[(r["tags"]["h"], r["ts"])] = r["value"]
-        return out
-
-    g, s = key(df_global), key(df_seg)
-    assert set(g) == set(s)
-    for k in g:
-        if math.isnan(g[k]):
-            assert math.isnan(s[k]), f"{k}: global NaN, segmented {s[k]}"
-        else:
-            assert_close(s[k], g[k])
-
-
-def test_segmented_rate_matches_global(make_points):
+def test_rate_across_segments_values(make_points):
     pts = make_points(_seg_cases())
-    for opts in (
-        RateOptions(interval_seconds=60),
-        RateOptions(delta_only=True),
-        RateOptions(interval_seconds=1, counter=True, counter_max=128.0),
-        RateOptions(interval_seconds=1, counter=True, drop_resets=True),
-    ):
-        _assert_same(rate(pts, opts), rate(pts, opts, segment_col="segment_time"))
-
-
-def test_segmented_rate_boundary_values(make_points):
-    pts = make_points(_seg_cases())
-    out = rate(pts, RateOptions(interval_seconds=1), segment_col="segment_time")
+    out = rate(pts, RateOptions(interval_seconds=1))
     got = {(r["tags"]["h"], r["ts"]): r["value"] for r in out.collect()}
     # segment-1 first point: prev is (7000, 5) — NaN at 7100 skipped
     assert_close(got[("a", BASE + 7300)], (9.0 - 5.0) / 300.0)
@@ -183,9 +156,3 @@ def test_segmented_rate_boundary_values(make_points):
     # NaN-only first segment: series c's 2nd point still has no prev
     assert math.isnan(got[("c", BASE + 7200 + 20)])
     assert math.isnan(got[("a", BASE + 7100)])  # NaN passes through
-
-
-def test_segmented_rate_missing_column_falls_back(make_points):
-    pts = make_points([("m", {}, BASE, 1.0), ("m", {}, BASE + 10, 2.0)]).drop("segment_time")
-    out = _vals(rate(pts, RateOptions(interval_seconds=1), segment_col="segment_time"))
-    assert_close(out[BASE + 10], 0.1)

@@ -275,3 +275,17 @@ def test_meta_reads_take_one_partition(spark, store):
     for df in (distinct_tag_values(dim, "host", flt), cardinality(dim, flt)):
         plan = _plan(df)
         assert "Coalesce 1" in plan and "Exchange" not in plan, plan
+
+
+def test_rate_plans_one_window_over_one_scan(spark, store):
+    """Rate is one window per series over the query's one scan, also on
+    the distributed path and over a store of several segments: no
+    second scan feeds a per-segment boundary table."""
+    pts, _, _ = _reads(spark, store)
+    assert pts.select("segment_time").distinct().count() >= 2
+    with distributed():
+        plan = _plan(run_metric_query(pts, _query("rate_ds_gb", BASE, BASE + SPAN)))
+    assert len(re.findall(r"FileScan parquet .*" + re.escape(store["points"]), plan)) == 1, plan
+    windows = re.findall(r"Window \[.*?\], \[(.*?)\], \[", plan)
+    assert len(windows) == 1, plan
+    assert re.fullmatch(r"series_id#\d+L?", windows[0]), windows

@@ -14,9 +14,10 @@ tables, with and without the series dimension, as
 ``dash_<i>_<template>_<dim|nodim>.txt`` (331 + 140 plans).  Given plan
 names (file names without ``.txt``) it dumps only those.  The plan text
 is ``explain_dump.normalized_plan`` with the store paths printed as
-``<sf_dir>``, ``<event_store>`` and ``<store>``.  ``<dash_store>`` is
-built from the seed-0 dash points on first use and reused, so two
-checkouts plan over the same files.
+``<sf_dir>``, ``<event_store>`` and ``<store>``, and the bucketed
+table's name (an md5 of its path) as ``aura_bucketed_<md5>``.
+``<dash_store>`` is built from the seed-0 dash points on first use and
+reused, so two checkouts plan over the same files.
 
 ``compare`` diffs two dumps.  Some plan text depends on what the
 session planned before (a multi-distinct ``Expand`` lists its
@@ -30,6 +31,7 @@ from __future__ import annotations
 
 import difflib
 import os
+import re
 import subprocess
 import sys
 import tempfile
@@ -62,6 +64,8 @@ def dump(checkout: str, out_dir: str, store: str, only: list[str]) -> None:
         except Exception as ex:  # noqa: BLE001 - record the failure in place
             plan = f"EXPLAIN FAILED: {ex}"
         plan = plan.replace(store, "<store>").replace(STORE_ROOT, "<event_store>").replace(SF_DIR, "<sf_dir>")
+        # the bucketed table's catalog name is a hash of its store path
+        plan = re.sub(r"aura_bucketed_[0-9a-f]{10}", "aura_bucketed_<md5>", plan)
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
             fh.write(plan)
         return True
