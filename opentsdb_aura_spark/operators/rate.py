@@ -33,7 +33,8 @@ global per series (crosses segment/partition boundaries), fixing the
 reference's own limitation of NaN-ing the first point of each scan.
 After dedupe a series holds at most one point per second, so one
 series' window is bounded by the query range in seconds (86 400 rows
-per day), however hot the series.
+per day), however hot the series.  Without dedupe the window holds
+every raw row of the series.
 """
 
 from __future__ import annotations
